@@ -82,21 +82,22 @@ object RangeBench {
     val stageRoot = s"${dir}_stage"
     operators.Staged.enablePersist(stageRoot)
 
-    val cfg = operators.IvfConfig(maxCentroids = Some(63L))
+    val q = operators.Quantizer.Rule(
+      operators.IvfConfig(maxCentroids = Some(63L)))
     val floor = lit(50000L)
     // found the index OUTSIDE the timed region (the deployment shape),
     // but print what founding cost — never hide an index build
     operators.Staged.reset(spark)
     val t0 = System.nanoTime()
     val nlist = operators.SimilarityQueries
-      .ivfCellBounds(spark, dir, cfg).count()
+      .ivfCellBounds(spark, dir, q).count()
     val layoutRows = operators.SimilarityQueries
-      .q8ByCid(spark, dir, cfg).count()
+      .q8ByCid(spark, dir, q).count()
     val foundSec = (System.nanoTime() - t0) / 1e9
     require(nlist == 63L, s"expected 63 cluster-aligned centroids: $nlist")
     require(layoutRows == n, s"layout covers the corpus: $layoutRows != $n")
     val live = operators.SimilarityQueries
-      .rangeLiveCells(spark, dir, cfg, floor).count()
+      .rangeLiveCells(spark, dir, q, floor).count()
 
     def timed(df: => org.apache.spark.sql.DataFrame): (Double, Long) = {
       val runs = (1 to passes).map { _ =>
@@ -113,7 +114,7 @@ object RangeBench {
     // staged cid-partitioned layout with dynamic partition pruning
     val (partSec, partN) = timed(
       operators.SimilarityQueries
-        .rangeCosineCellsWith(spark, dir, cfg, floor))
+        .rangeCosineCellsWith(spark, dir, q, floor))
     require(partN == bruteN,
       s"EXACTNESS BROKEN: layout cells $partN vs brute $bruteN matches")
 
@@ -127,15 +128,15 @@ object RangeBench {
     // layout row pays, and the two speedups would measure different
     // things.
     val liveCids = operators.SimilarityQueries
-      .rangeLiveCells(spark, dir, cfg, floor)
+      .rangeLiveCells(spark, dir, q, floor)
       .select(col("cid")).distinct().count()
     def inplace() = {
       val q8 = operators.SimilarityQueries.quantized(spark, dir)
-      operators.SimilarityQueries.ivfCells(spark, dir, cfg)
+      operators.SimilarityQueries.ivfCells(spark, dir, q)
         .filter(col("rn") === 1)
         .select(col("vec_id").as("neighbor_id"), col("cid"))
         .join(broadcast(operators.SimilarityQueries
-          .rangeLiveCells(spark, dir, cfg, floor)), "cid")
+          .rangeLiveCells(spark, dir, q, floor)), "cid")
         .filter(col("neighbor_id") =!= col("query_id"))
         .join(q8.select(col("vec_id").as("neighbor_id"),
           col("q8").as("nv")), "neighbor_id")

@@ -386,9 +386,9 @@ object ScaleBench {
       operators.Staged.reset(spark)
       val cfg = operators.IvfConfig.Default
       val live = operators.SimilarityQueries
-        .rangeLiveCells(spark, d, cfg).count()
+        .rangeLiveCells(spark, d, operators.Quantizer.Rule(cfg)).count()
       val nlist = operators.SimilarityQueries
-        .ivfCellBounds(spark, d, cfg).count()
+        .ivfCellBounds(spark, d, operators.Quantizer.Rule(cfg)).count()
       val pruned = SparkEntry.queries("ann_range_cosine_cells")(spark, d)
         .count()
       val brute = SparkEntry.queries("ann_range_cosine")(spark, d).count()
@@ -399,7 +399,7 @@ object ScaleBench {
       // rung — both REQUIRED exact
       val corpusN = Tables.embeddings(spark, d).count()
       val pqSurv = operators.SimilarityQueries
-        .rangePqSurvivors(spark, d).count()
+        .rangePqSurvivors(spark, d, operators.Codebook.Rule()).count()
       require(SparkEntry.queries("ann_range_cosine_pq")(spark, d)
         .count() == brute,
         s"range residual ceiling broke exactness on $dl")
@@ -411,7 +411,7 @@ object ScaleBench {
       // survivor column is the measured payoff of ivf_refine beyond
       // recall. Exactness REQUIRED like every rung.
       val liveRefined = operators.SimilarityQueries
-        .rangeLiveCellsRefined(spark, d, cfg).count()
+        .rangeLiveCells(spark, d, operators.Quantizer.Trained(cfg)).count()
       require(SparkEntry.queries("ann_range_cosine_cells_refined")(spark, d)
         .count() == brute,
         s"refined range cell bound broke exactness on $dl")
@@ -420,7 +420,7 @@ object ScaleBench {
       // refusal tests, so the trained survivor fraction is the measured
       // payoff of pq_refine for the range family. Exactness REQUIRED.
       val pqRefSurv = operators.SimilarityQueries
-        .rangePqSurvivorsRefined(spark, d).count()
+        .rangePqSurvivors(spark, d, operators.Codebook.Trained()).count()
       require(SparkEntry.queries("ann_range_cosine_pq_refined")(spark, d)
         .count() == brute,
         s"trained range residual ceiling broke exactness on $dl")

@@ -38,6 +38,10 @@ object StageBench {
     operators.IvfConfig(frozen = true, maxCentroids = Some(64L))
   private val FrozenPq =
     operators.PqConfig(frozen = true, maxCodewords = Some(64L))
+  private val RuleIvf = operators.Quantizer.Rule(FrozenIvf)
+  private val TrainedIvf = operators.Quantizer.Trained(FrozenIvf)
+  private val RulePq = operators.Codebook.Rule(FrozenPq)
+  private val TrainedPq = operators.Codebook.Trained(FrozenPq)
   private val Extras: Map[String,
       (SparkSession, String) => org.apache.spark.sql.DataFrame] = Map(
     "ann_topk_ivf_frozen" -> ((s, d) =>
@@ -46,44 +50,43 @@ object StageBench {
       operators.SimilarityQueries.semanticDedupWith(s, d,
         operators.SemDedupConfig.Default, FrozenIvf)),
     "ann_topk_pq_frozen" -> ((s, d) =>
-      operators.SimilarityQueries.pqTopKWith(s, d, 5, FrozenPq)),
+      operators.SimilarityQueries.pqTopKWith(s, d, 5, RulePq)),
     "ann_topk_pq_rerank_frozen" -> ((s, d) =>
-      operators.SimilarityQueries.pqRerankTopKWith(s, d, 5, 100, FrozenPq)),
+      operators.SimilarityQueries.pqRerankTopKWith(s, d, 5, 100, RulePq)),
     // the composed IVF-PQ-rerank deployment shape (r18): every rung —
     // frozen cells, frozen codes, quantized rescore table — is an
     // appendable stage, so the full retrieval path delta-refreshes
     "ann_topk_ivfpq_rerank_frozen" -> ((s, d) =>
       operators.SimilarityQueries.ivfPqRerankTopKWith(s, d, 5, 100,
-        FrozenIvf, FrozenPq)),
+        RuleIvf, RulePq)),
     // exact range search over the frozen geometry (r18): the cell table
     // delta-assigns and the radius table delta-MERGES (append-monotone
     // max), so the whole exact-range path refreshes O(delta)
     "ann_range_cosine_cells_frozen" -> ((s, d) =>
-      operators.SimilarityQueries.rangeCosineCellsWith(s, d, FrozenIvf)),
+      operators.SimilarityQueries.rangeCosineCellsWith(s, d, RuleIvf)),
     // the bytes rung (r18): codes AND residuals delta-append per vector
     // under the frozen codebook digest
     "ann_range_cosine_pq_frozen" -> ((s, d) =>
-      operators.SimilarityQueries.rangeCosinePqWith(s, d, FrozenPq)),
+      operators.SimilarityQueries.rangeCosinePqWith(s, d, RulePq)),
     // the composed exact range shape over BOTH frozen families
     "ann_range_cosine_ivfpq_frozen" -> ((s, d) =>
       operators.SimilarityQueries.rangeCosineComposedWith(s, d,
-        FrozenIvf, FrozenPq)),
+        RuleIvf, RulePq)),
     // the frozen TRAINED quantizer (late r18): Lloyd founds once (the
     // COLD column prices training — 2 extra linear sweeps over the
     // capped seed set), the coverage probe accepts replica drops, and
     // cells/radii delta under the value digest — so the trained top-k
     // and the trained exact-range rung both refresh O(delta)
     "ann_topk_ivf_refined_frozen" -> ((s, d) =>
-      operators.SimilarityQueries.ivfRefinedTopKWith(s, d, FrozenIvf)),
+      operators.SimilarityQueries.ivfInt8TopKWith(s, d, TrainedIvf)),
     "ann_range_cosine_cells_refined_frozen" -> ((s, d) =>
-      operators.SimilarityQueries.rangeCosineCellsRefinedWith(s, d,
-        FrozenIvf)),
+      operators.SimilarityQueries.rangeCosineCellsWith(s, d, TrainedIvf)),
     // the frozen TRAINED PQ codebook (r19): per-subspace Lloyd founds
     // once (COLD prices the 2 training sweeps over the capped seed
     // slices), the coverage probe accepts replica drops, and the codes
     // table delta-encodes under the codebook's VALUE digest
     "ann_topk_pq_refined_frozen" -> ((s, d) =>
-      operators.SimilarityQueries.pqRefinedTopKWith(s, d, 5, FrozenPq)),
+      operators.SimilarityQueries.pqTopKWith(s, d, 5, TrainedPq)),
     // the staged Ed-Join path under the FROZEN founding gram order
     // (r19): grams delta-shingle, the order rides verbatim, the prefix
     // delta-builds only the drop — exact recall by the any-fixed-order
@@ -103,17 +106,17 @@ object StageBench {
     // composed family in lockstep (r18 verdict ask #2); refresh is
     // O(delta) map-only assignment + encode
     "ann_topk_ivfadc_refined_frozen" -> ((s, d) =>
-      operators.SimilarityQueries.ivfAdcRefinedTopKWith(s, d, 5,
-        FrozenIvf, FrozenPq)),
+      operators.SimilarityQueries.ivfAdcTopKWith(s, d, 5, TrainedIvf,
+        FrozenPq)),
     // the remaining trained rungs under frozen artifacts (r19): the
     // deployment rerank shape over trained cells + trained codes, and
     // the trained bytes range rung over the frozen trained codebook's
     // residual ceiling (codes + rrv both delta-append per vector)
     "ann_topk_ivfpq_rerank_refined_frozen" -> ((s, d) =>
-      operators.SimilarityQueries.ivfPqRerankRefinedTopKWith(s, d, 5, 100,
-        FrozenIvf, FrozenPq)),
+      operators.SimilarityQueries.ivfPqRerankTopKWith(s, d, 5, 100,
+        TrainedIvf, TrainedPq)),
     "ann_range_cosine_pq_refined_frozen" -> ((s, d) =>
-      operators.SimilarityQueries.rangeCosinePqRefinedWith(s, d, FrozenPq)))
+      operators.SimilarityQueries.rangeCosinePqWith(s, d, TrainedPq)))
   private def lookup(q: String)
       : (SparkSession, String) => org.apache.spark.sql.DataFrame =
     Extras.getOrElse(q, SparkEntry.queries(q))

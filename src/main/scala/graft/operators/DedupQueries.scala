@@ -78,9 +78,9 @@ object DedupQueries {
       cfg: LshConfig = LshConfig.Default): DataFrame =
     Staged.appendable(spark, dir, cfg.shingleStage, "documents", "doc_id")(
       docs => TextHashing.shingleSetsRaw(docs, cfg.shingleK)) {
-      // width-floor at the near-dup family's ROOT stage (r21): the
-      // shingle explode ran as one task off the single-row-group scan;
-      // bands/candidates/verified/components all inherit (Staged.fanOut)
+      // no width floor at the near-dup family's ROOT stage: r21 fanned
+      // it out, and the r22 same-box A/B measured every consumer as fast
+      // or faster without (OPTIMIZATION_r22.md §1)
       TextHashing.shingleSetsRaw(Tables.documents(spark, dir), cfg.shingleK)
     }
 
@@ -982,12 +982,6 @@ object DedupQueries {
   // distinct text), so replica mass vanishes before the grams are even
   // cut — the collapse theorem applied to the blocking itself. ──
 
-  /** r21 fanned the gram-explode inputs 32 ways; the r22 same-box A/B
-    * measured the un-fanned build faster at cpus=32 on every consumer
-    * (see OPTIMIZATION_r22.md) — identity kept so the A/B stays a
-    * one-line toggle. */
-  private def fanned(df: DataFrame): DataFrame = df
-
   /** Occurrence-tagged q-grams of CLASS texts, n_chars carried for the
     * inline length filter: (hash, tok, n_chars). The same count +
     * sequence-explode shape as [[editGramsOf]] (tags via map-side
@@ -1014,7 +1008,7 @@ object DedupQueries {
     Staged.appendable(spark, dir, cfg.gramStage("edit_cgrams"),
       "documents", "doc_id")(
       deltaDocs => classGramsOf(deltaClasses(spark, dir, deltaDocs), cfg)) {
-      classGramsOf(fanned(editClassesStage(spark, dir)), cfg)
+      classGramsOf(editClassesStage(spark, dir), cfg)
     }
 
   /** FROZEN founding class-gram order — the [[editFrozenOrder]]
@@ -1277,8 +1271,8 @@ object DedupQueries {
     Staged.appendable(spark, dir, cfg.gramStage("edit_grams"), "documents",
       "doc_id")(
       docs => editGramsOf(docs, cfg)) {
-      editGramsOf(fanned(Tables.documents(spark, dir)
-        .select(col("doc_id"), col("text"))), cfg)
+      editGramsOf(Tables.documents(spark, dir)
+        .select(col("doc_id"), col("text")), cfg)
     }
 
   /** STAGED corpus gram frequencies (tok, tf) — delta-maintained by

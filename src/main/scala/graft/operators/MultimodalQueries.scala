@@ -133,9 +133,9 @@ object MultimodalQueries {
         Multimodal.featuresRaw(m.filter(col("media_id") % 20 === 0), dim = 16)
           .toDF()
           .select(col("media_id").as("query_id"), col("embedding").as("qf")))
-      // candidate side fanned (r21, re-A/B'd r22: ON wins): the typed
-      // extractor and the 250×5000 broadcast-NLJ dot products otherwise
-      // run on the single-row-group scan's one task — see Staged.fanOut
+      // candidate side repartitioned to Staged.cpuWidth (r21, re-A/B'd
+      // r22: ON wins): the typed extractor and the 250×5000 broadcast-NLJ
+      // dot products otherwise run on the single-row-group scan's one task
       val c = Multimodal.featuresRaw(
           m.repartition(Staged.cpuWidth(spark)), dim = 16).toDF()
         .select(col("media_id").as("neighbor_id"), col("embedding").as("cf"))

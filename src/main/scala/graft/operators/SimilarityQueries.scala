@@ -344,7 +344,7 @@ object SimilarityQueries {
     * the raw float column BEFORE materialization: pruning cannot reach
     * through a checkpoint, and no consumer reads it — left in, every
     * staged block carries a dead 64-float array. */
-  private def normTransform(raw: DataFrame): DataFrame = {
+  private[operators] def normTransform(raw: DataFrame): DataFrame = {
     graft.functions.VectorExprs.register(raw.sparkSession)
     raw.withColumn("emb", expr("CAST(embedding AS ARRAY<DOUBLE>)"))
       .withColumn("norm", expr("sqrt(vec_dot(emb, emb))"))
@@ -355,10 +355,10 @@ object SimilarityQueries {
     graft.functions.VectorExprs.register(spark)
     Staged.appendable(spark, dir, "normed_embeddings", "embeddings", "vec_id")(
       normTransform) {
-      // width-floor at the similarity family's ROOT stage (r21): every
-      // ann_* consumer inherits this checkpoint's width for its vector
-      // math, so one fanned 800 KB exchange here parallelizes the whole
-      // family — see Staged.fanOut
+      // no width floor at the family's ROOT stage: r21 fanned it out, and
+      // the r22 same-box A/B measured every consumer as fast or faster
+      // without (OPTIMIZATION_r22.md §1), so consumers run at the scan's
+      // width
       normTransform(Tables.embeddings(spark, dir))
     }
   }
@@ -372,7 +372,7 @@ object SimilarityQueries {
     * double vector (same formula as `ann_topk_int8`'s original inline
     * form); the integer dot (≤ 127²·64 ≪ 2^53) is exact — rank order is
     * bit-stable across engines, unlike float cosine. */
-  private def quantTransform(n: DataFrame): DataFrame =
+  private[operators] def quantTransform(n: DataFrame): DataFrame =
     n.withColumn("q8", expr(
         "transform(emb, v -> greatest(least(floor(v * 64D), 127D), -127D))"))
       .select(col("vec_id"), col("q8"))
@@ -384,57 +384,35 @@ object SimilarityQueries {
     }
 
   /** IVF cell assignment (vec_id, cid, rn ∈ 1..cfg.nprobe) — IDS ONLY,
-    * staged per config: the N×nlist coarse-quantizer scoring is the
-    * index-build cost, paid once per session and read by `ann_topk_ivf`
-    * AND the IVF-int8 composition — exactly the persisted cell-assignment
-    * table a 100 TB deployment keeps next to the corpus. Three small ints
-    * per row: r8 carried the full (emb, norm) alongside — 2 resident
-    * 64-double arrays per vector that the r8 judge's A/B measured taxing
-    * the whole suite — so consumers now fetch vectors from the staged
+    * staged per quantizer: the N×nlist coarse-quantizer scoring is the
+    * index-build cost, paid once per session and read by every probing
+    * rung — exactly the persisted cell-assignment table a 100 TB
+    * deployment keeps next to the corpus. Three small ints per row: r8
+    * carried the full (emb, norm) alongside — 2 resident 64-double
+    * arrays per vector that the r8 judge's A/B measured taxing the whole
+    * suite — so consumers now fetch vectors from the staged
     * [[normed]]/[[quantized]] tables at the rescore join instead.
-    * Centroids come from [[IvfConfig.centroidFilter]] (default:
-    * vec_id % 100 == 7, so nlist grows ~N/100 on the test corpus);
     * rn ≤ cfg.nprobe keeps both the query probe and the rn=1 home cell
-    * in one table. */
+    * in one table. Keyed solely on the config's stageKey (r13 ADVICE):
+    * configs differing only in QUERY-side fields (probeFraction /
+    * recallTarget / sweep) share the staged index.
+    *
+    * FROZEN mode (r15 verdict ask #1): cells are an APPENDABLE stage — an
+    * append map-only assigns the new vectors against the frozen centroid
+    * table and lands one delta segment; old assignments ride untouched
+    * in prior segments (they depend only on the frozen set). The stage
+    * key carries the quantizer's digest, so a re-founding (drift refusal
+    * or config change) moves the cells to a fresh stage name and they
+    * cold-rebuild in lockstep — the two stages cannot desynchronize by
+    * construction. */
   private[graft] def ivfCells(spark: SparkSession, dir: String,
-      cfg: IvfConfig = IvfConfig.Default): DataFrame =
-    if (!cfg.frozen) {
-      // Keyed solely on stageKey (r13 ADVICE): configs differing only in
-      // QUERY-side fields (probeFraction / recallTarget / sweep) share the
-      // staged index — the table's content depends on nothing else. The
-      // default stageKey maps to its historical name so nothing shifts.
-      val key = if (cfg.stageKey == IvfConfig.Default.stageKey) "ivf_cells"
-        else s"ivf_cells@${cfg.stageKey}"
-      Staged(spark, dir, key) {
-        ivfCellsRaw(spark, dir, maxRn = cfg.nprobe, cfg)
-      }
-    } else {
-      // FROZEN mode (r15 verdict ask #1): cells are an APPENDABLE stage —
-      // an append map-only assigns the new vectors against the frozen
-      // centroid table and lands one delta segment; old assignments ride
-      // untouched in prior segments (they depend only on the frozen set).
-      // The stage key carries a digest of the centroid ID SET, so a
-      // re-founding (drift refusal or config change) moves the cells to a
-      // fresh stage name and they cold-rebuild in lockstep — the two
-      // stages cannot desynchronize by construction.
-      val cents = frozenCentroids(spark, dir, cfg)
-      val key =
-        s"ivf_cells@${cfg.stageKey}+frz${frozenDigest(spark, dir, cfg)}"
-      Staged.appendable(spark, dir, key, "embeddings", "vec_id")(
-        raw => assignCells(normTransform(raw), cents, cfg.nprobe)) {
-        assignCells(normed(spark, dir), cents, cfg.nprobe)
-      }
+      q: Quantizer): DataFrame = {
+    lazy val cents = q.centroids(spark, dir)
+    q.perVector(spark, dir, "ivf_cells", "ivf_refined_cells")(raw =>
+      q.assignDelta(cents, q.cfg.nprobe)(raw)) {
+      q.assign(q.vectors(spark, dir), cents, q.cfg.nprobe)
     }
-
-  /** The (cid, cemb, cnorm) centroid table under `cfg` — frozen mode
-    * reads the staged founding set, default mode derives it from the
-    * CURRENT corpus by the rule. NOT broadcast here; call sites wrap. */
-  private def centroidsOf(spark: SparkSession, dir: String,
-      cfg: IvfConfig): DataFrame =
-    if (cfg.frozen) frozenCentroids(spark, dir, cfg)
-    else cfg.centroidSet(normed(spark, dir))
-      .select(col("vec_id").as("cid"), col("emb").as("cemb"),
-        col("norm").as("cnorm"))
+  }
 
   /** The frozen coarse quantizer (r15 verdict ask #1): centroids staged
     * ONCE by the rule over the founding corpus, then kept VERBATIM across
@@ -478,7 +456,7 @@ object SimilarityQueries {
   /** The staged (cid, cemb, cnorm, live) table behind
     * [[frozenCentroids]] — live rows are the frozen set, dead rows the
     * recorded would-be candidates the drift probe scores against. */
-  private def frozenCentroidTable(spark: SparkSession, dir: String,
+  private[operators] def frozenCentroidTable(spark: SparkSession, dir: String,
       cfg: IvfConfig): DataFrame = {
     val dkey =
       if (cfg.driftFractionMax == IvfConfig.Default.driftFractionMax) ""
@@ -692,32 +670,6 @@ object SimilarityQueries {
   private val digestMemo = java.util.Collections.synchronizedMap(
     new java.util.WeakHashMap[DataFrame, String]())
 
-  /** Digest of the frozen LIVE centroid id set — the content half of
-    * the frozen cells' stage key. One bounded collect (nlist =
-    * `IvfConfig.maxCentroids` under a capped config — a constant at any
-    * founding size, r16 ask #1; uncapped: ≤ ~64k ids
-    * by config, the same bound that makes the set broadcastable),
-    * memoized on the staged table's memo instance. Recorded-dead
-    * candidate rows do NOT participate: accepting a low-drift delta
-    * appends dead rows but leaves the live set — and so every dependent
-    * stage name — unchanged. */
-  private def frozenDigest(spark: SparkSession, dir: String,
-      cfg: IvfConfig): String =
-    digestOf(frozenCentroidTable(spark, dir, cfg), "cid")
-
-  /** Memoized live-id-set digest of a frozen-rule staged table — the
-    * ONE definition behind [[frozenDigest]] and [[pqDigest]]. */
-  private def digestOf(staged: DataFrame, idCol: String): String = {
-    val hit = digestMemo.get(staged)
-    if (hit != null) hit
-    else {
-      val d = idSetDigest(staged.filter(col("live")).select(col(idCol))
-        .collect().map(_.getLong(0)).toSeq)
-      digestMemo.put(staged, d)
-      d
-    }
-  }
-
   /** The ONE id-set digest (md5 over sorted longs, 8 hex chars) shared
     * by the frozen-family stage keys and the streaming semantic gate's
     * state-key prefix (`StateSchemas.semGateCellPrefix`) — one
@@ -736,7 +688,7 @@ object SimilarityQueries {
     * table — the ONE scoring/tie-break rule ((ccos desc, cid asc)),
     * shared by the rule-derived [[ivfCellsRaw]] and the frozen delta
     * path so the two cannot drift. */
-  private def assignCells(vecs: DataFrame, cents: DataFrame,
+  private[operators] def assignCells(vecs: DataFrame, cents: DataFrame,
       maxRn: Int): DataFrame = {
     graft.functions.VectorExprs.register(vecs.sparkSession)
     val aw = Window.partitionBy(col("vec_id"))
@@ -766,7 +718,8 @@ object SimilarityQueries {
     // the bound is code — smallest-K rule ids — not a site promise).
     // The uncapped default keeps the oracle-pinned `% 100` rule, whose
     // ~N/100 is tiny only at test SF; deployments set the cap.
-    assignCells(normed(spark, dir), centroidsOf(spark, dir, cfg), maxRn)
+    assignCells(normed(spark, dir), Quantizer.Rule(cfg).centroids(spark, dir),
+      maxRn)
 
   /** The shared ANN ranking tail: per-query row_number over (score desc,
     * neighbor_id asc) — the one place the tie-break and output-shape
@@ -931,7 +884,7 @@ object SimilarityQueries {
     * deployment (and the ScaleSpec non-default case) passes its own. */
   private[graft] def ivfTopKWith(spark: SparkSession, dir: String,
       cfg: IvfConfig): DataFrame = {
-    val ranked = ivfCells(spark, dir, cfg) // staged: reused by both sides
+    val ranked = ivfCells(spark, dir, Quantizer.Rule(cfg)) // both sides
     val q = ranked.filter(col("vec_id") < 10) // probes all nprobe cells
       .select(col("vec_id").as("query_id"), col("cid"))
     val c = ranked.filter(col("rn") === 1) // neighbors live in ONE cell
@@ -1074,10 +1027,10 @@ object SimilarityQueries {
     val e = normed(spark, dir)
     // broadcast: BOUNDED BY CONFIG — nlist rows (see ivfCellsRaw's
     // classification; the deployment's IvfConfig caps nlist). nprobe
-    // below is a single-row agg: BOUNDED. centroidsOf: a frozen config
+    // below is a single-row agg: BOUNDED. A frozen config
     // probes the SAME staged founding set the cell table was built
     // against — query-side scoring and the index can never disagree.
-    val cents = broadcast(centroidsOf(spark, dir, cfg))
+    val cents = broadcast(Quantizer.Rule(cfg).centroids(spark, dir))
     val nprobe = broadcast(cents.agg(
       greatest(lit(cfg.nprobe.toLong),
         ceil(count(lit(1)) * lit(cfg.effectiveProbeFraction))).cast("int")
@@ -1092,7 +1045,7 @@ object SimilarityQueries {
       .crossJoin(nprobe)
       .filter(col("rn") <= col("nprobe"))
       .select(col("vec_id").as("query_id"), col("cid"))
-    val c = ivfCells(spark, dir, cfg).filter(col("rn") === 1)
+    val c = ivfCells(spark, dir, Quantizer.Rule(cfg)).filter(col("rn") === 1)
       .select(col("vec_id").as("neighbor_id"), col("cid").as("ccid"))
     val cand = qprobe.join(c, col("cid") === col("ccid") &&
         col("query_id") =!= col("neighbor_id"))
@@ -1159,29 +1112,27 @@ object SimilarityQueries {
     * staged [[ivfCells]] (query probes its nprobe=2 cells, neighbors sit
     * in their rn=1 home cell — a plain cid equi-join, no cross join);
     * scoring joins the bounded query side back against staged
-    * [[quantized]] vectors and ranks by the exact integer dot. */
+    * [[quantized]] vectors and ranks by the exact integer dot. Under the
+    * trained quantizer this is `ann_topk_ivf_refined`: same nprobe, same
+    * scan bytes, data-aware cells. */
+  private[graft] def ivfInt8TopKWith(spark: SparkSession, dir: String,
+      q: Quantizer): DataFrame = {
+    val cells = ivfCells(spark, dir, q)
+    val q8 = quantized(spark, dir)
+    val qc = cells.filter(col("vec_id") < 10)
+      .select(col("vec_id").as("query_id"), col("cid"))
+    val c = cells.filter(col("rn") === 1)
+      .select(col("vec_id").as("neighbor_id"), col("cid").as("ccid"))
+    // ids-only dedup before fetching vectors (same shape as ivfTopK)
+    val cand = qc.join(c, col("cid") === col("ccid") &&
+        col("query_id") =!= col("neighbor_id"))
+      .select(col("query_id"), col("neighbor_id")).distinct()
+    int8Rescore(q8, cand, 5)
+  }
+
   val ivfInt8TopK = QueryDef(
     "ann_topk_ivf_int8",
-    (spark, dir) => {
-      val cells = ivfCells(spark, dir)
-      val q8 = quantized(spark, dir)
-      val q = cells.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("query_id"), col("cid"))
-      val c = cells.filter(col("rn") === 1)
-        .select(col("vec_id").as("neighbor_id"), col("cid").as("ccid"))
-      // ids-only dedup before fetching vectors (same shape as ivfTopK)
-      val cand = q.join(c, col("cid") === col("ccid") &&
-          col("query_id") =!= col("neighbor_id"))
-        .select(col("query_id"), col("neighbor_id")).distinct()
-      rankTopK(cand
-        // broadcast: BOUNDED — fixed 10-row literal query set.
-        .join(broadcast(q8.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("query_id"), col("q8").as("qv"))),
-          "query_id")
-        .join(q8.select(col("vec_id").as("neighbor_id"), col("q8").as("cv")),
-          "neighbor_id")
-        .withColumn("dot", expr("vec_dot(qv, cv)")), "dot", 5)
-    },
+    (spark, dir) => ivfInt8TopKWith(spark, dir, Quantizer.Rule()),
     Some("""
       WITH cents AS (
         SELECT vec_id AS cid, embedding AS cemb FROM embeddings
@@ -1231,13 +1182,13 @@ object SimilarityQueries {
   // refined centroid table is bit-reproducible and ORACLE-CHECKED, which
   // float k-means can never be (its means drift with summation order).
 
-  /** Lloyd sweeps for [[refinedCentroids]]. Two sweeps capture the SSE
+  /** Lloyd sweeps of the trained quantizer. Two sweeps capture the SSE
     * descent on every fixture measured (sweep 1 takes the sf0.1
     * quantization SSE 12.50M → 7.64M, sweep 2 → 7.60M, sweep 3 < 0.4%
     * further; sf0.01 reads 3.49M → 1.97M → 1.96M — SCALE.md r18); a
     * deployment tunes this like any index-build knob — the stage key
     * carries it, so two settings never alias. */
-  private val LloydIters = 2
+  private[operators] val LloydIters = 2
 
   /** One nearest-centroid sweep in int8 L2 space, rn ∈ 1..maxRn —
     * the refined family's ONE scoring/tie-break rule. The ordering drops
@@ -1267,7 +1218,7 @@ object SimilarityQueries {
       .withColumn("d2", col("cc") - lit(2d) * expr("vec_dot(q8, c8)"))
   }
 
-  private def l2Assign(q8: DataFrame, cents: DataFrame,
+  private[operators] def l2Assign(q8: DataFrame, cents: DataFrame,
       maxRn: Int): DataFrame = {
     val scored = l2Scored(q8, cents)
     if (maxRn == 1)
@@ -1308,8 +1259,8 @@ object SimilarityQueries {
     var cents = cfg.centroidSet(q8)
       .select(col("vec_id").as("cid"), col("q8").as("c8"))
     for (_ <- 1 to iters) {
-      // Shape note (r22): two rewrites of this means pass were A/B'd
-      // with RefinedBreakdown — (a) carrying q8 through the min-struct
+      // Shape note (r22): two rewrites of this means pass were A/B'd,
+      // timed per staged component — (a) carrying q8 through the min-struct
       // winner + one 64-sum aggregate (1.72 s vs 1.28 s: the 64-double
       // array in the partial-agg buffer loses), (b) slim assign +
       // join-back + one 64-sum aggregate (1.84 s: 64 aggregate
@@ -1334,24 +1285,9 @@ object SimilarityQueries {
     cents
   }
 
-  private def lloydKey(base: String, cfg: IvfConfig, iters: Int): String =
-    Staged.keyed(base, s"${cfg.stageKey}:L$iters",
+  private[operators] def lloydKey(base: String, cfg: IvfConfig): String =
+    Staged.keyed(base, s"${cfg.stageKey}:L$LloydIters",
       s"${IvfConfig.Default.stageKey}:L$LloydIters")
-
-  /** The refined centroid table (cid, c8), staged per (config, sweeps):
-    * the index-training artifact a deployment founds once and serves
-    * from — both the long-format audit query and the refined cell
-    * assignment read it. Under `cfg.frozen` this is the live view of
-    * [[frozenRefinedTable]] — trained ONCE at the founding corpus. */
-  private[graft] def refinedCentroids(spark: SparkSession, dir: String,
-      cfg: IvfConfig = IvfConfig.Default,
-      iters: Int = LloydIters): DataFrame =
-    if (cfg.frozen)
-      frozenRefinedTable(spark, dir, cfg, iters).select(col("cid"), col("c8"))
-    else
-      Staged(spark, dir, lloydKey("ivf_refined_cents", cfg, iters)) {
-        lloydRefinedRaw(spark, dir, cfg, iters)
-      }
 
   /** The FROZEN trained quantizer (r18): Lloyd runs ONCE over the
     * founding corpus; the staged table (cid, c8, rr0) keeps the trained
@@ -1373,11 +1309,11 @@ object SimilarityQueries {
     * conservative by construction. All exact integer arithmetic,
     * O(|delta| · nlist), broadcast-sided. */
   private[graft] def frozenRefinedTable(spark: SparkSession, dir: String,
-      cfg: IvfConfig, iters: Int = LloydIters): DataFrame = {
+      cfg: IvfConfig): DataFrame = {
     val dkey =
       if (cfg.driftFractionMax == IvfConfig.Default.driftFractionMax) ""
       else s":d${cfg.driftFractionMax}"
-    val key = lloydKey("ivf_refined_cents", cfg, iters) + s"$dkey+frz"
+    val key = lloydKey("ivf_refined_cents", cfg) + s"$dkey+frz"
     Staged.rebuildable(spark, dir, key, "embeddings", "vec_id")(
       (prior, deltaRaw) => {
         graft.functions.VectorExprs.register(spark)
@@ -1408,7 +1344,7 @@ object SimilarityQueries {
       // Pin the trained table once (Materialized) — the Lloyd loop
       // must not re-drive for the radius pass and the final join.
       val cents = graft.functions.Materialized(
-        lloydRefinedRaw(spark, dir, cfg, iters)).df
+        lloydRefinedRaw(spark, dir, cfg, LloydIters)).df
       val rr0 = l2Assign(quantized(spark, dir), cents, maxRn = 1)
         .select(col("vec_id"), col("cid"))
         .join(quantized(spark, dir), "vec_id")
@@ -1439,23 +1375,6 @@ object SimilarityQueries {
     }
   }
 
-  /** Content digest of the trained centroid table — cid AND component
-    * values (a re-training keeps the seed ids but MOVES the values, so
-    * an id-set digest would silently alias two trainings; the rule
-    * family's id digest is sound there because frozen rule centroids
-    * ARE their ids' embeddings). Collect is nlist rows — bounded by
-    * config under caps, the ivfCellsRaw classification. Memoized via
-    * [[memoizedDigest]] — which only works when callers pass the
-    * STAGED-MEMOIZED [[frozenRefinedTable]] instance itself (r18
-    * ADVICE: digesting a fresh `.select()` wrapper keyed the WeakHashMap
-    * on a throwaway frame, so every query construction re-collected the
-    * table AND pinned a duplicate Materialized copy). */
-  private def refinedValueDigest(cents: DataFrame): String =
-    memoizedDigest(cents) {
-      valueDigestOf(cents.select(col("cid"), col("c8")).collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1).map(_.toLong))).toSeq)
-    }
-
   /** The ONE (cid, components) value digest — shared by the trained
     * family's stage keys and the streaming trained gate's state-key
     * prefix (the idSetDigest precedent), so a re-training moves the
@@ -1470,42 +1389,10 @@ object SimilarityQueries {
     md.digest().map("%02x".format(_)).mkString.take(8)
   }
 
-  /** Refined-quantizer cell assignment (vec_id, cid, rn ≤ nprobe) —
-    * the refined family's [[ivfCells]] analogue, same ids-only staging
-    * discipline. Under `cfg.frozen` the stage is APPENDABLE: a crawl
-    * drop map-only assigns its own vectors against the frozen trained
-    * set, and the key carries the trained table's VALUE digest so a
-    * re-training (coverage-drift refusal) moves the cells to a fresh
-    * stage in lockstep — the ivfCells discipline, value-keyed because
-    * trained centroids change values without changing ids. */
-  private[graft] def refinedCells(spark: SparkSession, dir: String,
-      cfg: IvfConfig = IvfConfig.Default,
-      iters: Int = LloydIters): DataFrame =
-    if (!cfg.frozen)
-      Staged(spark, dir, lloydKey("ivf_refined_cells", cfg, iters)) {
-        l2Assign(quantized(spark, dir),
-          refinedCentroids(spark, dir, cfg, iters), maxRn = cfg.nprobe)
-      }
-    else {
-      // the staged table instance itself: already materialized by the
-      // stage layer (re-pinning a Materialized copy per construction
-      // duplicated checkpoints until evict — r18 ADVICE), and the one
-      // stable identity the digest memo can hit on.
-      val tbl = frozenRefinedTable(spark, dir, cfg, iters)
-      val cents = tbl.select(col("cid"), col("c8"))
-      val key = lloydKey("ivf_refined_cells", cfg, iters) +
-        s"+frz${refinedValueDigest(tbl)}"
-      Staged.appendable(spark, dir, key, "embeddings", "vec_id")(
-        raw => l2Assign(quantTransform(normTransform(raw)), cents,
-          cfg.nprobe)) {
-        l2Assign(quantized(spark, dir), cents, cfg.nprobe)
-      }
-    }
-
-  /** Shared oracle CTE: int8 quantization, rule seeds, `iters` Lloyd
+  /** Shared oracle CTE: int8 quantization, rule seeds, [[LloydIters]] Lloyd
     * sweeps — mirrors [[lloydRefinedRaw]] stage for stage (same floored
     * means, same (d2, cid) tie-break, same keep-on-empty rule). */
-  private def lloydCte(iters: Int): String = {
+  private def lloydCte: String = {
     val sb = new StringBuilder(
       """
       WITH q8 AS (SELECT vec_id,
@@ -1513,7 +1400,7 @@ object SimilarityQueries {
                v -> greatest(least(floor(v * 64), 127), -127)) AS qv
            FROM embeddings),
       c0 AS (SELECT vec_id AS cid, qv AS cv FROM q8 WHERE vec_id % 100 = 7),""")
-    for (i <- 1 to iters) {
+    for (i <- 1 to LloydIters) {
       val p = i - 1
       sb.append(s"""
       a$i AS (SELECT vec_id, cid FROM (
@@ -1540,47 +1427,22 @@ object SimilarityQueries {
   val ivfRefine = QueryDef(
     "ivf_refine",
     (spark, dir) =>
-      refinedCentroids(spark, dir)
+      Quantizer.Trained().centroids(spark, dir)
         .select(col("cid"), posexplode(col("c8")).as(Seq("dim", "v")))
         .select(col("cid"), col("dim"), col("v").cast("long").as("c8")),
-    Some(s"""${lloydCte(LloydIters)}
+    Some(s"""${lloydCte}
       SELECT cid, d.dim AS dim, CAST(cv[d.dim + 1] AS BIGINT) AS c8
       FROM c$LloydIters, (SELECT unnest(generate_series(0, 63)) AS dim) d
     """))
 
   /** IVF top-5 over the LLOYD-REFINED quantizer — [[ivfInt8TopK]]'s plan
-    * shape (staged cells probe join, ids-only dedup, exact int8 dot
-    * rescore) with data-aware centroids: same nprobe, same scan bytes,
-    * better recall wherever the corpus has structure (SCALE.md r18
-    * measures the clustered fixture; ScaleSpec gates refined ≥ rule). */
-  /** [[ivfRefinedTopK]] under an explicit config — the `*With` seam
-    * StageBench's frozen rung and specs drive. */
-  private[graft] def ivfRefinedTopKWith(spark: SparkSession, dir: String,
-      cfg: IvfConfig = IvfConfig.Default,
-      iters: Int = LloydIters): DataFrame = {
-    val cells = refinedCells(spark, dir, cfg, iters)
-    val q8 = quantized(spark, dir)
-    val q = cells.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("cid"))
-    val c = cells.filter(col("rn") === 1)
-      .select(col("vec_id").as("neighbor_id"), col("cid").as("ccid"))
-    val cand = q.join(c, col("cid") === col("ccid") &&
-        col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id")).distinct()
-    rankTopK(cand
-      // broadcast: BOUNDED — fixed 10-row literal query set.
-      .join(broadcast(q8.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("query_id"), col("q8").as("qv"))),
-        "query_id")
-      .join(q8.select(col("vec_id").as("neighbor_id"), col("q8").as("cv")),
-        "neighbor_id")
-      .withColumn("dot", expr("vec_dot(qv, cv)")), "dot", 5)
-  }
-
+    * shape with data-aware centroids: better recall wherever the corpus
+    * has structure (SCALE.md r18 measures the clustered fixture;
+    * ScaleSpec gates refined ≥ rule). */
   val ivfRefinedTopK = QueryDef(
     "ann_topk_ivf_refined",
-    (spark, dir) => ivfRefinedTopKWith(spark, dir),
-    Some(s"""${lloydCte(LloydIters)},
+    (spark, dir) => ivfInt8TopKWith(spark, dir, Quantizer.Trained()),
+    Some(s"""${lloydCte},
       ranked AS (SELECT vec_id, cid, rn FROM (
           SELECT q.vec_id, c.cid, row_number() OVER (PARTITION BY q.vec_id
             ORDER BY list_dot_product(c.cv, c.cv)
@@ -1648,7 +1510,8 @@ object SimilarityQueries {
   private[graft] def semanticDedupWith(spark: SparkSession, dir: String,
       cfg: SemDedupConfig,
       ivfCfg: IvfConfig = IvfConfig.Default): DataFrame = {
-    def home = ivfCells(spark, dir, ivfCfg).filter(col("rn") === 1)
+    def home = ivfCells(spark, dir, Quantizer.Rule(ivfCfg))
+      .filter(col("rn") === 1)
       .select(col("vec_id"), col("cid"))
     if (!ivfCfg.frozen)
       // Staged plain (rebuild on any corpus change — the rule-derived
@@ -1694,7 +1557,7 @@ object SimilarityQueries {
       // stage, so a re-founding moves the drops to a fresh name in
       // lockstep with the whole frozen family.
       val key = s"sem_drops@${cfg.stageKey}@${ivfCfg.stageKey}" +
-        s"+frz${frozenDigest(spark, dir, ivfCfg)}"
+        s"+frz${Quantizer.Rule(ivfCfg).digest(spark, dir)}"
       Staged.rebuildable(spark, dir, key, "embeddings", "vec_id")(
         (prior, deltaRaw) => {
           graft.functions.VectorExprs.register(spark)
@@ -1818,7 +1681,7 @@ object SimilarityQueries {
     """))
 
   /** SemDeDup over the TRAINED quantizer's cells (r18) — the same
-    * drop-to-smallest-keeper decision, [[refinedCells]] geometry. The
+    * drop-to-smallest-keeper decision, trained-cell geometry. The
     * point is RECALL of the dedup itself: SemDeDup only compares
     * cell-mates, so a rule centroid straddling two natural clusters
     * splits a duplicate pair across cells and silently misses it;
@@ -1834,12 +1697,12 @@ object SimilarityQueries {
         s"sem_drops_refined@${cfg.stageKey}@${IvfConfig.Default.stageKey}" +
           s":L$LloydIters") {
         semanticDedupOn(
-          refinedCells(spark, dir).filter(col("rn") === 1)
+          ivfCells(spark, dir, Quantizer.Trained()).filter(col("rn") === 1)
             .select(col("vec_id"), col("cid")),
           quantized(spark, dir), cfg)
       }
     },
-    Some(s"""${lloydCte(LloydIters)},
+    Some(s"""${lloydCte},
       home AS (SELECT vec_id, cid FROM (
           SELECT q.vec_id, c.cid, row_number() OVER (PARTITION BY q.vec_id
             ORDER BY list_dot_product(c.cv, c.cv)
@@ -1991,7 +1854,7 @@ object SimilarityQueries {
   val ivfCellSkew = QueryDef(
     "ivf_cell_skew",
     (spark, dir) =>
-      ivfCells(spark, dir).filter(col("rn") === 1)
+      ivfCells(spark, dir, Quantizer.Rule()).filter(col("rn") === 1)
         .groupBy(col("cid")).agg(count(lit(1)).as("n_members"))
         .orderBy(col("n_members").desc, col("cid").asc)
         .limit(20),
@@ -2185,35 +2048,19 @@ object SimilarityQueries {
     * ScaleSpec pinning both the dominance and the limit property
     * (full-width prefilter == exhaustive int8 exactly). */
   private[graft] def pqTopKWith(spark: SparkSession, dir: String,
-      k: Int, cwEvery: Long = 50L, cwKey: Long = 11L): DataFrame =
-    pqTopKWith(spark, dir, k,
-      PqConfig(cwEvery = cwEvery, cwKey = cwKey))
-
-  private[graft] def pqTopKWith(spark: SparkSession, dir: String,
-      k: Int, cfg: PqConfig): DataFrame = {
-      graft.functions.VectorExprs.register(spark)
-      val q8 = quantized(spark, dir)
-      val cw = pqCodebookOf(spark, dir, cfg)
-      val codes = pqCodes(spark, dir, cfg)
-      // ADC: the query-side distance table (queries × codewords ×
-      // subspaces — broadcast-bounded), joined against the slim codes
-      val qtab = q8.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("query_id"), col("q8").as("qv"))
-        .crossJoin(cw)
-        .crossJoin(spark.range(0, PqSubs)
-          .select((col("id") * PqWidth + 1).as("off")))
-        .withColumn("d", expr(
-          s"vec_dot(slice(qv, CAST(off AS INT), $PqWidth), " +
-            s"slice(cv, CAST(off AS INT), $PqWidth))"))
-        .select(col("query_id"), col("off"), col("cw_id").as("code"),
-          col("d"))
-      rankTopK(codes
-        .join(broadcast(qtab), Seq("off", "code"))
-        .filter(col("vec_id") =!= col("query_id"))
-        .groupBy(col("query_id"), col("vec_id").as("neighbor_id"))
-        .agg(sum(col("d")).as("score"))
-        .select(col("query_id"), col("neighbor_id"), col("score")),
-        "score", k)
+      k: Int, cb: Codebook): DataFrame = {
+    val book = cb.book(spark, dir)
+    val codes = pqCodes(spark, dir, cb)
+    // ADC: the query-side distance table (queries × codewords ×
+    // subspaces — broadcast-bounded), joined against the slim codes
+    val qtab = cb.adcTable(spark, dir, book)
+    rankTopK(codes
+      .join(broadcast(qtab), Seq("off", "code"))
+      .filter(col("vec_id") =!= col("query_id"))
+      .groupBy(col("query_id"), col("vec_id").as("neighbor_id"))
+      .agg(sum(col("d")).as("score"))
+      .select(col("query_id"), col("neighbor_id"), col("score")),
+      "score", k)
   }
 
   // private[graft]: the streaming coded gate (CurationStream's probe-map
@@ -2237,31 +2084,23 @@ object SimilarityQueries {
     * plus two adds — not two array slices and three dots (the ×25
     * bench encode is ~2.5 B candidate rows; the naive per-row form made
     * it the single most expensive cold stage in the suite, ~6 μs/row of
-    * slice allocation and re-dotting). */
-  private def pqEncodeTransform(q8rows: DataFrame,
-      cw: DataFrame): DataFrame =
-    pqEncodeWithDist(q8rows, cw)
-      .select(col("vec_id"), col("off"), col("code"))
-
-  /** [[pqEncodeTransform]] plus the winner's exact integer L2 — the
-    * per-(vector, subspace) QUANTIZATION ERROR the encode already
-    * computes and previously discarded. Σ over subspaces is the squared
-    * residual norm |v − reconstruction(codes)|² (subspaces partition
-    * the dims), which [[pqResiduals]] stages for the sound PQ range
-    * prefilter. Same aggregate, same tie-break, one extra projected
-    * field — the codes consumers select it away, so the staged
-    * `pq_codes` schema (and the streamed-codes byte-parity contract)
-    * is untouched. */
-  private def pqEncodeWithDist(q8rows: DataFrame,
+    * slice allocation and re-dotting).
+    *
+    * The winner's exact integer L2 rides along as `dist` — the
+    * per-(vector, subspace) QUANTIZATION ERROR: Σ over subspaces is the
+    * squared residual norm |v − reconstruction(codes)|² (subspaces
+    * partition the dims), which [[pqResiduals]] stages for the sound PQ
+    * range prefilter; the codes table selects it away, so the staged
+    * `pq_codes` schema (and the streamed-codes byte-parity contract) is
+    * untouched. */
+  private[operators] def pqEncodeWithDist(q8rows: DataFrame,
       cw: DataFrame): DataFrame = {
     val spark = q8rows.sparkSession
-    graft.functions.VectorExprs.register(spark)
     val offs = spark.range(0, PqSubs)
       .select((col("id") * PqWidth + 1).as("off"))
-    val qSlices = q8rows.crossJoin(broadcast(offs))
-      .withColumn("qs", expr(s"slice(q8, CAST(off AS INT), $PqWidth)"))
-      .withColumn("qq", expr("vec_dot(qs, qs)"))
-      .select(col("vec_id"), col("off"), col("qs"), col("qq"))
+    val qSlices = pqSlices(q8rows)
+      .select(col("vec_id"), col("off"), col("s").as("qs"),
+        expr("vec_dot(s, s)").as("qq"))
     val cwSlices = cw.crossJoin(offs)
       .withColumn("cs", expr(s"slice(cv, CAST(off AS INT), $PqWidth)"))
       .withColumn("cc", expr("vec_dot(cs, cs)"))
@@ -2286,63 +2125,33 @@ object SimilarityQueries {
     * int per vector; full vectors are read only for survivors).
     * Staged next to the codes it describes: default mode rebuilds with
     * the codes, frozen mode delta-appends per vector under the same
-    * codebook digest key. */
+    * codebook digest key. Under the trained codebook the ceiling is
+    * tighter (training shrinks rrv — the very slack the refusal tests),
+    * so the trained bytes rung refuses MORE at equal scan cost. */
   private[graft] def pqResiduals(spark: SparkSession, dir: String,
-      cfg: PqConfig): DataFrame = {
-    def residOf(q8rows: DataFrame, cw: DataFrame): DataFrame =
-      pqEncodeWithDist(q8rows, cw)
+      cb: Codebook): DataFrame = {
+    lazy val book = cb.book(spark, dir)
+    cb.perVector(spark, dir, "resid")(rows =>
+      cb.encode(rows, book)
         .groupBy(col("vec_id"))
-        .agg(expr("CAST(sum(dist) AS BIGINT)").as("rrv"))
-    if (!cfg.frozen)
-      Staged(spark, dir, s"pq_resid@${cfg.stageKey}") {
-        residOf(quantized(spark, dir), pqCodebookOf(spark, dir, cfg))
-      }
-    else {
-      val cw = frozenPqCodebook(spark, dir, cfg)
-      val key =
-        s"pq_resid@${cfg.stageKey}+frz${pqDigest(spark, dir, cfg)}"
-      Staged.appendable(spark, dir, key, "embeddings", "vec_id")(
-        raw => residOf(quantTransform(normTransform(raw)), cw)) {
-        residOf(quantized(spark, dir), cw)
-      }
-    }
+        .agg(expr("CAST(sum(dist) AS BIGINT)").as("rrv")))
   }
 
-  /** The (cw_id, cv) codebook under `cfg` — frozen mode reads the
-    * staged founding set, default mode derives it from the CURRENT
-    * corpus by the rule (one codeword set shared by every subspace;
-    * their per-subspace slices differ, of course). */
-  private def pqCodebookOf(spark: SparkSession, dir: String,
-      cfg: PqConfig): DataFrame =
-    if (cfg.frozen) frozenPqCodebook(spark, dir, cfg)
-    else cfg.codewordSet(quantized(spark, dir))
-      .select(col("vec_id").as("cw_id"), col("q8").as("cv"))
-
-  /** The staged PQ codes table. Default mode: the rule-derived codebook
-    * depends on the whole current corpus, so the stage rebuilds on any
-    * corpus change — the oracle-checked path, unchanged. Frozen mode:
-    * encoding against a frozen codebook is a per-vector transform, so
-    * the stage is APPENDABLE — a crawl drop encodes only its own
-    * vectors (O(|delta| · codewords · 8) instead of O(corpus·…)), the
-    * frozen-IVF cells discipline. The key carries the codebook id-set
-    * digest so a re-founding moves the codes to a fresh name in
-    * lockstep. */
+  /** The staged PQ codes table (vec_id, off, code). Default mode: the
+    * corpus-derived codebook depends on the whole current corpus, so the
+    * stage rebuilds on any corpus change — the oracle-checked path.
+    * Frozen mode: encoding against a frozen codebook is a per-vector
+    * transform, so the stage is APPENDABLE — a crawl drop encodes only
+    * its own vectors (O(|delta| · codewords · 8) instead of
+    * O(corpus·…)), the frozen-IVF cells discipline. The key carries the
+    * codebook digest (and a residual codebook's quantizer digest) so a
+    * re-founding moves the codes to a fresh name in lockstep. */
   private[graft] def pqCodes(spark: SparkSession, dir: String,
-      cfg: PqConfig): DataFrame =
-    if (!cfg.frozen)
-      Staged(spark, dir, s"pq_codes@${cfg.stageKey}") {
-        pqEncodeTransform(quantized(spark, dir),
-          pqCodebookOf(spark, dir, cfg))
-      }
-    else {
-      val cw = frozenPqCodebook(spark, dir, cfg)
-      val key =
-        s"pq_codes@${cfg.stageKey}+frz${pqDigest(spark, dir, cfg)}"
-      Staged.appendable(spark, dir, key, "embeddings", "vec_id")(
-        raw => pqEncodeTransform(quantTransform(normTransform(raw)), cw)) {
-        pqEncodeTransform(quantized(spark, dir), cw)
-      }
-    }
+      cb: Codebook): DataFrame = {
+    lazy val book = cb.book(spark, dir)
+    cb.perVector(spark, dir, "codes")(rows =>
+      cb.encode(rows, book).select(col("vec_id"), col("off"), col("code")))
+  }
 
   /** The frozen PQ codebook: [[frozenCentroidTable]]'s discipline
     * applied to codewords — founding rows live, later rule ids RECORDED
@@ -2361,8 +2170,8 @@ object SimilarityQueries {
     frozenPqCodebookTable(spark, dir, cfg).filter(col("live"))
       .select(col("cw_id"), col("cv"))
 
-  private def frozenPqCodebookTable(spark: SparkSession, dir: String,
-      cfg: PqConfig): DataFrame = {
+  private[operators] def frozenPqCodebookTable(spark: SparkSession,
+      dir: String, cfg: PqConfig): DataFrame = {
     val dkey =
       if (cfg.driftFractionMax == PqConfig.Default.driftFractionMax) ""
       else s":d${cfg.driftFractionMax}"
@@ -2386,7 +2195,7 @@ object SimilarityQueries {
         // with ids SMALLER than live ones, where an id-blind strict-<
         // probe under-counted drift (r17 ADVICE; the quantizer probe's
         // shared rationale). Pre-sliced on both sides
-        // (pqEncodeTransform's shape): one 8-element dot per candidate
+        // (pqEncodeWithDist's shape): one 8-element dot per candidate
         // row.
         val offs = spark.range(0, PqSubs)
           .select((col("id") * PqWidth + 1).as("off"))
@@ -2423,19 +2232,12 @@ object SimilarityQueries {
     }
   }
 
-  /** Digest of the frozen LIVE codeword id set — the content half of
-    * the frozen codes' stage key ([[frozenDigest]]'s memo and bound
-    * classification). */
-  private def pqDigest(spark: SparkSession, dir: String,
-      cfg: PqConfig): String =
-    digestOf(frozenPqCodebookTable(spark, dir, cfg), "cw_id")
-
   /** `ann_topk_pq` — product-quantization ADC top-k (see [[pqTopKWith]]
     * for the full operator description, exactness discipline, and the
     * recall-honesty note on uniform-random embeddings). */
   val pqTopK = QueryDef(
     "ann_topk_pq",
-    (spark, dir) => pqTopKWith(spark, dir, 5),
+    (spark, dir) => pqTopKWith(spark, dir, 5, Codebook.Rule()),
     Some("""
       WITH q8 AS (
         SELECT vec_id,
@@ -2487,7 +2289,8 @@ object SimilarityQueries {
   val pqCappedTopK = QueryDef(
     "ann_topk_pq_capped",
     (spark, dir) =>
-      pqTopKWith(spark, dir, 5, PqConfig(maxCodewords = Some(6L))),
+      pqTopKWith(spark, dir, 5,
+        Codebook.Rule(PqConfig(maxCodewords = Some(6L)))),
     Some("""
       WITH q8 AS (
         SELECT vec_id,
@@ -2535,82 +2338,98 @@ object SimilarityQueries {
     * what Jégou et al. 2011 §V actually encodes — PQ over residuals, not
     * raw vectors — because residuals are SMALLER than vectors (the coarse
     * quantizer explains most of the magnitude), so the same codebook
-    * budget covers them with less error. Staged per ivf config: an index
-    * artifact next to the cells it derives from. */
+    * budget covers them with less error. Staged per quantizer: an index
+    * artifact next to the cells it derives from. Under the trained
+    * quantizer residual-PQ quality improves where it is governed — by
+    * residual norms, and Σ‖v−c‖² is EXACTLY the objective the coarse
+    * Lloyd descends (r18 verdict ask #2). A frozen trained quantizer makes
+    * the residual a per-vector transform — APPENDABLE, keyed on the
+    * trained table's value digest so a coarse re-training moves the
+    * residual family in lockstep; the rule quantizer's residuals
+    * re-derive from its cells in both modes (no frozen rule IVFADC
+    * lineage exists). */
   private[graft] def ivfResiduals(spark: SparkSession, dir: String,
-      ivfCfg: IvfConfig = IvfConfig.Default): DataFrame =
-    Staged(spark, dir, Staged.keyed("ivfadc_res", ivfCfg.stageKey,
-      IvfConfig.Default.stageKey)) {
-      val q8 = quantized(spark, dir)
-      ivfCells(spark, dir, ivfCfg).filter(col("rn") === 1)
-        .select(col("vec_id"), col("cid"))
-        .join(q8, "vec_id")
-        // broadcast: BOUNDED BY CONFIG — nlist centroid-q8 rows
-        // (ivfCentroidQ8 semi-joins quantized down to the centroid ids
-        // BEFORE the hint; r18 ADVICE — broadcasting the full q8 table
-        // renamed to cid was O(N) and would OOM at deployment scale).
-        .join(broadcast(ivfCentroidQ8(spark, dir, ivfCfg)
-          .withColumnRenamed("cq8", "cq")), "cid")
-        .select(col("vec_id"),
-          expr("zip_with(q8, cq, (a, b) -> a - b)").as("rv"))
+      q: Quantizer): DataFrame = {
+    lazy val cents = q.centroidQ8(spark, dir)
+    def cold = residualOf(quantized(spark, dir),
+      ivfCells(spark, dir, q).filter(col("rn") === 1), cents)
+    q match {
+      case _: Quantizer.Rule =>
+        Staged(spark, dir, q.key("ivfadc_res", "ivfadc_refined_res"))(cold)
+      case _ =>
+        q.perVector(spark, dir, "ivfadc_res", "ivfadc_refined_res")(raw =>
+          deltaResiduals(q, cents)(raw))(cold)
     }
+  }
+
+  /** The ONE residual derivation over explicit home assignments —
+    * (vec_id, rv) with rv = q8(v) − c8(home(v)) — shared by the staged
+    * residual table, the frozen residual codebook's delta probe, and the
+    * residual codes' delta encode (r19 review: inline copies of this
+    * shape could silently drift apart — exactly what the family's
+    * lockstep digests exist to prevent). `homes` must carry (vec_id,
+    * cid); cold paths pass the STAGED assignment table, delta paths a
+    * fresh assignment of only their rows. */
+  private def residualOf(rows: DataFrame, homes: DataFrame,
+      cents: DataFrame): DataFrame =
+    homes.select(col("vec_id"), col("cid"))
+      .join(rows, "vec_id")
+      // broadcast: BOUNDED BY CONFIG — nlist centroid-q8 rows (the rule
+      // table semi-joins quantized down to the centroid ids BEFORE the
+      // hint; r18 ADVICE — broadcasting the full q8 table renamed to cid
+      // was O(N) and would OOM at deployment scale).
+      .join(broadcast(cents.withColumnRenamed("c8", "cq")), "cid")
+      .select(col("vec_id"),
+        expr("zip_with(q8, cq, (a, b) -> a - b)").as("rv"))
+
+  /** Residuals of raw appended rows against their homes under the
+    * (frozen) int8 centroid table `cents`. */
+  private[operators] def deltaResiduals(q: Quantizer, cents: DataFrame)(
+      raw: DataFrame): DataFrame = {
+    val q8d = quantTransform(normTransform(raw))
+    residualOf(q8d, q.assignDelta(cents, 1)(raw), cents)
+  }
 
   /** `ann_topk_ivfadc` — IVFADC proper: coarse cells prune candidates
     * (nprobe probe join, the ivf_int8 shape), and each candidate is
     * scored from its home-centroid dot plus the ADC sum over RESIDUAL
     * codes: score(q, v) = q·c(v) + Σ_s q_s · rcw(code_s)_s ≈ q·v, since
     * v = c(v) + residual and the codes reconstruct the residual. The
-    * residual codebook is the rule codewords' own residuals
-    * ([[PqConfig.codewordSet]] over [[ivfResiduals]]) — deterministic
-    * and oracle-expressible where k-means codebooks are not; the encode
-    * reuses [[pqEncodeWithDist]] verbatim (residuals ride the `q8`
-    * column), so the winner rule, partial-aggregate shape, and tie-break
-    * are the ONE definition. Scan bytes per candidate: 8 small ints +
-    * the nlist-bounded centroid-dot join — the raw-vector copy is never
-    * read. Why this rung exists next to `ann_topk_pq`: the raw-vector
-    * ADC wastes codebook budget re-describing the centroid each vector
-    * already names via its cell; on clustered data the residual encode
-    * is strictly finer at equal bytes (ScaleSpec gates ivfadc ≥ raw ADC
-    * on the clustered fixture; ScaleBench carries the recall rows). */
+    * residual codebook pairs with the quantizer ([[Codebook.residual]]):
+    * the rule codewords' own residuals ([[PqConfig.codewordSet]] over
+    * [[ivfResiduals]]) — deterministic and oracle-expressible — or, under
+    * the trained quantizer, per-subspace Lloyd over the trained
+    * residuals (`ann_topk_ivfadc_refined`: both halves of Jégou §V's
+    * encode trained on the data). Scan bytes per candidate: 8 small ints
+    * + the nlist-bounded centroid-dot join — the raw-vector copy is
+    * never read. Why this rung exists next to `ann_topk_pq`: the
+    * raw-vector ADC wastes codebook budget re-describing the centroid
+    * each vector already names via its cell; on clustered data the
+    * residual encode is strictly finer at equal bytes (ScaleSpec gates
+    * ivfadc ≥ raw ADC on the clustered fixture; ScaleBench carries the
+    * recall rows). */
   private[graft] def ivfAdcTopKWith(spark: SparkSession, dir: String,
-      k: Int, ivfCfg: IvfConfig = IvfConfig.Default,
-      pqCfg: PqConfig = PqConfig.Default): DataFrame = {
+      k: Int, q: Quantizer, pqCfg: PqConfig = PqConfig.Default): DataFrame = {
     graft.functions.VectorExprs.register(spark)
+    val cb = Codebook.residual(q, pqCfg)
     val q8 = quantized(spark, dir)
-    val res = ivfResiduals(spark, dir, ivfCfg)
-    val rcw = pqCfg.codewordSet(res)
-      .select(col("vec_id").as("cw_id"), col("rv").as("cv"))
-    val enc = Staged(spark, dir, Staged.keyed("ivfadc_codes",
-      s"${ivfCfg.stageKey}@${pqCfg.stageKey}",
-      s"${IvfConfig.Default.stageKey}@${PqConfig.Default.stageKey}")) {
-      pqEncodeTransform(res.withColumnRenamed("rv", "q8"), rcw)
-    }
-    val cells = ivfCells(spark, dir, ivfCfg)
+    val book = cb.book(spark, dir)
+    val enc = pqCodes(spark, dir, cb)
+    val cells = ivfCells(spark, dir, q)
     val home = cells.filter(col("rn") === 1)
       .select(col("vec_id").as("neighbor_id"), col("cid"))
-    val qdocs = q8.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("q8").as("qv"))
     // ids-only candidates from the probe join (the ivf_int8 shape)
     val cand = cells.filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("cid"))
       .join(home, "cid")
       .filter(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id")).distinct()
-    // ADC table over residual codewords — queries × codewords × 8,
-    // broadcast: BOUNDED BY CONFIG (the pqTopKWith classification)
-    val qtab = qdocs
-      .crossJoin(rcw)
-      .crossJoin(spark.range(0, PqSubs)
-        .select((col("id") * PqWidth + 1).as("off")))
-      .withColumn("d", expr(
-        s"vec_dot(slice(qv, CAST(off AS INT), $PqWidth), " +
-          s"slice(cv, CAST(off AS INT), $PqWidth))"))
-      .select(col("query_id"), col("off"), col("cw_id").as("code"),
-        col("d"))
+    val qtab = cb.adcTable(spark, dir, book)
     // centroid-dot table — queries × nlist, broadcast: BOUNDED BY CONFIG
-    val qcent = qdocs
-      .crossJoin(broadcast(ivfCentroidQ8(spark, dir, ivfCfg)))
-      .withColumn("dc", expr("vec_dot(qv, cq8)"))
+    val qcent = q8.filter(col("vec_id") < 10)
+      .select(col("vec_id").as("query_id"), col("q8").as("qv"))
+      .crossJoin(broadcast(q.centroidQ8(spark, dir)))
+      .withColumn("dc", expr("vec_dot(qv, c8)"))
       .select(col("query_id"), col("cid"), col("dc"))
     val sumd = cand
       .join(enc.select(col("vec_id").as("neighbor_id"), col("off"),
@@ -2627,7 +2446,7 @@ object SimilarityQueries {
 
   val ivfAdcTopK = QueryDef(
     "ann_topk_ivfadc",
-    (spark, dir) => ivfAdcTopKWith(spark, dir, 5),
+    (spark, dir) => ivfAdcTopKWith(spark, dir, 5, Quantizer.Rule()),
     Some("""
       WITH q8 AS (
         SELECT vec_id,
@@ -2716,18 +2535,28 @@ object SimilarityQueries {
     * choice re-measured per subspace (sf0.01 raw-slice SSE descends
     * ~26% in sweep 1, < 4% in sweep 2; SCALE.md r19). The stage key
     * carries it, so two settings never alias. */
-  private val PqLloydIters = 2
+  private[operators] val PqLloydIters = 2
 
   /** (vec_id, off, s) slices of an int8 table carrying `q8` — the ONE
     * slicing rule shared by training, encoding, and the query-side
     * distance tables (off is the 1-based slice start, the historical
-    * [[pqEncodeWithDist]] geometry). */
-  private def pqSlices(rows: DataFrame): DataFrame = {
+    * [[pqEncodeWithDist]] geometry). The geometry is PqSubs × PqWidth
+    * components exactly; the embedding width comes from the input
+    * parquet, so a vector of any other width fails the plan with
+    * `raise_error` — in-plan, no extra job — instead of silently
+    * dropping the tail dimensions (wider) or reading past a short last
+    * slice (narrower). */
+  private[operators] def pqSlices(rows: DataFrame): DataFrame = {
     val spark = rows.sparkSession
     graft.functions.VectorExprs.register(spark)
+    val dim = PqSubs * PqWidth
     rows.crossJoin(broadcast(spark.range(0, PqSubs)
         .select((col("id") * PqWidth + 1).as("off"))))
-      .withColumn("s", expr(s"slice(q8, CAST(off AS INT), $PqWidth)"))
+      .withColumn("s", expr(s"CASE WHEN size(q8) = $dim " +
+        s"THEN slice(q8, CAST(off AS INT), $PqWidth) " +
+        s"ELSE raise_error(concat('PQ needs embeddings of exactly $dim " +
+        s"components ($PqSubs subspaces x $PqWidth dims), got ', " +
+        "CAST(size(q8) AS STRING))) END"))
       .select(col("vec_id"), col("off"), col("s"))
   }
 
@@ -2735,7 +2564,8 @@ object SimilarityQueries {
     * queries × codewords × 8, the ONE definition every trained rung
     * broadcasts (r19 review: four inline copies could drift the
     * query-set rule or the distance expression apart). */
-  private def trainedAdcTable(q8: DataFrame, cb: DataFrame): DataFrame =
+  private[operators] def trainedAdcTable(q8: DataFrame,
+      cb: DataFrame): DataFrame =
     pqSlices(q8.filter(col("vec_id") < 10))
       .withColumnRenamed("vec_id", "query_id")
       .join(cb, Seq("off"))
@@ -2747,7 +2577,8 @@ object SimilarityQueries {
     * codewords' own slices, per subspace: the trained family REFINES
     * the rule set (stable ids, moved values), the coarse quantizer's
     * seed discipline verbatim. */
-  private def pqSeedSlices(rows: DataFrame, cfg: PqConfig): DataFrame =
+  private[operators] def pqSeedSlices(rows: DataFrame,
+      cfg: PqConfig): DataFrame =
     pqSlices(cfg.codewordSet(rows))
       .select(col("off"), col("vec_id").as("cw_id"), col("s").as("cs"))
 
@@ -2774,7 +2605,8 @@ object SimilarityQueries {
       .withColumn("dist",
         expr("CAST(ss + cc - 2 * vec_dot(s, cs) AS BIGINT)"))
 
-  private def pqAssignFull(slices: DataFrame, cb: DataFrame): DataFrame =
+  private[operators] def pqAssignFull(slices: DataFrame,
+      cb: DataFrame): DataFrame =
     pqScored(slices, cb)
       .groupBy(col("vec_id"), col("off"))
       .agg(min(struct(col("dist"), col("cw_id"))).as("b"))
@@ -2824,70 +2656,46 @@ object SimilarityQueries {
     cb
   }
 
-  private def pqLloydKey(base: String, cfg: PqConfig, iters: Int): String =
-    Staged.keyed(base, s"${cfg.stageKey}:L$iters",
+  private[operators] def pqLloydKey(base: String, cfg: PqConfig): String =
+    Staged.keyed(base, s"${cfg.stageKey}:L$PqLloydIters",
       s"${PqConfig.Default.stageKey}:L$PqLloydIters")
 
-  /** The trained raw-vector PQ codebook (off, cw_id, cs), staged per
-    * (config, sweeps) — the index-training artifact the trained ADC
-    * rung and the trained codes table read. Under `cfg.frozen` this is
-    * the live view of [[frozenPqRefinedTable]] — trained ONCE at the
-    * founding corpus. */
-  private[graft] def pqRefinedCodebook(spark: SparkSession, dir: String,
-      cfg: PqConfig = PqConfig.Default,
-      iters: Int = PqLloydIters): DataFrame =
-    if (cfg.frozen)
-      frozenPqRefinedTable(spark, dir, cfg, iters)
-        .select(col("off"), col("cw_id"), col("cs"))
-    else
-      Staged(spark, dir, pqLloydKey("pq_refined_cb", cfg, iters)) {
-        val q8 = quantized(spark, dir)
-        pqLloydRaw(pqSlices(q8), pqSeedSlices(q8, cfg), iters)
-      }
-
   /** The FROZEN trained PQ codebook — [[frozenRefinedTable]]'s whole
-    * lifecycle discipline applied per subspace: train ONCE at the
-    * founding corpus, record each (off, cw_id) cell's FOUNDING max
-    * encode distance rr0, and gate appends with the O(|delta|·codewords)
-    * COVERAGE probe — an appended (vector, subspace) slice whose best
-    * frozen-codeword distance exceeds that cell's founding radius lands
-    * outside the founding geometry; past `cfg.driftFractionMax` of a
-    * drop the stage refuses the delta ([[Staged.DeltaUnsupported]] →
-    * cold re-train over the grown corpus). Coverage is exactly what the
-    * trained codebook sells (small residuals for ADC quality and the
-    * range rung's rrv ceiling), so the probe gates on the quantity
-    * consumers rely on. An empty founding cell carries rr0 = 0 —
-    * conservative by construction. */
-  private[graft] def frozenPqRefinedTable(spark: SparkSession, dir: String,
-      cfg: PqConfig, iters: Int = PqLloydIters): DataFrame =
-    frozenPqLloydTable(spark, dir,
-      pqLloydKey("pq_refined_cb", cfg, iters), cfg,
-      deltaRaw => pqSlices(quantTransform(normTransform(deltaRaw)))) {
-      val q8 = quantized(spark, dir)
-      (pqSlices(q8), pqSeedSlices(q8, cfg), iters)
-    }
-
-  /** The ONE frozen trained-codebook lifecycle — shared by the RAW
-    * codebook ([[frozenPqRefinedTable]]) and the RESIDUAL one
-    * ([[frozenPqResidRefinedTable]], which differs only in the slice
-    * source and in carrying the coarse quantizer's value digest in its
-    * key): train once at founding + record per-(off, cw_id) founding
-    * max encode distance rr0; on append, the O(|delta|·codewords)
-    * coverage probe refuses when more than `cfg.driftFractionMax` of
-    * the appended (vector, subspace) encodings land outside their
-    * winning cell's founding radius. */
-  private def frozenPqLloydTable(spark: SparkSession, dir: String,
-      baseKey: String, cfg: PqConfig,
-      deltaSlices: DataFrame => DataFrame)(
-      founding: => (DataFrame, DataFrame, Int)): DataFrame = {
+    * lifecycle discipline applied per subspace, ONE definition for the
+    * raw and the residual codebook: train ONCE at the founding corpus,
+    * record each (off, cw_id) cell's FOUNDING max encode distance rr0,
+    * and gate appends with the O(|delta|·codewords) COVERAGE probe — an
+    * appended (vector, subspace) slice whose best frozen-codeword
+    * distance exceeds that cell's founding radius lands outside the
+    * founding geometry; past `cfg.driftFractionMax` of a drop the stage
+    * refuses the delta ([[Staged.DeltaUnsupported]] → cold re-train over
+    * the grown corpus). Coverage is exactly what the trained codebook
+    * sells (small residuals for ADC quality and the range rung's rrv
+    * ceiling), so the probe gates on the quantity consumers rely on. An
+    * empty founding cell carries rr0 = 0 — conservative by construction.
+    * A residual codebook requires a FROZEN coarse quantizer (residuals
+    * against re-training centroids would silently change meaning under
+    * stable keys) and carries its value digest in the key: a coarse
+    * re-training re-founds the residual codebook — and through ITS
+    * digest the residual codes — in lockstep (r18 verdict ask #2). */
+  private[graft] def frozenTrainedCodebook(spark: SparkSession, dir: String,
+      book: Codebook.Trained): DataFrame = {
+    val cfg = book.cfg
+    book.residualOf.foreach(q => require(q.cfg.frozen, "a frozen residual " +
+      "codebook needs a FROZEN coarse quantizer: residuals against " +
+      "re-training centroids would silently change meaning under stable " +
+      "keys"))
     val dkey =
       if (cfg.driftFractionMax == PqConfig.Default.driftFractionMax) ""
       else s":d${cfg.driftFractionMax}"
-    val key = baseKey + s"$dkey+frz"
+    val key = book.bookKey +
+      book.residualOf.fold("")(q => s"+c${q.digest(spark, dir)}") +
+      s"$dkey+frz"
+    val deltaSource = book.deltaSource(spark, dir)
     Staged.rebuildable(spark, dir, key, "embeddings", "vec_id")(
       (prior, deltaRaw) => {
         graft.functions.VectorExprs.register(spark)
-        val best = deltaSlices(deltaRaw)
+        val best = pqSlices(deltaSource(deltaRaw))
           .withColumn("ss", expr("vec_dot(s, s)"))
           // broadcast: BOUNDED BY CONFIG — codewords×8 trained rows.
           .join(broadcast(prior.select(col("off"), col("cw_id"),
@@ -2911,10 +2719,10 @@ object SimilarityQueries {
       // founding: train, then record each cell's founding radius. Pin
       // the trained codebook once — the Lloyd loop must not re-drive
       // for the radius pass and the final join.
-      val (slices, seeds, iters) = founding
-      val sl = graft.functions.Materialized(slices).df
+      val src = book.source(spark, dir)
+      val sl = graft.functions.Materialized(pqSlices(src)).df
       val cb = graft.functions.Materialized(
-        pqLloydRaw(sl, seeds, iters)).df
+        pqLloydRaw(sl, pqSeedSlices(src, cfg), PqLloydIters)).df
       val rr0 = pqAssignFull(sl, cb)
         .groupBy(col("off"), col("code").as("cw_id"))
         .agg(max(col("dist")).as("rr0"))
@@ -2943,62 +2751,18 @@ object SimilarityQueries {
     md.digest().map("%02x".format(_)).mkString.take(8)
   }
 
-  /** Value digest of a trained (off, cw_id, cs) codebook table —
-    * memoized on the STAGED instance (the refinedValueDigest
-    * discipline: a fresh wrapper frame would miss the WeakHashMap memo
-    * every call), one definition for the raw and residual families.
-    * Collect is codewords×8 rows — bounded by config under caps. */
-  private def pqTableDigest(tbl: DataFrame): String =
-    memoizedDigest(tbl) {
-      pqValueDigestOf(
-        tbl.select(col("off"), col("cw_id"), col("cs")).collect()
-          .map(r => (r.getLong(0), r.getLong(1),
-            r.getSeq[Double](2).map(_.toLong))).toSeq)
-    }
-
-  private def pqRefinedDigest(spark: SparkSession, dir: String,
-      cfg: PqConfig, iters: Int): String =
-    pqTableDigest(frozenPqRefinedTable(spark, dir, cfg, iters))
-
-  /** The trained codes table (vec_id, off, code). Default mode: the
-    * trained codebook derives from the whole current corpus → rebuild
-    * on change (the oracle-checked path). Frozen mode: encoding against
-    * a frozen trained codebook is a per-vector transform → APPENDABLE,
-    * keyed on the codebook's VALUE digest so a re-training moves the
-    * codes to a fresh stage in lockstep. */
-  private[graft] def pqRefinedCodes(spark: SparkSession, dir: String,
-      cfg: PqConfig = PqConfig.Default,
-      iters: Int = PqLloydIters): DataFrame =
-    if (!cfg.frozen)
-      Staged(spark, dir, pqLloydKey("pq_refined_codes", cfg, iters)) {
-        pqAssignFull(pqSlices(quantized(spark, dir)),
-          pqRefinedCodebook(spark, dir, cfg, iters))
-          .select(col("vec_id"), col("off"), col("code"))
-      }
-    else {
-      val cb = pqRefinedCodebook(spark, dir, cfg, iters)
-      val key = pqLloydKey("pq_refined_codes", cfg, iters) +
-        s"+frz${pqRefinedDigest(spark, dir, cfg, iters)}"
-      Staged.appendable(spark, dir, key, "embeddings", "vec_id")(
-        raw => pqAssignFull(pqSlices(quantTransform(normTransform(raw))),
-          cb).select(col("vec_id"), col("off"), col("code"))) {
-        pqAssignFull(pqSlices(quantized(spark, dir)), cb)
-          .select(col("vec_id"), col("off"), col("code"))
-      }
-    }
-
   /** Shared oracle fragment: the per-subspace Lloyd chain
-    * `{p}0 .. {p}{iters}` over slice CTE `src` (vec_id, off, s) —
+    * `{p}0 .. {p}{PqLloydIters}` over slice CTE `src` (vec_id, off, s) —
     * mirrors [[pqLloydRaw]] stage for stage (same rel-distance
     * ordering, same (dist, cw_id) tie-break, same floored means, same
     * keep-on-empty rule). Caller supplies the WITH head and trailing
     * SELECT; the fragment ends with a comma. */
-  private def pqLloydChain(iters: Int, src: String, seedRule: String,
+  private def pqLloydChain(src: String, seedRule: String,
       p: String): String = {
     val sb = new StringBuilder(s"""
       ${p}0 AS (SELECT off, vec_id AS cw_id, s AS cs FROM $src
                 WHERE $seedRule),""")
-    for (i <- 1 to iters) {
+    for (i <- 1 to PqLloydIters) {
       val q = i - 1
       sb.append(s"""
       ${p}a$i AS (SELECT vec_id, off, cw_id FROM (
@@ -3038,12 +2802,12 @@ object SimilarityQueries {
   val pqRefine = QueryDef(
     "pq_refine",
     (spark, dir) =>
-      pqRefinedCodebook(spark, dir)
+      Codebook.Trained().book(spark, dir)
         .select(col("off"), col("cw_id"),
           posexplode(col("cs")).as(Seq("dim", "v")))
         .select(col("off"), col("cw_id"), col("dim"),
           col("v").cast("long").as("c8")),
-    Some(s"""${pqVsHead}${pqLloydChain(PqLloydIters, "vs",
+    Some(s"""${pqVsHead}${pqLloydChain("vs",
         "vec_id % 50 = 11", "pc").stripSuffix(",")}
       SELECT off, cw_id, d.dim AS dim, CAST(cs[d.dim + 1] AS BIGINT) AS c8
       FROM pc$PqLloydIters, (SELECT unnest(generate_series(0, 7)) AS dim) d
@@ -3055,28 +2819,10 @@ object SimilarityQueries {
     * data-aware codewords — same scan bytes, better recall wherever the
     * corpus has structure (ScaleSpec gates trained ≥ rule on the
     * clustered fixture; SCALE.md r19 carries the measured rows). */
-  private[graft] def pqRefinedTopKWith(spark: SparkSession, dir: String,
-      k: Int, cfg: PqConfig = PqConfig.Default,
-      iters: Int = PqLloydIters): DataFrame = {
-    graft.functions.VectorExprs.register(spark)
-    val cb = pqRefinedCodebook(spark, dir, cfg, iters)
-    val codes = pqRefinedCodes(spark, dir, cfg, iters)
-    // ADC distance table: queries × codewords × 8 — broadcast: BOUNDED
-    // BY CONFIG (the pqTopKWith classification).
-    val qtab = trainedAdcTable(quantized(spark, dir), cb)
-    rankTopK(codes
-      .join(broadcast(qtab), Seq("off", "code"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .groupBy(col("query_id"), col("vec_id").as("neighbor_id"))
-      .agg(sum(col("d")).as("score"))
-      .select(col("query_id"), col("neighbor_id"), col("score")),
-      "score", k)
-  }
-
   val pqRefinedTopK = QueryDef(
     "ann_topk_pq_refined",
-    (spark, dir) => pqRefinedTopKWith(spark, dir, 5),
-    Some(s"""${pqVsHead}${pqLloydChain(PqLloydIters, "vs",
+    (spark, dir) => pqTopKWith(spark, dir, 5, Codebook.Trained()),
+    Some(s"""${pqVsHead}${pqLloydChain("vs",
         "vec_id % 50 = 11", "pc")}
       enc AS (SELECT vec_id, off, cw_id AS code FROM (
           SELECT v.vec_id, v.off, c.cw_id, row_number() OVER (
@@ -3101,125 +2847,14 @@ object SimilarityQueries {
 
   // ── the composed trained rung: IVFADC over the TRAINED geometry ──
 
-  /** The ONE trained-residual derivation over explicit home assignments
-    * — (vec_id, rv) with rv = q8(v) − c8(home(v)) — shared by the
-    * staged residual table, the frozen residual codebook's delta probe,
-    * and the composed codes' delta encode (r19 review: four inline
-    * copies of this shape could silently drift apart — exactly what the
-    * family's lockstep digests exist to prevent). `homes` must carry
-    * (vec_id, cid); cold paths pass the STAGED assignment table, delta
-    * paths a fresh [[l2Assign]] of only their rows. */
-  private def residualOf(rows: DataFrame, homes: DataFrame,
-      cents: DataFrame): DataFrame =
-    homes.select(col("vec_id"), col("cid"))
-      .join(rows, "vec_id")
-      // broadcast: BOUNDED BY CONFIG — nlist trained-centroid rows.
-      .join(broadcast(cents.withColumnRenamed("c8", "cq")), "cid")
-      .select(col("vec_id"),
-        expr("zip_with(q8, cq, (a, b) -> a - b)").as("rv"))
-
-  /** Per-vector int8 residual against its TRAINED home centroid
-    * (vec_id, rv) — [[ivfResiduals]]' analogue over
-    * [[refinedCells]]/[[refinedCentroids]]: residual-PQ quality is
-    * governed by residual norms, and Σ‖v−c‖² is EXACTLY the objective
-    * the coarse Lloyd descends (r18 verdict ask #2), so trained homes
-    * shrink the very thing the residual codebook must describe.
-    * Staged per (ivf config, sweeps). */
-  private[graft] def refinedResiduals(spark: SparkSession, dir: String,
-      ivfCfg: IvfConfig = IvfConfig.Default,
-      iters: Int = LloydIters): DataFrame =
-    if (!ivfCfg.frozen)
-      Staged(spark, dir, lloydKey("ivfadc_refined_res", ivfCfg, iters)) {
-        residualOf(quantized(spark, dir),
-          refinedCells(spark, dir, ivfCfg, iters).filter(col("rn") === 1),
-          refinedCentroids(spark, dir, ivfCfg, iters))
-      }
-    else {
-      // frozen (r19): the residual is a PER-VECTOR transform once the
-      // trained centroids are frozen — APPENDABLE, keyed on the trained
-      // table's VALUE digest so a coarse re-training moves the residual
-      // family in lockstep (r18 verdict ask #2's composed-key claim).
-      // The cold build reads the STAGED frozen cell assignments instead
-      // of re-running the corpus × nlist assignment (r19 review).
-      val tbl = frozenRefinedTable(spark, dir, ivfCfg, iters)
-      val cents = tbl.select(col("cid"), col("c8"))
-      val key = lloydKey("ivfadc_refined_res", ivfCfg, iters) +
-        s"+frz${refinedValueDigest(tbl)}"
-      Staged.appendable(spark, dir, key, "embeddings", "vec_id")(
-        raw => {
-          val q8d = quantTransform(normTransform(raw))
-          residualOf(q8d, l2Assign(q8d, cents, maxRn = 1), cents)
-        }) {
-        residualOf(quantized(spark, dir),
-          refinedCells(spark, dir, ivfCfg, iters).filter(col("rn") === 1),
-          cents)
-      }
-    }
-
-  private def composedLloydKey(base: String, ivfCfg: IvfConfig,
-      iters: Int, pqCfg: PqConfig, pqIters: Int): String =
+  /** Stage name of a table over a trained quantizer × trained residual
+    * codebook pair — both configs and both sweep counts key it. */
+  private[operators] def composedLloydKey(base: String, ivfCfg: IvfConfig,
+      pqCfg: PqConfig): String =
     Staged.keyed(base,
-      s"${ivfCfg.stageKey}:L$iters@${pqCfg.stageKey}:L$pqIters",
+      s"${ivfCfg.stageKey}:L$LloydIters@${pqCfg.stageKey}:L$PqLloydIters",
       s"${IvfConfig.Default.stageKey}:L$LloydIters@" +
         s"${PqConfig.Default.stageKey}:L$PqLloydIters")
-
-  /** The TRAINED residual codebook — per-subspace Lloyd over residuals
-    * under trained homes, seeded by the rule codewords' own residuals:
-    * both halves of Jégou §V's IVFADC encode now train on the data
-    * (coarse cells from r18's integer Lloyd, residual codewords from
-    * this). Residual components sit in ±254, so slice dots stay ≪ 2^53
-    * — the arithmetic-exactness envelope is unchanged. */
-  private[graft] def pqResidRefinedCodebook(spark: SparkSession,
-      dir: String, ivfCfg: IvfConfig = IvfConfig.Default,
-      pqCfg: PqConfig = PqConfig.Default, iters: Int = LloydIters,
-      pqIters: Int = PqLloydIters): DataFrame =
-    if (!pqCfg.frozen)
-      Staged(spark, dir,
-        composedLloydKey("pq_refined_rescb", ivfCfg, iters, pqCfg,
-          pqIters)) {
-        val res = refinedResiduals(spark, dir, ivfCfg, iters)
-          .withColumnRenamed("rv", "q8")
-        pqLloydRaw(pqSlices(res), pqSeedSlices(res, pqCfg), pqIters)
-      }
-    else
-      frozenPqResidRefinedTable(spark, dir, ivfCfg, pqCfg, iters, pqIters)
-        .select(col("off"), col("cw_id"), col("cs"))
-
-  /** The FROZEN trained residual codebook — [[frozenPqLloydTable]]'s
-    * lifecycle over residual slices. Requires a frozen coarse config
-    * (residuals against moving centroids could never be re-encoded
-    * consistently), and its stage key carries the trained-centroid
-    * VALUE digest: a coarse re-training re-founds the residual
-    * codebook — and through ITS value digest the composed codes —
-    * in lockstep (r18 verdict ask #2). */
-  private[graft] def frozenPqResidRefinedTable(spark: SparkSession,
-      dir: String, ivfCfg: IvfConfig, pqCfg: PqConfig,
-      iters: Int = LloydIters, pqIters: Int = PqLloydIters): DataFrame = {
-    require(ivfCfg.frozen, "a frozen residual codebook needs a FROZEN " +
-      "coarse quantizer: residuals against re-training centroids would " +
-      "silently change meaning under stable keys")
-    val tbl = frozenRefinedTable(spark, dir, ivfCfg, iters)
-    val cents = tbl.select(col("cid"), col("c8"))
-    def residSlices(rows: DataFrame): DataFrame =
-      pqSlices(residualOf(rows, l2Assign(rows, cents, maxRn = 1), cents)
-        .withColumnRenamed("rv", "q8"))
-    frozenPqLloydTable(spark, dir,
-      composedLloydKey("pq_refined_rescb", ivfCfg, iters, pqCfg,
-        pqIters) + s"+c${refinedValueDigest(tbl)}", pqCfg,
-      deltaRaw => residSlices(quantTransform(normTransform(deltaRaw)))) {
-      val res = refinedResiduals(spark, dir, ivfCfg, iters)
-        .withColumnRenamed("rv", "q8")
-      (pqSlices(res), pqSeedSlices(res, pqCfg), pqIters)
-    }
-  }
-
-  /** Memoized value digest of the frozen trained RESIDUAL codebook —
-    * the composed codes' key component. */
-  private def pqResidRefinedDigest(spark: SparkSession, dir: String,
-      ivfCfg: IvfConfig, pqCfg: PqConfig, iters: Int,
-      pqIters: Int): String =
-    pqTableDigest(frozenPqResidRefinedTable(spark, dir, ivfCfg, pqCfg,
-      iters, pqIters))
 
   /** The trained residual codebook's own audit row (the `ivf_refine` /
     * `pq_refine` discipline: every trained artifact an operator trusts
@@ -3228,12 +2863,13 @@ object SimilarityQueries {
   val pqResidRefine = QueryDef(
     "pq_refine_resid",
     (spark, dir) =>
-      pqResidRefinedCodebook(spark, dir)
+      Codebook.Trained(residualOf = Some(Quantizer.Trained()))
+        .book(spark, dir)
         .select(col("off"), col("cw_id"),
           posexplode(col("cs")).as(Seq("dim", "v")))
         .select(col("off"), col("cw_id"), col("dim"),
           col("v").cast("long").as("c8")),
-    Some(s"""${lloydCte(LloydIters)},
+    Some(s"""${lloydCte},
       offs AS (SELECT unnest(range(8)) * 8 + 1 AS off),
       home AS (SELECT vec_id, cid FROM (
           SELECT q.vec_id, c.cid, row_number() OVER (PARTITION BY q.vec_id
@@ -3246,107 +2882,20 @@ object SimilarityQueries {
               FROM q8 v JOIN home h USING (vec_id)
               JOIN c$LloydIters c ON c.cid = h.cid),
       rs AS (SELECT vec_id, off, rv[off:off+7] AS s FROM res, offs),
-      ${pqLloydChain(PqLloydIters, "rs", "vec_id % 50 = 11", "rc")
+      ${pqLloydChain("rs", "vec_id % 50 = 11", "rc")
         .stripPrefix("\n").stripSuffix(",")}
       SELECT off, cw_id, d.dim AS dim, CAST(cs[d.dim + 1] AS BIGINT) AS c8
       FROM rc$PqLloydIters, (SELECT unnest(generate_series(0, 7)) AS dim) d
     """))
 
-  /** The trained-residual codes table (vec_id, off, code), staged per
-    * composed config — the 8-small-ints-per-vector copy the refined
-    * IVFADC rung scans. */
-  private[graft] def ivfAdcRefinedCodes(spark: SparkSession, dir: String,
-      ivfCfg: IvfConfig = IvfConfig.Default,
-      pqCfg: PqConfig = PqConfig.Default, iters: Int = LloydIters,
-      pqIters: Int = PqLloydIters): DataFrame =
-    if (!pqCfg.frozen)
-      Staged(spark, dir, composedLloydKey("ivfadc_refined_codes", ivfCfg,
-        iters, pqCfg, pqIters)) {
-        pqAssignFull(
-          pqSlices(refinedResiduals(spark, dir, ivfCfg, iters)
-            .withColumnRenamed("rv", "q8")),
-          pqResidRefinedCodebook(spark, dir, ivfCfg, pqCfg, iters,
-            pqIters))
-          .select(col("vec_id"), col("off"), col("code"))
-      }
-    else {
-      // frozen (r19): encoding against the frozen residual codebook is
-      // per-vector → APPENDABLE. The key carries BOTH value digests —
-      // trained centroids (through the residuals) and the residual
-      // codebook — so re-founding either end moves the composed codes
-      // in lockstep (r18 verdict ask #2). The cold build reads the
-      // STAGED frozen residuals instead of re-deriving them from the
-      // whole corpus (r19 review).
-      val tbl = frozenRefinedTable(spark, dir, ivfCfg, iters)
-      val cents = tbl.select(col("cid"), col("c8"))
-      val cb = pqResidRefinedCodebook(spark, dir, ivfCfg, pqCfg, iters,
-        pqIters)
-      val key = composedLloydKey("ivfadc_refined_codes", ivfCfg, iters,
-        pqCfg, pqIters) +
-        s"+frz${refinedValueDigest(tbl)}-${pqResidRefinedDigest(spark,
-          dir, ivfCfg, pqCfg, iters, pqIters)}"
-      def encode(res: DataFrame): DataFrame =
-        pqAssignFull(pqSlices(res.withColumnRenamed("rv", "q8")), cb)
-          .select(col("vec_id"), col("off"), col("code"))
-      Staged.appendable(spark, dir, key, "embeddings", "vec_id")(
-        raw => {
-          val q8d = quantTransform(normTransform(raw))
-          encode(residualOf(q8d, l2Assign(q8d, cents, maxRn = 1), cents))
-        }) {
-        encode(refinedResiduals(spark, dir, ivfCfg, iters))
-      }
-    }
-
   /** `ann_topk_ivfadc_refined` — IVFADC with BOTH halves trained
     * (r18 verdict ask #2): trained coarse cells prune candidates,
-    * trained residual codes ADC-score them, score = q·c(v) + Σ_s
-    * q_s·rcw(code_s)_s. Plan shape is [[ivfAdcTopKWith]]'s verbatim —
-    * ids-only probe join, broadcast distance + centroid-dot tables,
-    * partial-agg ADC sum — only the staged tables change. */
-  private[graft] def ivfAdcRefinedTopKWith(spark: SparkSession,
-      dir: String, k: Int, ivfCfg: IvfConfig = IvfConfig.Default,
-      pqCfg: PqConfig = PqConfig.Default, iters: Int = LloydIters,
-      pqIters: Int = PqLloydIters): DataFrame = {
-    graft.functions.VectorExprs.register(spark)
-    val q8 = quantized(spark, dir)
-    val cells = refinedCells(spark, dir, ivfCfg, iters)
-    val rcw = pqResidRefinedCodebook(spark, dir, ivfCfg, pqCfg, iters,
-      pqIters)
-    val enc = ivfAdcRefinedCodes(spark, dir, ivfCfg, pqCfg, iters, pqIters)
-    val home = cells.filter(col("rn") === 1)
-      .select(col("vec_id").as("neighbor_id"), col("cid"))
-    val qdocs = q8.filter(col("vec_id") < 10)
-    val cand = cells.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("cid"))
-      .join(home, "cid")
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id")).distinct()
-    // ADC table over trained residual codewords — queries × codewords
-    // × 8, broadcast: BOUNDED BY CONFIG (the pqTopKWith classification)
-    val qtab = trainedAdcTable(qdocs, rcw)
-    // centroid-dot table — queries × nlist, broadcast: BOUNDED BY CONFIG
-    val qcent = qdocs
-      .select(col("vec_id").as("query_id"), col("q8").as("qv"))
-      .crossJoin(broadcast(refinedCentroids(spark, dir, ivfCfg, iters)))
-      .withColumn("dc", expr("vec_dot(qv, c8)"))
-      .select(col("query_id"), col("cid"), col("dc"))
-    val sumd = cand
-      .join(enc.select(col("vec_id").as("neighbor_id"), col("off"),
-        col("code")), "neighbor_id")
-      .join(broadcast(qtab), Seq("query_id", "off", "code"))
-      .groupBy(col("query_id"), col("neighbor_id"))
-      .agg(sum(col("d")).as("sd"))
-    rankTopK(sumd
-      .join(home, "neighbor_id")
-      .join(broadcast(qcent), Seq("query_id", "cid"))
-      .withColumn("score", col("dc") + col("sd")),
-      "score", k)
-  }
-
+    * trained residual codes ADC-score them — [[ivfAdcTopKWith]]'s plan
+    * verbatim, only the staged tables change. */
   val ivfAdcRefinedTopK = QueryDef(
     "ann_topk_ivfadc_refined",
-    (spark, dir) => ivfAdcRefinedTopKWith(spark, dir, 5),
-    Some(s"""${lloydCte(LloydIters)},
+    (spark, dir) => ivfAdcTopKWith(spark, dir, 5, Quantizer.Trained()),
+    Some(s"""${lloydCte},
       offs AS (SELECT unnest(range(8)) * 8 + 1 AS off),
       vs AS (SELECT vec_id, off, qv[off:off+7] AS s FROM q8, offs),
       ranked AS (SELECT vec_id, cid, rn FROM (
@@ -3361,7 +2910,7 @@ object SimilarityQueries {
               FROM q8 v JOIN home h USING (vec_id)
               JOIN c$LloydIters c ON c.cid = h.cid),
       rs AS (SELECT vec_id, off, rv[off:off+7] AS s FROM res, offs),
-      ${pqLloydChain(PqLloydIters, "rs", "vec_id % 50 = 11", "rc")
+      ${pqLloydChain("rs", "vec_id % 50 = 11", "rc")
         .stripPrefix("\n")}
       enc AS (SELECT vec_id, off, cw_id AS code FROM (
           SELECT v.vec_id, v.off, c.cw_id, row_number() OVER (
@@ -3408,11 +2957,19 @@ object SimilarityQueries {
     * ADC boundary ties at rank `pre` break by neighbor_id asc (rankTopK's
     * pinned rule), rescore ties likewise — both engines agree. */
   private[graft] def pqRerankTopKWith(spark: SparkSession, dir: String,
-      k: Int, pre: Int, cfg: PqConfig): DataFrame = {
-    graft.functions.VectorExprs.register(spark)
+      k: Int, pre: Int, cb: Codebook): DataFrame = {
     val q8 = quantized(spark, dir)
-    val cand = pqTopKWith(spark, dir, pre, cfg)
-      .select(col("query_id"), col("neighbor_id"))
+    int8Rescore(q8, pqTopKWith(spark, dir, pre, cb)
+      .select(col("query_id"), col("neighbor_id")), k)
+  }
+
+  /** The exact int8 rescore every two-stage rung ends in: (query_id,
+    * neighbor_id) candidates → top-`k` by the exact integer dot against
+    * the staged [[quantized]] vectors (the bounded query side broadcast,
+    * the neighbor side one equi-join). */
+  private def int8Rescore(q8: DataFrame, cand: DataFrame,
+      k: Int): DataFrame = {
+    graft.functions.VectorExprs.register(q8.sparkSession)
     rankTopK(cand
       // broadcast: BOUNDED — fixed 10-row literal query set.
       .join(broadcast(q8.filter(col("vec_id") < 10)
@@ -3425,7 +2982,7 @@ object SimilarityQueries {
 
   val pqRerankTopK = QueryDef(
     "ann_topk_pq_rerank",
-    (spark, dir) => pqRerankTopKWith(spark, dir, 5, 100, PqConfig.Default),
+    (spark, dir) => pqRerankTopKWith(spark, dir, 5, 100, Codebook.Rule()),
     Some("""
       WITH q8 AS (
         SELECT vec_id,
@@ -3490,13 +3047,11 @@ object SimilarityQueries {
     * its staged table ([[ivfCells]], [[pqCodes]], [[quantized]]) — the
     * composition adds no index build of its own. */
   private[graft] def ivfPqRerankTopKWith(spark: SparkSession, dir: String,
-      k: Int, pre: Int, ivfCfg: IvfConfig = IvfConfig.Default,
-      pqCfg: PqConfig = PqConfig.Default): DataFrame = {
-    graft.functions.VectorExprs.register(spark)
-    val cells = ivfCells(spark, dir, ivfCfg)
+      k: Int, pre: Int, q: Quantizer, cb: Codebook): DataFrame = {
+    val cells = ivfCells(spark, dir, q)
     val q8 = quantized(spark, dir)
-    val cw = pqCodebookOf(spark, dir, pqCfg)
-    val codes = pqCodes(spark, dir, pqCfg)
+    val book = cb.book(spark, dir)
+    val codes = pqCodes(spark, dir, cb)
     // IVF rung: ids-only candidates — the query's probed cells' rn=1
     // members (ivfTopKWith's exact shape, no vectors shipped)
     val qcells = cells.filter(col("vec_id") < 10)
@@ -3506,19 +3061,8 @@ object SimilarityQueries {
     val cand = qcells.join(members, col("cid") === col("ccid") &&
         col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id")).distinct()
-    // PQ rung: ADC over the candidates' code rows only. The distance
-    // table is queries × codewords × 8 — broadcast: BOUNDED BY CONFIG
-    // (the codebook rule / maxCodewords), the pqTopKWith classification.
-    val qtab = q8.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("q8").as("qv"))
-      .crossJoin(cw)
-      .crossJoin(spark.range(0, PqSubs)
-        .select((col("id") * PqWidth + 1).as("off")))
-      .withColumn("d", expr(
-        s"vec_dot(slice(qv, CAST(off AS INT), $PqWidth), " +
-          s"slice(cv, CAST(off AS INT), $PqWidth))"))
-      .select(col("query_id"), col("off"), col("cw_id").as("code"),
-        col("d"))
+    // PQ rung: ADC over the candidates' code rows only
+    val qtab = cb.adcTable(spark, dir, book)
     val adcTop = rankTopK(
       cand.join(codes.withColumnRenamed("vec_id", "neighbor_id"),
           "neighbor_id")
@@ -3528,20 +3072,14 @@ object SimilarityQueries {
       "score", pre)
       .select(col("query_id"), col("neighbor_id"))
     // rerank rung: exact int8 rescore of the pre survivors
-    rankTopK(adcTop
-      // broadcast: BOUNDED — fixed 10-row literal query set.
-      .join(broadcast(q8.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("query_id"), col("q8").as("qv"))),
-        "query_id")
-      .join(q8.select(col("vec_id").as("neighbor_id"), col("q8").as("cv")),
-        "neighbor_id")
-      .withColumn("dot", expr("vec_dot(qv, cv)")), "dot", k)
+    int8Rescore(q8, adcTop, k)
   }
 
   val ivfPqRerankTopK = QueryDef(
     "ann_topk_ivfpq_rerank",
     (spark, dir) =>
-      ivfPqRerankTopKWith(spark, dir, 5, 100),
+      ivfPqRerankTopKWith(spark, dir, 5, 100, Quantizer.Rule(),
+        Codebook.Rule()),
     Some("""
       WITH cents AS (
         SELECT vec_id AS cid, embedding AS cemb FROM embeddings
@@ -3668,22 +3206,6 @@ object SimilarityQueries {
         AND list_dot_product(q.qv, n.qv) >= $RangeDotFloor
     """))
 
-  /** The IVF centroids' int8 forms — (cid, cq8), exactly nlist rows,
-    * derived (never staged: one broadcast semi-join against the staged
-    * [[quantized]] table — centroids ARE corpus vectors, so their q8
-    * rows already exist; re-deriving risks a second quantization rule).
-    * Consumers broadcast it. */
-  private def ivfCentroidQ8(spark: SparkSession, dir: String,
-      cfg: IvfConfig): DataFrame = {
-    graft.functions.VectorExprs.register(spark)
-    // broadcast: BOUNDED BY CONFIG — nlist centroid ids (the
-    // classification note at ivfCellsRaw).
-    val ids = centroidsOf(spark, dir, cfg).select(col("cid"))
-    quantized(spark, dir)
-      .join(broadcast(ids), col("vec_id") === col("cid"))
-      .select(col("cid"), col("q8").as("cq8"))
-  }
-
   /** Per-cell PRUNING GEOMETRY for exact range search: (cid, rr) where
     * rr = max over the cell's rn=1 members v of |v_q8 − c_q8|² — the
     * squared int8-space radius of the cell. With it, Cauchy–Schwarz
@@ -3701,45 +3223,43 @@ object SimilarityQueries {
     * stage key's frozen digest re-founds it in lockstep with the cell
     * table (the ivfCells discipline). Under the default corpus-derived
     * config the centroid set itself moves with the corpus, so the
-    * stage rebuilds with the cells, same as `ivf_cells`. */
+    * stage rebuilds with the cells, same as `ivf_cells`. The Cauchy–
+    * Schwarz ceiling holds for ANY anchor point c, rule id or floored
+    * mean, so the trained quantizer drops in with zero change to the
+    * soundness argument; what changes is the POWER — Σ‖v−c‖² is exactly
+    * what Lloyd descends, so trained cells shrink the very slack the
+    * refusal tests (refined centroid components stay in int8 range:
+    * floored means of clamped values — OpQuerySpec pins it). */
   private[graft] def ivfCellBounds(spark: SparkSession, dir: String,
-      cfg: IvfConfig = IvfConfig.Default): DataFrame = {
+      q: Quantizer): DataFrame = {
     graft.functions.VectorExprs.register(spark)
-    val cq8 = ivfCentroidQ8(spark, dir, cfg)
+    lazy val cents = q.centroidQ8(spark, dir)
     def radiiOf(members: DataFrame): DataFrame = members
       .join(quantized(spark, dir), "vec_id")
-      .join(broadcast(cq8), "cid")
+      // broadcast: BOUNDED BY CONFIG — nlist centroid rows.
+      .join(broadcast(cents), "cid")
       .withColumn("sq", expr(
-        "CAST(vec_dot(q8, q8) + vec_dot(cq8, cq8) " +
-          "- 2 * vec_dot(q8, cq8) AS BIGINT)"))
+        "CAST(vec_dot(q8, q8) + vec_dot(c8, c8) " +
+          "- 2 * vec_dot(q8, c8) AS BIGINT)"))
       .groupBy(col("cid")).agg(max(col("sq")).as("rr"))
-    if (!cfg.frozen) {
-      val key =
-        if (cfg.stageKey == IvfConfig.Default.stageKey) "ivf_cell_rr"
-        else s"ivf_cell_rr@${cfg.stageKey}"
-      Staged(spark, dir, key) {
-        radiiOf(ivfCells(spark, dir, cfg).filter(col("rn") === 1)
-          .select(col("vec_id"), col("cid")))
-      }
-    } else {
-      val key =
-        s"ivf_cell_rr@${cfg.stageKey}+frz${frozenDigest(spark, dir, cfg)}"
-      val cents = frozenCentroids(spark, dir, cfg)
-      Staged.rebuildable(spark, dir, key, "embeddings", "vec_id")(
-        (prior, deltaRaw) => {
+    def cold = radiiOf(ivfCells(spark, dir, q).filter(col("rn") === 1)
+      .select(col("vec_id"), col("cid")))
+    if (!q.cfg.frozen)
+      Staged(spark, dir, q.key("ivf_cell_rr", "ivf_refined_rr"))(cold)
+    else {
+      val assignCents = q.centroids(spark, dir)
+      Staged.rebuildable(spark, dir,
+        q.stage(spark, dir, "ivf_cell_rr", "ivf_refined_rr"),
+        "embeddings", "vec_id")((prior, deltaRaw) => {
           // delta members' home cells under the FROZEN centroids (the
           // one assignment rule), their radii, max-merged with prior —
           // exact regardless of append order: max is order-insensitive
           // and frozen assignments never move.
-          val deltaRadii = radiiOf(
-            assignCells(normTransform(deltaRaw), cents, 1)
-              .select(col("vec_id"), col("cid")))
+          val deltaRadii = radiiOf(q.assignDelta(assignCents, 1)(deltaRaw)
+            .select(col("vec_id"), col("cid")))
           prior.unionByName(deltaRadii)
             .groupBy(col("cid")).agg(max(col("rr")).as("rr"))
-        }) {
-        radiiOf(ivfCells(spark, dir, cfg).filter(col("rn") === 1)
-          .select(col("vec_id"), col("cid")))
-      }
+        })(cold)
     }
   }
 
@@ -3752,7 +3272,7 @@ object SimilarityQueries {
     * the staged (cid, rr) table, nothing re-scores vectors. */
   val ivfCellBoundsAudit = QueryDef(
     "ivf_cell_bounds",
-    (spark, dir) => ivfCellBounds(spark, dir, IvfConfig.Default),
+    (spark, dir) => ivfCellBounds(spark, dir, Quantizer.Rule()),
     Some("""
       WITH cents AS (
         SELECT vec_id AS cid, embedding AS cemb FROM embeddings
@@ -3793,32 +3313,31 @@ object SimilarityQueries {
     * is the fixed [[RangeDotFloor]]. The bound is per (query, cell)
     * row, so a per-query floor changes nothing structural. */
   private[graft] def rangeLiveCells(spark: SparkSession, dir: String,
-      cfg: IvfConfig = IvfConfig.Default,
-      floorOf: Column = lit(RangeDotFloor)): DataFrame = {
+      q: Quantizer, floorOf: Column = lit(RangeDotFloor)): DataFrame = {
     graft.functions.VectorExprs.register(spark)
     // EXACTNESS GUARD (r18 review): the bit-equal-to-brute claim rests
     // on every corpus vector having a home cell. A non-empty corpus
-    // whose id layout matches NO rule centroid has an empty cell table,
-    // and the pruned query would silently return empty where brute
-    // finds matches — refuse loudly instead. The approximate IVF
+    // whose id layout matches NO rule centroid (or seed) has an empty
+    // cell table, and the pruned query would silently return empty where
+    // brute finds matches — refuse loudly instead. The approximate IVF
     // variants tolerate that degenerate config (it is a recall-zero
     // index, judged as such); an EXACT query must not. Two limit-1
     // probes on staged tables — noise next to the scan they guard.
-    if (ivfCellBounds(spark, dir, cfg).isEmpty &&
+    if (ivfCellBounds(spark, dir, q).isEmpty &&
         !quantized(spark, dir).isEmpty)
       throw new IllegalArgumentException(
         s"range cell prune needs >= 1 centroid over a non-empty corpus " +
-          s"(rule: every=${cfg.centroidEvery} key=${cfg.centroidKey}) — " +
-          "an empty cell table cannot cover the corpus; use " +
+          s"(rule: every=${q.cfg.centroidEvery} key=${q.cfg.centroidKey}) " +
+          "— an empty cell table cannot cover the corpus; use " +
           "ann_range_cosine or fix the centroid rule")
     quantized(spark, dir).filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("q8").as("qv"))
       .withColumn("qq", expr("CAST(vec_dot(qv, qv) AS BIGINT)"))
       .withColumn("f", floorOf)
-      // broadcast: BOUNDED BY CONFIG — nlist (cid, rr) + (cid, cq8) rows.
-      .crossJoin(broadcast(ivfCellBounds(spark, dir, cfg)
-        .join(ivfCentroidQ8(spark, dir, cfg), "cid")))
-      .withColumn("dqc", expr("CAST(vec_dot(qv, cq8) AS BIGINT)"))
+      // broadcast: BOUNDED BY CONFIG — nlist (cid, rr) + (cid, c8) rows.
+      .crossJoin(broadcast(ivfCellBounds(spark, dir, q)
+        .join(q.centroidQ8(spark, dir), "cid")))
+      .withColumn("dqc", expr("CAST(vec_dot(qv, c8) AS BIGINT)"))
       .filter(col("dqc") >= col("f") ||
         (col("f") - col("dqc")) * (col("f") - col("dqc")) <=
           col("qq") * col("rr"))
@@ -3840,61 +3359,25 @@ object SimilarityQueries {
     * persisted staging table, content is identical. The trailing
     * select re-pins column order and the cid type (partition
     * inference appends the layout column last, narrowed to int). */
-  private def cellLayoutOf(spark: SparkSession, dir: String,
-      stage: java.lang.String, cells: => DataFrame,
-      frozenOf: Option[DataFrame => DataFrame]): DataFrame = {
-    def buildOf(c: DataFrame) = c.filter(col("rn") === 1)
-      .select(col("vec_id"), col("cid"))
-      .join(quantized(spark, dir), "vec_id")
-      .select(col("cid"), col("vec_id"), col("q8"))
-    val out = frozenOf match {
-      case None =>
-        Staged(spark, dir, stage, Seq("cid")) { buildOf(cells) }
-      case Some(deltaAssign) =>
+  private[graft] def q8ByCid(spark: SparkSession, dir: String,
+      q: Quantizer): DataFrame = {
+    def layoutOf(homes: DataFrame, q8: DataFrame) =
+      homes.select(col("vec_id"), col("cid")).join(q8, "vec_id")
+        .select(col("cid"), col("vec_id"), col("q8"))
+    def cold = layoutOf(ivfCells(spark, dir, q).filter(col("rn") === 1),
+      quantized(spark, dir))
+    val stage = q.stage(spark, dir, "q8_by_cid", "q8_by_cid_refined")
+    val out =
+      if (!q.cfg.frozen) Staged(spark, dir, stage, Seq("cid"))(cold)
+      else {
+        val cents = q.centroids(spark, dir)
         Staged.appendable(spark, dir, stage, "embeddings", "vec_id",
-          Seq("cid"))(raw => {
-          val q8d = quantTransform(normTransform(raw))
-          deltaAssign(raw).select(col("vec_id"), col("cid"))
-            .join(q8d, "vec_id")
-            .select(col("cid"), col("vec_id"), col("q8"))
-        }) { buildOf(cells) }
-    }
+          Seq("cid"))(raw => layoutOf(q.assignDelta(cents, 1)(raw),
+          quantTransform(normTransform(raw))))(cold)
+      }
     out.select(col("cid").cast("long").as("cid"), col("vec_id"),
       col("q8"))
   }
-
-  private[graft] def q8ByCid(spark: SparkSession, dir: String,
-      cfg: IvfConfig = IvfConfig.Default): DataFrame =
-    if (!cfg.frozen)
-      cellLayoutOf(spark, dir,
-        Staged.keyed("q8_by_cid", cfg.stageKey, IvfConfig.Default.stageKey),
-        ivfCells(spark, dir, cfg), None)
-    else {
-      val cents = frozenCentroids(spark, dir, cfg)
-      cellLayoutOf(spark, dir,
-        s"q8_by_cid@${cfg.stageKey}+frz${frozenDigest(spark, dir, cfg)}",
-        ivfCells(spark, dir, cfg),
-        Some(raw => assignCells(normTransform(raw), cents, 1)))
-    }
-
-  /** [[q8ByCid]] under the TRAINED quantizer — serves the refined cells
-    * range rung; frozen mode keys on the trained table's VALUE digest
-    * (the refinedCells discipline). */
-  private[graft] def q8ByCidRefined(spark: SparkSession, dir: String,
-      cfg: IvfConfig = IvfConfig.Default,
-      iters: Int = LloydIters): DataFrame =
-    if (!cfg.frozen)
-      cellLayoutOf(spark, dir, lloydKey("q8_by_cid_refined", cfg, iters),
-        refinedCells(spark, dir, cfg, iters), None)
-    else {
-      val tbl = frozenRefinedTable(spark, dir, cfg, iters)
-      val cents = tbl.select(col("cid"), col("c8"))
-      cellLayoutOf(spark, dir,
-        lloydKey("q8_by_cid_refined", cfg, iters) +
-          s"+frz${refinedValueDigest(tbl)}",
-        refinedCells(spark, dir, cfg, iters),
-        Some(raw => l2Assign(quantTransform(normTransform(raw)), cents, 1)))
-    }
 
   /** `ann_range_cosine_cells` — the range query over the IVF geometry,
     * still EXACT: prune whole cells whose Cauchy–Schwarz ceiling
@@ -3917,7 +3400,7 @@ object SimilarityQueries {
     * tight-cluster spec pins both halves: cells ARE pruned there, and
     * the result still equals the brute rung bit-for-bit. */
   private[graft] def rangeCosineCellsWith(spark: SparkSession,
-      dir: String, cfg: IvfConfig = IvfConfig.Default,
+      dir: String, q: Quantizer,
       floorOf: Column = lit(RangeDotFloor)): DataFrame = {
     graft.functions.VectorExprs.register(spark)
     val q8 = quantized(spark, dir)
@@ -3937,11 +3420,11 @@ object SimilarityQueries {
     // distinct+collect job runs per query (r22, guide §1/§5: same
     // bounded rows, two fewer driver actions).
     import spark.implicits._
-    val liveRows = rangeLiveCells(spark, dir, cfg, floorOf)
+    val liveRows = rangeLiveCells(spark, dir, q, floorOf)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     val liveCids = liveRows.map(_._2).distinct
     val live = liveRows.toDF("query_id", "cid")
-    q8ByCid(spark, dir, cfg)
+    q8ByCid(spark, dir, q)
       .filter(col("cid").isInCollection(liveCids))
       // broadcast: BOUNDED — 10 queries × nlist surviving cells.
       .join(broadcast(live), "cid")
@@ -3959,7 +3442,7 @@ object SimilarityQueries {
 
   val rangeCosineCells = QueryDef(
     "ann_range_cosine_cells",
-    (spark, dir) => rangeCosineCellsWith(spark, dir),
+    (spark, dir) => rangeCosineCellsWith(spark, dir, Quantizer.Rule()),
     // bit-equal to the brute rung by construction — same oracle.
     rangeCosine.oracle)
 
@@ -3976,63 +3459,14 @@ object SimilarityQueries {
   // natural clusters (179/200 (query, cell) pairs survive — SCALE.md),
   // while the refined ones sit inside them.
 
-  /** Per-cell squared radius under the REFINED quantizer — the
-    * [[ivfCellBounds]] analogue over [[refinedCells]]/[[refinedCentroids]],
-    * staged per (config, sweeps). Same exact-integer arithmetic
-    * (products ≤ ~2^43); refined centroid components stay in int8 range
-    * (floored means of clamped values — OpQuerySpec pins it). */
-  private[graft] def refinedCellBounds(spark: SparkSession, dir: String,
-      cfg: IvfConfig = IvfConfig.Default,
-      iters: Int = LloydIters): DataFrame = {
-    graft.functions.VectorExprs.register(spark)
-    def radiiOf(members: DataFrame, cents: DataFrame): DataFrame = members
-      .join(quantized(spark, dir), "vec_id")
-      // broadcast: BOUNDED BY CONFIG — nlist refined-centroid rows.
-      .join(broadcast(cents.select(col("cid"), col("c8"))), "cid")
-      .withColumn("sq", expr(
-        "CAST(vec_dot(q8, q8) + vec_dot(c8, c8) " +
-          "- 2 * vec_dot(q8, c8) AS BIGINT)"))
-      .groupBy(col("cid")).agg(max(col("sq")).as("rr"))
-    if (!cfg.frozen)
-      Staged(spark, dir, lloydKey("ivf_refined_rr", cfg, iters)) {
-        radiiOf(refinedCells(spark, dir, cfg, iters)
-            .filter(col("rn") === 1).select(col("vec_id"), col("cid")),
-          refinedCentroids(spark, dir, cfg, iters))
-      }
-    else {
-      // frozen: delta max-merge keyed on the trained table's VALUE
-      // digest — the ivf_cell_rr discipline (max is append-monotone and
-      // order-insensitive, frozen assignments never move), value-keyed
-      // because a re-training moves centroid values under stable ids.
-      // Digest/select the staged instance directly (r18 ADVICE — see
-      // refinedCells' note).
-      val tbl = frozenRefinedTable(spark, dir, cfg, iters)
-      val cents = tbl.select(col("cid"), col("c8"))
-      val key = lloydKey("ivf_refined_rr", cfg, iters) +
-        s"+frz${refinedValueDigest(tbl)}"
-      Staged.rebuildable(spark, dir, key, "embeddings", "vec_id")(
-        (prior, deltaRaw) => {
-          val deltaRadii = radiiOf(
-            l2Assign(quantTransform(normTransform(deltaRaw)), cents, 1)
-              .select(col("vec_id"), col("cid")), cents)
-          prior.unionByName(deltaRadii)
-            .groupBy(col("cid")).agg(max(col("rr")).as("rr"))
-        }) {
-        radiiOf(refinedCells(spark, dir, cfg, iters)
-            .filter(col("rn") === 1).select(col("vec_id"), col("cid")),
-          cents)
-      }
-    }
-  }
-
   /** `ivf_cell_bounds_refined` — the refined radius table's own
     * correctness row (the audit discipline: every staged table an
     * exact operator trusts gets oracle-checked; an under-stated radius
     * here would break the refined rung's exactness silently). */
   val refinedCellBoundsAudit = QueryDef(
     "ivf_cell_bounds_refined",
-    (spark, dir) => refinedCellBounds(spark, dir),
-    Some(s"""${lloydCte(LloydIters)},
+    (spark, dir) => ivfCellBounds(spark, dir, Quantizer.Trained()),
+    Some(s"""${lloydCte},
       home AS (SELECT vec_id, cid FROM (
           SELECT q.vec_id, c.cid, row_number() OVER (PARTITION BY q.vec_id
             ORDER BY list_dot_product(c.cv, c.cv)
@@ -4048,77 +3482,16 @@ object SimilarityQueries {
       GROUP BY h.cid
     """))
 
-  /** [[rangeLiveCells]] under the refined quantizer — same refusal
-    * test, same exactness guard, trained geometry. */
-  private[graft] def rangeLiveCellsRefined(spark: SparkSession,
-      dir: String, cfg: IvfConfig = IvfConfig.Default,
-      iters: Int = LloydIters,
-      floorOf: Column = lit(RangeDotFloor)): DataFrame = {
-    graft.functions.VectorExprs.register(spark)
-    // Same loud-refusal contract as the rule rung: an empty refined
-    // centroid set (no rule-matching seed ids) cannot cover a
-    // non-empty corpus, and an exact query must not silently return
-    // empty there.
-    if (refinedCellBounds(spark, dir, cfg, iters).isEmpty &&
-        !quantized(spark, dir).isEmpty)
-      throw new IllegalArgumentException(
-        s"refined range cell prune needs >= 1 centroid over a non-empty " +
-          s"corpus (seed rule: every=${cfg.centroidEvery} " +
-          s"key=${cfg.centroidKey}) — use ann_range_cosine or fix the rule")
-    quantized(spark, dir).filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("q8").as("qv"))
-      .withColumn("qq", expr("CAST(vec_dot(qv, qv) AS BIGINT)"))
-      .withColumn("f", floorOf)
-      // broadcast: BOUNDED BY CONFIG — nlist (cid, rr, c8) rows.
-      .crossJoin(broadcast(refinedCellBounds(spark, dir, cfg, iters)
-        .join(refinedCentroids(spark, dir, cfg, iters), "cid")))
-      .withColumn("dqc", expr("CAST(vec_dot(qv, c8) AS BIGINT)"))
-      .filter(col("dqc") >= col("f") ||
-        (col("f") - col("dqc")) * (col("f") - col("dqc")) <=
-          col("qq") * col("rr"))
-      .select(col("query_id"), col("cid"))
-  }
-
   /** `ann_range_cosine_cells_refined` — the exact range query over the
     * TRAINED quantizer's geometry: [[rangeCosineCellsWith]]'s plan with
-    * [[refinedCells]] homes and the refined radius prune. Bit-equal to
+    * trained homes and the trained radius prune. Bit-equal to
     * brute by construction (same oracle); what the training buys is
     * measured, not assumed — ScaleBench's RANGE_ROW carries refined
     * survivor counts next to the rule rung's, and ScaleSpec pins
     * refined-prune ≥ rule-prune on the clustered fixture. */
-  private[graft] def rangeCosineCellsRefinedWith(spark: SparkSession,
-      dir: String, cfg: IvfConfig = IvfConfig.Default,
-      iters: Int = LloydIters,
-      floorOf: Column = lit(RangeDotFloor)): DataFrame = {
-    graft.functions.VectorExprs.register(spark)
-    val q8 = quantized(spark, dir)
-    // the refined layout table — see rangeCosineCellsWith's note
-    // (static partition filter + LocalRelation probe off ONE bounded
-    // collect, same shape).
-    import spark.implicits._
-    val liveRows = rangeLiveCellsRefined(spark, dir, cfg, iters, floorOf)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val liveCids = liveRows.map(_._2).distinct
-    val live = liveRows.toDF("query_id", "cid")
-    q8ByCidRefined(spark, dir, cfg, iters)
-      .filter(col("cid").isInCollection(liveCids))
-      // broadcast: BOUNDED — 10 queries × nlist surviving cells.
-      .join(broadcast(live), "cid")
-      .filter(col("vec_id") =!= col("query_id"))
-      // broadcast: BOUNDED — fixed 10-row literal query set.
-      .join(broadcast(q8.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("query_id"), col("q8").as("qv"))
-        .withColumn("f", floorOf)),
-        "query_id")
-      .withColumn("dot", expr("CAST(vec_dot(qv, q8) AS BIGINT)"))
-      .filter(col("dot") >= col("f"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        col("dot"))
-  }
-
   val rangeCosineCellsRefined = QueryDef(
     "ann_range_cosine_cells_refined",
-    (spark, dir) => rangeCosineCellsRefinedWith(spark, dir),
+    (spark, dir) => rangeCosineCellsWith(spark, dir, Quantizer.Trained()),
     // bit-equal to the brute rung by construction — same oracle.
     rangeCosine.oracle)
 
@@ -4130,46 +3503,13 @@ object SimilarityQueries {
   // range BYTES/composed rungs over trained artifacts, so a deployment
   // that trains its index loses NO rung of the retrieval stack.
 
-  /** Per-vector squared residual norm vs the TRAINED codebook
-    * (vec_id, rrv) — [[pqResiduals]]' analogue over
-    * [[pqRefinedCodebook]]/[[pqRefinedCodes]]: rrv = Σ subspaces of the
-    * trained encode's winning exact L2, the SOUND ceiling for trained
-    * codes (dot(q,v) ≤ trainedADCdot + √(qq·rrv) by Cauchy–Schwarz on
-    * the trained reconstruction's residual). Training shrinks rrv — the
-    * very slack the refusal tests — so the trained bytes rung refuses
-    * MORE at equal scan cost (ScaleBench RANGE_ROW carries both
-    * fractions). Frozen mode delta-appends under the codebook's VALUE
-    * digest, the pqRefinedCodes discipline. */
-  private[graft] def pqRefinedResiduals(spark: SparkSession, dir: String,
-      cfg: PqConfig = PqConfig.Default,
-      iters: Int = PqLloydIters): DataFrame = {
-    def residOf(rows: DataFrame, cb: DataFrame): DataFrame =
-      pqAssignFull(pqSlices(rows), cb)
-        .groupBy(col("vec_id"))
-        .agg(expr("CAST(sum(dist) AS BIGINT)").as("rrv"))
-    if (!cfg.frozen)
-      Staged(spark, dir, pqLloydKey("pq_refined_resid", cfg, iters)) {
-        residOf(quantized(spark, dir),
-          pqRefinedCodebook(spark, dir, cfg, iters))
-      }
-    else {
-      val cb = pqRefinedCodebook(spark, dir, cfg, iters)
-      val key = pqLloydKey("pq_refined_resid", cfg, iters) +
-        s"+frz${pqRefinedDigest(spark, dir, cfg, iters)}"
-      Staged.appendable(spark, dir, key, "embeddings", "vec_id")(
-        raw => residOf(quantTransform(normTransform(raw)), cb)) {
-        residOf(quantized(spark, dir), cb)
-      }
-    }
-  }
-
   /** `pq_resid_refined` — the trained residual-norm table's own
     * correctness row (the audit discipline: an UNDER-stated rrv would
     * silently break the trained bytes rung's exactness). */
   val pqRefinedResidAudit = QueryDef(
     "pq_resid_refined",
-    (spark, dir) => pqRefinedResiduals(spark, dir),
-    Some(s"""${pqVsHead}${pqLloydChain(PqLloydIters, "vs",
+    (spark, dir) => pqResiduals(spark, dir, Codebook.Trained()),
+    Some(s"""${pqVsHead}${pqLloydChain("vs",
         "vec_id % 50 = 11", "pc").stripSuffix(",")}
       SELECT vec_id, CAST(sum(b) AS BIGINT) AS rrv FROM (
         SELECT v.vec_id, v.off,
@@ -4180,74 +3520,13 @@ object SimilarityQueries {
       GROUP BY 1
     """))
 
-  /** The trained bytes-rung prefilter — [[rangePqSurvivors]] over the
-    * TRAINED codebook/codes/residuals: keep iff adc ≥ f, or
-    * (f − adc)² ≤ qq·rrv, every term exact integer. Same soundness
-    * construction, tighter ceiling (trained rrv ≤ rule rrv in
-    * aggregate — the SSE the per-subspace Lloyd descends). */
-  private[graft] def rangePqSurvivorsRefined(spark: SparkSession,
-      dir: String, cfg: PqConfig = PqConfig.Default,
-      iters: Int = PqLloydIters,
-      floorOf: Column = lit(RangeDotFloor),
-      restrictTo: Option[DataFrame] = None): DataFrame = {
-    graft.functions.VectorExprs.register(spark)
-    val q8 = quantized(spark, dir)
-    val cb = pqRefinedCodebook(spark, dir, cfg, iters)
-    // EXACTNESS GUARD (the rule rung's contract): an empty trained
-    // codebook over a non-empty corpus cannot cover it — refuse loudly.
-    if (cb.isEmpty && !q8.isEmpty)
-      throw new IllegalArgumentException(
-        "trained PQ range prefilter needs >= 1 codeword over a " +
-          "non-empty corpus — use ann_range_cosine or fix the seed rule")
-    // trained ADC distance table: queries × codewords × 8 — broadcast:
-    // BOUNDED BY CONFIG (the pqTopKWith classification).
-    val qtab = trainedAdcTable(q8, cb)
-    val scored = pqRefinedCodes(spark, dir, cfg, iters)
-      .join(broadcast(qtab), Seq("off", "code"))
-      .filter(col("vec_id") =!= col("query_id"))
-    restrictTo.fold(scored)(cand =>
-        scored.join(cand.select(col("query_id"), col("vec_id")),
-          Seq("query_id", "vec_id"), "left_semi"))
-      .groupBy(col("query_id"), col("vec_id"))
-      .agg(expr("CAST(sum(d) AS BIGINT)").as("adc"))
-      .join(pqRefinedResiduals(spark, dir, cfg, iters), "vec_id")
-      // broadcast: BOUNDED — fixed 10-row literal query set.
-      .join(broadcast(q8.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("query_id"),
-          expr("CAST(vec_dot(q8, q8) AS BIGINT)").as("qq"))
-        .withColumn("f", floorOf)), "query_id")
-      .filter(col("adc") >= col("f") ||
-        (col("f") - col("adc")) * (col("f") - col("adc")) <=
-          col("qq") * col("rrv"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"))
-  }
-
-  private[graft] def rangeCosinePqRefinedWith(spark: SparkSession,
-      dir: String, cfg: PqConfig = PqConfig.Default,
-      iters: Int = PqLloydIters,
-      floorOf: Column = lit(RangeDotFloor)): DataFrame = {
-    graft.functions.VectorExprs.register(spark)
-    val q8 = quantized(spark, dir)
-    // broadcast: BOUNDED — fixed 10-row literal query set.
-    val qmeta = broadcast(q8.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("q8").as("qv"))
-      .withColumn("f", floorOf))
-    rangePqSurvivorsRefined(spark, dir, cfg, iters, floorOf)
-      .join(q8.select(col("vec_id").as("neighbor_id"),
-        col("q8").as("nv")), "neighbor_id")
-      .join(qmeta, "query_id")
-      .withColumn("dot", expr("CAST(vec_dot(qv, nv) AS BIGINT)"))
-      .filter(col("dot") >= col("f"))
-      .select(col("query_id"), col("neighbor_id"), col("dot"))
-  }
-
   /** `ann_range_cosine_pq_refined` — the exact range BYTES rung over
     * the TRAINED codebook. Bit-equal to brute by construction (same
     * oracle); the trained ceiling's extra refusals are measured in
     * ScaleBench's RANGE_ROW, never assumed. */
   val rangeCosinePqRefined = QueryDef(
     "ann_range_cosine_pq_refined",
-    (spark, dir) => rangeCosinePqRefinedWith(spark, dir),
+    (spark, dir) => rangeCosinePqWith(spark, dir, Codebook.Trained()),
     rangeCosine.oracle)
 
   /** The FULLY-TRAINED composed exact range shape — trained cells
@@ -4255,37 +3534,10 @@ object SimilarityQueries {
     * the surviving members, exact rescore last. Both prunes are the
     * trained geometry's (each one measured tighter than its rule
     * sibling), soundness identical. */
-  private[graft] def rangeCosineComposedRefinedWith(spark: SparkSession,
-      dir: String, ivfCfg: IvfConfig = IvfConfig.Default,
-      pqCfg: PqConfig = PqConfig.Default, iters: Int = LloydIters,
-      pqIters: Int = PqLloydIters,
-      floorOf: Column = lit(RangeDotFloor)): DataFrame = {
-    graft.functions.VectorExprs.register(spark)
-    val q8 = quantized(spark, dir)
-    val cellCand = refinedCells(spark, dir, ivfCfg, iters)
-      .filter(col("rn") === 1)
-      .select(col("vec_id"), col("cid"))
-      // broadcast: BOUNDED — 10 queries × nlist surviving cells.
-      .join(broadcast(
-        rangeLiveCellsRefined(spark, dir, ivfCfg, iters, floorOf)), "cid")
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"))
-    val qmeta = broadcast(q8.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("q8").as("qv"))
-      .withColumn("f", floorOf))
-    rangePqSurvivorsRefined(spark, dir, pqCfg, pqIters, floorOf,
-      Some(cellCand))
-      .join(q8.select(col("vec_id").as("neighbor_id"),
-        col("q8").as("nv")), "neighbor_id")
-      .join(qmeta, "query_id")
-      .withColumn("dot", expr("CAST(vec_dot(qv, nv) AS BIGINT)"))
-      .filter(col("dot") >= col("f"))
-      .select(col("query_id"), col("neighbor_id"), col("dot"))
-  }
-
   val rangeCosineComposedRefined = QueryDef(
     "ann_range_cosine_ivfpq_refined",
-    (spark, dir) => rangeCosineComposedRefinedWith(spark, dir),
+    (spark, dir) => rangeCosineComposedWith(spark, dir, Quantizer.Trained(),
+      Codebook.Trained()),
     // bit-equal to the brute rung by construction — same oracle.
     rangeCosine.oracle)
 
@@ -4297,48 +3549,11 @@ object SimilarityQueries {
     * rule artifacts — what training buys here is a FINER prefilter at
     * the same 8 bytes (fewer true neighbors lost before the rescore at
     * small `pre`), measured not assumed. */
-  private[graft] def ivfPqRerankRefinedTopKWith(spark: SparkSession,
-      dir: String, k: Int, pre: Int,
-      ivfCfg: IvfConfig = IvfConfig.Default,
-      pqCfg: PqConfig = PqConfig.Default, iters: Int = LloydIters,
-      pqIters: Int = PqLloydIters): DataFrame = {
-    graft.functions.VectorExprs.register(spark)
-    val cells = refinedCells(spark, dir, ivfCfg, iters)
-    val q8 = quantized(spark, dir)
-    val cb = pqRefinedCodebook(spark, dir, pqCfg, pqIters)
-    val codes = pqRefinedCodes(spark, dir, pqCfg, pqIters)
-    val qcells = cells.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("cid"))
-    val members = cells.filter(col("rn") === 1)
-      .select(col("vec_id").as("neighbor_id"), col("cid").as("ccid"))
-    val cand = qcells.join(members, col("cid") === col("ccid") &&
-        col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id")).distinct()
-    // trained ADC distance table — queries × codewords × 8, broadcast:
-    // BOUNDED BY CONFIG (the pqTopKWith classification).
-    val qtab = trainedAdcTable(q8, cb)
-    val adcTop = rankTopK(
-      cand.join(codes.withColumnRenamed("vec_id", "neighbor_id"),
-          "neighbor_id")
-        .join(broadcast(qtab), Seq("query_id", "off", "code"))
-        .groupBy(col("query_id"), col("neighbor_id"))
-        .agg(sum(col("d")).as("score")),
-      "score", pre)
-      .select(col("query_id"), col("neighbor_id"))
-    rankTopK(adcTop
-      // broadcast: BOUNDED — fixed 10-row literal query set.
-      .join(broadcast(q8.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("query_id"), col("q8").as("qv"))),
-        "query_id")
-      .join(q8.select(col("vec_id").as("neighbor_id"), col("q8").as("cv")),
-        "neighbor_id")
-      .withColumn("dot", expr("vec_dot(qv, cv)")), "dot", k)
-  }
-
   val ivfPqRerankRefinedTopK = QueryDef(
     "ann_topk_ivfpq_rerank_refined",
-    (spark, dir) => ivfPqRerankRefinedTopKWith(spark, dir, 5, 100),
-    Some(s"""${lloydCte(LloydIters)},
+    (spark, dir) => ivfPqRerankTopKWith(spark, dir, 5, 100,
+      Quantizer.Trained(), Codebook.Trained()),
+    Some(s"""${lloydCte},
       offs AS (SELECT unnest(range(8)) * 8 + 1 AS off),
       vs AS (SELECT vec_id, off, qv[off:off+7] AS s FROM q8, offs),
       ranked AS (SELECT vec_id, cid, rn FROM (
@@ -4350,7 +3565,7 @@ object SimilarityQueries {
                FROM ranked qa JOIN ranked ca
                  ON qa.cid = ca.cid AND qa.vec_id <> ca.vec_id
                WHERE qa.vec_id < 10 AND ca.rn = 1),
-      ${pqLloydChain(PqLloydIters, "vs", "vec_id % 50 = 11", "pc")
+      ${pqLloydChain("vs", "vec_id % 50 = 11", "pc")
         .stripPrefix("\n")}
       enc AS (SELECT vec_id, off, cw_id AS code FROM (
           SELECT v.vec_id, v.off, c.cw_id, row_number() OVER (
@@ -4415,34 +3630,22 @@ object SimilarityQueries {
     * codes are never ADC-scored (restriction BEFORE the aggregate,
     * not a post-filter). */
   private[graft] def rangePqSurvivors(spark: SparkSession, dir: String,
-      cfg: PqConfig = PqConfig.Default,
-      floorOf: Column = lit(RangeDotFloor),
+      cb: Codebook, floorOf: Column = lit(RangeDotFloor),
       restrictTo: Option[DataFrame] = None): DataFrame = {
     graft.functions.VectorExprs.register(spark)
     val q8 = quantized(spark, dir)
-    val cw = pqCodebookOf(spark, dir, cfg)
+    val book = cb.book(spark, dir)
     // EXACTNESS GUARD (the cells rung's contract): a non-empty corpus
-    // whose id layout matches no rule codeword has an empty codes
-    // table — the prefilter would silently return empty where brute
-    // finds matches. Refuse loudly.
-    if (cw.isEmpty && !q8.isEmpty)
+    // whose id layout matches no rule codeword (or seed) has an empty
+    // codes table — the prefilter would silently return empty where
+    // brute finds matches. Refuse loudly.
+    if (book.isEmpty && !q8.isEmpty)
       throw new IllegalArgumentException(
         "PQ range prefilter needs >= 1 codeword over a non-empty " +
           "corpus — an empty codes table cannot cover it; use " +
           "ann_range_cosine or fix the codeword rule")
-    // dot-ADC distance table: queries × codewords × subspaces —
-    // broadcast: BOUNDED BY CONFIG (the pqTopKWith classification).
-    val qtab = q8.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("q8").as("qv"))
-      .crossJoin(cw)
-      .crossJoin(spark.range(0, PqSubs)
-        .select((col("id") * PqWidth + 1).as("off")))
-      .withColumn("d", expr(
-        s"vec_dot(slice(qv, CAST(off AS INT), $PqWidth), " +
-          s"slice(cv, CAST(off AS INT), $PqWidth))"))
-      .select(col("query_id"), col("off"), col("cw_id").as("code"),
-        col("d"))
-    val scored = pqCodes(spark, dir, cfg)
+    val qtab = cb.adcTable(spark, dir, book)
+    val scored = pqCodes(spark, dir, cb)
       .join(broadcast(qtab), Seq("off", "code"))
       .filter(col("vec_id") =!= col("query_id"))
     restrictTo.fold(scored)(cand =>
@@ -4450,7 +3653,7 @@ object SimilarityQueries {
           Seq("query_id", "vec_id"), "left_semi"))
       .groupBy(col("query_id"), col("vec_id"))
       .agg(expr("CAST(sum(d) AS BIGINT)").as("adc"))
-      .join(pqResiduals(spark, dir, cfg), "vec_id")
+      .join(pqResiduals(spark, dir, cb), "vec_id")
       // broadcast: BOUNDED — fixed 10-row literal query set.
       .join(broadcast(q8.filter(col("vec_id") < 10)
         .select(col("vec_id").as("query_id"),
@@ -4465,15 +3668,22 @@ object SimilarityQueries {
   }
 
   private[graft] def rangeCosinePqWith(spark: SparkSession, dir: String,
-      cfg: PqConfig = PqConfig.Default,
-      floorOf: Column = lit(RangeDotFloor)): DataFrame = {
+      cb: Codebook, floorOf: Column = lit(RangeDotFloor)): DataFrame =
+    rangeVerify(spark, dir, rangePqSurvivors(spark, dir, cb, floorOf),
+      floorOf)
+
+  /** The exact last rung of every pruned range shape: (query_id,
+    * neighbor_id) survivors → the exact int8 dot, kept iff it clears the
+    * query's floor (vectors fetched for survivors only). */
+  private def rangeVerify(spark: SparkSession, dir: String,
+      survivors: DataFrame, floorOf: Column): DataFrame = {
     graft.functions.VectorExprs.register(spark)
     val q8 = quantized(spark, dir)
     // broadcast: BOUNDED — fixed 10-row literal query set.
     val qmeta = broadcast(q8.filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("q8").as("qv"))
       .withColumn("f", floorOf))
-    rangePqSurvivors(spark, dir, cfg, floorOf)
+    survivors
       .join(q8.select(col("vec_id").as("neighbor_id"),
         col("q8").as("nv")), "neighbor_id")
       .join(qmeta, "query_id")
@@ -4484,7 +3694,7 @@ object SimilarityQueries {
 
   val rangeCosinePq = QueryDef(
     "ann_range_cosine_pq",
-    (spark, dir) => rangeCosinePqWith(spark, dir),
+    (spark, dir) => rangeCosinePqWith(spark, dir, Codebook.Rule()),
     // bit-equal to the brute rung by construction — same oracle.
     rangeCosine.oracle)
 
@@ -4501,36 +3711,25 @@ object SimilarityQueries {
     * bite; uniform corpus → both neutral, measured), prune SOUNDNESS
     * is not. */
   private[graft] def rangeCosineComposedWith(spark: SparkSession,
-      dir: String, ivfCfg: IvfConfig = IvfConfig.Default,
-      pqCfg: PqConfig = PqConfig.Default,
+      dir: String, q: Quantizer, cb: Codebook,
       floorOf: Column = lit(RangeDotFloor)): DataFrame = {
-    graft.functions.VectorExprs.register(spark)
-    val q8 = quantized(spark, dir)
     // rows rung: the cells rung's member pairs
-    val cellCand = ivfCells(spark, dir, ivfCfg)
+    val cellCand = ivfCells(spark, dir, q)
       .filter(col("rn") === 1)
       .select(col("vec_id"), col("cid"))
       // broadcast: BOUNDED — 10 queries × nlist surviving cells.
-      .join(broadcast(rangeLiveCells(spark, dir, ivfCfg, floorOf)),
-        "cid")
+      .join(broadcast(rangeLiveCells(spark, dir, q, floorOf)), "cid")
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"))
     // bytes rung over ONLY those members, then the exact rescore
-    val qmeta = broadcast(q8.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("q8").as("qv"))
-      .withColumn("f", floorOf))
-    rangePqSurvivors(spark, dir, pqCfg, floorOf, Some(cellCand))
-      .join(q8.select(col("vec_id").as("neighbor_id"),
-        col("q8").as("nv")), "neighbor_id")
-      .join(qmeta, "query_id")
-      .withColumn("dot", expr("CAST(vec_dot(qv, nv) AS BIGINT)"))
-      .filter(col("dot") >= col("f"))
-      .select(col("query_id"), col("neighbor_id"), col("dot"))
+    rangeVerify(spark, dir,
+      rangePqSurvivors(spark, dir, cb, floorOf, Some(cellCand)), floorOf)
   }
 
   val rangeCosineComposed = QueryDef(
     "ann_range_cosine_ivfpq",
-    (spark, dir) => rangeCosineComposedWith(spark, dir),
+    (spark, dir) => rangeCosineComposedWith(spark, dir, Quantizer.Rule(),
+      Codebook.Rule()),
     // bit-equal to the brute rung by construction — same oracle.
     rangeCosine.oracle)
 
@@ -4555,8 +3754,8 @@ object SimilarityQueries {
     * it end-to-end with the floor expression inlined in SQL. */
   val rangeCosinePerQuery = QueryDef(
     "ann_range_cosine_perq",
-    (spark, dir) => rangeCosineCellsWith(spark, dir,
-      IvfConfig.Default, perQueryFloor),
+    (spark, dir) => rangeCosineCellsWith(spark, dir, Quantizer.Rule(),
+      perQueryFloor),
     Some("""
       WITH q8 AS (
         SELECT vec_id,
@@ -4580,8 +3779,8 @@ object SimilarityQueries {
     * oracle as `ann_range_cosine_perq`). */
   val rangeCosinePqPerQuery = QueryDef(
     "ann_range_cosine_pq_perq",
-    (spark, dir) => rangeCosinePqWith(spark, dir,
-      PqConfig.Default, perQueryFloor),
+    (spark, dir) => rangeCosinePqWith(spark, dir, Codebook.Rule(),
+      perQueryFloor),
     rangeCosinePerQuery.oracle)
 
   /** `ann_range_cosine_ivfpq_perq` (r18 verdict ask #6) — the FULL
@@ -4591,8 +3790,8 @@ object SimilarityQueries {
     * oracle as the perq cells rung — exactness is floor-independent. */
   val rangeCosineComposedPerQuery = QueryDef(
     "ann_range_cosine_ivfpq_perq",
-    (spark, dir) => rangeCosineComposedWith(spark, dir,
-      IvfConfig.Default, PqConfig.Default, perQueryFloor),
+    (spark, dir) => rangeCosineComposedWith(spark, dir, Quantizer.Rule(),
+      Codebook.Rule(), perQueryFloor),
     rangeCosinePerQuery.oracle)
 
   val defs: Seq[QueryDef] =

@@ -35,9 +35,9 @@ object VocabQueries {
   private[operators] def tokens(spark: org.apache.spark.sql.SparkSession,
       dir: String) =
     Staged.appendable(spark, dir, "tokens", "documents", "doc_id")(tokenize) {
-      // width-floor at the vocab family's ROOT stage (r21) — the token
-      // explode ran as one task off the single-row-group scan; every
-      // tf/df/bm25/tfidf consumer inherits this width (Staged.fanOut)
+      // no width floor at the vocab family's ROOT stage: r21 fanned it
+      // out, and the r22 same-box A/B measured every tf/df/bm25/tfidf
+      // consumer as fast or faster without (OPTIMIZATION_r22.md §1)
       tokenize(Tables.documents(spark, dir))
     }
 

@@ -775,7 +775,7 @@ object CurationStream {
       "codebook: unfrozen trainings move with every append, so streamed " +
       "codes could never join the staged codes table")
     val rows = graft.operators.SimilarityQueries
-      .frozenPqRefinedTable(spark, dir, cfg)
+      .frozenTrainedCodebook(spark, dir, graft.operators.Codebook.Trained(cfg))
       .select("off", "cw_id", "cs").collect()
       .map(r => (r.getLong(0), r.getLong(1),
         r.getSeq[Double](2).map(_.toLong)))
@@ -990,7 +990,7 @@ object CurationStream {
   /** [[semDedupGate]] over the TRAINED quantizer (r18): cells come from
     * the frozen Lloyd-refined centroid table — the same exact-integer
     * d2 = c·c − 2·v·c assignment (tie to the smaller cid) the batch
-    * [[graft.operators.SimilarityQueries.refinedCells]] runs, so the
+    * [[graft.operators.Quantizer.Trained]] cells run, so the
     * streamed home cell can never differ from the staged one. The
     * keeper-registry semantics, horizon, and dot floor are the shared
     * gate core's, unchanged; what moves is the GEOMETRY — and the batch
@@ -1154,7 +1154,7 @@ object CurationStream {
           cents(best).cid
         }
       // PQ encode against the frozen codebook — the batch
-      // pqEncodeTransform's exact arithmetic per (vector, subspace):
+      // pqEncodeWithDist's exact arithmetic per (vector, subspace):
       // integer L2 via ||a-b||^2 = a.a + b.b - 2 a.b over the subspace
       // slice, winner (dist asc, cw_id asc). Geometry comes from the
       // ONE batch definition (SimilarityQueries.PqSubs/PqWidth — r17

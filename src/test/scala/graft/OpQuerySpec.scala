@@ -819,7 +819,7 @@ class OpQuerySpec extends AnyFunSuite {
       df.filter($"rank" <= 5).select($"query_id", $"neighbor_id", $"rank")
         .as[(Long, Long, Int)].collect().toSet
     val pq = ranks(operators.SimilarityQueries.pqTopKWith(spark, sf, 5,
-      cwEvery = 1L, cwKey = 0L))
+      operators.Codebook.Rule(operators.PqConfig(cwEvery = 1L, cwKey = 0L))))
     val int8 = ranks(operators.CurationQueries.int8TopK.fn(spark, sf))
     assert(pq === int8,
       "zero-error PQ must reproduce the exhaustive int8 ranking")
@@ -835,9 +835,9 @@ class OpQuerySpec extends AnyFunSuite {
       df.filter($"rank" <= 5).select($"query_id", $"neighbor_id", $"rank")
         .as[(Long, Long, Int)].collect().toSet
     val frozen = ranks(operators.SimilarityQueries.pqTopKWith(spark, sf, 5,
-      operators.PqConfig(frozen = true)))
+      operators.Codebook.Rule(operators.PqConfig(frozen = true))))
     val dflt = ranks(operators.SimilarityQueries.pqTopKWith(spark, sf, 5,
-      operators.PqConfig()))
+      operators.Codebook.Rule(operators.PqConfig())))
     assert(frozen === dflt,
       "frozen-at-founding PQ must reproduce the rule-derived ranking")
   }

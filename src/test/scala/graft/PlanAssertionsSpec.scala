@@ -606,7 +606,8 @@ class PlanAssertionsSpec extends AnyFunSuite {
       java.nio.file.Files.createTempDirectory("graft_dpp_stage").toString
     operators.Staged.enablePersist(root)
     try {
-      val df = operators.SimilarityQueries.rangeCosineCellsWith(spark, sf)
+      val df = operators.SimilarityQueries.rangeCosineCellsWith(spark, sf,
+        operators.Quantizer.Rule())
       val n = df.count() // execute so AQE finalizes the plan
       val p = df.queryExecution.executedPlan.toString
       // the survivor set reaches the layout scan as a PARTITION filter —

@@ -427,7 +427,7 @@ class ScaleSpec extends AnyFunSuite {
   }
 
   test("capped index cardinality: recall holds under the cap, and the rerank rung converges to exhaustive int8 (r16 verdict #1/#2)") {
-    import operators.{PqConfig, SimilarityQueries, Staged}
+    import operators.{Codebook, SimilarityQueries, Staged}
     // the ONE recall@5 definition — ScaleBench's own helpers, so this
     // gate pins the same metric the published scale rows report
     def tops(df: org.apache.spark.sql.DataFrame): Map[Long, Set[Long]] =
@@ -478,7 +478,7 @@ class ScaleSpec extends AnyFunSuite {
     Staged.reset(spark)
     val n = Tables.embeddings(spark, sf).count().toInt
     val full = tops(SimilarityQueries
-      .pqRerankTopKWith(spark, sf, 5, n, PqConfig.Default))
+      .pqRerankTopKWith(spark, sf, 5, n, Codebook.Rule()))
     val int8 = tops(SparkEntry.queries("ann_topk_int8")(spark, sf))
     assert(full === int8,
       "full-width rerank must equal the exhaustive int8 top-5 exactly")
@@ -741,7 +741,7 @@ class ScaleSpec extends AnyFunSuite {
 
   test("exact range search over cell bounds: tight cells prune, result bit-equal to brute (r18)") {
     import org.apache.spark.sql.functions._
-    import operators.{IvfConfig, SimilarityQueries}
+    import operators.{Codebook, Quantizer, SimilarityQueries}
     import spark.implicits._
     // Engineered corpus where the Cauchy–Schwarz cell bound MUST fire:
     // three tight clusters of 100 (ids 0-99 / 100-199 / 200-299), one
@@ -768,7 +768,7 @@ class ScaleSpec extends AnyFunSuite {
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     operators.Staged.reset(spark)
     val live = SimilarityQueries.rangeLiveCells(spark, dir,
-      IvfConfig.Default).collect()
+      Quantizer.Rule()).collect()
     assert(live.length === 10,
       s"each of the 10 queries must keep exactly its own cluster's " +
         s"cell (B anti-correlated, C orthogonal — both provably below " +
@@ -794,7 +794,8 @@ class ScaleSpec extends AnyFunSuite {
     // ADC + √(qq·rrv) ceiling provably excludes clusters B and C —
     // the prefilter must keep EXACTLY the true matches here, and the
     // result must equal brute bit-for-bit
-    val pqSurv = SimilarityQueries.rangePqSurvivors(spark, dir).count()
+    val pqSurv = SimilarityQueries.rangePqSurvivors(spark, dir,
+      Codebook.Rule()).count()
     assert(pqSurv === 990L,
       s"the residual ceiling must keep exactly cluster A's pairs " +
         s"(B anti-correlated, C orthogonal, rrv jitter-sized): $pqSurv")
@@ -808,7 +809,8 @@ class ScaleSpec extends AnyFunSuite {
     // hard here (one surviving cell per query), and — the rung's actual
     // contract — the result must equal brute bit-for-bit.
     val liveRefined =
-      SimilarityQueries.rangeLiveCellsRefined(spark, dir).collect()
+      SimilarityQueries.rangeLiveCells(spark, dir, Quantizer.Trained())
+        .collect()
     assert(liveRefined.length === 10,
       s"refined prune must keep one cell per query: " +
         liveRefined.mkString(","))
@@ -820,7 +822,8 @@ class ScaleSpec extends AnyFunSuite {
     // (trained reconstructions are jitter-close or closer), and — the
     // actual contract — every trained rung equals brute bit-for-bit.
     val pqRefSurv =
-      SimilarityQueries.rangePqSurvivorsRefined(spark, dir).count()
+      SimilarityQueries.rangePqSurvivors(spark, dir, Codebook.Trained())
+        .count()
     assert(pqRefSurv === 990L,
       s"the TRAINED residual ceiling must keep exactly cluster A's " +
         s"pairs: $pqRefSurv")
@@ -836,9 +839,9 @@ class ScaleSpec extends AnyFunSuite {
     // with equality still gated — soundness is data-independent.
     operators.Staged.reset(spark)
     val sfLive = SimilarityQueries.rangeLiveCells(spark, sf,
-      IvfConfig.Default).count()
+      Quantizer.Rule()).count()
     val nlist = SimilarityQueries.ivfCellBounds(spark, sf,
-      IvfConfig.Default).count()
+      Quantizer.Rule()).count()
     info(s"sf corpus: ${sfLive} surviving (query, cell) pairs of " +
       s"${10 * nlist} — uniform-random embeddings, prune-neutral as " +
       "documented")
@@ -927,7 +930,7 @@ class ScaleSpec extends AnyFunSuite {
   }
 
   test("trained quantizer tightens the range prune on clustered data (r18)") {
-    import operators.{IvfConfig, SimilarityQueries}
+    import operators.{Quantizer, SimilarityQueries}
     // The refined rung's measured payoff: rr is the quantity Lloyd
     // descends, so on data with structure the trained centroids must
     // refuse at least as many (query, cell) pairs as the id-rule seeds
@@ -936,8 +939,10 @@ class ScaleSpec extends AnyFunSuite {
     operators.Staged.reset(spark)
     val dir = ScaleData.ensureClustered(spark)
     val rule =
-      SimilarityQueries.rangeLiveCells(spark, dir, IvfConfig.Default).count()
-    val refined = SimilarityQueries.rangeLiveCellsRefined(spark, dir).count()
+      SimilarityQueries.rangeLiveCells(spark, dir, Quantizer.Rule())
+        .count()
+    val refined = SimilarityQueries.rangeLiveCells(spark, dir,
+      Quantizer.Trained()).count()
     info(s"clustered fixture: rule prune keeps $rule (query, cell) " +
       s"pairs, refined keeps $refined")
     assert(refined <= rule,
@@ -962,6 +967,26 @@ class ScaleSpec extends AnyFunSuite {
     assert(refinedDrops >= ruleDrops,
       s"trained cells must not lose semantic duplicates: refined " +
         s"$refinedDrops vs rule $ruleDrops")
+    operators.Staged.reset(spark)
+  }
+
+  test("PQ refuses embeddings that are not PqSubs x PqWidth wide instead of silently truncating them") {
+    import spark.implicits._
+    // 72 components: the 8 × 8 subspace geometry would ignore dims 65-72
+    // of every vector, so training must fail in-plan, naming the width
+    val dir = java.nio.file.Files.createTempDirectory("pq_ragged").toString
+    (0 until 60).map(i => (i.toLong,
+        Array.tabulate(72)(d => ((i * 7 + d * 3) % 17 - 8) / 64.0f), 0))
+      .toDF("vec_id", "embedding", "label")
+      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    operators.Staged.reset(spark)
+    val e = intercept[Exception] {
+      SparkEntry.queries("pq_refine")(spark, dir).collect()
+    }
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).toList
+    assert(msgs.exists(_.contains("exactly 64 components")),
+      msgs.mkString("\n"))
     operators.Staged.reset(spark)
   }
 

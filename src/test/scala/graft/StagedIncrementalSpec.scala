@@ -872,7 +872,8 @@ class StagedIncrementalSpec extends AnyFunSuite {
     val cfg = IvfConfig(centroidEvery = 10, centroidKey = 7,
       frozen = true, driftFractionMax = 1.0)
     def cellRows(c: IvfConfig): Set[(Long, Long, Int)] = {
-      SimilarityQueries.ivfCells(spark, dir, c).collect()
+      SimilarityQueries.ivfCells(spark, dir, operators.Quantizer.Rule(c))
+        .collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     }
     def centIds(c: IvfConfig): Set[Long] =
@@ -980,10 +981,11 @@ class StagedIncrementalSpec extends AnyFunSuite {
     val cfg = IvfConfig(centroidEvery = 10, centroidKey = 7,
       frozen = true, driftFractionMax = 0.3)
     def cents(): Map[Long, Seq[Long]] =
-      SimilarityQueries.refinedCentroids(spark, dir, cfg).collect()
+      operators.Quantizer.Trained(cfg).centroids(spark, dir).collect()
         .map(r => r.getLong(0) -> r.getSeq[Double](1).map(_.toLong)).toMap
     def cells(): Set[(Long, Long, Int)] =
-      SimilarityQueries.refinedCells(spark, dir, cfg).collect()
+      SimilarityQueries.ivfCells(spark, dir, operators.Quantizer.Trained(cfg))
+        .collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     val centsStage = "ivf_refined_cents@10:7:2:L2:d0.3+frz"
     def cellModes: Seq[String] = Staged.buildLogSnapshot.collect {
@@ -993,7 +995,8 @@ class StagedIncrementalSpec extends AnyFunSuite {
       case (s, m) if s.startsWith("ivf_refined_rr@10:7:2:L2+frz") => m
     }
     def radii(): Map[Long, Long] =
-      SimilarityQueries.refinedCellBounds(spark, dir, cfg).collect()
+      SimilarityQueries.ivfCellBounds(spark, dir,
+        operators.Quantizer.Trained(cfg)).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
     Staged.evict(spark)
     Staged.enablePersist(Files.createTempDirectory("inc_frz_ref").toString)
@@ -1010,8 +1013,8 @@ class StagedIncrementalSpec extends AnyFunSuite {
           s"${founding(7L).take(3)}")
       // parity: frozen founding values == an unfrozen training over the
       // same (founding) corpus
-      val unfrozen = SimilarityQueries
-        .refinedCentroids(spark, dir, cfg.copy(frozen = false)).collect()
+      val unfrozen = operators.Quantizer.Trained(cfg.copy(frozen = false))
+        .centroids(spark, dir).collect()
         .map(r => r.getLong(0) -> r.getSeq[Double](1).map(_.toLong)).toMap
       assert(unfrozen === founding,
         "frozen founding must equal the unfrozen training bit for bit")
@@ -1104,11 +1107,12 @@ class StagedIncrementalSpec extends AnyFunSuite {
     val cfg = PqConfig(cwEvery = 10, cwKey = 7, frozen = true,
       driftFractionMax = 0.2)
     def cb(): Map[(Long, Long), Seq[Long]] =
-      SimilarityQueries.pqRefinedCodebook(spark, dir, cfg).collect()
+      operators.Codebook.Trained(cfg).book(spark, dir).collect()
         .map(r => (r.getLong(0), r.getLong(1)) ->
           r.getSeq[Double](2).map(_.toLong)).toMap
     def codes(): Map[(Long, Long), Long] =
-      SimilarityQueries.pqRefinedCodes(spark, dir, cfg).collect()
+      SimilarityQueries.pqCodes(spark, dir, operators.Codebook.Trained(cfg))
+        .collect()
         .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     val cbStage = "pq_refined_cb@10:7:8x8:L2:d0.2+frz"
     def codesModes: Seq[String] = Staged.buildLogSnapshot.collect {
@@ -1127,8 +1131,8 @@ class StagedIncrementalSpec extends AnyFunSuite {
         "one codebook per subspace")
       // parity: frozen founding values == an unfrozen training over the
       // same founding corpus, bit for bit
-      val unfrozen = SimilarityQueries
-        .pqRefinedCodebook(spark, dir, cfg.copy(frozen = false)).collect()
+      val unfrozen = operators.Codebook.Trained(cfg.copy(frozen = false))
+        .book(spark, dir).collect()
         .map(r => (r.getLong(0), r.getLong(1)) ->
           r.getSeq[Double](2).map(_.toLong)).toMap
       assert(unfrozen === founding,
@@ -1220,13 +1224,14 @@ class StagedIncrementalSpec extends AnyFunSuite {
       // drive the staged residual table too — the composed encode
       // derives residuals inline per delta (each frozen stage
       // delta-builds from raw), so the res stage needs its own consumer
-      SimilarityQueries.refinedResiduals(spark, dir, ivfCfg).count()
-      SimilarityQueries.ivfAdcRefinedTopKWith(spark, dir, 5, ivfCfg,
-        pqCfg).count()
+      SimilarityQueries.ivfResiduals(spark, dir,
+        operators.Quantizer.Trained(ivfCfg)).count()
+      SimilarityQueries.ivfAdcTopKWith(spark, dir, 5,
+        operators.Quantizer.Trained(ivfCfg), pqCfg).count()
     }
     def codes(): Map[(Long, Long), Long] =
-      SimilarityQueries.ivfAdcRefinedCodes(spark, dir, ivfCfg, pqCfg)
-        .collect()
+      SimilarityQueries.pqCodes(spark, dir, operators.Codebook.Trained(pqCfg,
+        Some(operators.Quantizer.Trained(ivfCfg)))).collect()
         .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     def modesOf(prefix: String): Seq[String] =
       Staged.buildLogSnapshot.collect {
@@ -1307,7 +1312,8 @@ class StagedIncrementalSpec extends AnyFunSuite {
     val cfg = IvfConfig(centroidEvery = 10, centroidKey = 7,
       frozen = true, driftFractionMax = 1.0)
     def layout(): Set[(Long, Long)] =
-      SimilarityQueries.q8ByCid(spark, dir, cfg).collect()
+      SimilarityQueries.q8ByCid(spark, dir, operators.Quantizer.Rule(cfg))
+        .collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
     def layoutModes: Seq[String] = Staged.buildLogSnapshot.collect {
       case (s, m) if s.startsWith("q8_by_cid@10:7:2+frz") => m
@@ -1350,7 +1356,8 @@ class StagedIncrementalSpec extends AnyFunSuite {
       // root would RE-FOUND the rule over the grown corpus and include
       // id 47, which is exactly the founding-geometry drift the frozen
       // config exists to prevent)
-      val expected = SimilarityQueries.ivfCells(spark, dir, cfg)
+      val expected = SimilarityQueries.ivfCells(spark, dir,
+        operators.Quantizer.Rule(cfg))
         .filter($"rn" === 1).select($"cid", $"vec_id").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(grown === expected,
@@ -1362,7 +1369,7 @@ class StagedIncrementalSpec extends AnyFunSuite {
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
         .toSet
       val cells = SimilarityQueries
-        .rangeCosineCellsWith(spark, dir, cfg, floor)
+        .rangeCosineCellsWith(spark, dir, operators.Quantizer.Rule(cfg), floor)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
         .toSet
       assert(cells === brute,
@@ -1615,7 +1622,8 @@ class StagedIncrementalSpec extends AnyFunSuite {
       SimilarityQueries.frozenPqCodebook(spark, dir, c)
         .select("cw_id").collect().map(_.getLong(0)).toSet
     def codeRows(c: PqConfig): Set[(Long, Long, Long)] =
-      SimilarityQueries.pqCodes(spark, dir, c).collect()
+      SimilarityQueries.pqCodes(spark, dir, operators.Codebook.Rule(c))
+        .collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     def codesModes: Seq[(String, String)] = Staged.buildLogSnapshot.collect {
       case (s, m) if s.startsWith("pq_codes@10:7:8x8+frz") => (s, m)
@@ -1984,7 +1992,8 @@ class StagedIncrementalSpec extends AnyFunSuite {
       SimilarityQueries.frozenPqCodebook(spark, dir, cfg)
         .select("cw_id").collect().map(_.getLong(0)).toSet
     def codeRows(): Set[(Long, Long, Long)] =
-      SimilarityQueries.pqCodes(spark, dir, cfg).collect()
+      SimilarityQueries.pqCodes(spark, dir, operators.Codebook.Rule(cfg))
+        .collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     def codesModes: Seq[(String, String)] = Staged.buildLogSnapshot.collect {
       case (s, m) if s.startsWith("pq_codes@10:7:8x8:k2+frz") => (s, m)
@@ -2273,7 +2282,8 @@ class StagedIncrementalSpec extends AnyFunSuite {
       frozen = true, driftFractionMax = 1.0)
     def bounds(): Map[Long, Long] = {
       Staged.reset(spark)
-      SimilarityQueries.ivfCellBounds(spark, dir, cfg).collect()
+      SimilarityQueries.ivfCellBounds(spark, dir, operators.Quantizer.Rule(cfg))
+        .collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
     }
     def boundModes(): Seq[String] = Staged.buildLogSnapshot.collect {
@@ -2336,7 +2346,8 @@ class StagedIncrementalSpec extends AnyFunSuite {
       val cfg2 = cfg.copy(centroidEvery = 15)
       Staged.reset(spark)
       Staged.clearBuildLog()
-      val other = SimilarityQueries.ivfCellBounds(spark, dir, cfg2)
+      val other = SimilarityQueries.ivfCellBounds(spark, dir,
+        operators.Quantizer.Rule(cfg2))
         .collect().map(_.getLong(0)).toSet
       assert(other === Set(7L, 22L, 37L), s"rule ids under every=15: $other")
       assert(boundModes() === Seq("cold"),
@@ -2366,7 +2377,8 @@ class StagedIncrementalSpec extends AnyFunSuite {
       driftFractionMax = 1.0)
     def resid(): Map[Long, Long] = {
       Staged.reset(spark)
-      SimilarityQueries.pqResiduals(spark, dir, cfg).collect()
+      SimilarityQueries.pqResiduals(spark, dir, operators.Codebook.Rule(cfg))
+        .collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
     }
     def residModes(): Seq[String] = Staged.buildLogSnapshot.collect {

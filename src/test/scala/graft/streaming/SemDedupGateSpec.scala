@@ -3,7 +3,8 @@ package graft.streaming
 import java.sql.Timestamp
 
 import graft.TestSpark
-import graft.operators.{IvfConfig, SemDedupConfig, SimilarityQueries, Staged}
+import graft.operators.{Codebook, IvfConfig, Quantizer, SemDedupConfig,
+  SimilarityQueries, Staged}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -190,7 +191,7 @@ class SemDedupGateSpec extends AnyFunSuite {
       "vec_id",
       "transform(CAST(embedding AS ARRAY<DOUBLE>), " +
         "v -> greatest(least(floor(v * 64D), 127D), -127D)) AS q8")
-    val home = SimilarityQueries.refinedCells(spark, dir, cfg)
+    val home = SimilarityQueries.ivfCells(spark, dir, Quantizer.Trained(cfg))
       .filter(col("rn") === 1).select(col("vec_id"), col("cid"))
     val batch = SimilarityQueries
       .semanticDedupOn(home, q8t, SemDedupConfig.Default)
@@ -223,7 +224,7 @@ class SemDedupGateSpec extends AnyFunSuite {
       assert(verdicts.length === all.length,
         "one verdict per in-gate vector")
       // per-vector home-cell parity: the streamed exact-integer d2
-      // assignment must reproduce the staged refinedCells rows
+      // assignment must reproduce the staged trained-cell rows
       assert(verdicts.map(v => v.vecId -> v.cid).toMap === homeMap,
         "streamed trained cells must equal the staged assignment")
       val dropped = verdicts.filterNot(_.kept)
@@ -593,7 +594,7 @@ class SemDedupGateSpec extends AnyFunSuite {
     val cws = CurationStream.frozenPqCodewordLits(spark, dir, pqCfg)
     assert(cws.map(_.cwId) === Seq(7L, 17L, 27L, 37L))
     // the batch index rows the stream must reproduce: (vec_id, off, code)
-    val batch = SimilarityQueries.pqCodes(spark, dir, pqCfg).collect()
+    val batch = SimilarityQueries.pqCodes(spark, dir, Codebook.Rule(pqCfg)).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     val all = spark.read.parquet(s"$dir/embeddings.parquet")
       .orderBy("vec_id").collect()
@@ -625,7 +626,7 @@ class SemDedupGateSpec extends AnyFunSuite {
       // — value-identical to the batch pq_resid stage's row, so
       // streamed rows can feed an index serving the EXACT range
       // prefilter without a second encode
-      val batchResid = SimilarityQueries.pqResiduals(spark, dir, pqCfg)
+      val batchResid = SimilarityQueries.pqResiduals(spark, dir, Codebook.Rule(pqCfg))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       for (v <- coded)
         assert(v.rrv === batchResid(v.vecId),
@@ -677,7 +678,7 @@ class SemDedupGateSpec extends AnyFunSuite {
       try {
         Staged.reset(spark)
         Staged.clearBuildLog()
-        SimilarityQueries.pqCodes(spark, dir, pqCfg).count()
+        SimilarityQueries.pqCodes(spark, dir, Codebook.Rule(pqCfg)).count()
         val key = Staged.buildLogSnapshot.collect {
           case (s, _) if s.startsWith("pq_codes@") => s
         }.head
@@ -726,10 +727,10 @@ class SemDedupGateSpec extends AnyFunSuite {
     // the batch index rows the stream must reproduce — the TRAINED
     // codes table (frozen mode: encode against the frozen trained
     // codebook), plus the trained home cells
-    val batch = SimilarityQueries.pqRefinedCodes(spark, dir, pqCfg)
+    val batch = SimilarityQueries.pqCodes(spark, dir, Codebook.Trained(pqCfg))
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2))
       .toMap
-    val homes = SimilarityQueries.refinedCells(spark, dir, cfg)
+    val homes = SimilarityQueries.ivfCells(spark, dir, Quantizer.Trained(cfg))
       .filter($"rn" === 1).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val all = spark.read.parquet(s"$dir/embeddings.parquet")
@@ -812,7 +813,7 @@ class SemDedupGateSpec extends AnyFunSuite {
       try {
         Staged.reset(spark)
         Staged.clearBuildLog()
-        SimilarityQueries.pqRefinedCodes(spark, dir, pqCfg).count()
+        SimilarityQueries.pqCodes(spark, dir, Codebook.Trained(pqCfg)).count()
         val key = Staged.buildLogSnapshot.collect {
           case (s, _) if s.startsWith("pq_refined_codes@") => s
         }.head
