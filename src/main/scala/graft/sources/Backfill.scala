@@ -5,7 +5,6 @@ import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.sql.Timestamp
 
 import graft.model.TradeOut
-import org.apache.spark.sql.{Dataset, SparkSession}
 
 /** Trade-gap backfill (reference op 3 + ops 21-23,
   * redis_worker.py:43-94): when the live stream reveals missing trade ids,
@@ -74,20 +73,27 @@ object Backfill {
     BackfillResult(out.result(), missing, pages)
   }
 
-  /** Merge backfilled trades for every flagged gap in a trade micro-batch:
-    * scan the batch for gap flags, fill each, and return live ∪ backfilled
-    * with id dedup (the union + dropDuplicates of SURVEY §7.1 step 7). */
-  def reconcileBatch(spark: SparkSession, batch: Dataset[TradeOut],
-      fetcher: TradeFetcher): Dataset[TradeOut] = {
-    import spark.implicits._
-    val gaps = batch.filter(_.gapStart >= 0)
-      .map(t => (t.exchange, t.productId, t.gapStart, t.gapEnd))
-      .distinct().collect() // gaps per batch are few and tiny by contract
-    val backfilled = gaps.toSeq.flatMap { case (ex, product, s, e) =>
-      fillGap(fetcher, product, ex, s, e).trades
-    }
-    graft.streaming.Pipeline.dedupTradeIds(
-      batch.union(spark.createDataset(backfilled)))
+  /** One gap flagged in a batch, and what filling it returned. */
+  final case class GapFill(exchange: String, productId: String,
+      gapStart: Long, gapEnd: Long, result: BackfillResult)
+
+  /** A batch's trades after reconciliation, and every gap it filled. */
+  final case class Reconciled(trades: Seq[TradeOut], gaps: Seq[GapFill])
+
+  /** Merge backfilled trades for every flagged gap in a batch's trades:
+    * scan for gap flags, fill each, and return live ∪ backfilled with id
+    * dedup (SURVEY §7.1 step 7) — live rows first, so a backfilled copy of
+    * a live id loses. Each gap's [[BackfillResult]] comes back with it, so
+    * ids the history could not serve stay visible to the caller. */
+  def reconcileBatch(live: Seq[TradeOut],
+      fetcher: TradeFetcher): Reconciled = {
+    val gaps = live.filter(_.gapStart >= 0)
+      .map(t => (t.exchange, t.productId, t.gapStart, t.gapEnd)).distinct
+      .map { case (ex, product, s, e) =>
+        GapFill(ex, product, s, e, fillGap(fetcher, product, ex, s, e))
+      }
+    Reconciled(graft.streaming.Pipeline.dedupTradeIds(
+      live ++ gaps.flatMap(_.result.trades)), gaps)
   }
 
   /** Default transport: one GET via the shared JDK HTTP client. Follows

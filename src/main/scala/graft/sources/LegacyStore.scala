@@ -3,7 +3,7 @@ package graft.sources
 import java.sql.DriverManager
 
 import graft.model.EngineOut
-import graft.streaming.{BookEngine, Pipeline}
+import graft.streaming.Pipeline
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   *     (executors write partitions concurrently, batched statements).
   *   - foreachBatch is at-least-once, and plain JDBC append would
   *     duplicate rows on batch retry. [[writeBatch]] is the JDBC analogue
-  *     of the parquet sink's dynamic partition overwrite: tag rows with
+  *     of the parquet sink's batch_id partition overwrite: tag rows with
   *     batch_id, transactionally DELETE the batch's rows, then append —
   *     a retried batch replaces exactly itself (table-level idempotence).
   *   - [[readPartitioned]] is the scale path for reading a big legacy
@@ -127,21 +127,21 @@ object LegacyStore {
     spark.read.jdbc(url, table, partitionColumn, lower, upper,
       numPartitions, new java.util.Properties)
 
-  /** foreachBatch body mirroring [[Pipeline.commitBatch]] into JDBC: the
-    * inside book lands as the legacy 32-column flat view (the reference's
-    * gdax_order_book shape, gdax_schema.sql:8-41), trades id-deduped into
+  /** foreachBatch body mirroring [[Pipeline.commitBatch]] into JDBC, over
+    * the same settled batch (one engine pass, trades id-deduped on the
+    * driver): the inside book lands as the legacy 32-column flat view (the
+    * reference's gdax_order_book shape, gdax_schema.sql:8-41), trades in
     * a trades table. Use as
     * `writeStream.foreachBatch(LegacyStore.jdbcSink(url))`. */
   def jdbcSink(url: String, bookTable: String = "gdax_order_book",
       tradeTable: String = "trades")
       : (Dataset[EngineOut], Long) => Unit = { (batch, batchId) =>
-    batch.persist()
-    try {
-      val (books, trades) = BookEngine.split(batch)
-      writeBatch(Pipeline.legacyFlatView(books.toDF()), url, bookTable,
-        batchId)
-      writeBatch(Pipeline.dedupTradeIds(trades).toDF(),
-        url, tradeTable, batchId)
-    } finally { batch.unpersist(); () }
+    val spark = batch.sparkSession
+    import spark.implicits._
+    val (books, reconciled) = Pipeline.settle(batch, None)
+    writeBatch(Pipeline.legacyFlatView(spark.createDataset(books).toDF()),
+      url, bookTable, batchId)
+    writeBatch(spark.createDataset(reconciled.trades).toDF(), url,
+      tradeTable, batchId)
   }
 }

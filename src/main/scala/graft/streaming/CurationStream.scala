@@ -542,8 +542,8 @@ object CurationStream {
     * cluster — a deployment wants that materialized. This sink commits each
     * micro-batch's upserts — pre-reduced to the latest row per cluster
     * WITHIN the batch — into a parquet table partitioned by `batch_id`
-    * under the exact idempotence discipline [[Pipeline.commitBatch]] uses
-    * for trades: foreachBatch is at-least-once, so a retried batch
+    * under the same idempotence discipline as [[Pipeline.commitBatch]]:
+    * foreachBatch is at-least-once, so a retried batch
     * dynamic-overwrites ITS OWN partition and never duplicates or touches
     * earlier commits. [[canonicalTable]] is the merged read view;
     * [[compactCanonical]] folds settled partitions so the table's row
@@ -590,8 +590,7 @@ object CurationStream {
       tableDir: String): Unit = {
     import org.apache.spark.sql.expressions.Window
     // pin before the two actions (isEmpty probe + write): re-running an
-    // unpinned batch plan would re-drive the stateful stages, the same
-    // hazard Pipeline.commitBatch pins against
+    // unpinned batch plan would re-drive the stateful stages
     batch.persist()
     try {
       if (batch.isEmpty) return // no partition to (over)write

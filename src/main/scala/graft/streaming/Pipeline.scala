@@ -1,6 +1,9 @@
 package graft.streaming
 
-import graft.model.{EngineOut, MarketMessage}
+import scala.collection.mutable
+
+import graft.model.{EngineOut, InsideBookUpdate, MarketMessage, TradeOut}
+import graft.sources.Backfill
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -14,6 +17,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * both tables — no per-row connections, no external queue.
   */
 object Pipeline {
+
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /** Legacy flat view of the inside book (schema/gdax_schema.sql:8-41):
     * server_datetime (stamped at view/write time, as the reference stamped
@@ -36,43 +41,45 @@ object Pipeline {
         col("productId").as("product_id"), col("sequence")) ++ cells): _*)
   }
 
-  /** Trade-id dedup with the CORRECT key: exchange trade ids are
-    * per-product counters (an ETH-USD id can equal an ETH-EUR id), so the
-    * key is (exchange, productId, tradeId); the id-less sentinel rows
-    * (tradeId = -1, e.g. truncated frames the decoder salvaged) extend the
-    * key with a content surrogate — distinct salvaged trades never
-    * collapse, exact replays still dedup. One pass over the input (no
-    * filter/union plan duplication). */
-  private[graft] def dedupTradeIds(
-      trades: Dataset[graft.model.TradeOut]): Dataset[graft.model.TradeOut] =
-    trades
-      .withColumn("__idless_key",
-        when(col("tradeId") === -1L,
-          // exchangeTs is part of the surrogate: two distinct salvaged
-          // trades with EQUAL fills in the same frame/sequence (routine —
-          // two identical partial fills) must not collapse. Residual limit:
-          // identical fills in the same sequence at the same exchange
-          // timestamp still collapse — the decoded row carries no
-          // arrival-order column to break that tie.
-          concat_ws("|", col("sequence"), unix_micros(col("exchangeTs")),
-            col("price"), col("volume"), col("side")))
-          .otherwise(lit("")))
-      .dropDuplicates(StateSchemas.TradeDedupKey)
-      .drop("__idless_key")
-      .as[graft.model.TradeOut](
-        org.apache.spark.sql.Encoders.product[graft.model.TradeOut])
+  /** Trade-id dedup with the CORRECT key ([[StateSchemas.tradeDedupKey]]):
+    * exchange trade ids are per-product counters (an ETH-USD id can equal
+    * an ETH-EUR id), so the key is (exchange, productId, tradeId); the
+    * id-less sentinel rows (tradeId = -1, e.g. truncated frames the decoder
+    * salvaged) extend the key with a content surrogate — distinct salvaged
+    * trades never collapse, exact replays still dedup. The first row of a
+    * key wins, so callers put live rows ahead of backfilled ones. */
+  private[graft] def dedupTradeIds(trades: Seq[TradeOut]): Seq[TradeOut] = {
+    val seen = mutable.HashSet.empty[(String, String, Long, String)]
+    trades.filter(t => seen.add(StateSchemas.tradeDedupKey(t)))
+  }
+
+  /** Run the engine over `batch` once and settle its output on the
+    * driver: the inside-book rows, and the trades deduped — with a
+    * fetcher, every flagged gap filled first. Shared by both sinks; see
+    * [[commitBatch]] for why the collect is bounded. */
+  private[graft] def settle(batch: Dataset[EngineOut],
+      fetcher: Option[Backfill.TradeFetcher])
+      : (Seq[InsideBookUpdate], Backfill.Reconciled) = {
+    val rows = batch.collect().toSeq
+    val live = rows.flatMap(_.trade)
+    (rows.flatMap(_.book), fetcher match {
+      case Some(f) => Backfill.reconcileBatch(live, f) // op 22-23
+      case None => Backfill.Reconciled(dedupTradeIds(live), Nil)
+    })
+  }
 
   /** Start the ingest pipeline for one exchange feed: a single stateful
     * pass whose micro-batches write to `<outDir>/inside_book` and
     * `<outDir>/trades` (trade rows deduped by id within each batch —
     * replayed frames can't double-insert, fixing §0.1's backfill
-    * duplication for free).
+    * duplication for free). Each micro-batch is one [[commitBatch]].
     *
     * Sink idempotence: foreachBatch is at-least-once — a batch that fails
-    * after a partial write is retried with the SAME batchId. Each write is
-    * therefore partitioned by batch_id with dynamic partition overwrite:
-    * the retry replaces exactly its own partition, never duplicating or
-    * touching earlier batches — exactly-once at the table level.
+    * after a partial write is retried with the SAME batchId. Each table's
+    * rows for a batch therefore live in their own static partition
+    * directory `batch_id=N`, and a commit overwrites exactly that path:
+    * the retry replaces its own partition, never duplicating or touching
+    * earlier batches — exactly-once at the table level.
     *
     * `useTransformWithState` switches the engine to the
     * transformWithState/RocksDB path (the production state backend for
@@ -83,7 +90,7 @@ object Pipeline {
     * core (golden-tested against each other). */
   def start(frames: DataFrame, decode: DataFrame => Dataset[MarketMessage],
       outDir: String, checkpointDir: String,
-      fetcher: Option[graft.sources.Backfill.TradeFetcher] = None,
+      fetcher: Option[Backfill.TradeFetcher] = None,
       useTransformWithState: Boolean = false,
       trigger: Option[org.apache.spark.sql.streaming.Trigger] = None,
       idleTtl: Option[java.time.Duration] = None): StreamingQuery = {
@@ -103,38 +110,34 @@ object Pipeline {
   }
 
   /** One micro-batch commit — public so idempotence is directly testable:
-    * re-running the same (batch, batchId) leaves the tables unchanged. */
+    * re-running the same (batch, batchId) leaves the tables unchanged.
+    *
+    * The engine runs once, as a collect ([[settle]]); gap backfill and
+    * trade dedup happen on the collected rows. The collect is bounded: the
+    * engine emits at most one row per admitted message, and the websocket
+    * source already holds the micro-batch's frames on the driver under its
+    * admission cap (`maxFramesPerTrigger`, default 10,000), so the rows
+    * add no new memory bound. Each table is then written as ONE file by
+    * overwriting its static `<outDir>/<table>/batch_id=<batchId>` path —
+    * the partition layout readers and [[Migrator.ensureTables]] discover,
+    * with no dynamic-overwrite staging. A gap the history could not fully
+    * fill is logged, one WARN line per gap. */
   def commitBatch(batch: Dataset[EngineOut], batchId: Long, outDir: String,
-      fetcher: Option[graft.sources.Backfill.TradeFetcher]): Unit = {
-    // Two sink writes (plus reconcileBatch's collect) each re-run the
-    // decode + stateful pass unless the batch is pinned first.
-    batch.persist()
-    try {
-      commitBatchInner(batch, batchId, outDir, fetcher)
-    } finally batch.unpersist()
-  }
-
-  private def commitBatchInner(batch: Dataset[EngineOut], batchId: Long,
-      outDir: String,
-      fetcher: Option[graft.sources.Backfill.TradeFetcher]): Unit = {
+      fetcher: Option[Backfill.TradeFetcher]): Unit = {
     val spark = batch.sparkSession
-    val (books, trades) = BookEngine.split(batch)
-    books.withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(s"$outDir/inside_book")
-    val merged = fetcher match {
-      case Some(f) => // op 22-23: fill flagged gaps, merge, dedup
-        graft.sources.Backfill.reconcileBatch(spark, trades, f)
-      case None => dedupTradeIds(trades)
+    import spark.implicits._
+    val (books, reconciled) = settle(batch, fetcher)
+    reconciled.gaps.filter(_.result.stillMissing.nonEmpty).foreach { g =>
+      log.warn(s"batch $batchId: gap ${g.exchange} ${g.productId} " +
+        s"[${g.gapStart}, ${g.gapEnd}] left " +
+        s"${g.result.stillMissing.size} trade ids unfilled after " +
+        s"${g.result.pagesFetched} pages")
     }
-    merged.withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(s"$outDir/trades")
-    ()
+    def write(rows: Dataset[_], table: String): Unit =
+      rows.coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/$table/batch_id=$batchId")
+    write(spark.createDataset(books), "inside_book")
+    write(spark.createDataset(reconciled.trades), "trades")
   }
 
   /** Full-table CSV export with header (op 8, export_to_csv.py intent —
@@ -144,14 +147,15 @@ object Pipeline {
     spark.read.parquet(tableDir)
       .write.mode("overwrite").option("header", "true").csv(out)
 
-  /** Small-file compaction for a batch_id-partitioned sink table: every
-    * micro-batch commit writes one file per shuffle partition per trigger,
-    * and at feed rates that means millions of tiny files per day — the
-    * classic streaming-sink operational failure at scale. Rewrites each
-    * batch_id partition into one file (hash-clustered so a partition's
-    * rows land in a single task) via dynamic partition overwrite — the
-    * same idempotent mechanism as the sink itself, so a crashed compaction
-    * is simply re-run.
+  /** Small-file compaction for a batch_id-partitioned sink table. Each
+    * [[commitBatch]] already writes a batch partition as one file; tables
+    * written by earlier versions of the sink hold one file per shuffle
+    * partition per trigger, and at feed rates that means millions of tiny
+    * files per day — the classic streaming-sink operational failure at
+    * scale. Rewrites each batch_id partition into one file (hash-clustered
+    * so a partition's rows land in a single task) via dynamic partition
+    * overwrite, which replaces only the partitions it writes — so a
+    * crashed compaction is simply re-run.
     *
     * `upToBatchId` bounds the rewrite to partitions the stream has moved
     * past: a live deployment passes lastCommittedBatch - 1 so compaction

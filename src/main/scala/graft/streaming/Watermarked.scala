@@ -37,15 +37,9 @@ object Watermarked {
     import trades.sparkSession.implicits._
     trades
       .withWatermark("exchangeTs", delay)
-      .withColumn("__idless_key",
-        when(col("tradeId") === -1L,
-          // exchangeTs in the surrogate: equal fills in one frame/sequence
-          // (two identical partial fills) must not collapse — see
-          // Pipeline.dedupTradeIds, same key construction. Key VALUES
-          // changed in r8 (state schema did not); see SURVEY §5.3.
-          concat_ws("|", col("sequence"), unix_micros(col("exchangeTs")),
-            col("price"), col("volume"), col("side")))
-          .otherwise(lit("")))
+      // the surrogate's VALUES changed in r8 (state schema did not); see
+      // SURVEY §5.3
+      .withColumn("__idless_key", StateSchemas.idlessKeyColumn)
       // key columns from StateSchemas.TradeDedupKey (v2) — the one
       // definition of this operator's checkpoint-pinned key schema
       .dropDuplicatesWithinWatermark(StateSchemas.TradeDedupKey)

@@ -55,18 +55,44 @@ class BackfillSpec extends AnyFunSuite {
   }
 
   test("reconcileBatch: live ∪ backfilled with id dedup (live wins at sink)") {
-    val spark = TestSpark.spark
-    import spark.implicits._
     val live = Seq(
       TradeOut("gdax", "ETH-USD", 7, 100L, "300.15", "0.25", "buy", ts,
         backfilled = false, -1, -1),
       TradeOut("gdax", "ETH-USD", 9, 104L, "300.16", "0.30", "sell", ts,
-        backfilled = false, 101, 103)).toDS()
-    val merged = reconcileBatch(spark, live, new FixtureFetcher).collect()
+        backfilled = false, 101, 103))
+    val merged = reconcileBatch(live, new FixtureFetcher).trades
     assert(merged.map(_.tradeId).sorted.toSeq === Seq(100L, 101L, 102L, 103L, 104L))
     // the flagged ids came from backfill; the live rows stayed live
     assert(merged.filter(_.backfilled).map(_.tradeId).sorted.toSeq ===
       Seq(101L, 102L, 103L))
+  }
+
+  test("commitBatch: a half-served gap lands its served half, the rest is reported missing") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    // live trades 100 and 111 flag the gap [101, 110]; the history holds
+    // only 101..105
+    val halfHistory = new TradeFetcher {
+      override def fetchPage(p: String, afterId: Long,
+          limit: Int): Seq[FetchedTrade] =
+        (101L to 105L).filter(_ > afterId).take(limit)
+          .map(id => FetchedTrade(id, s"$id.00", "1.0", "buy", ts))
+    }
+    val batch = graft.streaming.BookEngine.run(Seq(100L, 111L).map { id =>
+      graft.model.MarketMessage("gdax", "ETH-USD", "match", "ETH-USD", id,
+        id, Nil, Nil, Nil, id, "300.15", "0.25", "buy", ts)
+    }.toDS())
+    val outDir = java.nio.file.Files.createTempDirectory("half_gap").toString
+    graft.streaming.Pipeline.commitBatch(batch, 0L, outDir, Some(halfHistory))
+    val landed = spark.read.parquet(s"$outDir/trades")
+      .select("tradeId", "backfilled").as[(Long, Boolean)].collect()
+    assert(landed.map(_._1).sorted.toSeq === Seq(100L, 101L, 102L, 103L,
+      104L, 105L, 111L))
+    assert(landed.filter(_._2).map(_._1).sorted.toSeq === (101L to 105L))
+    val gaps = graft.streaming.Pipeline.settle(batch, Some(halfHistory))._2.gaps
+    assert(gaps.map(g => (g.productId, g.gapStart, g.gapEnd)) ===
+      Seq(("ETH-USD", 101L, 110L)))
+    assert(gaps.head.result.stillMissing === (106L to 110L).toSet)
   }
 
   test("property: fillGap terminates with exact partition of the gap under adversarial fetchers") {

@@ -30,7 +30,7 @@ class ComposedPipelineSpec extends AnyFunSuite {
       t("ETH-USD", -1, 3, "300.11"),  // salvaged, id-less
       t("ETH-USD", -1, 4, "300.12"),  // DISTINCT salvaged row → kept
       t("ETH-USD", -1, 3, "300.11"))  // exact id-less replay → dropped
-    val out = Pipeline.dedupTradeIds(rows.toDS()).collect()
+    val out = Pipeline.dedupTradeIds(rows)
     assert(out.length === 4)
     assert(out.count(_.tradeId == -1L) === 2)
     assert(out.filter(_.tradeId == 7L).map(_.productId).sorted.toSeq ===
@@ -50,8 +50,7 @@ class ComposedPipelineSpec extends AnyFunSuite {
     val out = Pipeline.dedupTradeIds(Seq(
       t("2017-10-15 05:10:00.100"),
       t("2017-10-15 05:10:00.250"),  // equal fill, later ts → kept
-      t("2017-10-15 05:10:00.100"))  // exact replay → dropped
-      .toDS()).collect()
+      t("2017-10-15 05:10:00.100")))  // exact replay → dropped
     assert(out.length === 2,
       s"equal fills with distinct timestamps must both survive: ${out.toSeq}")
   }
