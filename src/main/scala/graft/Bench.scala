@@ -8,8 +8,9 @@ import org.apache.spark.sql.SparkSession
   * only number worth comparing round-over-round.
   */
 object Bench {
-  /** Shared with [[EngineBench]] — one definition of "the median" (and of
-    * the empty-sample sentinel) for every bench in the repo. */
+  /** Shared with [[CurationBench]] and [[StageBench]] — one definition of
+    * "the median" (and of the empty-sample sentinel) for every bench in
+    * the repo. */
   private[graft] def median(xs: Seq[Double]): Double = {
     val s = xs.sorted
     if (s.isEmpty) -1.0

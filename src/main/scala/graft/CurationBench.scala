@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 /** Throughput bench for the streaming curation intake — the paired number
-  * for [[CurationStream]]'s two gates, same discipline as [[EngineBench]]:
+  * for [[CurationStream]]'s two gates, same discipline as [[Bench]]:
   * the K×-replicated corpus ([[ScaleData.replicate]]) is laid out as a
   * DocIn-shaped file stream (fetchTs deterministic from doc_id, range-
   * partitioned so file order ≈ event order, span well inside the
@@ -123,7 +123,7 @@ object CurationBench {
     stampArrivalOrder(crawlDir)
     val docs = spark.read.parquet(crawlDir).count()
     // machine-speed context: throughput rows are only comparable across
-    // runs with calib attached. Same probe as Bench/EngineBench, and —
+    // runs with calib attached. Same probe as Bench/StageBench, and —
     // per the probe's own contract — measured AFTER warm work (the
     // replicate + crawl-layout write above exercised scan/shuffle/write
     // codegen), so it reads steady-state machine speed, not JVM startup.

@@ -67,9 +67,9 @@ final case class TradeOut(
     gapStart: Long, // first missing id, or -1 when no gap
     gapEnd: Long)   // last missing id, or -1 when no gap
 
-/** Unified stateful-engine output: exactly one of book/trade is set (a
-  * single keyed state pass serves both pipelines — one shuffle, one state
-  * read, matching the reference's single per-exchange loop). */
+/** Unified engine output: exactly one of book/trade is set (a single
+  * keyed pass over the books serves both pipelines, matching the
+  * reference's single per-exchange loop). */
 final case class EngineOut(
     book: Option[InsideBookUpdate],
     trade: Option[TradeOut])

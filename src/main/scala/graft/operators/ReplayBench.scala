@@ -51,9 +51,9 @@ object ReplayBench {
     sb.append(d).toString
   }
 
-  /** The deterministic synthesized frame log (shared with
-    * [[graft.EngineBench]], which streams the same log through both
-    * stateful engine paths for paired throughput numbers). */
+  /** The deterministic synthesized frame log `book_replay` replays. The
+    * streaming ingest path has its own seeded log and number:
+    * `perfbench`'s `ingest_replay` workload. */
   private[graft] def syntheticLog(spark: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.Dataset[MarketMessage] = {
     import spark.implicits._

@@ -138,7 +138,7 @@ object LegacyStore {
       : (Dataset[EngineOut], Long) => Unit = { (batch, batchId) =>
     val spark = batch.sparkSession
     import spark.implicits._
-    val (books, reconciled) = Pipeline.settle(batch, None)
+    val (books, reconciled) = Pipeline.settle(batch.collect().toSeq, None)
     writeBatch(Pipeline.legacyFlatView(spark.createDataset(books).toDF()),
       url, bookTable, batchId)
     writeBatch(spark.createDataset(reconciled.trades).toDF(), url,

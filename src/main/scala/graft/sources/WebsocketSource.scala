@@ -251,12 +251,12 @@ private[sources] class WebsocketMicroBatchStream(
   /** Drop committed frames from the in-memory buffer. If the buffer drains
     * with base still behind (restart after the WAL was fully pruned), jump
     * base forward so newly pumped frames are numbered after the committed
-    * prefix rather than reusing committed offsets. */
+    * prefix rather than reusing committed offsets. One range clear: the
+    * remaining frames shift once per commit, not once per committed frame. */
   private def trimBelow(n: Long): Unit = {
-    while (base < n && !buffer.isEmpty) {
-      buffer.remove(0)
-      base += 1
-    }
+    val k = math.max(0L, math.min(n - base, buffer.size().toLong)).toInt
+    buffer.subList(0, k).clear()
+    base += k
     if (buffer.isEmpty && base < n) base = n
   }
 

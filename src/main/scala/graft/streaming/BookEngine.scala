@@ -1,14 +1,20 @@
 package graft.streaming
 
 import graft.model._
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** The stateful market-data engine (reference ops 16-20 in one keyed pass,
+/** The market-data engine (reference ops 16-20 in one keyed pass,
   * mirroring the reference's single per-exchange event loop):
   * per (exchange, channel) key it maintains the order book, emits
   * change-suppressed inside-book updates, normalizes trades, and flags
   * trade-id gaps.
+  *
+  * The core is the pure [[processKey]]. The ingest path
+  * ([[Pipeline.start]]) folds each micro-batch through it on the driver,
+  * keeping the books in [[BookLog]]; [[run]] is the same fold as a
+  * Dataset operator, for batch replay and for composing with other
+  * Dataset operators.
   *
   * Correctness under shuffle (SURVEY §4.3): messages are re-sorted by
   * source-stamped `arrival` within each key/batch, because L2 replay is
@@ -16,8 +22,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * book state (real_guac_async.py:61-63).
   *
   * Scale: state is per product (cardinality = number of tracked products),
-  * each book a few thousand levels — far under any state-store limit; the
-  * single shuffle is on the group key.
+  * each book a few thousand levels.
   */
 object BookEngine {
 
@@ -90,9 +95,12 @@ object BookEngine {
     (freeze(book, st), out.result())
   }
 
-  /** Streaming operator: one flatMapGroupsWithState pass over the decoded
-    * canonical stream. Works identically on a batch Dataset (Spark runs
-    * the same function via the batch fallback path in tests). */
+  /** [[processKey]] as a Dataset operator: one flatMapGroupsWithState
+    * pass keyed on (exchange, channel). On a batch Dataset (batch replay:
+    * `ReplayBench`, `ReplayDemo`'s fixture path) each key folds its whole
+    * history once; it also runs as a streaming operator on the state
+    * store, but the ingest path does not use it — [[Pipeline.start]] folds
+    * on the driver. */
   def run(messages: Dataset[MarketMessage],
       depth: Int = 15): Dataset[EngineOut] = {
     import messages.sparkSession.implicits._
@@ -107,58 +115,6 @@ object BookEngine {
           gs.update(next)
           outputs.iterator
       }
-  }
-
-  /** The same engine on Spark 4's `transformWithState` state API (SURVEY
-    * §4.3's canonical mechanism): per-key `ValueState[ReplayState]` with an
-    * optional idle-state TTL. Books are per-product singletons, so today's
-    * 4-product state is trivially bounded (config.py:4-5) — but a
-    * 100×-product deployment restarting from a stale checkpoint would
-    * otherwise carry DELISTED products' books forever (r7 verdict ask #9).
-    * The TTL refreshes on every state write, so active products never
-    * expire; a product silent for the TTL window is evicted, and its next
-    * message (if any) is processed as a fresh key — the book rebuilds from
-    * the next snapshot, and gap detection restarts (the first post-eviction
-    * trade cannot be gap-flagged: lastTradeId was evicted with the book —
-    * the documented trade-off of eviction).
-    * Requires the RocksDB state store provider
-    * (`spark.sql.streaming.stateStore.providerClass`), which also buys
-    * changelog checkpointing + bounded executor memory for state at scale.
-    * `flatMapGroupsWithState` above stays as the batch-compatible path
-    * (transformWithState has no batch fallback). */
-  class BookStatefulProcessor(ttl: TTLConfig = TTLConfig.NONE,
-      depth: Int = 15)
-      extends StatefulProcessor[(String, String), MarketMessage, EngineOut] {
-    @transient private var state: ValueState[ReplayState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[ReplayState](
-        "book", Encoders.product[ReplayState], ttl)
-
-    override def handleInputRows(key: (String, String),
-        rows: Iterator[MarketMessage],
-        timerValues: TimerValues): Iterator[EngineOut] = {
-      val st = if (state.exists()) state.get() else initialState
-      val (next, outputs) = processKey(key, st, rows.toSeq, depth)
-      state.update(next)
-      outputs.iterator
-    }
-  }
-
-  /** Streaming operator on the transformWithState path. `idleTtl` enables
-    * delisted-product state eviction (see [[BookStatefulProcessor]]);
-    * TTL requires the ProcessingTime time mode. */
-  def runTws(messages: Dataset[MarketMessage],
-      idleTtl: Option[java.time.Duration] = None,
-      depth: Int = 15): Dataset[EngineOut] = {
-    import messages.sparkSession.implicits._
-    messages
-      .groupByKey(m => (m.exchange, m.channel))
-      .transformWithState(
-        new BookStatefulProcessor(
-          idleTtl.map(TTLConfig(_)).getOrElse(TTLConfig.NONE), depth),
-        if (idleTtl.isDefined) TimeMode.ProcessingTime() else TimeMode.None(),
-        OutputMode.Append())
   }
 
   /** Split helper: (inside-book updates, trades). */

@@ -4,12 +4,16 @@ import org.apache.spark.sql.SparkSession
 
 /** The reference's run commands (`python real_guac_async.py`,
   * `python polo_ws_async.py`, README.md:30-34), as one Spark application:
-  * live websocket → decode → stateful book engine → idempotent parquet
-  * sinks. This is the "switch path" for a reference user — same feeds,
-  * same tables (via Pipeline.legacyFlatView / Migrator), no Redis worker
-  * to run.
+  * live websocket → decode → book engine → idempotent parquet sinks. This
+  * is the "switch path" for a reference user — same feeds, same tables
+  * (via Pipeline.legacyFlatView / Migrator), no Redis worker to run.
   *
   * Usage: runMain graft.streaming.LiveIngest <gdax|polo> <outDir> [ckptDir]
+  *
+  * The books live in `ckptDir/books` (one versioned file per micro-batch,
+  * see [[BookLog]]); restarting with the same `ckptDir` resumes from
+  * them. A checkpoint written before book state version 2 is refused —
+  * start it over with a fresh `ckptDir`.
   *
   * Endpoint URLs and subscribe payloads mirror the reference
   * (real_guac_async.py:22, 138-145; polo_ws_async.py:25-26, 151-155); both
@@ -52,19 +56,12 @@ object LiveIngest {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    // GRAFT_ENGINE=tws selects the transformWithState/RocksDB engine path
-    val useTws = sys.env.get("GRAFT_ENGINE").contains("tws")
-    if (useTws)
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-
     val frames = spark.readStream
       .format("graft.sources.WebsocketSource")
       .option("url", url)
       .option("subscribe", subs.mkString("\n"))
       .load()
-    val query = Pipeline.start(frames, decode, outDir, ckpt,
-      useTransformWithState = useTws)
+    val query = Pipeline.start(frames, decode, outDir, ckpt)
     query.awaitTermination()
   }
 }

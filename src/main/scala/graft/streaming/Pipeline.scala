@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** End-to-end wiring (SURVEY §3.1-3.3 Spark shape): frame stream → decoder
-  * → stateful engine → parquet sinks, plus the legacy flat view and CSV
+  * → book engine → parquet sinks, plus the legacy flat view and CSV
   * export (reference ops 5, 7, 8).
   *
   * The reference's Redis/arq process boundary dissolves into the
@@ -53,14 +53,12 @@ object Pipeline {
     trades.filter(t => seen.add(StateSchemas.tradeDedupKey(t)))
   }
 
-  /** Run the engine over `batch` once and settle its output on the
-    * driver: the inside-book rows, and the trades deduped — with a
-    * fetcher, every flagged gap filled first. Shared by both sinks; see
-    * [[commitBatch]] for why the collect is bounded. */
-  private[graft] def settle(batch: Dataset[EngineOut],
+  /** Settle one micro-batch's engine rows on the driver: the inside-book
+    * rows, and the trades deduped — with a fetcher, every flagged gap
+    * filled first. Shared by both sinks. */
+  private[graft] def settle(rows: Seq[EngineOut],
       fetcher: Option[Backfill.TradeFetcher])
       : (Seq[InsideBookUpdate], Backfill.Reconciled) = {
-    val rows = batch.collect().toSeq
     val live = rows.flatMap(_.trade)
     (rows.flatMap(_.book), fetcher match {
       case Some(f) => Backfill.reconcileBatch(live, f) // op 22-23
@@ -68,73 +66,74 @@ object Pipeline {
     })
   }
 
-  /** Start the ingest pipeline for one exchange feed: a single stateful
-    * pass whose micro-batches write to `<outDir>/inside_book` and
+  /** Start the ingest pipeline for one exchange feed: a stateless
+    * Structured Streaming query, `decode(frames)` into `foreachBatch`,
+    * whose micro-batches write to `<outDir>/inside_book` and
     * `<outDir>/trades` (trade rows deduped by id within each batch —
     * replayed frames can't double-insert, fixing §0.1's backfill
-    * duplication for free). Each micro-batch is one [[commitBatch]].
+    * duplication for free).
+    *
+    * Each micro-batch collects its decoded messages and folds them per
+    * (exchange, channel) through [[BookEngine.processKey]] on the driver,
+    * from the book state after the previous batch ([[BookLog]]: in memory,
+    * checkpointed as one versioned file per batch under
+    * `<checkpointDir>/books`); the engine rows then go to [[commitBatch]].
+    * The collect is bounded: at most `maxFramesPerTrigger` frames (default
+    * 10,000) are admitted per batch, and the websocket source already
+    * holds them on the driver, so the messages and the engine rows (at
+    * most one per message) add no new memory bound.
     *
     * Sink idempotence: foreachBatch is at-least-once — a batch that fails
-    * after a partial write is retried with the SAME batchId. Each table's
-    * rows for a batch therefore live in their own static partition
-    * directory `batch_id=N`, and a commit overwrites exactly that path:
-    * the retry replaces its own partition, never duplicating or touching
-    * earlier batches — exactly-once at the table level.
+    * after a partial write is retried with the SAME batchId, recomputed
+    * from the committed predecessor's books. Each table's rows for a batch
+    * live in their own static partition directory `batch_id=N`, and a
+    * commit overwrites exactly that path: the retry replaces its own
+    * partition, never duplicating or touching earlier batches —
+    * exactly-once at the table level.
     *
-    * `useTransformWithState` switches the engine to the
-    * transformWithState/RocksDB path (the production state backend for
-    * large key × large book regimes) — the caller's session must set
-    * `spark.sql.streaming.stateStore.providerClass` to the RocksDB
-    * provider first; the default flatMapGroupsWithState path runs on any
-    * provider and has a batch fallback. Both run the same pure processKey
-    * core (golden-tested against each other). */
+    * `idleTtl` evicts a key silent for longer than the TTL before a batch
+    * folds (see [[BookLog]]). A checkpoint whose book state is not
+    * [[StateSchemas.BookReplayStateVersion]] — a v1 state-store checkpoint
+    * included — is refused here, before the query starts. */
   def start(frames: DataFrame, decode: DataFrame => Dataset[MarketMessage],
       outDir: String, checkpointDir: String,
       fetcher: Option[Backfill.TradeFetcher] = None,
-      useTransformWithState: Boolean = false,
       trigger: Option[org.apache.spark.sql.streaming.Trigger] = None,
       idleTtl: Option[java.time.Duration] = None): StreamingQuery = {
-    require(idleTtl.isEmpty || useTransformWithState,
-      "idleTtl is a transformWithState feature (TTLConfig)")
-    val engineOut =
-      if (useTransformWithState) BookEngine.runTws(decode(frames), idleTtl)
-      else BookEngine.run(decode(frames))
-    val writer = engineOut
+    val books = BookLog.open(frames.sparkSession, checkpointDir, idleTtl)
+    val writer = decode(frames)
       .writeStream
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[EngineOut], batchId: Long) =>
-        commitBatch(batch, batchId, outDir, fetcher)
+      .foreachBatch { (batch: Dataset[MarketMessage], batchId: Long) =>
+        commitBatch(batch.sparkSession,
+          books.fold(batch.collect().toSeq, batchId), batchId, outDir, fetcher)
       }
     trigger.foreach(writer.trigger)
     writer.start()
   }
 
-  /** One micro-batch commit — public so idempotence is directly testable:
-    * re-running the same (batch, batchId) leaves the tables unchanged.
+  /** One micro-batch commit of the engine's rows — public so idempotence
+    * is directly testable: re-running the same (rows, batchId) leaves the
+    * tables unchanged.
     *
-    * The engine runs once, as a collect ([[settle]]); gap backfill and
-    * trade dedup happen on the collected rows. The collect is bounded: the
-    * engine emits at most one row per admitted message, and the websocket
-    * source already holds the micro-batch's frames on the driver under its
-    * admission cap (`maxFramesPerTrigger`, default 10,000), so the rows
-    * add no new memory bound. Each table is then written as ONE file by
-    * overwriting its static `<outDir>/<table>/batch_id=<batchId>` path —
-    * the partition layout readers and [[Migrator.ensureTables]] discover,
-    * with no dynamic-overwrite staging. A gap the history could not fully
-    * fill is logged, one WARN line per gap. */
-  def commitBatch(batch: Dataset[EngineOut], batchId: Long, outDir: String,
-      fetcher: Option[Backfill.TradeFetcher]): Unit = {
-    val spark = batch.sparkSession
+    * Gap backfill and trade dedup happen on the rows ([[settle]]). Each
+    * table is then written as ONE file by overwriting its static
+    * `<outDir>/<table>/batch_id=<batchId>` path — the partition layout
+    * readers and [[Migrator.ensureTables]] discover, with no
+    * dynamic-overwrite staging. A gap the history could not fully fill is
+    * logged, one WARN line per gap. */
+  def commitBatch(spark: SparkSession, rows: Seq[EngineOut], batchId: Long,
+      outDir: String, fetcher: Option[Backfill.TradeFetcher]): Unit = {
     import spark.implicits._
-    val (books, reconciled) = settle(batch, fetcher)
+    val (books, reconciled) = settle(rows, fetcher)
     reconciled.gaps.filter(_.result.stillMissing.nonEmpty).foreach { g =>
       log.warn(s"batch $batchId: gap ${g.exchange} ${g.productId} " +
         s"[${g.gapStart}, ${g.gapEnd}] left " +
         s"${g.result.stillMissing.size} trade ids unfilled after " +
         s"${g.result.pagesFetched} pages")
     }
-    def write(rows: Dataset[_], table: String): Unit =
-      rows.coalesce(1).write.mode("overwrite")
+    def write(ds: Dataset[_], table: String): Unit =
+      ds.coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$table/batch_id=$batchId")
     write(spark.createDataset(books), "inside_book")
     write(spark.createDataset(reconciled.trades), "trades")

@@ -75,10 +75,17 @@ object StateSchemas {
   def nearDupBucketPrefix(bands: Int, rowsPerBand: Int): String =
     s"$bands:$rowsPerBand"
 
-  /** Book replay state (`BookEngine`'s ReplayState on both the
-    * flatMapGroupsWithState and transformWithState paths). v1 — never
-    * broken since introduction. */
-  val BookReplayStateVersion: Int = 1
+  /** Book replay state of the ingest path (`BookEngine`'s ReplayState
+    * per (exchange, channel) key, as [[BookLog]] checkpoints it).
+    * v2: the state leaves Spark's state store — one versioned binary file
+    * per micro-batch under `<checkpointDir>/books`, tagged with this
+    * version, each key carrying its last-write time for the idle TTL.
+    * v1 was the ReplayState row in the state store (`state/`) of the
+    * flatMapGroupsWithState or transformWithState operator. `BookLog`
+    * refuses a v1 checkpoint (`state/` and no `books/`) and a book file of
+    * any other version, naming the directory and both versions — it never
+    * starts from empty books over an old checkpoint. */
+  val BookReplayStateVersion: Int = 2
 
   /** Canonical-assignment chain state (`CurationStream`'s Keeper /
     * cluster / CanonState value states). v1 — never broken since

@@ -83,13 +83,15 @@ class BackfillSpec extends AnyFunSuite {
         id, Nil, Nil, Nil, id, "300.15", "0.25", "buy", ts)
     }.toDS())
     val outDir = java.nio.file.Files.createTempDirectory("half_gap").toString
-    graft.streaming.Pipeline.commitBatch(batch, 0L, outDir, Some(halfHistory))
+    graft.streaming.Pipeline.commitBatch(spark, batch.collect().toSeq, 0L,
+      outDir, Some(halfHistory))
     val landed = spark.read.parquet(s"$outDir/trades")
       .select("tradeId", "backfilled").as[(Long, Boolean)].collect()
     assert(landed.map(_._1).sorted.toSeq === Seq(100L, 101L, 102L, 103L,
       104L, 105L, 111L))
     assert(landed.filter(_._2).map(_._1).sorted.toSeq === (101L to 105L))
-    val gaps = graft.streaming.Pipeline.settle(batch, Some(halfHistory))._2.gaps
+    val gaps = graft.streaming.Pipeline.settle(batch.collect().toSeq,
+      Some(halfHistory))._2.gaps
     assert(gaps.map(g => (g.productId, g.gapStart, g.gapEnd)) ===
       Seq(("ETH-USD", 101L, 110L)))
     assert(gaps.head.result.stillMissing === (106L to 110L).toSet)

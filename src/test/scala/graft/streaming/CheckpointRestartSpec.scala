@@ -8,8 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** SURVEY §5.2 #3: checkpoint restart mid-log through the real writeStream
   * path — the engine's state (change suppression, lastTradeId) must be
-  * restored from the state-store checkpoint and the parquet sink must not
-  * contain duplicates after the restart. */
+  * restored from the checkpoint's versioned book file (`books/<batchId>`)
+  * and the parquet sink must not contain duplicates after the restart. */
 class CheckpointRestartSpec extends AnyFunSuite {
   import TestSpark.spark
   import spark.implicits._
@@ -73,15 +73,18 @@ class CheckpointRestartSpec extends AnyFunSuite {
         "time": "2017-10-15T05:10:53.700000Z", "product_id": "ETH-USD",
         "size": "0.25", "price": "300.15", "side": "buy"}""")
       .toDF("arrival", "value")))
-    Pipeline.commitBatch(engineOut, batchId = 0L, outDir, None)
+    Pipeline.commitBatch(spark, engineOut.collect().toSeq, batchId = 0L,
+      outDir, None)
     val booksOnce = spark.read.parquet(s"$outDir/inside_book").count()
     val tradesOnce = spark.read.parquet(s"$outDir/trades").count()
     // simulate the foreachBatch retry: same data, same batchId
-    Pipeline.commitBatch(engineOut, batchId = 0L, outDir, None)
+    Pipeline.commitBatch(spark, engineOut.collect().toSeq, batchId = 0L,
+      outDir, None)
     assert(spark.read.parquet(s"$outDir/inside_book").count() === booksOnce)
     assert(spark.read.parquet(s"$outDir/trades").count() === tradesOnce)
     // a NEW batchId lands in its own partition
-    Pipeline.commitBatch(engineOut, batchId = 1L, outDir, None)
+    Pipeline.commitBatch(spark, engineOut.collect().toSeq, batchId = 1L,
+      outDir, None)
     assert(spark.read.parquet(s"$outDir/trades").count() === tradesOnce * 2)
 
     // op 7 migrator over the sink: idempotent, never destructive — the

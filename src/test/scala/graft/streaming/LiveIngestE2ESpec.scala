@@ -100,15 +100,10 @@ class LiveIngestE2ESpec extends AnyFunSuite {
     } finally server.close()
   }
 
-  for (tws <- Seq(false, true))
-  test(s"live ingest wiring (${if (tws) "transformWithState/RocksDB" else "flatMapGroupsWithState"}): websocket → decode → engine → parquet, across a reconnect") {
+  test("live ingest wiring (flatMapGroupsWithState): websocket → decode → engine → parquet, across a reconnect") {
     val server = new WsTestServer
     val out = Files.createTempDirectory("live_ingest_out").toString
     val ckpt = Files.createTempDirectory("live_ingest_ckpt").toString
-    val prevProvider = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    if (tws) spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
       server.push(frames)
       val (_, subs, decode) = LiveIngest.adapter("gdax")
@@ -118,8 +113,7 @@ class LiveIngestE2ESpec extends AnyFunSuite {
         .option("subscribe", subs.mkString("\n"))
         .option("maxFramesPerTrigger", "2")
         .load()
-      val q = Pipeline.start(stream, decode, out, ckpt,
-        useTransformWithState = tws)
+      val q = Pipeline.start(stream, decode, out, ckpt)
       try {
         def trades = scala.util.Try(
           spark.read.parquet(s"$out/trades").count()).getOrElse(0L)
@@ -137,15 +131,7 @@ class LiveIngestE2ESpec extends AnyFunSuite {
         assert(t.filter("tradeId = 104 AND gapStart = 101 AND gapEnd = 103")
           .count() === 1)
       } finally q.stop()
-    } finally {
-      server.close()
-      prevProvider match {
-        case Some(v) => spark.conf.set(
-          "spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset(
-          "spark.sql.streaming.stateStore.providerClass")
-      }
-    }
+    } finally server.close()
   }
 
   test("adapter subscribe payloads are single-line (the source splits the option on newline)") {

@@ -123,7 +123,7 @@ class StateSchemaSpec extends AnyFunSuite {
       Seq("exchange", "productId", "tradeId", "__idless_key"))
     assert(StateSchemas.NearDupBucketKeyVersion === 2)
     assert(StateSchemas.nearDupBucketPrefix(4, 4) === "4:4")
-    assert(StateSchemas.BookReplayStateVersion === 1)
+    assert(StateSchemas.BookReplayStateVersion === 2)
     assert(StateSchemas.CurationCanonicalStateVersion === 1)
   }
 }
