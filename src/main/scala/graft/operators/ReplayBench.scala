@@ -5,11 +5,12 @@ import graft.model.MarketMessage
 import graft.streaming.BookEngine
 import org.apache.spark.sql.functions._
 
-/** Throughput benchmark for the stateful book engine (reference ops 16-20,
-  * the heart of the system): synthesizes a deterministic L2/match frame
-  * log from the `events` table (one frame per event, keyed per user as a
-  * product) and replays it through the SAME flatMapGroupsWithState path
-  * the streaming pipeline runs, via Spark's batch fallback. ~100k frames
+/** Throughput benchmark for the book engine (reference ops 16-20, the
+  * heart of the system): synthesizes a deterministic L2/match frame log
+  * from the `events` table (one frame per event, keyed per user as a
+  * product) and replays it through `BookEngine.run` — a stateless
+  * `groupByKey.flatMapGroups` over the SAME `processKey` fold the
+  * streaming pipeline runs per micro-batch on the driver. ~100k frames
   * at sf0.1 (one per events row) — the wall-clock Bench reports is an
   * engine pass, the analogue of the reference's single-node ingest
   * ceiling (SURVEY §6).

@@ -127,12 +127,12 @@ object LegacyStore {
     spark.read.jdbc(url, table, partitionColumn, lower, upper,
       numPartitions, new java.util.Properties)
 
-  /** foreachBatch body mirroring [[Pipeline.commitBatch]] into JDBC, over
-    * the same settled batch (one engine pass, trades id-deduped on the
-    * driver): the inside book lands as the legacy 32-column flat view (the
-    * reference's gdax_order_book shape, gdax_schema.sql:8-41), trades in
-    * a trades table. Use as
-    * `writeStream.foreachBatch(LegacyStore.jdbcSink(url))`. */
+  /** Per-batch JDBC writer of engine rows, mirroring
+    * [[Pipeline.commitBatch]] over the same settled batch (trades
+    * id-deduped on the driver): the inside book lands as the legacy
+    * 32-column flat view (the reference's gdax_order_book shape,
+    * gdax_schema.sql:8-41), trades in a trades table. Idempotent per
+    * `batchId`: re-running a batch replaces its rows. */
   def jdbcSink(url: String, bookTable: String = "gdax_order_book",
       tradeTable: String = "trades")
       : (Dataset[EngineOut], Long) => Unit = { (batch, batchId) =>

@@ -120,8 +120,8 @@ private[sources] class WebsocketMicroBatchStream(
     * names survives a driver restart, so every live frame is logged to
     * chunk files under the query's checkpoint dir BEFORE its offset is
     * exposed via latestOffset(). On restart the chunks are replayed into
-    * the buffer, making recovery exactly-once (frames contain no raw
-    * newlines — websocket JSON text frames escape them). Replay-file mode
+    * the buffer, making recovery exactly-once (each frame is escaped onto
+    * one line, so raw newlines and empty frames survive). Replay-file mode
     * needs no WAL: the file itself is the stable log. */
   private val wal: Option[FrameWal] =
     if (isLive) Some(new FrameWal(checkpointLocation)) else None
@@ -298,46 +298,12 @@ private[sources] class FrameWal(checkpointLocation: String) {
       .sortBy(_.getName).toSeq
   }
 
-  // Legacy→v2 migration scratch file: `migrate-<start>-<count>` — invisible
-  // to chunks(), so readers never see a half-written combined chunk.
-  private val migratePrefix = "migrate-"
-
-  private def migrateTemp(): Option[Path] = {
-    if (!fs.exists(dir)) return None
-    fs.listStatus(dir).map(_.getPath)
-      .find(_.getName.startsWith(migratePrefix))
-  }
-
-  /** Finish — or roll back — a legacy→v2 migration interrupted by a crash.
-    * The migration sequence (see readAll) is: (1) write the full escaped
-    * copy under a migrate- temp name, (2) delete the legacy chunks,
-    * (3) create the v2 marker, (4) rename temp into place. The temp's name
-    * carries its span, so completeness is checkable (line count == count):
-    * a COMPLETE temp holds every exposed frame and the migration is simply
-    * finished from whatever step it died at; a torn temp means step (1)
-    * never completed, so the legacy chunks are all intact — delete the temp
-    * and let the normal migration re-run. Either way, at least one complete
-    * copy of the exposed frames exists at every instant (r7 ADVICE: the old
-    * delete-then-append order lost all frames if the crash landed between
-    * the deletes and the append). */
-  private def recoverMigration(): Unit = migrateTemp().foreach { t =>
-    val parts = t.getName.stripPrefix(migratePrefix).split('-')
-    val (start, count) = (parts(0).toLong, parts(1).toLong)
-    val in = fs.open(t)
-    val content = try new String(in.readAllBytes(), UTF_8) finally in.close()
-    val lines = content.split("\n", -1).toSeq.dropRight(1)
-    if (lines.size != count) { fs.delete(t, false); return }
-    chunks().foreach(fs.delete(_, false))
-    ensureV2Marker()
-    fs.rename(t, new Path(dir, f"chunk-$start%020d-$count"))
-    ()
-  }
-
   // One frame per line, ESCAPED: a websocket text frame may legally
   // contain raw newlines (pretty-printed JSON) or be empty — unescaped,
   // either corrupts the chunk's line count and wedges every restart.
-  // The escape format is marked by a `format-v2` file: chunks written by
-  // the pre-escape build are read verbatim (running unesc on them would
+  // The escape format is marked by a `format-v2` file, created before the
+  // first chunk. Chunks without it were written unescaped by a pre-escape
+  // build; they are refused, never read (running unesc on them would
   // corrupt frames containing literal backslash sequences — any JSON
   // string escape).
   private val v2Marker = new Path(dir, "format-v2")
@@ -368,12 +334,16 @@ private[sources] class FrameWal(checkpointLocation: String) {
     * chunk is a torn last append (crash mid-write): those frames were
     * never exposed through latestOffset, so the torn tail is dropped and
     * recovery proceeds — if the checkpoint somehow references them anyway,
-    * planInputPartitions still refuses. Any other count mismatch throws. */
+    * planInputPartitions still refuses. Any other count mismatch throws,
+    * and so do chunks without the `format-v2` marker — nothing is deleted
+    * or rewritten then. */
   def readAll(): (Long, Seq[String]) = {
-    recoverMigration()
     val cs = chunks()
     if (cs.isEmpty) return (0L, Seq.empty)
-    val v2 = fs.exists(v2Marker)
+    if (!fs.exists(v2Marker)) throw new IllegalStateException(
+      s"frame WAL $dir holds chunks but no format-v2 marker: they were " +
+        "written unescaped by an earlier build, which this engine does not " +
+        "read. Restart from a fresh checkpoint.")
     var first = -1L
     var expected = -1L
     val frames = Seq.newBuilder[String]
@@ -386,12 +356,9 @@ private[sources] class FrameWal(checkpointLocation: String) {
       val in = fs.open(p)
       val content = try new String(in.readAllBytes(), UTF_8) finally in.close()
       // every complete line ends with '\n'; a torn write's partial last
-      // line (no terminator) is excluded by the dropRight below. Legacy
-      // (pre-marker) chunks were written unescaped and never empty-lined.
-      val lines =
-        if (v2) content.split("\n", -1).toSeq.dropRight(1)
-        else content.split('\n').toSeq.filter(_.nonEmpty)
-      if (v2 && lines.size < count && ci == cs.size - 1) {
+      // line (no terminator) is excluded by the dropRight below
+      val lines = content.split("\n", -1).toSeq.dropRight(1)
+      if (lines.size < count && ci == cs.size - 1) {
         // torn final append: unexposed tail — drop it, and REWRITE the
         // chunk under its true count so the next restart's contiguity
         // check doesn't see the over-claiming name
@@ -404,46 +371,20 @@ private[sources] class FrameWal(checkpointLocation: String) {
         throw new IllegalStateException(
           s"frame WAL chunk $p holds ${lines.size} frames, name says $count")
       } else {
-        frames ++= (if (v2) lines.map(unesc) else lines)
+        frames ++= lines.map(unesc)
         expected = start + count
       }
     }
-    val out = frames.result()
-    if (!v2) {
-      // one-time crash-safe migration: rewrite the legacy tail as a single
-      // escaped chunk + marker, so subsequent appends never mix formats in
-      // one WAL. Order matters — these frames were already exposed via
-      // latestOffset, so a complete copy must exist at every instant:
-      // (1) full escaped copy under a temp name readers ignore, (2) delete
-      // legacy chunks, (3) v2 marker, (4) rename temp into place. A crash
-      // anywhere is finished or rolled back by recoverMigration().
-      if (out.nonEmpty) {
-        val tmp = new Path(dir, f"$migratePrefix$first%020d-${out.size}")
-        val os = fs.create(tmp, true)
-        try os.write(out.map(esc).mkString("", "\n", "\n").getBytes(UTF_8))
-        finally os.close()
-        cs.foreach(fs.delete(_, false))
-        ensureV2Marker()
-        fs.rename(tmp, new Path(dir, f"chunk-$first%020d-${out.size}"))
-      } else {
-        // zero surviving frames: nothing at risk — marker first, then drop
-        // the empty legacy chunks
-        ensureV2Marker()
-        cs.foreach(fs.delete(_, false))
-      }
-    }
-    (first, out)
+    (first, frames.result())
   }
 
   /** Create the format-v2 marker, tolerating ONLY a concurrent creator.
-    * The old form swallowed every IOException: a transient FS error here,
-    * with the rename (or next append) still succeeding, would leave
-    * ESCAPED chunks with no marker — the next restart would parse escaped
-    * bytes as legacy frames (literal \\n delivered to consumers) and
-    * re-escape them on re-migration, silent corruption instead of a clean
-    * crash. So after any create failure the marker's existence is
-    * re-checked and a genuinely missing marker aborts the caller; the
-    * migration is re-runnable, so crashing here is safe. */
+    * Swallowing every IOException would let a transient FS error here,
+    * with the chunk create still succeeding, leave escaped chunks with no
+    * marker — a WAL of exposed frames that the next restart refuses. So
+    * after any create failure the marker's existence is re-checked and a
+    * genuinely missing marker aborts the append before its chunk is
+    * written. */
   private def ensureV2Marker(): Unit = {
     try fs.create(v2Marker, false).close()
     catch {

@@ -2,7 +2,6 @@ package graft.streaming
 
 import graft.model._
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** The market-data engine (reference ops 16-20 in one keyed pass,
   * mirroring the reference's single per-exchange event loop):
@@ -12,9 +11,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *
   * The core is the pure [[processKey]]. The ingest path
   * ([[Pipeline.start]]) folds each micro-batch through it on the driver,
-  * keeping the books in [[BookLog]]; [[run]] is the same fold as a
-  * Dataset operator, for batch replay and for composing with other
-  * Dataset operators.
+  * keeping the books in [[BookLog]] — the one streaming engine; [[run]]
+  * is the same fold as a stateless batch Dataset operator (batch replay:
+  * every key folds its whole history from empty books).
   *
   * Correctness under shuffle (SURVEY §4.3): messages are re-sorted by
   * source-stamped `arrival` within each key/batch, because L2 replay is
@@ -43,7 +42,7 @@ object BookEngine {
     require(depth >= 1, s"book depth must be >= 1: $depth")
     val (exchange, channel) = key
     var st = state
-    var book = thaw(st)
+    var book = st.book
     val out = List.newBuilder[EngineOut]
 
     def emitIfChanged(seq: Long, arrival: Long, product: String): Unit = {
@@ -92,35 +91,26 @@ object BookEngine {
         case _ => // unknown type: ignore
       }
     }
-    (freeze(book, st), out.result())
+    (st.copy(book = book), out.result())
   }
 
-  /** [[processKey]] as a Dataset operator: one flatMapGroupsWithState
-    * pass keyed on (exchange, channel). On a batch Dataset (batch replay:
-    * `ReplayBench`, `ReplayDemo`'s fixture path) each key folds its whole
-    * history once; it also runs as a streaming operator on the state
-    * store, but the ingest path does not use it — [[Pipeline.start]] folds
-    * on the driver. */
+  /** [[processKey]] as a batch Dataset operator: one stateless
+    * `groupByKey((exchange, channel)).flatMapGroups` pass, each key folding
+    * its whole history from [[OrderBook.initialState]] (`ReplayBench`,
+    * `ReplayDemo`'s fixture path, specs). A streaming Dataset is refused:
+    * regrouping per micro-batch would silently restart every book each
+    * batch — stream through [[Pipeline.start]], which carries the books
+    * across batches. */
   def run(messages: Dataset[MarketMessage],
       depth: Int = 15): Dataset[EngineOut] = {
+    require(!messages.isStreaming,
+      "BookEngine.run folds a batch Dataset from empty books; a stream's " +
+        "books must carry across micro-batches — use Pipeline.start")
     import messages.sparkSession.implicits._
     messages
       .groupByKey(m => (m.exchange, m.channel))
-      .flatMapGroupsWithState[ReplayState, EngineOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: (String, String), it: Iterator[MarketMessage],
-            gs: GroupState[ReplayState]) =>
-          val state = gs.getOption.getOrElse(initialState)
-          val (next, outputs) = processKey(key, state, it.toSeq, depth)
-          gs.update(next)
-          outputs.iterator
+      .flatMapGroups { (key, it) =>
+        processKey(key, initialState, it.toSeq, depth)._2
       }
-  }
-
-  /** Split helper: (inside-book updates, trades). */
-  def split(out: Dataset[EngineOut])
-      : (Dataset[InsideBookUpdate], Dataset[TradeOut]) = {
-    import out.sparkSession.implicits._
-    (out.flatMap(_.book), out.flatMap(_.trade))
   }
 }

@@ -115,30 +115,36 @@ private[graft] object BookLog {
 
   /** Version-tagged binary encoding: the version, the key count, then per
     * key its (exchange, channel), last-write ms, and the [[ReplayState]]
-    * fields in declaration order. Strings are length-prefixed UTF-8
-    * (length −1 for null); sequences are count-prefixed. */
+    * fields in declaration order, the book as its bid side then its ask
+    * side, best level first, each level a (plain-string price, size) pair.
+    * Strings are length-prefixed UTF-8 (length −1 for null); sequences are
+    * count-prefixed. */
   def write(os: OutputStream, books: Books): Unit = {
     val out = new DataOutputStream(new BufferedOutputStream(os, 1 << 16))
     def str(s: String): Unit =
       if (s == null) out.writeInt(-1)
       else { val b = s.getBytes(UTF_8); out.writeInt(b.length); out.write(b) }
-    def pairs(ps: Seq[(String, String)]): Unit = {
-      out.writeInt(ps.size)
-      ps.foreach { case (a, b) => str(a); str(b) }
+    def side(ls: OrderBook.Side): Unit = {
+      out.writeInt(ls.size)
+      ls.foreach { case (p, sz) => str(p.bigDecimal.toPlainString); str(sz) }
     }
-    def levels(ls: Seq[Level]): Unit = pairs(ls.map(l => (l.price, l.size)))
+    def levels(ls: Seq[Level]): Unit = {
+      out.writeInt(ls.size)
+      ls.foreach { l => str(l.price); str(l.size) }
+    }
     out.writeInt(StateSchemas.BookReplayStateVersion)
     out.writeInt(books.size)
     books.foreach { case ((exchange, channel), Keyed(s, at)) =>
       str(exchange); str(channel); out.writeLong(at)
-      str(s.productName); pairs(s.bids); pairs(s.asks)
+      str(s.productName); side(s.book.bids); side(s.book.asks)
       levels(s.lastBids); levels(s.lastAsks)
       out.writeBoolean(s.hasEmitted); out.writeLong(s.lastTradeId)
     }
     out.flush()
   }
 
-  /** Inverse of [[write]]; `where` names the source in a refusal. */
+  /** Inverse of [[write]]; `where` names the source in a refusal. Each
+    * side is rebuilt through [[OrderBook.installSnapshot]]. */
   def read(is: InputStream, where: String): Books = {
     val in = new DataInputStream(new BufferedInputStream(is, 1 << 16))
     def str(): String = in.readInt() match {
@@ -146,15 +152,16 @@ private[graft] object BookLog {
       case n =>
         val b = new Array[Byte](n); in.readFully(b); new String(b, UTF_8)
     }
-    def pairs(): List[(String, String)] =
-      List.fill(in.readInt())((str(), str()))
-    def levels(): List[Level] = pairs().map { case (p, s) => Level(p, s) }
+    def side(): List[Seq[String]] = List.fill(in.readInt())(Seq(str(), str()))
+    def levels(): List[Level] = List.fill(in.readInt())(Level(str(), str()))
     val v = in.readInt()
     if (v != StateSchemas.BookReplayStateVersion) throw refused(where, v)
     Seq.fill(in.readInt()) {
       val key = (str(), str())
       val at = in.readLong()
-      key -> Keyed(ReplayState(str(), pairs(), pairs(), levels(), levels(),
+      val productName = str()
+      val book = OrderBook.installSnapshot(side(), side())
+      key -> Keyed(ReplayState(productName, book, levels(), levels(),
         in.readBoolean(), in.readLong()), at)
     }.toMap
   }

@@ -6,8 +6,8 @@ import scala.collection.immutable.TreeMap
 
 /** Pure limit-order-book replay core (reference ops 16-19,
   * real_guac_async.py:61-107 / polo_ws_async.py:65-115), shared by the
-  * streaming stateful processor and the batch replay harness so the same
-  * logic is testable without Spark.
+  * ingest path's driver-side fold and the batch replay operator
+  * ([[BookEngine]]) so the same logic is testable without Spark.
   *
   * The reference maintained price-sorted Python lists with O(n) scans and
   * shipped (but never used) a sorted-tree dependency (SURVEY §0.1 #10);
@@ -93,34 +93,21 @@ object OrderBook {
     * volume comes first. */
   def encodeLevel(l: Level): String = s"${l.size}@${l.price}"
 
-  /** Full replay state for one keyed channel: book + change-suppression
+  /** Full replay state for one keyed channel: the book + change-suppression
     * memory + trade-gap memory + the stream-learned product name (Poloniex
-    * op 12). Stored flat (sorted association lists) so the Spark state
-    * encoder stays a plain product type; rebuilt into TreeMaps per batch
-    * (O(n) from sorted input). */
+    * op 12). Held as plain in-memory values between batches; [[BookLog]]
+    * is the one place that renders it to (and rebuilds it from) a flat
+    * form. */
   final case class ReplayState(
       productName: String,
-      bids: List[(String, String)],
-      asks: List[(String, String)],
+      book: Book,
       lastBids: Seq[Level],
       lastAsks: Seq[Level],
       hasEmitted: Boolean,
       lastTradeId: Long)
 
   val initialState: ReplayState =
-    ReplayState("", Nil, Nil, Nil, Nil, hasEmitted = false, lastTradeId = -1L)
-
-  def thaw(s: ReplayState): Book =
-    Book(
-      TreeMap.from(s.bids.map { case (p, v) => BigDecimal(p) -> v })(bidOrdering),
-      TreeMap.from(s.asks.map { case (p, v) => BigDecimal(p) -> v }))
-
-  def freeze(b: Book, s: ReplayState): ReplayState =
-    s.copy(
-      bids = b.bids.iterator
-        .map { case (p, v) => (p.bigDecimal.toPlainString, v) }.toList,
-      asks = b.asks.iterator
-        .map { case (p, v) => (p.bigDecimal.toPlainString, v) }.toList)
+    ReplayState("", emptyBook, Nil, Nil, hasEmitted = false, lastTradeId = -1L)
 
   /** Trade-gap detection for one product over sequence-ordered trades
     * (op 20, real_guac_async.py:123-132): first trade initializes; a jump

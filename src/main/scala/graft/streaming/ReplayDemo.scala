@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.SparkSession
 
 /** Example entry point: replay a small recorded frame log (GDAX + Poloniex
-  * shapes from the reference protocol) through decode → stateful engine →
+  * shapes from the reference protocol) through decode → book engine →
   * console, demonstrating the library's streaming surface end-to-end.
   *
   * Usage: runMain graft.streaming.ReplayDemo [frameLogPath [outDir]]
@@ -51,9 +51,9 @@ object ReplayDemo {
       spark.read.parquet(s"$outDir/trades")
         .orderBy("tradeId").show(50, truncate = false)
     } else {
-      val frames = fixtureLog.toDF("arrival", "value")
-      val (books, trades) = BookEngine.split(
-        BookEngine.run(Decoders.gdax(frames)))
+      val out =
+        BookEngine.run(Decoders.gdax(fixtureLog.toDF("arrival", "value")))
+      val (books, trades) = (out.flatMap(_.book), out.flatMap(_.trade))
       println("=== inside-book updates (change-suppressed) ===")
       books.orderBy("sequence").show(50, truncate = false)
       println("=== trades (with gap flags) ===")

@@ -80,6 +80,9 @@ object StateSchemas {
     * v2: the state leaves Spark's state store — one versioned binary file
     * per micro-batch under `<checkpointDir>/books`, tagged with this
     * version, each key carrying its last-write time for the idle TTL.
+    * Since ReplayState holds the book itself (not flat level lists),
+    * `BookLog` renders and rebuilds the flat form, and the v2 bytes are
+    * unchanged — `BookLogSpec` pins them.
     * v1 was the ReplayState row in the state store (`state/`) of the
     * flatMapGroupsWithState or transformWithState operator. `BookLog`
     * refuses a v1 checkpoint (`state/` and no `books/`) and a book file of

@@ -3,8 +3,8 @@ package graft.sources
 import java.nio.file.Files
 
 import graft.TestSpark
-import graft.model.EngineOut
-import graft.streaming.{BookEngine, Decoders, Pipeline}
+import graft.model.TradeOut
+import graft.streaming.{Decoders, Pipeline}
 import org.scalatest.funsuite.AnyFunSuite
 
 import scala.jdk.CollectionConverters._
@@ -34,14 +34,14 @@ class WebsocketSourceSpec extends AnyFunSuite {
       .format("graft.sources.WebsocketSource")
       .option("replayFile", log)
       .load()
-    val q = BookEngine.run(Decoders.gdax(stream))
-      .writeStream.outputMode("append")
-      .format("memory").queryName("ws_out").start()
+    val out = Files.createTempDirectory("ws_out").toString
+    val q = Pipeline.start(stream, Decoders.gdax, out,
+      Files.createTempDirectory("ws_out_ckpt").toString)
     try {
       q.processAllAvailable()
-      val out = spark.table("ws_out").as[EngineOut].collect()
-      assert(out.flatMap(_.book).length === 2)
-      val trades = out.flatMap(_.trade).sortBy(_.tradeId)
+      assert(spark.read.parquet(s"$out/inside_book").count() === 2)
+      val trades = spark.read.parquet(s"$out/trades").drop("batch_id")
+        .as[TradeOut].collect().sortBy(_.tradeId)
       assert(trades.map(_.tradeId).toSeq === Seq(100L, 104L))
       assert(trades(1).gapStart === 101L)
     } finally q.stop()
@@ -194,83 +194,26 @@ class WebsocketSourceSpec extends AnyFunSuite {
     assert(new FrameWal(ckpt).readAll() === ((0L, frames)))
   }
 
-  test("frame WAL: legacy unescaped chunks are read verbatim and migrated to v2 once") {
-    // a WAL written by the pre-escape build: chunks hold raw lines, no
-    // format-v2 marker. Frames containing literal backslash sequences
-    // (any JSON string escape) must NOT be unescaped on read.
+  test("frame WAL: chunks without the format-v2 marker are refused, untouched") {
+    // a WAL written by the pre-escape build: raw-line chunks, no format-v2
+    // marker. Its checkpoint also predates the book log, so Pipeline.start
+    // refuses it first; a FrameWal opened over it directly refuses too,
+    // naming the directory, and deletes or rewrites nothing.
     val ckpt = Files.createTempDirectory("wal_legacy_ckpt").toString
     val walDir = java.nio.file.Paths.get(ckpt, "graft-frame-wal")
     java.nio.file.Files.createDirectories(walDir)
-    val legacy = Seq("""{"reason":"a\\b"}""", """{"s":"x\ny"}""")
-    java.nio.file.Files.write(walDir.resolve(f"chunk-${0}%020d-2"),
-      legacy.mkString("", "\n", "\n").getBytes)
-    val (start, frames) = new FrameWal(ckpt).readAll()
-    assert(start === 0L && frames === legacy,
-      "legacy frames must come back byte-identical, not unescaped")
-    // the read migrated the tail: marker present, second restart identical
-    assert(java.nio.file.Files.exists(walDir.resolve("format-v2")))
-    assert(new FrameWal(ckpt).readAll() === ((0L, legacy)))
-    // post-migration appends mix with the migrated tail cleanly, including
-    // frames the legacy format could not represent (raw newlines)
-    val w = new FrameWal(ckpt)
-    w.append(2, Seq("{\n}"))
-    assert(new FrameWal(ckpt).readAll() === ((0L, legacy :+ "{\n}")))
-  }
-
-  test("frame WAL: a crash at ANY point of the legacy migration never loses exposed frames") {
-    // The migration sequence is (1) temp copy, (2) delete legacy chunks,
-    // (3) v2 marker, (4) rename temp into place. Reconstruct each crash
-    // state on disk and assert recovery returns every frame.
-    val legacy = Seq("""{"reason":"a\\b"}""", """{"s":"x\ny"}""", """{"t":3}""")
-    def mkWal(): (String, java.nio.file.Path) = {
-      val ckpt = Files.createTempDirectory("wal_crash_ckpt").toString
-      val walDir = java.nio.file.Paths.get(ckpt, "graft-frame-wal")
-      java.nio.file.Files.createDirectories(walDir)
-      java.nio.file.Files.write(walDir.resolve(f"chunk-${0}%020d-2"),
-        legacy.take(2).mkString("", "\n", "\n").getBytes)
-      java.nio.file.Files.write(walDir.resolve(f"chunk-${2}%020d-1"),
-        legacy.drop(2).mkString("", "\n", "\n").getBytes)
-      (ckpt, walDir)
-    }
-    def esc(s: String) =
-      s.replace("\\", "\\\\").replace("\n", "\\n").replace("\r", "\\r")
-    val tempContent = legacy.map(esc).mkString("", "\n", "\n")
-
-    // crash after (1): temp complete, all legacy chunks still present
-    val (c1, d1) = mkWal()
-    java.nio.file.Files.write(d1.resolve(f"migrate-${0}%020d-3"),
-      tempContent.getBytes)
-    assert(new FrameWal(c1).readAll() === ((0L, legacy)))
-    assert(java.nio.file.Files.exists(d1.resolve("format-v2")))
-
-    // crash during (2): temp complete, SOME legacy chunks deleted — the
-    // state the old delete-then-append order turned into data loss
-    val (c2, d2) = mkWal()
-    java.nio.file.Files.write(d2.resolve(f"migrate-${0}%020d-3"),
-      tempContent.getBytes)
-    java.nio.file.Files.delete(d2.resolve(f"chunk-${0}%020d-2"))
-    assert(new FrameWal(c2).readAll() === ((0L, legacy)))
-
-    // crash after (3): temp + marker, no chunks
-    val (c3, d3) = mkWal()
-    java.nio.file.Files.write(d3.resolve(f"migrate-${0}%020d-3"),
-      tempContent.getBytes)
-    java.nio.file.Files.delete(d3.resolve(f"chunk-${0}%020d-2"))
-    java.nio.file.Files.delete(d3.resolve(f"chunk-${2}%020d-1"))
-    java.nio.file.Files.write(d3.resolve("format-v2"), Array.empty[Byte])
-    assert(new FrameWal(c3).readAll() === ((0L, legacy)))
-
-    // crash DURING (1): torn temp, legacy intact — rolled back, legacy
-    // migration re-runs from the untouched chunks
-    val (c4, d4) = mkWal()
-    java.nio.file.Files.write(d4.resolve(f"migrate-${0}%020d-3"),
-      tempContent.dropRight(5).getBytes) // truncated mid-line
-    assert(new FrameWal(c4).readAll() === ((0L, legacy)))
-    assert(!java.nio.file.Files.exists(d4.resolve(f"migrate-${0}%020d-3")),
-      "torn temp must be rolled back")
-    // and every recovered WAL reads identically on the next restart
-    for (c <- Seq(c1, c2, c3, c4))
-      assert(new FrameWal(c).readAll() === ((0L, legacy)))
+    val chunk = walDir.resolve(f"chunk-${0}%020d-2")
+    val bytes = Seq("""{"reason":"a\\b"}""", """{"s":"x\ny"}""")
+      .mkString("", "\n", "\n").getBytes
+    java.nio.file.Files.write(chunk, bytes)
+    def listing() = java.nio.file.Files.list(walDir).iterator().asScala
+      .map(_.getFileName.toString).toSeq.sorted
+    val before = listing()
+    val ex = intercept[IllegalStateException] { new FrameWal(ckpt).readAll() }
+    assert(ex.getMessage.contains(walDir.toString) &&
+      ex.getMessage.contains("fresh checkpoint"), ex.getMessage)
+    assert(listing() === before)
+    assert(java.nio.file.Files.readAllBytes(chunk).toSeq === bytes.toSeq)
   }
 
   test("pipeline sinks: parquet tables + legacy 32-col view + csv export") {

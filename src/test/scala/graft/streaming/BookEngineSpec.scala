@@ -45,7 +45,7 @@ class BookEngineSpec extends AnyFunSuite {
     val (st, out) = BookEngine.processKey(key, OrderBook.initialState,
       Seq(upd2, snap, upd1)) // arrival order: snap, upd1, upd2
     assert(out.flatMap(_.book).last.bids.head === Level("300.10", "7.0"))
-    assert(st.bids.head === ("300.10", "7.0"))
+    assert(st.book.bids.head === (BigDecimal("300.10") -> "7.0"))
   }
 
   test("state carries across batches; suppression spans batch boundary") {
@@ -57,7 +57,7 @@ class BookEngineSpec extends AnyFunSuite {
       bids = Seq(Seq("300.10", "1.5"), Seq("300.05", "2.0")),
       asks = Seq(Seq("300.20", "0.9")))))
     assert(out2.flatMap(_.book).isEmpty)
-    assert(st2.bids === st1.bids)
+    assert(st2.book.bids === st1.book.bids)
   }
 
   test("trades: normalization, first-trade init, gap flag (op 20)") {

@@ -4,11 +4,12 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataOutputStream, F
 import java.nio.file.Files
 
 import graft.TestSpark
-import graft.model.{EngineOut, Level, MarketMessage}
+import graft.model.{Level, MarketMessage}
 import graft.streaming.BookLog.Keyed
 import graft.streaming.OrderBook.ReplayState
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The ingest path's book state ([[BookLog]]): change suppression, gap
@@ -173,16 +174,31 @@ class BookLogSpec extends AnyFunSuite {
       OrderBook.initialState, Seq(
         msg("snapshot", "BTC_ETH", Seq(Seq("0.03200000", "2.5")), -1L),
         msg("match", "", Nil, 9394200L)))
-    assert(polo.productName === "BTC_ETH" && polo.bids.isEmpty)
+    assert(polo.productName === "BTC_ETH" && polo.book.bids.isEmpty)
+    // a two-sided multi-level book: a snapshot, then changes on both sides
+    // (an insert, a delete, an append) and a trade
+    val (gdax, _) = BookEngine.processKey(("gdax", "SOL-USD"),
+      OrderBook.initialState, Seq(
+        MarketMessage("gdax", "SOL-USD", "snapshot", "SOL-USD", 10L, 1L,
+          Seq(Seq("20.10", "1"), Seq("20.05", "2.5"), Seq("19.9", "3")),
+          Seq(Seq("20.2", "4"), Seq("20.25", "0.5")), Nil, -1L, "", "", "",
+          ts),
+        MarketMessage("gdax", "SOL-USD", "l2update", "SOL-USD", 11L, 2L,
+          Nil, Nil, Seq(Seq("buy", "20.12", "1.1"), Seq("sell", "20.25", "0"),
+            Seq("sell", "20.30", "6")), -1L, "", "", "", ts),
+        MarketMessage("gdax", "SOL-USD", "match", "SOL-USD", 12L, 3L, Nil,
+          Nil, Nil, 55L, "20.12", "0.4", "sell", ts)))
     val books: BookLog.Books = Map(
       // empty book, nothing emitted yet, no trade seen (lastTradeId -1)
       ("gdax", "ETH-USD") -> Keyed(OrderBook.initialState, 0L),
       // one-sided book
       ("gdax", "BTC-USD") -> Keyed(ReplayState("BTC-USD",
-        List("6000.5" -> "0.1", "6000.25" -> "2"), Nil,
+        OrderBook.installSnapshot(
+          Seq(Seq("6000.5", "0.1"), Seq("6000.25", "2")), Nil),
         Seq(Level("6000.5", "0.1")), Nil, hasEmitted = true,
         lastTradeId = 42L), 1700000000123L),
-      ("polo", "148") -> Keyed(polo, Long.MaxValue))
+      ("polo", "148") -> Keyed(polo, Long.MaxValue),
+      ("gdax", "SOL-USD") -> Keyed(gdax, 1700000000456L))
     val bytes = new ByteArrayOutputStream()
     BookLog.write(bytes, books)
     assert(BookLog.read(new ByteArrayInputStream(bytes.toByteArray), "mem")
@@ -194,16 +210,43 @@ class BookLogSpec extends AnyFunSuite {
     // the version tag leads the file
     assert(bytes.toByteArray.take(4).toSeq ===
       Seq[Byte](0, 0, 0, StateSchemas.BookReplayStateVersion.toByte))
+    // the exact version-2 bytes of this map, as written while the state
+    // still held flat (price, size) lists: files written then still load
+    val pinned =
+      "00000002000000040000000467646178000000074554482d5553440000000000" +
+      "000000000000000000000000000000000000000000000000ffffffffffffffff" +
+      "0000000467646178000000074254432d5553440000018bcfe5687b0000000742" +
+      "54432d5553440000000200000006363030302e3500000003302e310000000736" +
+      "3030302e32350000000132000000000000000100000006363030302e35000000" +
+      "03302e310000000001000000000000002a00000004706f6c6f00000003313438" +
+      "7fffffffffffffff000000074254435f45544800000000000000010000000a30" +
+      "2e303332303030303000000003322e3500000000000000010000000a302e3033" +
+      "32303030303000000003322e350100000000008f581800000004676461780000" +
+      "0007534f4c2d5553440000018bcfe569c800000007534f4c2d55534400000004" +
+      "0000000532302e313200000003312e310000000532302e313000000001310000" +
+      "000532302e303500000003322e350000000431392e3900000001330000000200" +
+      "00000432302e3200000001340000000532302e33300000000136000000040000" +
+      "000532302e313200000003312e310000000532302e3130000000013100000005" +
+      "32302e303500000003322e350000000431392e39000000013300000002000000" +
+      "0432302e3200000001340000000532302e333000000001360100000000000000" +
+      "37"
+    assert(bytes.toByteArray.map(b => f"${b & 0xff}%02x").mkString === pinned)
   }
 
   test("a v1 checkpoint (state/, no books/) is refused, naming both versions") {
     val (out, ckpt) = dirs()
-    // the v1 shape: the book state in the state store of a
-    // flatMapGroupsWithState query, as Pipeline.start wrote it before v2
+    // the v1 shape: state in the state store of a flatMapGroupsWithState
+    // query (`state/`, no `books/`), as Pipeline.start wrote it before v2
     val input = MemoryStream[(Long, String)]
-    val v1 = BookEngine.run(Decoders.gdax(input.toDF.toDF("arrival", "value")))
+    val v1 = input.toDS().groupByKey(_ => 0)
+      .flatMapGroupsWithState[Long, Long](
+        OutputMode.Append, GroupStateTimeout.NoTimeout) {
+        (_: Int, frames: Iterator[(Long, String)], gs: GroupState[Long]) =>
+          gs.update(gs.getOption.getOrElse(0L) + frames.size)
+          Iterator.empty
+      }
       .writeStream.option("checkpointLocation", ckpt)
-      .foreachBatch { (b: Dataset[EngineOut], _: Long) => b.collect(); () }
+      .foreachBatch { (b: Dataset[Long], _: Long) => b.collect(); () }
       .start()
     try {
       input.addData(1L -> snap, 2L -> trade100)

@@ -1,21 +1,12 @@
 package graft.streaming
 
-import graft.TestSpark
-import graft.model.EngineOut
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Composition check: stateful book engine followed by watermarked trade
-  * dedup in ONE streaming query. Spark allows chaining a
-  * flatMapGroupsWithState with dropDuplicatesWithinWatermark only under
-  * specific conditions; this spec documents the supported wiring (engine →
-  * split → watermark on the trade branch → dedup) so pipeline authors
-  * don't rediscover the restrictions. */
+/** The ingest path's per-batch trade dedup (`Pipeline.dedupTradeIds`, on
+  * the driver, over `StateSchemas.tradeDedupKey`): exact replays collapse,
+  * distinct id-less rows survive. The streaming form over the same key,
+  * `Watermarked.dedupTrades`, is covered by `WatermarkedSpec`. */
 class ComposedPipelineSpec extends AnyFunSuite {
-  import TestSpark.spark
-  import spark.implicits._
-  private implicit def sqlCtx: org.apache.spark.sql.SQLContext =
-    spark.sqlContext
 
   test("batch dedupTradeIds: exact replays collapse, distinct id-less rows survive") {
     import graft.model.TradeOut
@@ -53,28 +44,5 @@ class ComposedPipelineSpec extends AnyFunSuite {
       t("2017-10-15 05:10:00.100")))  // exact replay → dropped
     assert(out.length === 2,
       s"equal fills with distinct timestamps must both survive: ${out.toSeq}")
-  }
-
-  test("engine → watermarked dedup composes in one streaming query") {
-    val input = MemoryStream[(Long, String)]
-    val trades = BookEngine.run(Decoders.gdax(
-        input.toDF.toDF("arrival", "value")))
-      .flatMap(_.trade)
-    val deduped = Watermarked.dedupTrades(trades)
-    val q = deduped.writeStream.outputMode("append")
-      .format("memory").queryName("composed_out").start()
-    try {
-      val m = (id: Long) => s"""{"type": "match", "trade_id": $id,
-        "sequence": $id, "time": "2017-10-15T05:10:5$id.000000Z",
-        "product_id": "ETH-USD", "size": "0.25", "price": "300.15",
-        "side": "buy"}"""
-      input.addData(1L -> m(1), 2L -> m(2))
-      q.processAllAvailable()
-      input.addData(3L -> m(2), 4L -> m(3)) // re-send of id 2
-      q.processAllAvailable()
-      val ids = spark.table("composed_out").as[graft.model.TradeOut]
-        .collect().map(_.tradeId).sorted
-      assert(ids.toSeq === Seq(1L, 2L, 3L))
-    } finally q.stop()
   }
 }

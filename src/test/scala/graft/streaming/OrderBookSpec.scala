@@ -76,12 +76,6 @@ class OrderBookSpec extends AnyFunSuite {
     assert(topK(b)._1 === Seq(Level("300.10", "2.0")))
   }
 
-  test("freeze/thaw round-trips state exactly") {
-    val b = installSnapshot(snapBids, snapAsks)
-    val thawed = thaw(freeze(b, initialState))
-    assert(topK(thawed) === topK(b))
-  }
-
   test("gap detection: first trade initializes, jumps flag exclusive range") {
     assert(detectGap(-1L, 12345L).isEmpty)
     assert(detectGap(12345L, 12346L).isEmpty)

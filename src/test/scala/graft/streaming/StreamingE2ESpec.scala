@@ -1,30 +1,41 @@
 package graft.streaming
 
+import java.nio.file.Files
+
 import graft.TestSpark
-import graft.model.EngineOut
+import graft.model.{InsideBookUpdate, MarketMessage, TradeOut}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.scalatest.funsuite.AnyFunSuite
 
 /** End-to-end Structured Streaming test (SURVEY §5.2 #3): a deterministic
-  * frame log replayed through MemoryStream → decode → stateful engine →
-  * memory sink, across multiple micro-batches, asserting exact golden
-  * emissions (change suppression + state continuity + gap detection through
-  * the real writeStream path). */
+  * frame log replayed through MemoryStream → decode → `Pipeline.start`
+  * (the driver-side book fold) → parquet sinks, across multiple
+  * micro-batches, asserting exact golden emissions (change suppression +
+  * state continuity + gap detection through the real writeStream path). */
 class StreamingE2ESpec extends AnyFunSuite {
   import TestSpark.spark
   import spark.implicits._
   private implicit def sqlCtx: org.apache.spark.sql.SQLContext =
     spark.sqlContext
 
-  private def startQuery(stream: MemoryStream[(Long, String)],
-      name: String): StreamingQuery =
-    BookEngine.run(Decoders.gdax(stream.toDF.toDF("arrival", "value")))
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .start()
+  private val outDir = Files.createTempDirectory("e2e_out").toString
+
+  private def startQuery(stream: MemoryStream[(Long, String)], name: String,
+      decode: DataFrame => Dataset[MarketMessage] = Decoders.gdax)
+      : StreamingQuery =
+    Pipeline.start(stream.toDF.toDF("arrival", "value"), decode,
+      s"$outDir/$name", Files.createTempDirectory(s"${name}_ckpt").toString)
+
+  private def sinkBooks(name: String): Array[InsideBookUpdate] =
+    spark.read.parquet(s"$outDir/$name/inside_book")
+      .select("exchange", "productId", "sequence", "bids", "asks")
+      .as[InsideBookUpdate].collect()
+
+  private def sinkTrades(name: String): Array[TradeOut] =
+    spark.read.parquet(s"$outDir/$name/trades").drop("batch_id")
+      .as[TradeOut].collect()
 
   test("multi-batch replay: suppression and gap state survive micro-batch boundaries") {
     val input = MemoryStream[(Long, String)]
@@ -51,9 +62,8 @@ class StreamingE2ESpec extends AnyFunSuite {
           "bids": [["250.00", "1.0"]], "asks": [["250.10", "2.0"]]}""")
       q.processAllAvailable()
 
-      val out = spark.table("e2e_out").as[EngineOut].collect()
-      val books = out.flatMap(_.book).sortBy(b => (b.productId, b.sequence))
-      val trades = out.flatMap(_.trade).sortBy(_.tradeId)
+      val books = sinkBooks("e2e_out").sortBy(b => (b.productId, b.sequence))
+      val trades = sinkTrades("e2e_out").sortBy(_.tradeId)
 
       // books: ETH-USD snapshot + delta (batch-2 no-op delta suppressed
       // ACROSS the micro-batch boundary), ETH-EUR snapshot
@@ -71,9 +81,7 @@ class StreamingE2ESpec extends AnyFunSuite {
 
   test("poloniex stream: channel state resolves products across batches") {
     val input = MemoryStream[(Long, String)]
-    val q = BookEngine.run(Decoders.polo(input.toDF.toDF("arrival", "value")))
-      .writeStream.outputMode("append")
-      .format("memory").queryName("e2e_polo").start()
+    val q = startQuery(input, "e2e_polo", Decoders.polo)
     try {
       input.addData(
         1L -> """[148, 100, [["i", {"currencyPair": "BTC_ETH",
@@ -85,10 +93,19 @@ class StreamingE2ESpec extends AnyFunSuite {
           "0.00009541", 1508060546]]]""",
         3L -> """[1010]""")
       q.processAllAvailable()
-      val out = spark.table("e2e_polo").as[EngineOut].collect()
-      val trade = out.flatMap(_.trade).head
+      val trade = sinkTrades("e2e_polo").head
       assert(trade.productId === "BTC_ETH") // resolved from channel state
       assert(trade.volume === "0.00009541")
     } finally q.stop()
+  }
+
+  test("BookEngine.run refuses a streaming Dataset, naming Pipeline.start") {
+    // regrouping per micro-batch would restart every book each batch; the
+    // stream's books live in Pipeline.start's driver-side fold
+    val input = MemoryStream[(Long, String)]
+    val err = intercept[IllegalArgumentException] {
+      BookEngine.run(Decoders.gdax(input.toDF.toDF("arrival", "value")))
+    }
+    assert(err.getMessage.contains("Pipeline.start"), err.getMessage)
   }
 }
