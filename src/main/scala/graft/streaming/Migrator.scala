@@ -27,8 +27,9 @@ object Migrator {
       outDir: String): Seq[String] = {
     val conf = spark.sessionState.newHadoopConf()
     // Spark's file index ignores _/.-prefixed paths, so a part file under
-    // an in-flight _temporary dir must not count as data — CREATE TABLE
-    // over only-temporary files still fails schema inference.
+    // an in-flight _temporary or .batch_id=N.tmp dir must not count as
+    // data — CREATE TABLE over only-temporary files still fails schema
+    // inference.
     def visibleUnder(base: org.apache.hadoop.fs.Path,
         p: org.apache.hadoop.fs.Path): Boolean = {
       var cur = p

@@ -4,7 +4,13 @@ import scala.collection.mutable
 
 import graft.model.{EngineOut, InsideBookUpdate, MarketMessage, TradeOut}
 import graft.sources.Backfill
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
+import org.apache.hadoop.mapreduce.lib.output.FileOutputCommitter
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -14,7 +20,10 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *
   * The reference's Redis/arq process boundary dissolves into the
   * micro-batch boundary (§1.1): one foreachBatch commit per trigger writes
-  * both tables — no per-row connections, no external queue.
+  * both tables — no per-row connections, no external queue. Like the
+  * reference's append from the process that holds the row, each batch's
+  * rows are written from the driver that holds them: the decode collect
+  * is the batch's only Spark job, and the sinks run no write job.
   */
 object Pipeline {
 
@@ -77,7 +86,9 @@ object Pipeline {
     * (exchange, channel) through [[BookEngine.processKey]] on the driver,
     * from the book state after the previous batch ([[BookLog]]: in memory,
     * checkpointed as one versioned file per batch under
-    * `<checkpointDir>/books`); the engine rows then go to [[commitBatch]].
+    * `<checkpointDir>/books`); the engine rows then go to [[commitBatch]],
+    * which writes both tables from the driver with no write job — the
+    * collect is the batch's one Spark job.
     * The collect is bounded: at most `maxFramesPerTrigger` frames (default
     * 10,000) are admitted per batch, and the websocket source already
     * holds them on the driver, so the messages and the engine rows (at
@@ -87,9 +98,10 @@ object Pipeline {
     * after a partial write is retried with the SAME batchId, recomputed
     * from the committed predecessor's books. Each table's rows for a batch
     * live in their own static partition directory `batch_id=N`, and a
-    * commit overwrites exactly that path: the retry replaces its own
-    * partition, never duplicating or touching earlier batches —
-    * exactly-once at the table level.
+    * commit replaces exactly that path (through a hidden
+    * `.batch_id=N.tmp`): the retry replaces its own partition, never
+    * duplicating or touching earlier batches — exactly-once at the table
+    * level.
     *
     * `idleTtl` evicts a key silent for longer than the TTL before a batch
     * folds (see [[BookLog]]). A checkpoint whose book state is not
@@ -117,14 +129,14 @@ object Pipeline {
     * tables unchanged.
     *
     * Gap backfill and trade dedup happen on the rows ([[settle]]). Each
-    * table is then written as ONE file by overwriting its static
+    * table is then written on the driver, with no plan and no Spark job,
+    * as ONE part file plus `_SUCCESS` replacing its static
     * `<outDir>/<table>/batch_id=<batchId>` path — the partition layout
-    * readers and [[Migrator.ensureTables]] discover, with no
-    * dynamic-overwrite staging. A gap the history could not fully fill is
-    * logged, one WARN line per gap. */
+    * readers and [[Migrator.ensureTables]] discover ([[writePartition]]).
+    * A gap the history could not fully fill is logged, one WARN line per
+    * gap. */
   def commitBatch(spark: SparkSession, rows: Seq[EngineOut], batchId: Long,
       outDir: String, fetcher: Option[Backfill.TradeFetcher]): Unit = {
-    import spark.implicits._
     val (books, reconciled) = settle(rows, fetcher)
     reconciled.gaps.filter(_.result.stillMissing.nonEmpty).foreach { g =>
       log.warn(s"batch $batchId: gap ${g.exchange} ${g.productId} " +
@@ -132,11 +144,46 @@ object Pipeline {
         s"${g.result.stillMissing.size} trade ids unfilled after " +
         s"${g.result.pagesFetched} pages")
     }
-    def write(ds: Dataset[_], table: String): Unit =
-      ds.coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$table/batch_id=$batchId")
-    write(spark.createDataset(books), "inside_book")
-    write(spark.createDataset(reconciled.trades), "trades")
+    writePartition(spark, bookEncoder, books, s"$outDir/inside_book", batchId)
+    writePartition(spark, tradeEncoder, reconciled.trades, s"$outDir/trades",
+      batchId)
+  }
+
+  private val bookEncoder = ExpressionEncoder[InsideBookUpdate]()
+  private val tradeEncoder = ExpressionEncoder[TradeOut]()
+
+  /** Write `rows` as the one partition `<tableDir>/batch_id=<batchId>`
+    * from the driver, through the `OutputWriterFactory` Spark's own file
+    * writer uses — configured from the session's SQL conf (codec,
+    * timestamp type, rebase mode) — with no plan and no job. The part file
+    * and an empty `_SUCCESS` go into the hidden sibling
+    * `.batch_id=<batchId>.tmp` (Spark's file index and
+    * [[Migrator.ensureTables]] skip `.` names), which then replaces the
+    * partition: delete, then rename. A retry deletes a leftover temp
+    * directory first; a crash between the delete and the rename leaves
+    * the batch uncommitted, and its retry writes the partition again. */
+  private def writePartition[T](spark: SparkSession,
+      encoder: ExpressionEncoder[T], rows: Seq[T], tableDir: String,
+      batchId: Long): Unit = {
+    val job = Job.getInstance(spark.sessionState.newHadoopConf())
+    val factory = new ParquetFileFormat()
+      .prepareWrite(spark, job, Map.empty, encoder.schema)
+    val context = new TaskAttemptContextImpl(job.getConfiguration,
+      new TaskAttemptID())
+    val table = new Path(tableDir)
+    val fs = table.getFileSystem(job.getConfiguration)
+    val tmp = new Path(table, s".batch_id=$batchId.tmp")
+    val dest = new Path(table, s"batch_id=$batchId")
+    fs.delete(tmp, true)
+    val file = new Path(tmp, s"part-00000-${java.util.UUID.randomUUID}" +
+      s"-c000${factory.getFileExtension(context)}")
+    val writer = factory.newInstance(file.toString, encoder.schema, context)
+    val toRow = encoder.createSerializer()
+    try rows.foreach(r => writer.write(toRow(r))) finally writer.close()
+    fs.create(new Path(tmp, FileOutputCommitter.SUCCEEDED_FILE_NAME)).close()
+    fs.delete(dest, true)
+    if (!fs.rename(tmp, dest))
+      throw new java.io.IOException(s"cannot rename $tmp to $dest")
   }
 
   /** Full-table CSV export with header (op 8, export_to_csv.py intent —
@@ -147,7 +194,8 @@ object Pipeline {
       .write.mode("overwrite").option("header", "true").csv(out)
 
   /** Small-file compaction for a batch_id-partitioned sink table. Each
-    * [[commitBatch]] already writes a batch partition as one file; tables
+    * [[commitBatch]] already writes a batch partition as one file, on the
+    * driver with no write job (compaction itself is a Spark job); tables
     * written by earlier versions of the sink hold one file per shuffle
     * partition per trigger, and at feed rates that means millions of tiny
     * files per day — the classic streaming-sink operational failure at

@@ -103,6 +103,31 @@ class CheckpointRestartSpec extends AnyFunSuite {
     java.nio.file.Files.write(tmpPart.resolve("part-0001.snappy.parquet"),
       Array[Byte](1, 2, 3))
     assert(Migrator.ensureTables(spark, "tmp_ex", tmpOnly).isEmpty)
+    // a commit that crashed before its rename leaves a real part file in
+    // the hidden `.batch_id=N.tmp`: no reader sees it, the migrator
+    // defers on it, and the batch's retry removes it
+    val crashed = Files.createTempDirectory("crashed_commit").toString
+    for (table <- Seq("inside_book", "trades"))
+      spark.read.parquet(s"$outDir/$table/batch_id=0").write
+        .parquet(s"$crashed/$table/.batch_id=0.tmp")
+    assert(Migrator.ensureTables(spark, "crashed_ex", crashed).isEmpty)
+    Pipeline.commitBatch(spark, engineOut.collect().toSeq, batchId = 1L,
+      crashed, None)
+    assert(spark.read.parquet(s"$crashed/trades").count() === tradesOnce)
+    assert(spark.read.parquet(s"$crashed/trades")
+      .filter($"batch_id" === 0).isEmpty)
+    Pipeline.commitBatch(spark, engineOut.collect().toSeq, batchId = 0L,
+      crashed, None)
+    for (table <- Seq("inside_book", "trades")) {
+      val names = new java.io.File(crashed, table).list().toSeq
+      assert(!names.contains(".batch_id=0.tmp"), s"$table keeps the temp dir")
+      assert(names.filter(_.startsWith("batch_id=")).sorted ===
+        Seq("batch_id=0", "batch_id=1"))
+      val parts = new java.io.File(s"$crashed/$table/batch_id=0").list()
+        .count(_.endsWith(".parquet"))
+      assert(parts === 1, s"$table/batch_id=0 holds $parts part files")
+    }
+    assert(spark.read.parquet(s"$crashed/trades").count() === tradesOnce * 2)
     assert(Migrator.ensureTables(spark, "test_ex", outDir).size === 2)
     val viaTable = spark.table("test_ex_trades").count()
     assert(viaTable === tradesOnce * 2)

@@ -11,9 +11,11 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The shape of one ingest micro-batch: the books fold on the driver, so
-  * no stage writes shuffle output; each table's batch partition is a
-  * single file; and the batch checkpoints its books as one versioned file
-  * under `books/`. */
+  * no stage writes shuffle output; the sinks are written on the driver, so
+  * the decode collect is the batch's one Spark job; each table's batch
+  * partition is a single file plus `_SUCCESS`, with no temp directory
+  * left; and the batch checkpoints its books as one versioned file under
+  * `books/`. */
 class CommitShapeSpec extends AnyFunSuite {
   import TestSpark.spark
   import spark.implicits._
@@ -22,8 +24,8 @@ class CommitShapeSpec extends AnyFunSuite {
 
   private val Sentinel = "commit-shape-sentinel"
 
-  /** Records, per job group, the ids of stages that wrote shuffle output
-    * and the stages seen; releases `drained` once the sentinel job has
+  /** Records, per job group, the ids of jobs started, of stages that
+    * wrote shuffle output and of the stages seen; releases `drained` once the sentinel job has
     * ended — the listener bus is FIFO, so every earlier event has arrived
     * by then. A streaming query runs its jobs under its run id. */
   private final class ShapeListener extends SparkListener {
@@ -31,6 +33,7 @@ class CommitShapeSpec extends AnyFunSuite {
       new java.util.concurrent.ConcurrentHashMap[Int, String]()
     val shuffleWriters = new ConcurrentLinkedQueue[(String, Int)]()
     val stages = new ConcurrentLinkedQueue[(String, Int)]()
+    val jobs = new ConcurrentLinkedQueue[(String, Int)]()
     @volatile private var sentinelJob = -1
     val drained = new CountDownLatch(1)
     private def group(p: java.util.Properties): String =
@@ -46,8 +49,11 @@ class CommitShapeSpec extends AnyFunSuite {
           info.taskMetrics.shuffleWriteMetrics.recordsWritten > 0)
         shuffleWriters.add((g, info.stageId))
     }
-    override def onJobStart(e: SparkListenerJobStart): Unit =
-      if (group(e.properties) == Sentinel) sentinelJob = e.jobId
+    override def onJobStart(e: SparkListenerJobStart): Unit = {
+      val g = group(e.properties)
+      jobs.add((g, e.jobId))
+      if (g == Sentinel) sentinelJob = e.jobId
+    }
     override def onJobEnd(e: SparkListenerJobEnd): Unit =
       if (e.jobId == sentinelJob) drained.countDown()
   }
@@ -87,10 +93,17 @@ class CommitShapeSpec extends AnyFunSuite {
     assert(ours(listener.stages).nonEmpty, "the micro-batch ran no stage")
     assert(ours(listener.shuffleWriters).isEmpty,
       "no stage of the micro-batch may write shuffle output")
+    assert(ours(listener.jobs).size === 1,
+      "the micro-batch runs one Spark job, the decode collect")
     for (table <- Seq("inside_book", "trades")) {
-      val files = new java.io.File(s"$outDir/$table/batch_id=0").listFiles()
-        .count(_.getName.endsWith(".parquet"))
-      assert(files === 1, s"$table/batch_id=0 holds $files parquet files")
+      val names = new java.io.File(s"$outDir/$table/batch_id=0").listFiles()
+        .map(_.getName).filterNot(_.endsWith(".crc")).toSeq
+      assert(names.count(_.endsWith(".parquet")) === 1 &&
+        names.contains("_SUCCESS") && names.size === 2,
+        s"$table/batch_id=0 holds ${names.mkString(", ")}")
+      val temps = new java.io.File(s"$outDir/$table").list()
+        .filter(_.startsWith(".batch_id="))
+      assert(temps.isEmpty, s"$table keeps ${temps.mkString(", ")}")
     }
     val books = Option(new java.io.File(ckpt, "books").listFiles())
       .getOrElse(Array.empty[java.io.File])
