@@ -32,28 +32,28 @@ import org.apache.spark.sql.streaming.Trigger
   *    in the `near` row's regime (no streaming hot-bucket quadratic; the
   *    per-batch boundedness assertion lives in CurationStreamSpec's
   *    burst soak);
-  *  - `sem` (r15 verdict ask #7): the semantic gate over the replicated
-  *    embeddings as a VecIn file stream — frozen-quantizer cell
-  *    assignment (map-only), int8 dot against the per-cell keeper
-  *    registry on `transformWithState`; the frozen centroid stage is
-  *    built ONCE before the passes (a deployment's index cost, not a
-  *    per-batch cost);
-  *  - `semc` (r17, r16 verdict ask #8): the CODED semantic gate —
-  *    same stream, same decisions, plus the per-vector PQ encode
-  *    against a frozen CAPPED codebook (maxCodewords = 64) in the
-  *    probe map, so the row prices "emit index-ready rows" against
-  *    the plain `sem` row's verdict-only cost;
-  *  - `semt` (r18): the TRAINED gate — same stream, same keeper
-  *    registry, Lloyd-refined centroids with the exact-integer d2
-  *    assignment in the probe map; next to `sem` the row prices what
-  *    the trained geometry costs at crawl rate (the assignment is one
+  *  - `sem` (r15): [[CurationStream.semDedupGate]] over the replicated
+  *    embeddings as a VecIn file stream, with a frozen RULE quantizer —
+  *    cell assignment (map-only), int8 dot against the per-cell keeper
+  *    registry on `transformWithState`; the gate index
+  *    ([[CurationStream.frozenGateIndex]]) is loaded ONCE before the
+  *    passes (a deployment's index cost, not a per-batch cost);
+  *  - `semc` (r17): [[CurationStream.semDedupGateCoded]] over the same
+  *    rule index — same stream, same decisions, plus the per-vector PQ
+  *    encode against a frozen CAPPED rule codebook (maxCodewords = 64)
+  *    in the probe map, so the row prices "emit index-ready rows"
+  *    against the plain `sem` row's verdict-only cost;
+  *  - `semt` (r18): `semDedupGate` over a frozen TRAINED quantizer —
+  *    same stream, same keeper registry, Lloyd-refined centroids with
+  *    the exact-integer d2 assignment in the probe map; next to `sem`
+  *    the row prices what the trained geometry costs at crawl rate (one
   *    integer dot per centroid either way — expect parity);
-  *  - `semtc` (r19): the FULLY-TRAINED coded gate — trained cells AND
-  *    PQ codes against the trained per-subspace codebook (capped 64,
-  *    the `semc` config), verdicts stamping the codebook's VALUE
-  *    digest; next to `semc` the row prices trained-codebook encoding
-  *    at crawl rate (same codeword count, pre-sliced either way —
-  *    expect parity).
+  *  - `semtc` (r19): `semDedupGateCoded` over the trained index — trained
+  *    cells AND PQ codes against the trained per-subspace codebook
+  *    (capped 64, the `semc` config), verdicts stamping the codebook's
+  *    VALUE digest; next to `semc` the row prices trained-codebook
+  *    encoding at crawl rate (same codeword count, pre-sliced either way
+  *    — expect parity).
   * All run on the RocksDB state store (the 100 TB state path; the
   * stateful modes require it). Run: `sbt "runMain graft.CurationBench"`;
   * env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_SCALE_X (default 10),
@@ -169,24 +169,17 @@ object CurationBench {
       .write.mode("overwrite").parquet(vecDir)
     stampArrivalOrder(vecDir)
     val vecs = spark.read.parquet(vecDir).count()
-    val frozenCents = CurationStream.frozenCentroidLits(spark, rep,
-      graft.operators.IvfConfig(frozen = true))
-    val frozenCw = CurationStream.frozenPqCodewordLits(spark, rep,
-      graft.operators.PqConfig(frozen = true, maxCodewords = Some(64L)))
-    // the TRAINED gate's literals (r18): same frozen config as `sem` so
-    // the two rows differ only in GEOMETRY — Lloyd founding is priced
-    // into the setup, not the per-batch walls (a deployment's index
-    // cost, the frozenCents precedent)
-    val (trainedCents, trainedDigest) =
-      CurationStream.frozenTrainedCentroidLits(spark, rep,
-        graft.operators.IvfConfig(frozen = true))
-    // the fully-trained coded gate's literals (r19): the TRAINED
-    // per-subspace codebook under the same capped frozen config as
-    // `semc`, so semc vs semtc differ only in which codebook (and
-    // which cell geometry) the encode rides
-    val (trainedCw, trainedCbDigest) =
-      CurationStream.frozenPqRefinedCodewordLits(spark, rep,
-        graft.operators.PqConfig(frozen = true, maxCodewords = Some(64L)))
+    // One frozen config, one capped codebook config for both quantizer
+    // kinds, so the rule and trained rows differ only in GEOMETRY (and
+    // in which codebook the encode rides). Lloyd founding is priced into
+    // the setup, not the per-batch walls (a deployment's index cost).
+    val frozenIvf = graft.operators.IvfConfig(frozen = true)
+    val cappedPq =
+      Some(graft.operators.PqConfig(frozen = true, maxCodewords = Some(64L)))
+    val ruleIdx = CurationStream.frozenGateIndex(spark, rep,
+      graft.operators.Quantizer.Rule(frozenIvf), cappedPq)
+    val trainedIdx = CurationStream.frozenGateIndex(spark, rep,
+      graft.operators.Quantizer.Trained(frozenIvf), cappedPq)
 
     def run(mode: String, pass: Int): Double = {
       val srcDir = mode match {
@@ -207,15 +200,14 @@ object CurationBench {
           val out = mode match {
             case "exact" => CurationStream.curate(readAs[DocIn]())
             case "near" | "burst" => CurationStream.nearDedup(readAs[DocIn]())
-            case "sem" => CurationStream.semDedupGate(
-              readAs[CurationStream.VecIn](), frozenCents)
-            case "semc" => CurationStream.semDedupGateCoded(
-              readAs[CurationStream.VecIn](), frozenCents, frozenCw)
-            case "semt" => CurationStream.semDedupGateTrained(
-              readAs[CurationStream.VecIn](), trainedCents, trainedDigest)
-            case "semtc" => CurationStream.semDedupGateCodedTrained(
-              readAs[CurationStream.VecIn](), trainedCents, trainedDigest,
-              trainedCw, trainedCbDigest)
+            case "sem" | "semt" =>
+              val idx = if (mode == "sem") ruleIdx else trainedIdx
+              CurationStream.semDedupGate(readAs[CurationStream.VecIn](),
+                idx.cells)
+            case "semc" | "semtc" =>
+              val idx = if (mode == "semc") ruleIdx else trainedIdx
+              CurationStream.semDedupGateCoded(
+                readAs[CurationStream.VecIn](), idx.cells, idx.codebook.get)
           }
           out.writeStream.outputMode("append").format("parquet")
             .option("path", s"$work/out_${mode}_$pass")

@@ -48,7 +48,7 @@ object StageBench {
       operators.SimilarityQueries.ivfTopKWith(s, d, FrozenIvf)),
     "dedup_semantic_frozen" -> ((s, d) =>
       operators.SimilarityQueries.semanticDedupWith(s, d,
-        operators.SemDedupConfig.Default, FrozenIvf)),
+        operators.SemDedupConfig.Default, RuleIvf)),
     "ann_topk_pq_frozen" -> ((s, d) =>
       operators.SimilarityQueries.pqTopKWith(s, d, 5, RulePq)),
     "ann_topk_pq_rerank_frozen" -> ((s, d) =>

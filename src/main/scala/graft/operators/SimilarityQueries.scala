@@ -1376,7 +1376,7 @@ object SimilarityQueries {
   }
 
   /** The ONE (cid, components) value digest — shared by the trained
-    * family's stage keys and the streaming trained gate's state-key
+    * family's stage keys and the streaming gate's trained-cell state-key
     * prefix (the idSetDigest precedent), so a re-training moves the
     * staged tables AND the stream keyspace in lockstep. */
   private[graft] def valueDigestOf(rows: Seq[(Long, Seq[Long])]): String = {
@@ -1501,25 +1501,32 @@ object SimilarityQueries {
       .select(col("vec_id"), col("cid"), col("dup_of"))
   }
 
-  /** [[semanticDedup]] under an explicit [[SemDedupConfig]] (and
-    * optionally a non-default [[IvfConfig]]). Under a FROZEN index the
-    * DROPS TABLE ITSELF is staged append-incrementally — not just its
-    * cell/q8 inputs: the r16 StageBench row showed the inputs delta-
-    * building while the intra-cell pair scoring still recomputed
-    * O(Σ|cell|²) per refresh, which at 100 TB is the whole cost. */
+  /** [[semanticDedup]] under an explicit [[SemDedupConfig]] over the
+    * home cells of quantizer `q` — [[Quantizer.Rule]] for
+    * `dedup_semantic`, [[Quantizer.Trained]] for `dedup_semantic_refined`.
+    * Under a FROZEN index the DROPS TABLE ITSELF is staged
+    * append-incrementally — not just its cell/q8 inputs: the r16
+    * StageBench row showed the inputs delta-building while the
+    * intra-cell pair scoring still recomputed O(Σ|cell|²) per refresh,
+    * which at 100 TB is the whole cost. */
   private[graft] def semanticDedupWith(spark: SparkSession, dir: String,
       cfg: SemDedupConfig,
-      ivfCfg: IvfConfig = IvfConfig.Default): DataFrame = {
-    def home = ivfCells(spark, dir, Quantizer.Rule(ivfCfg))
+      q: Quantizer = Quantizer.Rule()): DataFrame = {
+    def home = ivfCells(spark, dir, q)
       .filter(col("rn") === 1)
       .select(col("vec_id"), col("cid"))
-    if (!ivfCfg.frozen)
-      // Staged plain (rebuild on any corpus change — the rule-derived
-      // cells move with the corpus, no delta is sound): the drops table
-      // now has THREE consumers (dedup_semantic, semantic_rate_by_label,
+    val name = q match {
+      case _: Quantizer.Rule => s"sem_drops@${cfg.stageKey}@${q.cfg.stageKey}"
+      case _: Quantizer.Trained =>
+        s"sem_drops_refined@${cfg.stageKey}@${q.cfg.stageKey}:L$LloydIters"
+    }
+    if (!q.cfg.frozen)
+      // Staged plain (rebuild on any corpus change — the corpus-derived
+      // cells move with the corpus, no delta is sound): the rule drops
+      // table has THREE consumers (dedup_semantic, semantic_rate_by_label,
       // semantic_keeper_resolve), and at 100 TB the intra-cell scoring
       // is computed once per corpus, not once per query (r16).
-      Staged(spark, dir, s"sem_drops@${cfg.stageKey}@${ivfCfg.stageKey}") {
+      Staged(spark, dir, name) {
         semanticDedupOn(home, quantized(spark, dir), cfg)
       }
     else {
@@ -1553,11 +1560,10 @@ object SimilarityQueries {
       // Both gates read the slim ids-only cell table (already
       // delta-built), never the vectors — O(corpus) rows of three ints,
       // a rounding error next to the O(Σ|cell|²) scoring they replace.
-      // The stage key carries the centroid-set digest like the cells
+      // The stage key carries the quantizer's digest like the cells
       // stage, so a re-founding moves the drops to a fresh name in
       // lockstep with the whole frozen family.
-      val key = s"sem_drops@${cfg.stageKey}@${ivfCfg.stageKey}" +
-        s"+frz${Quantizer.Rule(ivfCfg).digest(spark, dir)}"
+      val key = s"$name+frz${q.digest(spark, dir)}"
       Staged.rebuildable(spark, dir, key, "embeddings", "vec_id")(
         (prior, deltaRaw) => {
           graft.functions.VectorExprs.register(spark)
@@ -1691,17 +1697,9 @@ object SimilarityQueries {
     * discipline, one more consumer of the trained geometry). */
   val semanticDedupRefined = QueryDef(
     "dedup_semantic_refined",
-    (spark, dir) => {
-      val cfg = SemDedupConfig.Default
-      Staged(spark, dir,
-        s"sem_drops_refined@${cfg.stageKey}@${IvfConfig.Default.stageKey}" +
-          s":L$LloydIters") {
-        semanticDedupOn(
-          ivfCells(spark, dir, Quantizer.Trained()).filter(col("rn") === 1)
-            .select(col("vec_id"), col("cid")),
-          quantized(spark, dir), cfg)
-      }
-    },
+    (spark, dir) =>
+      semanticDedupWith(spark, dir, SemDedupConfig.Default,
+        Quantizer.Trained()),
     Some(s"""${lloydCte},
       home AS (SELECT vec_id, cid FROM (
           SELECT q.vec_id, c.cid, row_number() OVER (PARTITION BY q.vec_id
@@ -2735,8 +2733,8 @@ object SimilarityQueries {
   /** The ONE (off, cw_id, components) value digest for the trained PQ
     * family — [[valueDigestOf]]'s rationale per subspace (a re-training
     * keeps the seed cw_ids but MOVES the slice values, so an id digest
-    * would alias two trainings). Shared with the streaming trained-codes
-    * gate's cbDigest, so a re-training moves the staged codes AND the
+    * would alias two trainings). Shared with the coded streaming gate's
+    * trained cbDigest, so a re-training moves the staged codes AND the
     * stream keyspace in lockstep. */
   private[graft] def pqValueDigestOf(
       rows: Seq[(Long, Long, Seq[Long])]): String = {

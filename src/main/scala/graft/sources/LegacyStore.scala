@@ -127,12 +127,17 @@ object LegacyStore {
     spark.read.jdbc(url, table, partitionColumn, lower, upper,
       numPartitions, new java.util.Properties)
 
-  /** Per-batch JDBC writer of engine rows, mirroring
-    * [[Pipeline.commitBatch]] over the same settled batch (trades
-    * id-deduped on the driver): the inside book lands as the legacy
-    * 32-column flat view (the reference's gdax_order_book shape,
-    * gdax_schema.sql:8-41), trades in a trades table. Idempotent per
-    * `batchId`: re-running a batch replaces its rows. */
+  /** JDBC writer of a BATCH replay's engine rows: the
+    * `Dataset[EngineOut]` that [[graft.streaming.BookEngine.run]] folds
+    * over a bounded message Dataset. No streaming query yields engine
+    * rows to feed it: `BookEngine.run` refuses a stream, and the live
+    * ingest path ([[Pipeline.start]]) folds the books on the driver and
+    * always commits through [[Pipeline.commitBatch]]. The rows are
+    * settled as `commitBatch` settles a batch (trades id-deduped on the
+    * driver); the inside book lands as the legacy 32-column flat view
+    * (the reference's gdax_order_book shape, gdax_schema.sql:8-41),
+    * trades in a trades table. Idempotent per `batchId`: re-writing a
+    * batch replaces its rows. */
   def jdbcSink(url: String, bookTable: String = "gdax_order_book",
       tradeTable: String = "trades")
       : (Dataset[EngineOut], Long) => Unit = { (batch, batchId) =>

@@ -712,134 +712,166 @@ object CurationStream {
   /** [[VecVerdict]] plus the vector's PQ codes against a frozen codebook
     * (r16 verdict ask #8, [[semDedupGateCoded]]): `codes(s)` is the
     * winning codeword id of subspace `s` (8 subspaces × 8 dims — the
-    * batch `pq_codes` row set pivoted to one array), byte-identical to
-    * the batch encode by construction; empty for a mis-dimensioned
-    * vector (which the batch corpus never carries). `cbDigest` stamps
-    * WHICH codebook produced the codes (r17 verdict ask #2): the live
-    * codeword-id-set digest from the ONE `idSetDigest` definition the
-    * staged `pq_codes@…+frz<digest>` key carries, so a consumer folding
-    * streamed rows into an index can tell pre- from post-re-founding
-    * codes instead of silently mixing two codebooks' code spaces — and
-    * can route each row to the staged table whose key matches. `rrv`
-    * (r18) is the exact squared PQ residual |v − recon(codes)|² — the
-    * batch `pq_resid` row's value, computed in the same probe map from
-    * the encode's winning dists — so streamed rows are index-ready for
-    * the EXACT range prefilter (dot ≤ ADCdot + √(qq·rrv)) too; -1 when
-    * not encodable (codes empty), never a partial sum. */
+    * batch codes row set pivoted to one array), byte-identical to the
+    * batch encode by construction; empty for a mis-dimensioned vector
+    * (which the batch corpus never carries). `cbDigest` stamps WHICH
+    * codebook produced the codes (r17): its
+    * [[GateCodebook.digest]] — the live codeword-id-set digest of a rule
+    * codebook, the value digest of a trained one — the value the staged
+    * `…_codes@…+frz<digest>` key carries, so a consumer folding streamed
+    * rows into an index can tell pre- from post-re-founding codes
+    * instead of silently mixing two codebooks' code spaces — and can
+    * route each row to the staged table whose key matches. `rrv` (r18)
+    * is the exact squared PQ residual |v − recon(codes)|² — the Σ of
+    * the encode's winning dists against that codebook (for the rule one,
+    * the batch `pq_resid` row's value) — so streamed rows are ready for the
+    * EXACT range prefilter (dot ≤ ADCdot + √(qq·rrv)) too; -1 when not
+    * encodable (codes empty), never a partial sum. */
   final case class VecVerdictCoded(vecId: Long, cid: Long,
       fetchTs: Timestamp, kept: Boolean, dupOf: Long, codes: Array[Long],
       cbDigest: String, rrv: Long)
 
-  /** A frozen-codebook codeword shipped into the stream's closure —
-    * [[CentroidLit]]'s discipline for the PQ side (bounded by
-    * `PqConfig.maxCodewords` under a capped config). */
-  final case class CodewordLit(cwId: Long, cv: Array[Byte])
+  /** A frozen coarse quantizer collected into the gate's closure:
+    * centroid ids ascending, the variant's scoring data, and the cell-key
+    * prefix ([[StateSchemas.semGateCellPrefix]]). nlist rows by config —
+    * a CONSTANT under `IvfConfig.maxCentroids`, the same bound that makes
+    * the set broadcastable on the batch side. The sealed form is the
+    * variant: a gate scores against exactly one centroid kind. */
+  sealed trait GateCells {
+    def prefix: String
+    def cids: Array[Long]
 
-  /** Load the staged frozen PQ codebook for [[semDedupGateCoded]]: one
-    * bounded driver-side collect. Requires a frozen [[graft.operators
-    * .PqConfig]] — under the rule-over-current-corpus default the
-    * codebook moves on every append, and codes emitted against a moving
-    * codebook could never join the staged `pq_codes` table. */
-  def frozenPqCodewordLits(spark: org.apache.spark.sql.SparkSession,
-      dir: String, cfg: graft.operators.PqConfig): Seq[CodewordLit] = {
-    require(cfg.frozen, "semDedupGateCoded needs a FROZEN codebook: " +
-      "rule-derived codewords drift under growth, so streamed codes " +
-      "would not be index-ready rows of the staged codes table")
-    graft.operators.SimilarityQueries.frozenPqCodebook(spark, dir, cfg)
-      .collect()
-      .map(r => CodewordLit(r.getLong(0),
-        r.getSeq[Double](1).map(_.toByte).toArray))
-      .sortBy(_.cwId).toSeq
+    /** The vector's home cell — the batch assignment's exact arithmetic
+      * and tie-break, so the streamed cell never differs from the staged
+      * one. */
+    private[streaming] def home(emb: Array[Double], norm: Double,
+        q8: Array[Byte]): Long
   }
 
-  /** A TRAINED per-subspace codeword shipped into the stream's closure
-    * (r19): `sub` is the 0-based subspace index, `cs` its 8-dim slice —
-    * the frozen `pq_refined_cb` row set. Slice values are floored means
-    * of int8 coordinates, so they stay byte-representable. */
-  final case class TrainedCodewordLit(sub: Int, cwId: Long,
-      cs: Array[Byte])
+  /** Rule centroids ([[graft.operators.Quantizer.Rule]]), scored by
+    * cosine over the double-cast vector. */
+  final case class RuleCells(prefix: String, cids: Array[Long],
+      cemb: Array[Array[Double]], cnorm: Array[Double]) extends GateCells {
+    private[streaming] def home(emb: Array[Double], norm: Double,
+        q8: Array[Byte]): Long = {
+      // left-to-right dot fold and (ccos desc, cid asc) tie-break — the
+      // batch path's exact arithmetic (vec_dot is the same fold)
+      var best = 0
+      var bestCos = Double.NegativeInfinity
+      var c = 0
+      while (c < cids.length) {
+        val ce = cemb(c)
+        val n = math.min(emb.length, ce.length)
+        var d = 0.0
+        var j = 0
+        while (j < n) { d += emb(j) * ce(j); j += 1 }
+        val cos = d / (norm * cnorm(c))
+        // strict >: ties keep the earlier (smaller) cid — sorted
+        if (cos > bestCos) { bestCos = cos; best = c }
+        c += 1
+      }
+      cids(best)
+    }
+  }
 
-  /** Load the staged frozen TRAINED PQ codebook for
-    * [[semDedupGateCodedTrained]] plus its VALUE digest (the
-    * `cbDigest` the verdicts stamp and the staged
-    * `pq_refined_codes@…+frz<digest>` key carries — one definition,
-    * [[graft.operators.SimilarityQueries.pqValueDigestOf]], so a
-    * re-TRAINING moves the staged codes and the stream's stamp in
-    * lockstep; an id digest could not see values moving under stable
-    * cw_ids). */
-  def frozenPqRefinedCodewordLits(spark: org.apache.spark.sql.SparkSession,
-      dir: String, cfg: graft.operators.PqConfig)
-      : (Seq[TrainedCodewordLit], String) = {
-    require(cfg.frozen, "semDedupGateCodedTrained needs a FROZEN trained " +
-      "codebook: unfrozen trainings move with every append, so streamed " +
-      "codes could never join the staged codes table")
-    val rows = graft.operators.SimilarityQueries
-      .frozenTrainedCodebook(spark, dir, graft.operators.Codebook.Trained(cfg))
-      .select("off", "cw_id", "cs").collect()
-      .map(r => (r.getLong(0), r.getLong(1),
-        r.getSeq[Double](2).map(_.toLong)))
-      .sortBy(t => (t._1, t._2)).toSeq
-    val digest = graft.operators.SimilarityQueries.pqValueDigestOf(rows)
+  /** Lloyd-refined centroids ([[graft.operators.Quantizer.Trained]]):
+    * int8-domain values plus the precomputed self-dot `cc` the
+    * d2 = cc − 2·v·c assignment reads. */
+  final case class TrainedCells(prefix: String, cids: Array[Long],
+      c8: Array[Array[Long]], cc: Array[Long]) extends GateCells {
+    private[streaming] def home(emb: Array[Double], norm: Double,
+        q8: Array[Byte]): Long = {
+      // the batch l2Assign's exact integer rule: argmin of
+      // d2 = c·c − 2·v·c over the int8 domain, strict <: ties keep the
+      // earlier (smaller) cid, matching the batch (d2 asc, cid asc)
+      // window order. Long arithmetic over the same integral values
+      // vec_dot folds in doubles — products ≤ ~2^43, both exact,
+      // identical results.
+      var bi = 0
+      var bd = Long.MaxValue
+      var c = 0
+      while (c < cids.length) {
+        val cv = c8(c)
+        val n = math.min(q8.length, cv.length)
+        var dot = 0L
+        var j = 0
+        while (j < n) { dot += q8(j).toLong * cv(j); j += 1 }
+        val d2 = cc(c) - 2L * dot
+        if (d2 < bd) { bd = d2; bi = c }
+        c += 1
+      }
+      cids(bi)
+    }
+  }
+
+  /** A frozen PQ codebook collected into the gate's closure, in ONE
+    * layout for both codebook kinds: `slices(s)` is subspace s's
+    * (cwId, 8-byte slice) pairs, cwId ascending — the rule codebook's
+    * full-vector codewords are pre-sliced on the driver. Bounded by
+    * `PqConfig.maxCodewords` under a capped config. `digest` is
+    * [[graft.operators.Codebook.digest]], the value the staged
+    * `…_codes@…+frz<digest>` key carries; the coded gate stamps it on
+    * every verdict as `cbDigest`. */
+  final case class GateCodebook(digest: String,
+      slices: Array[Array[(Long, Array[Byte])]])
+
+  /** A frozen semantic-gate index: the cells, plus the codebook the coded
+    * gate encodes against when one was loaded. */
+  final case class GateIndex(cells: GateCells,
+      codebook: Option[GateCodebook])
+
+  /** Load a frozen gate index: one bounded driver-side collect of the
+    * staged frozen centroids and, given a [[graft.operators.PqConfig]],
+    * of the frozen codebook of the SAME kind as the quantizer (rule cells
+    * encode rule codewords, trained cells trained ones — the pairing
+    * `Codebook.residual` uses, here over the raw vectors). Both must be
+    * frozen: rule-derived or unfrozen-trained centroids move with every
+    * append, so keeper state keyed on their cells would compare vectors
+    * that were never cell-mates, and codes against a moving codebook
+    * could never join the staged codes table. */
+  def frozenGateIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
+      q: graft.operators.Quantizer,
+      pq: Option[graft.operators.PqConfig]): GateIndex = {
+    import graft.operators.{Codebook, Quantizer}
+    require(q.cfg.frozen, "the semantic gate needs a FROZEN quantizer: " +
+      "unfrozen centroids move with every append, so cell-registry " +
+      "state keyed on them is meaningless across appends")
+    val prefix = StateSchemas.semGateCellPrefix(spark, dir, q)
+    val rows = q.centroids(spark, dir).collect().sortBy(_.getLong(0))
+    val cids = rows.map(_.getLong(0))
+    require(cids.nonEmpty, "the frozen centroid table is empty")
+    val (cells, book) = q match {
+      case _: Quantizer.Rule =>
+        (RuleCells(prefix, cids, rows.map(_.getSeq[Double](1).toArray),
+          rows.map(_.getDouble(2))), pq.map(Codebook.Rule(_)))
+      case _: Quantizer.Trained =>
+        val c8 = rows.map(_.getSeq[Double](1).map(_.toLong).toArray)
+        (TrainedCells(prefix, cids, c8, c8.map(_.map(x => x * x).sum)),
+          pq.map(Codebook.Trained(_)))
+    }
+    val subs = graft.operators.SimilarityQueries.PqSubs
     val width = graft.operators.SimilarityQueries.PqWidth
-    (rows.map { case (off, cw, cs) =>
-      TrainedCodewordLit(((off - 1) / width).toInt, cw,
-        cs.map(_.toByte).toArray)
-    }, digest)
-  }
-
-  /** A frozen-quantizer centroid shipped into the stream's closure —
-    * nlist rows by config (a CONSTANT under `IvfConfig.maxCentroids`,
-    * r16 ask #1), the same bound that makes the set broadcastable on
-    * the batch side. */
-  final case class CentroidLit(cid: Long, cemb: Array[Double],
-      cnorm: Double)
-
-  /** A TRAINED (Lloyd-refined) frozen centroid shipped into the
-    * stream's closure — int8-domain values + the precomputed self-dot
-    * the d2 = cc − 2·v·c assignment reads; nlist rows by config, same
-    * bound class as [[CentroidLit]]. */
-  final case class TrainedCentroidLit(cid: Long, c8: Array[Long], cc: Long)
-
-  /** Load the staged frozen TRAINED quantizer for [[semDedupGateTrained]]
-    * plus its VALUE digest (the state-keyspace component): one bounded
-    * driver-side collect. Requires a frozen config for the same reason
-    * as the rule loader — and doubly so here: a re-TRAINING keeps the
-    * seed ids but moves the values, which is why the digest covers the
-    * components (one definition with the trained family's stage keys,
-    * [[graft.operators.SimilarityQueries.valueDigestOf]]). */
-  def frozenTrainedCentroidLits(spark: org.apache.spark.sql.SparkSession,
-      dir: String, cfg: graft.operators.IvfConfig)
-      : (Seq[TrainedCentroidLit], String) = {
-    require(cfg.frozen, "semDedupGateTrained needs a FROZEN trained " +
-      "quantizer: unfrozen trainings move with every append, so keeper " +
-      "state keyed on them is meaningless across drops")
-    val rows = graft.operators.SimilarityQueries
-      .frozenRefinedTable(spark, dir, cfg)
-      .select("cid", "c8").collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).map(_.toLong)))
-      .sortBy(_._1).toSeq
-    val digest = graft.operators.SimilarityQueries.valueDigestOf(rows)
-    (rows.map { case (cid, c8) =>
-      TrainedCentroidLit(cid, c8.toArray, c8.map(x => x * x).sum)
-    }, digest)
-  }
-
-  /** Load the staged frozen coarse quantizer for [[semDedupGate]]: one
-    * bounded driver-side collect (nlist rows by config). Requires a
-    * frozen [[graft.operators.IvfConfig]] — under the default
-    * rule-over-current-corpus mode the centroid SET moves on every
-    * append, and a cell registry keyed on moving cell ids would compare
-    * vectors that were never cell-mates. */
-  def frozenCentroidLits(spark: org.apache.spark.sql.SparkSession,
-      dir: String, cfg: graft.operators.IvfConfig): Seq[CentroidLit] = {
-    require(cfg.frozen, "semDedupGate needs a FROZEN quantizer (ask #1): " +
-      "rule-derived centroids drift under growth, so cell-registry state " +
-      "keyed on them is meaningless across appends")
-    graft.operators.SimilarityQueries.frozenCentroids(spark, dir, cfg)
-      .collect()
-      .map(r => CentroidLit(r.getLong(0),
-        r.getSeq[Double](1).toArray, r.getDouble(2)))
-      .sortBy(_.cid).toSeq
+    GateIndex(cells, book.map { cb =>
+      require(cb.frozen, "the coded semantic gate needs a FROZEN " +
+        "codebook: codes against a moving codebook would not be " +
+        "index-ready rows of the staged codes table")
+      // (subspace, cwId, slice): the rule book's rows are full codewords
+      // (cw_id, cv), the trained book's per-subspace slices (off, cw_id, cs)
+      val sliced = cb.book(spark, dir).collect().toSeq.flatMap { r =>
+        cb match {
+          case _: Codebook.Rule =>
+            val cv = r.getSeq[Double](1).map(_.toByte).toArray
+            (0 until subs).map(s =>
+              (s, r.getLong(0), cv.slice(s * width, (s + 1) * width)))
+          case _: Codebook.Trained =>
+            Seq((((r.getLong(0) - 1) / width).toInt, r.getLong(1),
+              r.getSeq[Double](2).map(_.toByte).toArray))
+        }
+      }
+      require(sliced.nonEmpty, "the frozen codebook is empty")
+      GateCodebook(cb.digest(spark, dir), Array.tabulate(subs)(s =>
+        sliced.filter(_._1 == s).map(t => (t._2, t._3)).sortBy(_._1).toArray))
+    })
   }
 
   /** One vector, assigned to its home cell and quantized — the gate's
@@ -942,161 +974,68 @@ object CurationStream {
   }
 
   /** The streaming semantic near-dup gate: assign each incoming vector
-    * to its frozen home cell (map-only — the centroid literal set rides
-    * the closure), quantize exactly as the batch `q8_embeddings` stage
+    * to its frozen home cell (map-only — the [[GateCells]] ride the
+    * closure), quantize exactly as the batch `q8_embeddings` stage
     * does, and consult the per-cell keeper registry. Emits a verdict for
     * EVERY in-gate vector — `kept` or dropped-as-dup-of — so a consumer
     * can both filter the keep stream and audit the drops (the batch
-    * `dedup_semantic` output shape). Scale: one narrow map, then a
-    * shuffle on the cell key (uniform under a healthy quantizer), state
-    * bounded by crawl rate × horizon via event-time timers. */
-  def semDedupGate(vecs: Dataset[VecIn], centroids: Seq[CentroidLit],
+    * `dedup_semantic` output shape). Either quantizer kind: trained
+    * cells (`dedup_semantic_refined`'s geometry) catch more true
+    * duplicates at the same floor, because SemDeDup only compares
+    * cell-mates and Lloyd stops a straddling rule centroid splitting a
+    * duplicate pair. Scale: one narrow map, then a shuffle on the cell
+    * key (uniform under a healthy quantizer), state bounded by crawl
+    * rate × horizon via event-time timers. */
+  def semDedupGate(vecs: Dataset[VecIn], cells: GateCells,
       horizonMs: Long = 3600000L,
       dotFloor: Long = graft.operators.SemDedupConfig.Default.dotFloor)
       : Dataset[VecVerdict] = {
     import vecs.sparkSession.implicits._
-    gateRun[VecVerdict](vecs, centroids, horizonMs, dotFloor, Array.empty,
+    gateRun[VecVerdict](vecs, cells, None, horizonMs, dotFloor,
       (p, kept, dup) => VecVerdict(p.vecId, p.cid, p.fetchTs, kept, dup))
   }
 
   /** [[semDedupGate]] emitting INDEX-READY rows (r16 verdict ask #8):
     * each verdict carries the vector's PQ codes against the frozen
-    * codebook — the same per-row transform the batch `pq_codes` stage
-    * runs (exact integer L2 over pre-sliced subspaces, ties to the
-    * smaller codeword id), so a streaming intake can feed both the
+    * codebook — the same per-row transform the batch codes stage of that
+    * codebook runs (exact integer L2 over pre-sliced subspaces, ties to
+    * the smaller codeword id), so a streaming intake can feed both the
     * canonical sink and the ANN index without a second batch encode
-    * pass. Byte-identical to the batch codes, spec-pinned. */
-  def semDedupGateCoded(vecs: Dataset[VecIn],
-      centroids: Seq[CentroidLit], codebook: Seq[CodewordLit],
-      horizonMs: Long = 3600000L,
+    * pass. Byte-identical to the batch codes, spec-pinned; the decisions
+    * are the plain gate's. */
+  def semDedupGateCoded(vecs: Dataset[VecIn], cells: GateCells,
+      codebook: GateCodebook, horizonMs: Long = 3600000L,
       dotFloor: Long = graft.operators.SemDedupConfig.Default.dotFloor)
       : Dataset[VecVerdictCoded] = {
     import vecs.sparkSession.implicits._
-    require(codebook.nonEmpty, "semDedupGateCoded needs a non-empty " +
-      "frozen codebook (frozenPqCodewordLits)")
-    // the codebook's identity, stamped on every verdict: same digest
-    // definition (and so the same VALUE) as the staged pq_codes key's
-    // +frz component — computed once on the driver, rides the closure
-    val cbDigest = graft.operators.SimilarityQueries.idSetDigest(
-      codebook.map(_.cwId))
-    gateRun[VecVerdictCoded](vecs, centroids, horizonMs, dotFloor,
-      codebook.sortBy(_.cwId).toArray,
+    val cbDigest = codebook.digest
+    gateRun[VecVerdictCoded](vecs, cells, Some(codebook), horizonMs,
+      dotFloor,
       (p, kept, dup) =>
         VecVerdictCoded(p.vecId, p.cid, p.fetchTs, kept, dup, p.codes,
           cbDigest, p.rrv))
   }
 
-  /** [[semDedupGate]] over the TRAINED quantizer (r18): cells come from
-    * the frozen Lloyd-refined centroid table — the same exact-integer
-    * d2 = c·c − 2·v·c assignment (tie to the smaller cid) the batch
-    * [[graft.operators.Quantizer.Trained]] cells run, so the
-    * streamed home cell can never differ from the staged one. The
-    * keeper-registry semantics, horizon, and dot floor are the shared
-    * gate core's, unchanged; what moves is the GEOMETRY — and the batch
-    * side measured why that matters (+5% true semantic duplicates
-    * caught at the same floor on the uniform sf corpus: SemDeDup only
-    * compares cell-mates, and trained cells stop splitting duplicate
-    * pairs across a straddling rule centroid). State keys carry the
-    * trained table's VALUE digest, so a re-training moves the stream's
-    * keyspace in lockstep with the staged family. */
-  def semDedupGateTrained(vecs: Dataset[VecIn],
-      trained: Seq[TrainedCentroidLit], trainedDigest: String,
-      horizonMs: Long = 3600000L,
-      dotFloor: Long = graft.operators.SemDedupConfig.Default.dotFloor)
-      : Dataset[VecVerdict] = {
-    import vecs.sparkSession.implicits._
-    require(trained.nonEmpty, "semDedupGateTrained needs a non-empty " +
-      "frozen trained centroid set (frozenTrainedCentroidLits)")
-    require(trainedDigest.nonEmpty, "semDedupGateTrained needs the " +
-      "trained table's value digest (frozenTrainedCentroidLits returns it)")
-    gateRun[VecVerdict](vecs, Seq.empty, horizonMs, dotFloor, Array.empty,
-      (p, kept, dup) => VecVerdict(p.vecId, p.cid, p.fetchTs, kept, dup),
-      trained = trained.sortBy(_.cid).toArray,
-      trainedDigest = trainedDigest)
-  }
-
-  /** The FULLY-TRAINED coded gate (r19, r18 verdict ask #1's streaming
-    * leg): [[semDedupGateTrained]]'s trained cell assignment composed
-    * with PQ codes against the TRAINED per-subspace codebook — the same
-    * per-(vector, subspace) exact-integer encode the batch
-    * `pq_refined_codes` stage runs, byte-identical by construction
-    * (spec-pinned). Verdicts stamp the trained codebook's VALUE digest
-    * as `cbDigest` (the staged `pq_refined_codes@…+frz<digest>` key's
-    * component), so a re-training is detectable per row and streamed
-    * codes route to the staged table whose key matches. `rrv` is the
-    * Σ of winning dists against the TRAINED codebook — the residual
-    * ceiling consistent with these codes (NOT the rule `pq_resid`
-    * value; the digest says which family the row belongs to). */
-  def semDedupGateCodedTrained(vecs: Dataset[VecIn],
-      trained: Seq[TrainedCentroidLit], trainedDigest: String,
-      codebook: Seq[TrainedCodewordLit], cbDigest: String,
-      horizonMs: Long = 3600000L,
-      dotFloor: Long = graft.operators.SemDedupConfig.Default.dotFloor)
-      : Dataset[VecVerdictCoded] = {
-    import vecs.sparkSession.implicits._
-    require(trained.nonEmpty, "semDedupGateCodedTrained needs a " +
-      "non-empty frozen trained centroid set (frozenTrainedCentroidLits)")
-    require(trainedDigest.nonEmpty && cbDigest.nonEmpty,
-      "semDedupGateCodedTrained needs both value digests " +
-        "(frozenTrainedCentroidLits / frozenPqRefinedCodewordLits)")
-    require(codebook.nonEmpty, "semDedupGateCodedTrained needs a " +
-      "non-empty frozen trained codebook (frozenPqRefinedCodewordLits)")
-    gateRun[VecVerdictCoded](vecs, Seq.empty, horizonMs, dotFloor,
-      Array.empty,
-      (p, kept, dup) =>
-        VecVerdictCoded(p.vecId, p.cid, p.fetchTs, kept, dup, p.codes,
-          cbDigest, p.rrv),
-      trained = trained.sortBy(_.cid).toArray,
-      trainedDigest = trainedDigest,
-      pqTrained = codebook.toArray)
-  }
-
   /** The shared gate core: assign → quantize → (optionally) PQ-encode →
     * per-cell keeper registry, emitting the caller's output row DIRECTLY
-    * from the processor (no post-operator projection pass). `pq` empty =
-    * no encode (the plain gate's shape, codes ride the shared empty
+    * from the processor (no post-operator projection pass). No codebook
+    * = no encode (the plain gate's shape, codes ride the shared empty
     * array). */
   private def gateRun[O: org.apache.spark.sql.Encoder](
-      vecs: Dataset[VecIn],
-      centroids: Seq[CentroidLit], horizonMs: Long, dotFloor: Long,
-      pq: Array[CodewordLit],
-      mk: (CellProbe, Boolean, Long) => O,
-      trained: Array[TrainedCentroidLit] = Array.empty,
-      trainedDigest: String = "",
-      pqTrained: Array[TrainedCodewordLit] = Array.empty): Dataset[O] = {
+      vecs: Dataset[VecIn], cells: GateCells,
+      codebook: Option[GateCodebook], horizonMs: Long, dotFloor: Long,
+      mk: (CellProbe, Boolean, Long) => O): Dataset[O] = {
     import vecs.sparkSession.implicits._
     require(horizonMs > 0, s"horizonMs must be positive: $horizonMs")
     require(dotFloor > 0, s"dotFloor must be positive: $dotFloor")
-    require(centroids.nonEmpty || trained.nonEmpty,
-      "semDedupGate needs a non-empty frozen centroid set " +
-        "(frozenCentroidLits / frozenTrainedCentroidLits)")
-    require(pq.isEmpty || pqTrained.isEmpty,
-      "at most one codebook form: rule full-vector or trained slices")
-    val cents = centroids.sortBy(_.cid).toArray
-    val prefix =
-      if (trained.nonEmpty)
-        StateSchemas.semGateTrainedCellPrefix(trainedDigest)
-      else StateSchemas.semGateCellPrefix(cents.map(_.cid).toSeq)
+    val prefix = cells.prefix
     val subs = graft.operators.SimilarityQueries.PqSubs
     val width = graft.operators.SimilarityQueries.PqWidth
-    // ONE per-subspace codeword-slice layout for both codebook forms
-    // (r19): subCw(s) = (cwId asc)-sorted slices of subspace s. The
-    // rule codebook's full-vector rows pre-slice here ON THE DRIVER —
-    // the encode loop below then reads slices uniformly, with the
-    // arithmetic (exact integer slice L2, (dist asc, cwId asc) winner)
-    // unchanged from the historical inline form.
     val subCw: Array[Array[(Long, Array[Byte])]] =
-      if (pqTrained.nonEmpty)
-        Array.tabulate(subs)(s => pqTrained.filter(_.sub == s)
-          .map(c => (c.cwId, c.cs)).sortBy(_._1))
-      else if (pq.nonEmpty)
-        Array.tabulate(subs)(s => pq.sortBy(_.cwId)
-          .map(c => (c.cwId, c.cv.slice(s * width, (s + 1) * width))))
-      else Array.empty
+      codebook.fold(Array.empty[Array[(Long, Array[Byte])]])(_.slices)
     val probes = vecs.map { v =>
-      // double-cast, left-to-right norm fold, (ccos desc, cid asc)
-      // tie-break — each the batch path's exact arithmetic (vec_dot is
-      // the same left-to-right fold), so the home cell can never differ
+      // double-cast and left-to-right norm fold — the batch path's exact
+      // arithmetic, so the home cell can never differ
       val emb = new Array[Double](v.embedding.length)
       var ss = 0.0
       var i = 0
@@ -1113,45 +1052,7 @@ object CurationStream {
         q8(i) = math.max(-127.0, math.min(127.0, q)).toByte
         i += 1
       }
-      val cid =
-        if (trained.nonEmpty) {
-          // the TRAINED assignment — the batch l2Assign's exact integer
-          // rule: argmin of d2 = c·c − 2·v·c over the int8 domain,
-          // strict <: ties keep the earlier (smaller) cid, matching the
-          // batch (d2 asc, cid asc) window order. Long arithmetic over
-          // the same integral values vec_dot folds in doubles —
-          // products ≤ ~2^43, both exact, identical results.
-          var bi = 0
-          var bd = Long.MaxValue
-          var c = 0
-          while (c < trained.length) {
-            val cv = trained(c).c8
-            val n = math.min(q8.length, cv.length)
-            var dot = 0L
-            var j = 0
-            while (j < n) { dot += q8(j).toLong * cv(j); j += 1 }
-            val d2 = trained(c).cc - 2L * dot
-            if (d2 < bd) { bd = d2; bi = c }
-            c += 1
-          }
-          trained(bi).cid
-        } else {
-          var best = 0
-          var bestCos = Double.NegativeInfinity
-          var c = 0
-          while (c < cents.length) {
-            val ce = cents(c).cemb
-            val n = math.min(emb.length, ce.length)
-            var d = 0.0
-            var j = 0
-            while (j < n) { d += emb(j) * ce(j); j += 1 }
-            val cos = d / (norm * cents(c).cnorm)
-            // strict >: ties keep the earlier (smaller) cid — sorted
-            if (cos > bestCos) { bestCos = cos; best = c }
-            c += 1
-          }
-          cents(best).cid
-        }
+      val cid = cells.home(emb, norm, q8)
       // PQ encode against the frozen codebook — the batch
       // pqEncodeWithDist's exact arithmetic per (vector, subspace):
       // integer L2 via ||a-b||^2 = a.a + b.b - 2 a.b over the subspace

@@ -1,7 +1,8 @@
 package graft.streaming
 
 import graft.model.TradeOut
-import org.apache.spark.sql.Column
+import graft.operators.Quantizer
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions.{col, concat_ws, lit, unix_micros, when}
 
@@ -95,35 +96,37 @@ object StateSchemas {
     * introduction. */
   val CurationCanonicalStateVersion: Int = 1
 
-  /** Semantic-gate cell registry key (`CurationStream.semDedupGate`).
-    * v1 (r16). The key prefixes a digest of the FROZEN centroid id set —
-    * the same discipline as the banding-scheme prefix above: a restart
-    * under a re-founded quantizer (drift refusal, IvfConfig change)
+  /** Semantic-gate cell registry key (`CurationStream.semDedupGate` and
+    * `semDedupGateCoded`, over either quantizer kind). v1 (r16). The key
+    * prefixes [[semGateCellPrefix]] of the FROZEN quantizer — the same
+    * discipline as the banding-scheme prefix above: a restart under a
+    * re-founded quantizer (drift refusal, IvfConfig change, re-training)
     * probes a disjoint keyspace instead of comparing vectors that were
     * cell-mates only under the OLD cells; stale entries evict via their
     * event-time timers within a horizon. `horizonMs`/`dotFloor` stay out
     * of the key — they shift verdicts, not key identity (same reasoning
-    * as horizonMs above). r17's `semDedupGateCoded` (streamed PQ codes)
-    * and r18's `cbDigest` verdict column leave the STATE schema — and
-    * this version — unchanged: codes and digest ride the operator's
-    * input/output rows only, never the keeper registry, so existing
-    * checkpoints restore under either gate variant — pinned by
+    * as horizonMs above). Streamed PQ codes (r17), the `cbDigest` and
+    * `rrv` verdict columns (r18) and the trained cells (r18) leave the
+    * STATE schema — and this version — unchanged: codes and digests ride
+    * the operator's input/output rows only, never the keeper registry,
+    * so existing checkpoints restore under either gate — pinned by
     * SemDedupGateSpec's cross-shape restore (a checkpoint written by a
     * replica of the PRE-codes probe shape restores under today's gate,
-    * with the pre-restart keepers still deciding). */
+    * with the pre-restart keepers still deciding). The prefix bytes of
+    * all four gate combinations are pinned in `StageKeyPinSpec`. */
   val SemGateCellKeyVersion: Int = 1
-  /** Delegates to the ONE id-set digest the frozen-family stage keys
-    * use — shared code, so the stream's keyspace cannot drift from the
-    * staged family's names on a re-founding. */
-  def semGateCellPrefix(centroidIds: Seq[Long]): String =
-    graft.operators.SimilarityQueries.idSetDigest(centroidIds)
 
-  /** Keyspace prefix for the TRAINED gate (r18): the trained table's
-    * VALUE digest, 't'-tagged so it can never collide with a rule
-    * lineage's id digest of the same hex — a re-TRAINING keeps the seed
-    * ids but moves the values, so an id digest would silently leave two
-    * trainings' keepers comparable. Same digest definition (and VALUE)
-    * as the trained family's `+frz` stage-key component. */
-  def semGateTrainedCellPrefix(valueDigest: String): String =
-    "t" + valueDigest
+  /** The cell-key prefix of a frozen quantizer: its
+    * [[graft.operators.Quantizer.digest]] — the value its frozen stage
+    * names carry as `+frz<digest>`, so the stream's keyspace moves in
+    * lockstep with the staged family on a re-founding. Rule: the live
+    * centroid id-set digest. Trained: the value digest, 't'-tagged so it
+    * can never collide with a rule lineage's id digest of the same hex —
+    * a re-TRAINING keeps the seed ids but moves the values, so an id
+    * digest would silently leave two trainings' keepers comparable. */
+  def semGateCellPrefix(spark: SparkSession, dir: String,
+      q: Quantizer): String = q match {
+    case _: Quantizer.Rule => q.digest(spark, dir)
+    case _: Quantizer.Trained => "t" + q.digest(spark, dir)
+  }
 }

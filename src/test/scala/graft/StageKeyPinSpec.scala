@@ -215,4 +215,28 @@ class StageKeyPinSpec extends AnyFunSuite {
     val bad = mismatches(FrozenRungs, FrozenStages)
     assert(bad.isEmpty, bad.mkString("\n"))
   }
+
+  /** The streaming semantic gate's checkpoint keyspace
+    * (`StateSchemas.SemGateCellKeyVersion` 1): the cell-key prefix and
+    * the verdicts' `cbDigest` of each quantizer × codebook combination,
+    * as literals — a change here strands deployed gate checkpoints. */
+  private val GateKeys: Seq[(String, Quantizer, Option[Codebook],
+      (String, Option[String]))] = Seq(
+    ("rule", ruleQ, None, ("8f224b5a", None)),
+    ("rule+codes", ruleQ, Some(ruleCb), ("8f224b5a", Some("f9e66961"))),
+    ("trained", trainedQ, None, ("t5a97dfa3", None)),
+    ("trained+codes", trainedQ, Some(trainedCb),
+      ("t5a97dfa3", Some("5a0dc88c"))))
+
+  test("frozen semantic-gate indexes keep their cell-key prefixes and codebook digests") {
+    for ((name, q, cb, pinned) <- GateKeys) {
+      Staged.reset(spark)
+      val idx = graft.streaming.CurationStream.frozenGateIndex(spark, sf, q,
+        cb.map(_.cfg))
+      assert((idx.cells.prefix, idx.codebook.map(_.digest)) === pinned, name)
+      val tag = if (q.isInstanceOf[Quantizer.Trained]) "t" else ""
+      assert(idx.cells.prefix === tag + q.digest(spark, sf), name)
+      assert(idx.codebook.map(_.digest) === cb.map(_.digest(spark, sf)), name)
+    }
+  }
 }

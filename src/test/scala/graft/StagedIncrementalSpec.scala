@@ -686,7 +686,8 @@ class StagedIncrementalSpec extends AnyFunSuite {
     // and the random-pair band (std ~11k): only engineered copies match
     val sem = SemDedupConfig(dotFloor = 60000L)
     def drops(c: SemDedupConfig = sem): Set[(Long, Long, Long)] =
-      SimilarityQueries.semanticDedupWith(spark, dir, c, cfg).collect()
+      SimilarityQueries.semanticDedupWith(spark, dir, c,
+        operators.Quantizer.Rule(cfg)).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     def dropModes(c: SemDedupConfig = sem): Seq[String] =
       Staged.buildLogSnapshot.collect {
@@ -807,7 +808,8 @@ class StagedIncrementalSpec extends AnyFunSuite {
       frozen = true)
     val sem = SemDedupConfig(dotFloor = 60000L, hotCellThreshold = 4L)
     def drops(): Set[(Long, Long, Long)] =
-      SimilarityQueries.semanticDedupWith(spark, dir, sem, ivfCfg)
+      SimilarityQueries.semanticDedupWith(spark, dir, sem,
+        operators.Quantizer.Rule(ivfCfg))
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
         .toSet
     def dropModes(): Seq[String] =

@@ -100,7 +100,7 @@ class LiveIngestE2ESpec extends AnyFunSuite {
     } finally server.close()
   }
 
-  test("live ingest wiring (flatMapGroupsWithState): websocket → decode → engine → parquet, across a reconnect") {
+  test("live ingest wiring: websocket → decode → engine → parquet, across a reconnect") {
     val server = new WsTestServer
     val out = Files.createTempDirectory("live_ingest_out").toString
     val ckpt = Files.createTempDirectory("live_ingest_ckpt").toString

@@ -120,6 +120,12 @@ class SemDedupGateSpec extends AnyFunSuite {
   private val cfg = IvfConfig(centroidEvery = 10, centroidKey = 7,
     frozen = true)
 
+  private def cellsOf(dir: String, q: Quantizer): CurationStream.GateCells =
+    CurationStream.frozenGateIndex(spark, dir, q, None).cells
+
+  private def cwIds(cb: CurationStream.GateCodebook): Seq[Long] =
+    cb.slices.head.map(_._1).toSeq
+
   private def freshCorpus(): String = {
     val dir = java.nio.file.Files.createTempDirectory("semgate").toString
     // 40 base vectors plus re-crawled copies: 50/51/52 copy 5/12/23
@@ -137,10 +143,11 @@ class SemDedupGateSpec extends AnyFunSuite {
     val dir = freshCorpus()
     Staged.reset(spark)
     val batch = SimilarityQueries
-      .semanticDedupWith(spark, dir, SemDedupConfig.Default, cfg)
+      .semanticDedupWith(spark, dir, SemDedupConfig.Default,
+        Quantizer.Rule(cfg))
       .collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    val cents = CurationStream.frozenCentroidLits(spark, dir, cfg)
+    val cents = cellsOf(dir, Quantizer.Rule(cfg))
     withRocksDb {
     val input = MemoryStream[CurationStream.VecIn]
     val q = CurationStream.semDedupGate(input.toDS(), cents)
@@ -198,12 +205,12 @@ class SemDedupGateSpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2)))
       .toMap
     val homeMap = home.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val (lits, digest) =
-      CurationStream.frozenTrainedCentroidLits(spark, dir, cfg)
+    val lits = cellsOf(dir, Quantizer.Trained(cfg))
+    val digest = Quantizer.Trained(cfg).digest(spark, dir)
     assert(digest.length === 8, s"value digest must be 8 hex chars: $digest")
     withRocksDb {
     val input = MemoryStream[CurationStream.VecIn]
-    val q = CurationStream.semDedupGateTrained(input.toDS(), lits, digest)
+    val q = CurationStream.semDedupGate(input.toDS(), lits)
       .writeStream.outputMode("append").format("memory")
       .queryName("semgate_trained").start()
     try {
@@ -240,7 +247,7 @@ class SemDedupGateSpec extends AnyFunSuite {
   test("semantic gate horizon: a paraphrase re-crawl AFTER the horizon re-registers and is kept") {
     val dir = freshCorpus()
     Staged.reset(spark)
-    val cents = CurationStream.frozenCentroidLits(spark, dir, cfg)
+    val cents = cellsOf(dir, Quantizer.Rule(cfg))
     withRocksDb {
     val input = MemoryStream[CurationStream.VecIn]
     val q = CurationStream.semDedupGate(input.toDS(), cents,
@@ -281,7 +288,7 @@ class SemDedupGateSpec extends AnyFunSuite {
     // prefix dot of an identical first half would wrongly drop)
     val dir = freshCorpus()
     Staged.reset(spark)
-    val cents = CurationStream.frozenCentroidLits(spark, dir, cfg)
+    val cents = cellsOf(dir, Quantizer.Rule(cfg))
     withRocksDb {
       val input = MemoryStream[CurationStream.VecIn]
       val q = CurationStream.semDedupGate(input.toDS(), cents)
@@ -328,15 +335,15 @@ class SemDedupGateSpec extends AnyFunSuite {
     def centModes: Seq[String] = Staged.buildLogSnapshot.collect {
       case (s, m) if s == centStage => m }
     try {
-      val cents1 = CurationStream.frozenCentroidLits(spark, dir, cfgF)
-      assert(cents1.map(_.cid).toSet === Set(7L, 17L, 27L, 37L))
+      val cents1 = cellsOf(dir, Quantizer.Rule(cfgF))
+      assert(cents1.cids.toSet === Set(7L, 17L, 27L, 37L))
       withRocksDb {
         val ckpt =
           java.nio.file.Files.createTempDirectory("sg_rf_ckpt").toString
         val outDir =
           java.nio.file.Files.createTempDirectory("sg_rf_out").toString
         def start(input: MemoryStream[CurationStream.VecIn],
-            cents: Seq[CurationStream.CentroidLit]) =
+            cents: CurationStream.GateCells) =
           CurationStream.semDedupGate(input.toDS(), cents).writeStream
             .outputMode("append").format("parquet")
             .option("path", outDir).option("checkpointLocation", ckpt)
@@ -361,13 +368,12 @@ class SemDedupGateSpec extends AnyFunSuite {
           .write.mode("append").parquet(s"$dir/embeddings.parquet")
         Staged.reset(spark)
         Staged.clearBuildLog()
-        val cents2 = CurationStream.frozenCentroidLits(spark, dir, cfgF)
+        val cents2 = cellsOf(dir, Quantizer.Rule(cfgF))
         assert(centModes === Seq("delta-refused", "cold"),
           s"the drop must refuse the frozen delta and re-found: " +
             s"${Staged.buildLogSnapshot}")
-        assert(cents2.map(_.cid).toSet === Set(7L, 17L, 27L, 37L, 107L))
-        assert(StateSchemas.semGateCellPrefix(cents1.map(_.cid)) !==
-          StateSchemas.semGateCellPrefix(cents2.map(_.cid)),
+        assert(cents2.cids.toSet === Set(7L, 17L, 27L, 37L, 107L))
+        assert(cents1.prefix !== cents2.prefix,
           "a re-founding must move the stream's state-key prefix")
         // phase 2: restart FROM THE CHECKPOINT with the re-founded set.
         // Post-restart inputs: a twin of phase-1 keeper 1 (id 10, still
@@ -478,17 +484,17 @@ class SemDedupGateSpec extends AnyFunSuite {
     def centModes: Seq[String] = Staged.buildLogSnapshot.collect {
       case (s, m) if s == centsStage => m }
     try {
-      val (lits1, dig1) =
-        CurationStream.frozenTrainedCentroidLits(spark, dir, cfgF)
-      assert(lits1.map(_.cid).toSet === Set(7L, 17L, 27L))
+      val lits1 = cellsOf(dir, Quantizer.Trained(cfgF))
+      val dig1 = Quantizer.Trained(cfgF).digest(spark, dir)
+      assert(lits1.cids.toSet === Set(7L, 17L, 27L))
       withRocksDb {
         val ckpt =
           java.nio.file.Files.createTempDirectory("sgt_rf_ckpt").toString
         val outDir =
           java.nio.file.Files.createTempDirectory("sgt_rf_out").toString
         def start(input: MemoryStream[CurationStream.VecIn],
-            lits: Seq[CurationStream.TrainedCentroidLit], dig: String) =
-          CurationStream.semDedupGateTrained(input.toDS(), lits, dig)
+            lits: CurationStream.GateCells) =
+          CurationStream.semDedupGate(input.toDS(), lits)
             .writeStream.outputMode("append").format("parquet")
             .option("path", outDir).option("checkpointLocation", ckpt)
             .start()
@@ -497,7 +503,7 @@ class SemDedupGateSpec extends AnyFunSuite {
           CurationStream.VecIn(1L, cvec(3), ts("2024-05-01 10:00:00")),
           CurationStream.VecIn(2L, cvec(13), ts("2024-05-01 10:00:01")))
         val input1 = MemoryStream[CurationStream.VecIn]
-        val q1 = start(input1, lits1, dig1)
+        val q1 = start(input1, lits1)
         try {
           input1.addData(batch1: _*)
           q1.processAllAvailable()
@@ -512,16 +518,15 @@ class SemDedupGateSpec extends AnyFunSuite {
           .write.mode("append").parquet(s"$dir/embeddings.parquet")
         Staged.reset(spark)
         Staged.clearBuildLog()
-        val (lits2, dig2) =
-          CurationStream.frozenTrainedCentroidLits(spark, dir, cfgF)
+        val lits2 = cellsOf(dir, Quantizer.Trained(cfgF))
+        val dig2 = Quantizer.Trained(cfgF).digest(spark, dir)
         assert(centModes === Seq("delta-refused", "cold"),
           s"cluster D must refuse the coverage probe and re-train: " +
             s"${Staged.buildLogSnapshot}")
-        assert(lits2.map(_.cid).toSet === Set(7L, 17L, 27L, 1037L))
+        assert(lits2.cids.toSet === Set(7L, 17L, 27L, 1037L))
         assert(dig1 !== dig2,
           "a re-training must move the VALUE digest (ids alone would not)")
-        assert(StateSchemas.semGateTrainedCellPrefix(dig1) !==
-          StateSchemas.semGateTrainedCellPrefix(dig2))
+        assert(lits1.prefix !== lits2.prefix)
         // phase 2: restart from the checkpoint with the re-trained set;
         // post-restart decisions must equal a fresh replay — the old-
         // digest keepers are unreachable by construction
@@ -532,7 +537,7 @@ class SemDedupGateSpec extends AnyFunSuite {
           CurationStream.VecIn(12L, cvec(23), ts("2024-05-01 10:20:03")))
         val input2 = MemoryStream[CurationStream.VecIn]
         input2.addData(batch1: _*) // committed offsets — not reprocessed
-        val q2 = start(input2, lits2, dig2)
+        val q2 = start(input2, lits2)
         val (postRows, evictedRows) =
           try {
             input2.addData(post: _*)
@@ -558,8 +563,7 @@ class SemDedupGateSpec extends AnyFunSuite {
           .filter(v => post.map(_.vecId).contains(v.vecId))
           .map(v => v.vecId -> (v.cid, v.kept, v.dupOf)).toMap
         val input3 = MemoryStream[CurationStream.VecIn]
-        val q3 = CurationStream.semDedupGateTrained(input3.toDS(),
-            lits2, dig2)
+        val q3 = CurationStream.semDedupGate(input3.toDS(), lits2)
           .writeStream.outputMode("append").format("memory")
           .queryName("sgt_rf_fresh").start()
         val fresh =
@@ -590,9 +594,10 @@ class SemDedupGateSpec extends AnyFunSuite {
     val dir = freshCorpus()
     Staged.reset(spark)
     val pqCfg = PqConfig(cwEvery = 10, cwKey = 7, frozen = true)
-    val cents = CurationStream.frozenCentroidLits(spark, dir, cfg)
-    val cws = CurationStream.frozenPqCodewordLits(spark, dir, pqCfg)
-    assert(cws.map(_.cwId) === Seq(7L, 17L, 27L, 37L))
+    val idx = CurationStream.frozenGateIndex(spark, dir, Quantizer.Rule(cfg),
+      Some(pqCfg))
+    val (cents, cws) = (idx.cells, idx.codebook.get)
+    assert(cwIds(cws) === Seq(7L, 17L, 27L, 37L))
     // the batch index rows the stream must reproduce: (vec_id, off, code)
     val batch = SimilarityQueries.pqCodes(spark, dir, Codebook.Rule(pqCfg)).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
@@ -693,9 +698,10 @@ class SemDedupGateSpec extends AnyFunSuite {
       // corpus under a capped codebook is a different live set — a
       // restarted intake stamps the new identity, so a consumer folding
       // streamed rows into an index can never mix code spaces silently
-      val cws2 = CurationStream.frozenPqCodewordLits(spark, dir,
-        pqCfg.copy(maxCodewords = Some(2L)))
-      assert(cws2.map(_.cwId) === Seq(7L, 17L))
+      val cws2 = CurationStream.frozenGateIndex(spark, dir,
+        Quantizer.Rule(cfg), Some(pqCfg.copy(maxCodewords = Some(2L))))
+        .codebook.get
+      assert(cwIds(cws2) === Seq(7L, 17L))
       val input4 = MemoryStream[CurationStream.VecIn]
       val q4 = CurationStream.semDedupGateCoded(input4.toDS(), cents, cws2)
         .writeStream.outputMode("append").format("memory")
@@ -709,7 +715,7 @@ class SemDedupGateSpec extends AnyFunSuite {
         assert(v4.cbDigest !== digests.head,
           "a re-founded codebook must stamp a distinct digest")
         assert(v4.cbDigest === SimilarityQueries.idSetDigest(
-          cws2.map(_.cwId)), "the digest is the live id-set digest")
+          cwIds(cws2)), "the digest is the live id-set digest")
       } finally q4.stop()
     }
   }
@@ -719,11 +725,12 @@ class SemDedupGateSpec extends AnyFunSuite {
     val dir = freshCorpus()
     Staged.reset(spark)
     val pqCfg = PqConfig(cwEvery = 10, cwKey = 7, frozen = true)
-    val (tcents, tdig) =
-      CurationStream.frozenTrainedCentroidLits(spark, dir, cfg)
-    val (tcws, cbDig) =
-      CurationStream.frozenPqRefinedCodewordLits(spark, dir, pqCfg)
-    assert(tcws.length === 4 * 8, "4 trained codewords × 8 subspaces")
+    val tidx = CurationStream.frozenGateIndex(spark, dir,
+      Quantizer.Trained(cfg), Some(pqCfg))
+    val (tcents, tcws) = (tidx.cells, tidx.codebook.get)
+    val cbDig = tcws.digest
+    assert(tcws.slices.map(_.length).sum === 4 * 8,
+      "4 trained codewords × 8 subspaces")
     // the batch index rows the stream must reproduce — the TRAINED
     // codes table (frozen mode: encode against the frozen trained
     // codebook), plus the trained home cells
@@ -738,8 +745,7 @@ class SemDedupGateSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
     withRocksDb {
       val input = MemoryStream[CurationStream.VecIn]
-      val q = CurationStream.semDedupGateCodedTrained(input.toDS(),
-        tcents, tdig, tcws, cbDig)
+      val q = CurationStream.semDedupGateCoded(input.toDS(), tcents, tcws)
         .writeStream.outputMode("append").format("memory")
         .queryName("sg_tcoded").start()
       val coded =
@@ -766,14 +772,14 @@ class SemDedupGateSpec extends AnyFunSuite {
       // rrv: golden-recomputed against the codebook literals — the
       // residual ceiling consistent with TRAINED codes (the verdict
       // scaladoc's contract)
-      val bySub = tcws.groupBy(_.sub)
+      val bySub = tcws.slices
       for ((id, e) <- all) {
         val q8 = e.map(x =>
           math.max(-127.0, math.min(127.0, math.floor(x * 64.0))).toLong)
         val exp = (0 until 8).map { s =>
           bySub(s).map { cw =>
             (0 until 8).map { j =>
-              val d = q8(s * 8 + j) - cw.cs(j).toLong
+              val d = q8(s * 8 + j) - cw._2(j).toLong
               d * d
             }.sum
           }.min
@@ -785,8 +791,7 @@ class SemDedupGateSpec extends AnyFunSuite {
       // decisions equal the plain trained gate's on the same replay —
       // trained codes are a pure add-on
       val input2 = MemoryStream[CurationStream.VecIn]
-      val q2 = CurationStream.semDedupGateTrained(input2.toDS(), tcents,
-        tdig)
+      val q2 = CurationStream.semDedupGate(input2.toDS(), tcents)
         .writeStream.outputMode("append").format("memory")
         .queryName("sg_tplain").start()
       val plain =
@@ -833,7 +838,7 @@ class SemDedupGateSpec extends AnyFunSuite {
     // over the ListState, the near-dup gate's restart discipline
     val dir = freshCorpus()
     Staged.reset(spark)
-    val cents = CurationStream.frozenCentroidLits(spark, dir, cfg)
+    val cents = cellsOf(dir, Quantizer.Rule(cfg))
     withRocksDb {
       val ckpt = java.nio.file.Files.createTempDirectory("sg_ckpt").toString
       val outDir = java.nio.file.Files.createTempDirectory("sg_out").toString
@@ -876,12 +881,11 @@ class SemDedupGateSpec extends AnyFunSuite {
     * the codes field the r17 probe added. */
   private def legacyGate(
       ds: org.apache.spark.sql.Dataset[CurationStream.VecIn],
-      centroids: Seq[CurationStream.CentroidLit],
+      cells: CurationStream.RuleCells,
       horizonMs: Long = 3600000L)
       : org.apache.spark.sql.Dataset[CurationStream.VecVerdict] = {
     import org.apache.spark.sql.streaming.OutputMode
-    val cents = centroids.sortBy(_.cid).toArray
-    val prefix = StateSchemas.semGateCellPrefix(cents.map(_.cid).toSeq)
+    val prefix = cells.prefix
     val probes = ds.map { v =>
       val emb = new Array[Double](v.embedding.length)
       var ss = 0.0
@@ -895,13 +899,13 @@ class SemDedupGateSpec extends AnyFunSuite {
       var best = 0
       var bestCos = Double.NegativeInfinity
       var c = 0
-      while (c < cents.length) {
-        val ce = cents(c).cemb
+      while (c < cells.cids.length) {
+        val ce = cells.cemb(c)
         val n = math.min(emb.length, ce.length)
         var d = 0.0
         var j = 0
         while (j < n) { d += emb(j) * ce(j); j += 1 }
-        val cos = d / (norm * cents(c).cnorm)
+        val cos = d / (norm * cells.cnorm(c))
         if (cos > bestCos) { bestCos = cos; best = c }
         c += 1
       }
@@ -912,7 +916,7 @@ class SemDedupGateSpec extends AnyFunSuite {
         q8(i) = math.max(-127.0, math.min(127.0, q)).toByte
         i += 1
       }
-      LegacyCellProbe(s"$prefix#${cents(best).cid}", cents(best).cid,
+      LegacyCellProbe(s"$prefix#${cells.cids(best)}", cells.cids(best),
         v.vecId, q8, v.fetchTs)
     }
     probes
@@ -932,7 +936,10 @@ class SemDedupGateSpec extends AnyFunSuite {
     // pre-restart keepers still decide post-restart probes.
     val dir = freshCorpus()
     Staged.reset(spark)
-    val cents = CurationStream.frozenCentroidLits(spark, dir, cfg)
+    val cents = cellsOf(dir, Quantizer.Rule(cfg)) match {
+      case r: CurationStream.RuleCells => r
+      case other => fail(s"a rule quantizer must load rule cells: $other")
+    }
     withRocksDb {
       val ckpt =
         java.nio.file.Files.createTempDirectory("sg_xshape_ckpt").toString
