@@ -272,7 +272,9 @@ private[sources] case class FramesPartition(frames: Array[(Long, String)])
   * order) and count its frame count — so commit-time pruning can tell from
   * the name alone whether a chunk lies entirely below the committed offset.
   * Create-only — no appends — so it works on any Hadoop filesystem,
-  * including object stores. */
+  * including object stores. On a `file:` checkpoint the chunks and the
+  * marker are created through [[graft.streaming.LocalFiles.conf]], without
+  * a forked `chmod` per file. */
 private[sources] class FrameWal(checkpointLocation: String) {
   import org.apache.hadoop.fs.Path
   import java.nio.charset.StandardCharsets.UTF_8
@@ -282,7 +284,7 @@ private[sources] class FrameWal(checkpointLocation: String) {
     val conf = scala.util.Try(
       org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf())
       .getOrElse(new org.apache.hadoop.conf.Configuration())
-    dir.getFileSystem(conf)
+    dir.getFileSystem(graft.streaming.LocalFiles.conf(conf))
   }
   fs.mkdirs(dir)
 

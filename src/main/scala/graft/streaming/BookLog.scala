@@ -21,7 +21,10 @@ import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileMana
   * rewritten), and a missing predecessor fails the batch. Files are written
   * through Spark's `CheckpointFileManager.createAtomic`, so any checkpoint
   * filesystem Spark streams to works here; versions older than
-  * `spark.sql.streaming.minBatchesToRetain` are purged.
+  * `spark.sql.streaming.minBatchesToRetain` are purged. The manager is the
+  * one the session's conf picks — under [[Pipeline.start]], on a `file:`
+  * checkpoint, [[LocalCheckpointFileManager]], which writes and renames
+  * without a forked process per file.
   *
   * `idleTtl`: a key whose last write is older than the TTL (wall clock at
   * the batch's fold) is evicted before the batch folds — its next message

@@ -557,13 +557,17 @@ object CurationStream {
     * at ~|clusters| + one batch of upserts without any external cron; 0
     * (the default) leaves compaction to the caller. A crash mid-fold is
     * the same idempotent-convergence story as calling compactCanonical
-    * directly — the restart's next cadence tick re-folds. */
+    * directly — the restart's next cadence tick re-folds.
+    *
+    * As in [[Pipeline.start]], [[LocalFiles.useCheckpointManager]] installs
+    * the no-fork checkpoint file manager unless the caller has set one. */
   def startCanonicalSink(docs: Dataset[DocIn], tableDir: String,
       checkpointDir: String, horizonMs: Long = 3600000L, minTok: Int = 3,
       bands: Int = 4, rowsPerBand: Int = 4,
       stopWords: Seq[String] = Stop, compactEvery: Int = 0,
       trigger: Option[org.apache.spark.sql.streaming.Trigger] = None)
       : org.apache.spark.sql.streaming.StreamingQuery = {
+    LocalFiles.useCheckpointManager(docs.sparkSession)
     val writer = nearDedupCanonical(docs, horizonMs, minTok, bands,
       rowsPerBand, stopWords)
       .writeStream

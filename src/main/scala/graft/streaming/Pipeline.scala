@@ -103,6 +103,15 @@ object Pipeline {
     * duplicating or touching earlier batches — exactly-once at the table
     * level.
     *
+    * Files on `file:` paths are created without a forked process per
+    * file. Unless the caller has set
+    * `spark.sql.streaming.checkpointFileManagerClass`, this sets it to
+    * [[LocalCheckpointFileManager]] before the book log opens and the query
+    * starts ([[LocalFiles.useCheckpointManager]]), so Spark's `offsets/`,
+    * `commits/` and `metadata` and the book log's `books/N` go through it;
+    * the sinks write through [[LocalFiles.conf]]. Bytes, names (`.crc`
+    * included) and modes are those of Hadoop's local filesystem.
+    *
     * `idleTtl` evicts a key silent for longer than the TTL before a batch
     * folds (see [[BookLog]]). A checkpoint whose book state is not
     * [[StateSchemas.BookReplayStateVersion]] — a v1 state-store checkpoint
@@ -112,6 +121,7 @@ object Pipeline {
       fetcher: Option[Backfill.TradeFetcher] = None,
       trigger: Option[org.apache.spark.sql.streaming.Trigger] = None,
       idleTtl: Option[java.time.Duration] = None): StreamingQuery = {
+    LocalFiles.useCheckpointManager(frames.sparkSession)
     val books = BookLog.open(frames.sparkSession, checkpointDir, idleTtl)
     val writer = decode(frames)
       .writeStream
@@ -161,11 +171,15 @@ object Pipeline {
     * [[Migrator.ensureTables]] skip `.` names), which then replaces the
     * partition: delete, then rename. A retry deletes a leftover temp
     * directory first; a crash between the delete and the rename leaves
-    * the batch uncommitted, and its retry writes the partition again. */
+    * the batch uncommitted, and its retry writes the partition again.
+    * Every file and directory is created through [[LocalFiles.conf]]: the
+    * temp directory, the part file, `_SUCCESS` and their `.crc` files get
+    * Hadoop's modes without a forked `chmod` each. */
   private def writePartition[T](spark: SparkSession,
       encoder: ExpressionEncoder[T], rows: Seq[T], tableDir: String,
       batchId: Long): Unit = {
-    val job = Job.getInstance(spark.sessionState.newHadoopConf())
+    val job =
+      Job.getInstance(LocalFiles.conf(spark.sessionState.newHadoopConf()))
     val factory = new ParquetFileFormat()
       .prepareWrite(spark, job, Map.empty, encoder.schema)
     val context = new TaskAttemptContextImpl(job.getConfiguration,

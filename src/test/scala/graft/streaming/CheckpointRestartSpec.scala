@@ -3,6 +3,7 @@ package graft.streaming
 import java.nio.file.Files
 
 import graft.TestSpark
+import org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -62,6 +63,88 @@ class CheckpointRestartSpec extends AnyFunSuite {
     assert(trades.map(_.getAs[Long]("tradeId")).toSeq === Seq(100L, 104L))
     assert(trades.last.getAs[Long]("gapStart") === 101L)
     assert(trades.last.getAs[Long]("gapEnd") === 103L)
+  }
+
+  /** Four micro-batches over two products: snapshots, a visible and a
+    * no-op delta, and trades with a gap. */
+  private val fourBatches: Seq[Seq[(Long, String)]] = Seq(
+    Seq(1L -> """{"type": "snapshot", "product_id": "ETH-USD",
+      "bids": [["300.10", "1.5"]], "asks": [["300.20", "0.9"]]}""",
+      2L -> """{"type": "snapshot", "product_id": "BTC-USD",
+      "bids": [["5600.00", "0.5"]], "asks": [["5601.00", "0.7"]]}"""),
+    Seq(3L -> """{"type": "l2update", "product_id": "ETH-USD",
+      "changes": [["buy", "300.12", "2.0"]]}""",
+      4L -> """{"type": "match", "trade_id": 100, "sequence": 7,
+      "time": "2017-10-15T05:10:53.700000Z", "product_id": "ETH-USD",
+      "size": "0.25", "price": "300.15", "side": "buy"}"""),
+    Seq(5L -> """{"type": "l2update", "product_id": "ETH-USD",
+      "changes": [["buy", "300.12", "2.0"]]}""",
+      6L -> """{"type": "l2update", "product_id": "BTC-USD",
+      "changes": [["sell", "5600.50", "1.1"]]}"""),
+    Seq(7L -> """{"type": "match", "trade_id": 104, "sequence": 9,
+      "time": "2017-10-15T05:10:54.700000Z", "product_id": "ETH-USD",
+      "size": "0.30", "price": "300.16", "side": "sell"}""",
+      8L -> """{"type": "match", "trade_id": 51, "sequence": 3,
+      "time": "2017-10-15T05:10:55.100000Z", "product_id": "BTC-USD",
+      "size": "0.01", "price": "5600.70", "side": "buy"}"""))
+
+  /** Drain `fourBatches` through `Pipeline.start`, one query per leg: each
+    * leg's batches run with the session's checkpoint file manager set to
+    * the leg's class (None: unset, so `Pipeline.start` installs its own).
+    * Returns the output and checkpoint dirs. */
+  private def drainLegs(legs: Seq[(Option[String], Int)]): (String, String) = {
+    val key = LocalFiles.CheckpointManagerKey
+    val out = Files.createTempDirectory("mgr_restart_out").toString
+    val ckpt = Files.createTempDirectory("mgr_restart_ckpt").toString
+    val input = MemoryStream[(Long, String)]
+    val prior = spark.conf.getOption(key)
+    def restore(v: Option[String]): Unit =
+      v.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    try {
+      var next = 0
+      legs.foreach { case (manager, n) =>
+        restore(manager)
+        val q = Pipeline.start(input.toDF.toDF("arrival", "value"),
+          Decoders.gdax, out, ckpt)
+        try {
+          assert(spark.conf.get(key) === manager.getOrElse(
+            classOf[LocalCheckpointFileManager].getName))
+          fourBatches.slice(next, next + n).foreach { b =>
+            input.addData(b: _*)
+            q.processAllAvailable()
+          }
+        } finally q.stop()
+        next += n
+      }
+    } finally restore(prior)
+    (out, ckpt)
+  }
+
+  /** The newest book version of a checkpoint, without its wall-clock
+    * last-write stamps. */
+  private def finalBooks(ckpt: String) = {
+    val newest = new java.io.File(s"$ckpt/books").listFiles()
+      .filter(_.getName.forall(_.isDigit)).maxBy(_.getName.toLong)
+    val in = new java.io.FileInputStream(newest)
+    try BookLog.read(in, newest.toString).map { case (k, v) => k -> v.state }
+    finally in.close()
+  }
+
+  test("a checkpoint restarts across checkpoint file managers: FileContext and the no-fork default, both ways") {
+    val fileContext = classOf[FileContextBasedCheckpointFileManager].getName
+    val (refOut, refCkpt) = drainLegs(Seq(None -> 4))
+    for (legs <- Seq(Seq(None -> 2, Some(fileContext) -> 2),
+        Seq(Some(fileContext) -> 2, None -> 2))) {
+      val (out, ckpt) = drainLegs(legs)
+      for (table <- Seq("inside_book", "trades")) {
+        val want = spark.read.parquet(s"$refOut/$table")
+        val got = spark.read.parquet(s"$out/$table")
+        assert(got.count() === want.count(), s"$table after $legs")
+        assert(got.except(want).isEmpty && want.except(got).isEmpty,
+          s"$table after $legs")
+      }
+      assert(finalBooks(ckpt) === finalBooks(refCkpt), s"books after $legs")
+    }
   }
 
   test("commitBatch is idempotent: a retried batchId replaces, never appends") {

@@ -720,7 +720,7 @@ class SemDedupGateSpec extends AnyFunSuite {
     }
   }
 
-  test("semDedupGateCodedTrained: streamed codes byte-equal the batch pq_refined_codes rows; cbDigest is the staged key's frz VALUE digest (r19)") {
+  test("semDedupGateCoded over a trained frozenGateIndex: streamed codes byte-equal the batch pq_refined_codes rows; cbDigest is the staged key's frz VALUE digest (r19)") {
     import graft.operators.PqConfig
     val dir = freshCorpus()
     Staged.reset(spark)
