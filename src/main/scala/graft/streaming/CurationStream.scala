@@ -542,12 +542,12 @@ object CurationStream {
     * cluster — a deployment wants that materialized. This sink commits each
     * micro-batch's upserts — pre-reduced to the latest row per cluster
     * WITHIN the batch — into a parquet table partitioned by `batch_id`
-    * under the same idempotence discipline as [[Pipeline.commitBatch]]:
-    * foreachBatch is at-least-once, so a retried batch
-    * dynamic-overwrites ITS OWN partition and never duplicates or touches
-    * earlier commits. [[canonicalTable]] is the merged read view;
-    * [[compactCanonical]] folds settled partitions so the table's row
-    * count tracks |clusters|, not |upserts|.
+    * through the same partition commit as [[Pipeline.commitBatch]]
+    * ([[Pipeline.commitPartition]]): foreachBatch is at-least-once, so a
+    * retried batch replaces ITS OWN `batch_id=N` partition and never
+    * duplicates or touches earlier commits. [[canonicalTable]] is the
+    * merged read view; [[compactCanonical]] folds settled partitions so
+    * the table's row count tracks |clusters|, not |upserts|.
     *
     * `compactEvery` (r11 verdict ask #4) wires that maintenance into the
     * pipeline itself: every N committed batches the sink folds partitions
@@ -583,32 +583,37 @@ object CurationStream {
     trigger.fold(writer)(writer.trigger).start()
   }
 
+  /** The latest row per cluster of `rows`, by `order` (seq first). */
+  private def latestPerCluster(rows: org.apache.spark.sql.DataFrame,
+      order: org.apache.spark.sql.Column*): org.apache.spark.sql.DataFrame =
+    rows.withColumn("rn", row_number().over(
+      org.apache.spark.sql.expressions.Window.partitionBy(col("clusterId"))
+        .orderBy(order: _*)))
+      .filter(col("rn") === 1).drop("rn")
+
   /** One idempotent canonical-table commit — public so the retry contract
     * is directly testable: re-running the same (batch, batchId) leaves the
-    * table bit-identical. Within a batch only the LATEST upsert per
+    * table's rows unchanged. Within a batch only the LATEST upsert per
     * cluster survives (seq is the cluster's member counter, so max-seq is
     * the batch's final word on that cluster); across batches the reader
     * resolves recency the same way, so the per-batch reduction loses
-    * nothing a consumer could observe. */
+    * nothing a consumer could observe.
+    *
+    * The reduction is written by one Spark write job into the partition's
+    * temp directory ([[Pipeline.commitPartition]]) — the write is the
+    * batch's only action, so the stateful plan runs once and nothing is
+    * pinned. An empty batch leaves a zero-row `batch_id=N`, as the ingest
+    * sinks do. Unlike ingest, whose batches are bounded by
+    * `maxFramesPerTrigger`, this commit takes any `Dataset[DocIn]`'s
+    * batches and sees no bound on their size, so it does not collect them
+    * to the driver. */
   def commitCanonicalBatch(batch: Dataset[DocCanonical], batchId: Long,
-      tableDir: String): Unit = {
-    import org.apache.spark.sql.expressions.Window
-    // pin before the two actions (isEmpty probe + write): re-running an
-    // unpinned batch plan would re-drive the stateful stages
-    batch.persist()
-    try {
-      if (batch.isEmpty) return // no partition to (over)write
-      batch.toDF()
-        .withColumn("rn", row_number().over(
-          Window.partitionBy(col("clusterId")).orderBy(col("seq").desc)))
-        .filter(col("rn") === 1).drop("rn")
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(tableDir)
-    } finally batch.unpersist()
-  }
+      tableDir: String): Unit =
+    Pipeline.commitPartition(batch.sparkSession, tableDir, batchId) {
+      (_, tmp) =>
+        latestPerCluster(batch.toDF(), col("seq").desc)
+          .write.parquet(tmp.toString)
+    }
 
   /** The materialized table's merged read view: the CURRENT canonical row
     * per cluster — latest by seq (the per-cluster monotone counter;
@@ -618,67 +623,51 @@ object CurationStream {
     * shuffle key is clusterId — the same key the election stage already
     * partitions by. */
   def canonicalTable(spark: org.apache.spark.sql.SparkSession,
-      tableDir: String): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    spark.read.parquet(tableDir)
-      .withColumn("rn", row_number().over(Window.partitionBy(col("clusterId"))
-        .orderBy(col("seq").desc, col("batch_id").desc)))
-      .filter(col("rn") === 1).drop("rn", "batch_id")
-  }
+      tableDir: String): org.apache.spark.sql.DataFrame =
+    latestPerCluster(spark.read.parquet(tableDir), col("seq").desc,
+      col("batch_id").desc).drop("batch_id")
 
   /** Delta-style compaction for the canonical table: fold every partition
     * with batch_id ≤ `upToBatchId` (plus the existing base) into the single
     * base partition — latest row per cluster — then drop the folded
-    * partitions. `upToBatchId` is deliberately REQUIRED (no catch-all
-    * default): on a live table the only safe bound is the stream's
-    * lastCommittedBatch - 1, so the fold can never race the sink's own
-    * retry of the ACTIVE partition (same rule as [[Pipeline.compact]]) —
+    * partitions. The folded partitions are the `batch_id=N` directories
+    * listed on the filesystem, zero-row ones included. `upToBatchId` is
+    * deliberately REQUIRED (no catch-all default): on a live table the
+    * only safe bound is the stream's lastCommittedBatch - 1, so the fold
+    * can never race the sink's own retry of the ACTIVE partition —
     * [[startCanonicalSink]]'s cadence passes exactly that; a caller
     * compacting a RETIRED table passes Long.MaxValue explicitly and owns
-    * the no-writer claim. Crash-safe by idempotence, not atomicity: the
-    * base rewrite is deterministic, and a crash between the write and the
-    * deletes only leaves superseded duplicates that [[canonicalTable]]'s
-    * recency window already resolves — re-running the compaction
-    * converges. */
+    * the no-writer claim.
+    *
+    * The base is committed as partition `batch_id=-1` through
+    * [[Pipeline.commitPartition]]: the fold is written to the hidden
+    * `.batch_id=-1.tmp`, a path the fold does not read, so it needs no
+    * lineage cut. Crash-safe by idempotence, not atomicity: a crash
+    * between the rename and the deletes only leaves superseded duplicates
+    * that [[canonicalTable]]'s recency window already resolves — re-running
+    * the compaction converges. A crash between deleting the old base and
+    * renaming the new one loses the old base — the same window as Spark's
+    * dynamic partition overwrite, which also deletes each partition before
+    * it renames the staged copy in. */
   def compactCanonical(spark: org.apache.spark.sql.SparkSession,
       tableDir: String, upToBatchId: Long): Unit = {
-    import org.apache.spark.sql.expressions.Window
     val root = new org.apache.hadoop.fs.Path(tableDir)
-    // a sink that has only seen empty batches has not created the table
-    // yet — a cadence tick then has nothing to fold
-    if (!root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .exists(root)) return
-    val all = spark.read.parquet(tableDir)
-    require(all.columns.contains("batch_id"),
-      s"$tableDir is not a batch_id-partitioned canonical table")
-    val folded = all
-      .filter(col("batch_id") <= upToBatchId)
-    // partition-column inference reads batch_id back as INT — cast before
-    // collecting the folded partition ids
-    val foldedIds = folded.select(col("batch_id").cast("long")).distinct()
-      .collect().map(_.getLong(0)).filter(_ != CompactedBatchId)
-    if (foldedIds.isEmpty) return
-    // lineage cut: Spark refuses to overwrite a path it is reading from.
-    // Consumed entirely within this call, so the checkpoint is released
-    // as soon as the fold is written — a long-running sink compacting on
-    // cadence must not accrete one table-sized checkpoint per fold.
-    val fold = folded
-      .withColumn("rn", row_number().over(Window.partitionBy(col("clusterId"))
-        .orderBy(col("seq").desc, col("batch_id").desc)))
-      .filter(col("rn") === 1).drop("rn")
-      .withColumn("batch_id", lit(CompactedBatchId))
-      .localCheckpoint(true)
-    try fold.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(tableDir)
-    finally graft.functions.Materialized.unpersistCheckpoint(fold)
-    val fs = new org.apache.hadoop.fs.Path(tableDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    foldedIds.foreach { id =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$tableDir/batch_id=$id"),
-        true)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val BatchDir = "batch_id=(-?\\d+)".r
+    val foldedIds = fs.listStatus(root).map(_.getPath.getName).collect {
+      case BatchDir(id) if id.toLong != CompactedBatchId &&
+        id.toLong <= upToBatchId => id.toLong
     }
+    if (foldedIds.isEmpty) return
+    Pipeline.commitPartition(spark, tableDir, CompactedBatchId) { (_, tmp) =>
+      latestPerCluster(
+        spark.read.parquet(tableDir).filter(col("batch_id") <= upToBatchId),
+        col("seq").desc, col("batch_id").desc)
+        .drop("batch_id")
+        .write.parquet(tmp.toString)
+    }
+    foldedIds.foreach(id =>
+      fs.delete(new org.apache.hadoop.fs.Path(root, s"batch_id=$id"), true))
   }
 
   // ---------------------------------------------------------------------

@@ -4,7 +4,7 @@ import java.nio.file.Files
 import java.nio.file.attribute.PosixFilePermissions
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path, PathFilter, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FileAlreadyExistsException, FileSystem, LocalFileSystem, Path, PathFilter, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileSystemBasedCheckpointFileManager}
@@ -77,7 +77,9 @@ class NoForkRawLocalFileSystem extends RawLocalFileSystem {
   * On a `file:` path (the scheme read from the path, else from
   * `fs.defaultFS`) it is Spark's `FileSystemBasedCheckpointFileManager` over
   * [[LocalFiles.conf]]: atomic writes by rename, as with Spark's default,
-  * but without the FileContext rename's forked `readlink`. Any other scheme
+  * but without the FileContext rename's forked `readlink`, and a
+  * create-only write refused by an existing file (as the offset and commit
+  * logs write) removes its temp file. Any other scheme
   * gets exactly the manager `CheckpointFileManager.create` picks with no
   * manager class set. */
 class LocalCheckpointFileManager(path: Path, hadoopConf: Configuration)
@@ -87,7 +89,17 @@ class LocalCheckpointFileManager(path: Path, hadoopConf: Configuration)
     val scheme = Option(path.toUri.getScheme)
       .getOrElse(FileSystem.getDefaultUri(hadoopConf).getScheme)
     if ("file".equalsIgnoreCase(scheme))
-      new FileSystemBasedCheckpointFileManager(path, LocalFiles.conf(hadoopConf))
+      new FileSystemBasedCheckpointFileManager(path,
+          LocalFiles.conf(hadoopConf)) {
+        // a create-only write refused because the target exists deletes
+        // its temp file (and so its .crc); Spark's own leaves both behind
+        override def renameTempFile(srcPath: Path, dstPath: Path,
+            overwriteIfPossible: Boolean): Unit =
+          try super.renameTempFile(srcPath, dstPath, overwriteIfPossible)
+          catch {
+            case e: FileAlreadyExistsException => delete(srcPath); throw e
+          }
+      }
     else {
       val c = new Configuration(hadoopConf)
       c.unset(LocalFiles.CheckpointManagerKey)

@@ -4,7 +4,7 @@ import scala.collection.mutable
 
 import graft.model.{EngineOut, InsideBookUpdate, MarketMessage, TradeOut}
 import graft.sources.Backfill
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
 import org.apache.hadoop.mapreduce.lib.output.FileOutputCommitter
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
@@ -23,7 +23,10 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * both tables — no per-row connections, no external queue. Like the
   * reference's append from the process that holds the row, each batch's
   * rows are written from the driver that holds them: the decode collect
-  * is the batch's only Spark job, and the sinks run no write job.
+  * is the batch's only Spark job, and the sinks run no write job. Every
+  * batch_id-partitioned table — these sinks, and the canonical table of
+  * [[CurationStream.startCanonicalSink]] with its compacted base — is
+  * committed through one temp-and-rename protocol, [[commitPartition]].
   */
 object Pipeline {
 
@@ -98,8 +101,8 @@ object Pipeline {
     * after a partial write is retried with the SAME batchId, recomputed
     * from the committed predecessor's books. Each table's rows for a batch
     * live in their own static partition directory `batch_id=N`, and a
-    * commit replaces exactly that path (through a hidden
-    * `.batch_id=N.tmp`): the retry replaces its own partition, never
+    * commit replaces exactly that path ([[commitPartition]], through a
+    * hidden `.batch_id=N.tmp`): the retry replaces its own partition, never
     * duplicating or touching earlier batches — exactly-once at the table
     * level.
     *
@@ -163,38 +166,47 @@ object Pipeline {
   private val tradeEncoder = ExpressionEncoder[TradeOut]()
 
   /** Write `rows` as the one partition `<tableDir>/batch_id=<batchId>`
-    * from the driver, through the `OutputWriterFactory` Spark's own file
-    * writer uses — configured from the session's SQL conf (codec,
-    * timestamp type, rebase mode) — with no plan and no job. The part file
-    * and an empty `_SUCCESS` go into the hidden sibling
-    * `.batch_id=<batchId>.tmp` (Spark's file index and
-    * [[Migrator.ensureTables]] skip `.` names), which then replaces the
-    * partition: delete, then rename. A retry deletes a leftover temp
-    * directory first; a crash between the delete and the rename leaves
-    * the batch uncommitted, and its retry writes the partition again.
-    * Every file and directory is created through [[LocalFiles.conf]]: the
-    * temp directory, the part file, `_SUCCESS` and their `.crc` files get
-    * Hadoop's modes without a forked `chmod` each. */
+    * from the driver ([[commitPartition]]), through the
+    * `OutputWriterFactory` Spark's own file writer uses — configured from
+    * the session's SQL conf (codec, timestamp type, rebase mode) — with no
+    * plan and no job: one part file and an empty `_SUCCESS`. */
   private def writePartition[T](spark: SparkSession,
       encoder: ExpressionEncoder[T], rows: Seq[T], tableDir: String,
-      batchId: Long): Unit = {
-    val job =
-      Job.getInstance(LocalFiles.conf(spark.sessionState.newHadoopConf()))
-    val factory = new ParquetFileFormat()
-      .prepareWrite(spark, job, Map.empty, encoder.schema)
-    val context = new TaskAttemptContextImpl(job.getConfiguration,
-      new TaskAttemptID())
+      batchId: Long): Unit =
+    commitPartition(spark, tableDir, batchId) { (fs, tmp) =>
+      val job = Job.getInstance(fs.getConf)
+      val factory = new ParquetFileFormat()
+        .prepareWrite(spark, job, Map.empty, encoder.schema)
+      val context = new TaskAttemptContextImpl(job.getConfiguration,
+        new TaskAttemptID())
+      val file = new Path(tmp, s"part-00000-${java.util.UUID.randomUUID}" +
+        s"-c000${factory.getFileExtension(context)}")
+      val writer = factory.newInstance(file.toString, encoder.schema, context)
+      val toRow = encoder.createSerializer()
+      try rows.foreach(r => writer.write(toRow(r))) finally writer.close()
+      fs.create(new Path(tmp, FileOutputCommitter.SUCCEEDED_FILE_NAME)).close()
+    }
+
+  /** The one commit of every batch_id-partitioned table — the ingest sinks,
+    * the canonical table and its compacted base: `fill` writes the
+    * partition's files into the hidden sibling `.batch_id=<batchId>.tmp`
+    * (Spark's file index and [[Migrator.ensureTables]] skip `.` names),
+    * which then replaces `<tableDir>/batch_id=<batchId>`: delete, then
+    * rename. A retry deletes a leftover temp directory first, so a crashed
+    * commit's files are never read and are removed by its retry; a crash
+    * between the delete and the rename leaves the partition missing until
+    * the retry writes it again. `fs` is the table's filesystem over
+    * [[LocalFiles.conf]]: the temp directory, and whatever `fill` creates
+    * through `fs`, get Hadoop's modes without a forked `chmod` each. */
+  private[streaming] def commitPartition(spark: SparkSession, tableDir: String,
+      batchId: Long)(fill: (FileSystem, Path) => Unit): Unit = {
     val table = new Path(tableDir)
-    val fs = table.getFileSystem(job.getConfiguration)
+    val fs = table.getFileSystem(
+      LocalFiles.conf(spark.sessionState.newHadoopConf()))
     val tmp = new Path(table, s".batch_id=$batchId.tmp")
     val dest = new Path(table, s"batch_id=$batchId")
     fs.delete(tmp, true)
-    val file = new Path(tmp, s"part-00000-${java.util.UUID.randomUUID}" +
-      s"-c000${factory.getFileExtension(context)}")
-    val writer = factory.newInstance(file.toString, encoder.schema, context)
-    val toRow = encoder.createSerializer()
-    try rows.foreach(r => writer.write(toRow(r))) finally writer.close()
-    fs.create(new Path(tmp, FileOutputCommitter.SUCCEEDED_FILE_NAME)).close()
+    fill(fs, tmp)
     fs.delete(dest, true)
     if (!fs.rename(tmp, dest))
       throw new java.io.IOException(s"cannot rename $tmp to $dest")
@@ -206,44 +218,4 @@ object Pipeline {
   def exportCsv(spark: SparkSession, tableDir: String, out: String): Unit =
     spark.read.parquet(tableDir)
       .write.mode("overwrite").option("header", "true").csv(out)
-
-  /** Small-file compaction for a batch_id-partitioned sink table. Each
-    * [[commitBatch]] already writes a batch partition as one file, on the
-    * driver with no write job (compaction itself is a Spark job); tables
-    * written by earlier versions of the sink hold one file per shuffle
-    * partition per trigger, and at feed rates that means millions of tiny
-    * files per day — the classic streaming-sink operational failure at
-    * scale. Rewrites each batch_id partition into one file (hash-clustered
-    * so a partition's rows land in a single task) via dynamic partition
-    * overwrite, which replaces only the partitions it writes — so a
-    * crashed compaction is simply re-run.
-    *
-    * `upToBatchId` bounds the rewrite to partitions the stream has moved
-    * past: a live deployment passes lastCommittedBatch - 1 so compaction
-    * can never race the sink's own retry of the ACTIVE partition (two
-    * writers interleaving delete/rename in one directory is exactly the
-    * corruption the batch_id isolation exists to prevent). The default
-    * rewrites everything — only safe for a stopped or offline table.
-    *
-    * The table is materialized (lineage cut) before the overwrite because
-    * Spark refuses to overwrite a path it is still reading from; on a real
-    * cluster with huge partitions, write to a temp location and rename
-    * instead. */
-  def compact(spark: SparkSession, tableDir: String,
-      upToBatchId: Long = Long.MaxValue): Unit = {
-    val all = spark.read.parquet(tableDir)
-    require(all.columns.contains("batch_id"),
-      s"$tableDir is not a batch_id-partitioned sink table")
-    val df = all.filter(col("batch_id") <= upToBatchId)
-    val nParts = df.select("batch_id").distinct().count().toInt.max(1)
-    // checkpoint consumed within the call — released after the write
-    // instead of lingering until the ContextCleaner
-    val cut = df.repartition(nParts, col("batch_id"))
-      .localCheckpoint(eager = true)
-    try cut.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(tableDir)
-    finally graft.functions.Materialized.unpersistCheckpoint(cut)
-  }
 }

@@ -218,17 +218,5 @@ class CheckpointRestartSpec extends AnyFunSuite {
     assert(spark.table("test_ex_trades").count() === viaTable)
     spark.sql("DROP TABLE test_ex_inside_book")
     spark.sql("DROP TABLE test_ex_trades")
-
-    // compaction: same rows, one file per batch_id partition
-    val before = spark.read.parquet(s"$outDir/trades")
-      .orderBy("tradeId", "batch_id").collect().toSeq
-    Pipeline.compact(spark, s"$outDir/trades")
-    val after = spark.read.parquet(s"$outDir/trades")
-      .orderBy("tradeId", "batch_id").collect().toSeq
-    assert(after === before)
-    val filesPerPartition = new java.io.File(outDir, "trades").listFiles()
-      .filter(_.getName.startsWith("batch_id="))
-      .map(_.listFiles().count(_.getName.endsWith(".parquet")))
-    assert(filesPerPartition.nonEmpty && filesPerPartition.forall(_ === 1))
   }
 }

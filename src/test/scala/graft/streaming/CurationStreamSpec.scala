@@ -676,7 +676,7 @@ class CurationStreamSpec extends AnyFunSuite {
   test("canonical sink: checkpointed restart materializes the same table as an uninterrupted run (r9 verdict #4)") {
     // the maintained-table contract: foreachBatch is at-least-once, so a
     // restart replays the last uncommitted batch with the SAME batchId —
-    // dynamic partition overwrite must make that replay invisible in the
+    // the partition commit must make that replay invisible in the
     // materialized table, not append a duplicate row or fork seq
     withRocksDb {
       val batch1 = Seq(
@@ -729,7 +729,7 @@ class CurationStreamSpec extends AnyFunSuite {
 
   test("canonical sink commit is idempotent; compaction preserves the merged view") {
     // a retried foreachBatch commit re-runs with the SAME batchId: the
-    // dynamic overwrite must leave the table bit-identical, and folding
+    // partition commit must leave the merged view unchanged, and folding
     // settled partitions must change the layout, never the view
     val dir = java.nio.file.Files.createTempDirectory("canon_sink").toString
     def row(doc: Long, cluster: Long, canon: Long, seq: Long) =
@@ -745,10 +745,23 @@ class CurationStreamSpec extends AnyFunSuite {
     // merged view then takes batch 1's seq=3 row
     assert(before === Set((1L, 3L, 3L, true), (5L, 5L, 1L, true),
       (6L, 6L, 1L, true)))
+    // a commit of batch 1 that crashed before its rename left a real part
+    // file in the hidden temp dir — one that would dethrone cluster 1 if
+    // it were read. No reader sees it, and the retry removes it
+    Seq(row(9, 1, 9, 99)).toDS().write.parquet(s"$dir/.batch_id=1.tmp")
+    assert(canonicalRows(dir) === before)
     // retry of batch 1 (same rows, same id) — table unchanged
     CurationStream.commitCanonicalBatch(b1.toDS(), 1L, dir)
     assert(canonicalRows(dir) === before)
-    // fold both settled partitions into the base; view unchanged, and
+    assert(!new java.io.File(dir, ".batch_id=1.tmp").exists,
+      "the retried commit left the crashed commit's temp dir")
+    // an empty batch commits a zero-row partition; the view is unchanged
+    CurationStream.commitCanonicalBatch(
+      Seq.empty[CurationStream.DocCanonical].toDS(), 2L, dir)
+    assert(new java.io.File(dir, "batch_id=2").isDirectory)
+    assert(spark.read.parquet(s"$dir/batch_id=2").count() === 0L)
+    assert(canonicalRows(dir) === before)
+    // fold the settled partitions into the base; view unchanged, and
     // the folded partitions are gone (one row per cluster remains).
     // No live writer on this table, so the all-partitions bound is safe
     // (and now has to be said out loud — the default is gone).
@@ -759,9 +772,13 @@ class CurationStreamSpec extends AnyFunSuite {
       .distinct().collect().map(_.getLong(0)).toSet
     assert(perPart === Set(-1L), s"expected only the base partition: $perPart")
     assert(spark.read.parquet(dir).count() === 3L)
+    // the zero-row partition was folded too, and no temp dir is left
+    val names = new java.io.File(dir).list().toSet
+      .filterNot(n => n.endsWith(".crc") || n == "_SUCCESS")
+    assert(names === Set("batch_id=-1"), s"table dir after the fold: $names")
     // a post-compaction commit layers on top and still merges correctly
     CurationStream.commitCanonicalBatch(
-      Seq(row(7, 1, 7, 4)).toDS(), 2L, dir)
+      Seq(row(7, 1, 7, 4)).toDS(), 3L, dir)
     assert(canonicalRows(dir) ===
       Set((1L, 7L, 4L, true), (5L, 5L, 1L, true), (6L, 6L, 1L, true)))
   }

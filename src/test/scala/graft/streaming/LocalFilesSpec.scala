@@ -143,6 +143,9 @@ class LocalFilesSpec extends AnyFunSuite {
     intercept[FileAlreadyExistsException] {
       write(fm, p, "other".getBytes(UTF_8), overwrite = false)
     }
+    // the refused write's temp file and its .crc are gone
+    assert(Files.list(dir).iterator().asScala.map(_.getFileName.toString)
+      .toSet === Set("0", ".0.crc"))
     val in = fm.open(p)
     try assert(in.readAllBytes().toSeq === payload.toSeq) finally in.close()
     // a path without a scheme is qualified against fs.defaultFS (file:)
