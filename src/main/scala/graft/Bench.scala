@@ -49,6 +49,21 @@ object Bench {
     Bench.median(Seq(once(), once(), once()))
   }
 
+  /** The batch mains' session: `local[cpus]`, one shuffle partition per
+    * core, UTC, no UI, WARN logging — plus the `extra` settings a main
+    * adds of its own. */
+  private[graft] def session(extra: (String, String)*): SparkSession = {
+    val base = SparkSession.builder()
+      .master(s"local[$envCpus]")
+      .config("spark.sql.shuffle.partitions", envCpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+    val spark = extra.foldLeft(base) { case (b, (k, v)) => b.config(k, v) }
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   /** Env knobs shared by both bench mains. */
   private[graft] def envSfDir: String =
     sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -69,14 +84,8 @@ object Bench {
   def main(args: Array[String]): Unit = {
     // junk or non-positive pass counts fall back to the default rather
     // than crashing the round's bench (or silently sampling nothing)
-    val (sfDir, cpus, passes) = (envSfDir, envCpus, envPasses)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val (sfDir, passes) = (envSfDir, envPasses)
+    val spark = session()
     // Session warmup (codegen compiler, shuffle machinery, broadcast +
     // window execs, parquet footers) so the first timed query measures
     // itself, not JVM startup; queries run in sorted name order for

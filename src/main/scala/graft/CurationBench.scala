@@ -1,7 +1,7 @@
 package graft
 
 import graft.streaming.{CurationStream, DocIn}
-import org.apache.spark.sql.{Encoders, SparkSession}
+import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -64,21 +64,14 @@ object CurationBench {
   import Bench.median
 
   def main(args: Array[String]): Unit = {
-    val (sfDir, cpus, passes) = (Bench.envSfDir, Bench.envCpus, Bench.envPasses)
+    val (sfDir, passes) = (Bench.envSfDir, Bench.envPasses)
     val k = math.max(1, sys.env.get("SPARK_GRAFT_SCALE_X")
       .flatMap(_.toIntOption).getOrElse(10))
     val filesPerTrigger = math.max(1, sys.env.get("SPARK_GRAFT_CURATION_FILES")
       .flatMap(_.toIntOption).getOrElse(8))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state." +
-          "RocksDBStateStoreProvider")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session("spark.sql.streaming.stateStore.providerClass" ->
+      ("org.apache.spark.sql.execution.streaming.state." +
+        "RocksDBStateStoreProvider"))
 
     val rep = ScaleData.ensureReplicated(spark, sfDir, k)
     val work = java.nio.file.Files.createTempDirectory("curation_bench").toString

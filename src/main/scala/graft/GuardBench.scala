@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measures what the LSH hot-bucket guard buys (r12 verdict #1): the
@@ -24,14 +23,8 @@ object GuardBench {
     val uniq = math.max(0, sys.env.get("SPARK_GRAFT_UNIQUE_DOCS")
       .flatMap(_.toIntOption).getOrElse(10000))
     val passes = Bench.envPasses
-    val spark = SparkSession.builder()
-      .master(s"local[${Bench.envCpus}]")
-      .config("spark.sql.shuffle.partitions", Bench.envCpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark =
+      Bench.session("spark.sql.extensions" -> "graft.GraftExtensions")
     val calibSec =
       try Bench.calibrationProbe(spark)
       catch { case scala.util.control.NonFatal(_) => -1.0 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measures what the exact range query's cell bound buys (r18) — the
@@ -43,14 +42,8 @@ object RangeBench {
     val n = math.max(6300L, sys.env.get("SPARK_GRAFT_RANGE_N")
       .flatMap(_.toLongOption).getOrElse(201600L))
     val passes = Bench.envPasses
-    val spark = SparkSession.builder()
-      .master(s"local[${Bench.envCpus}]")
-      .config("spark.sql.shuffle.partitions", Bench.envCpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark =
+      Bench.session("spark.sql.extensions" -> "graft.GraftExtensions")
     val calibSec =
       try Bench.calibrationProbe(spark)
       catch { case scala.util.control.NonFatal(_) => -1.0 }

@@ -272,13 +272,7 @@ object ScaleBench {
     val k = math.max(1, sys.env.get("SPARK_GRAFT_SCALE_X")
       .flatMap(_.toIntOption).getOrElse(10))
     val passes = Bench.envPasses
-    val spark = SparkSession.builder()
-      .master(s"local[${Bench.envCpus}]")
-      .config("spark.sql.shuffle.partitions", Bench.envCpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session()
     // machine-speed context (same probe + band as Bench): scale rows and
     // recall tables are only comparable across runs with calib attached
     val calibSec =

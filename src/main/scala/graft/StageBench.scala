@@ -254,13 +254,7 @@ object StageBench {
     val k = math.max(1, sys.env.get("SPARK_GRAFT_SCALE_X")
       .flatMap(_.toIntOption).getOrElse(5))
     val passes = Bench.envPasses
-    val spark = SparkSession.builder()
-      .master(s"local[${Bench.envCpus}]")
-      .config("spark.sql.shuffle.partitions", Bench.envCpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session()
     val calibSec =
       try Bench.calibrationProbe(spark)
       catch { case scala.util.control.NonFatal(_) => -1.0 }

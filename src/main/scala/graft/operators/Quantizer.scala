@@ -118,8 +118,8 @@ object Quantizer {
     // stage name unchanged
     def digest(spark: SparkSession, dir: String): String = {
       val t = frozenCentroidTable(spark, dir, cfg)
-      memoizedDigest(t)(idSetDigest(t.filter(col("live"))
-        .select(col("cid")).collect().map(_.getLong(0)).toSeq))
+      memoizedDigest(t)(longsDigest(t.filter(col("live"))
+        .select(col("cid")).collect().map(_.getLong(0)).sorted))
     }
   }
 
@@ -158,9 +158,9 @@ object Quantizer {
     // MOVES the values, so an id-set digest would alias two trainings
     def digest(spark: SparkSession, dir: String): String = {
       val t = frozenRefinedTable(spark, dir, cfg)
-      memoizedDigest(t)(valueDigestOf(t.select(col("cid"), col("c8"))
+      memoizedDigest(t)(longsDigest(t.select(col("cid"), col("c8"))
         .collect().map(r => (r.getLong(0), r.getSeq[Double](1).map(_.toLong)))
-        .toSeq))
+        .sortBy(_._1).flatMap { case (cid, c8) => cid +: c8 }))
     }
   }
 }
@@ -289,8 +289,8 @@ object Codebook {
       require(residualOf.isEmpty,
         "the rule residual codebook has no frozen lineage to digest")
       val t = frozenPqCodebookTable(spark, dir, cfg)
-      memoizedDigest(t)(idSetDigest(t.filter(col("live"))
-        .select(col("cw_id")).collect().map(_.getLong(0)).toSeq))
+      memoizedDigest(t)(longsDigest(t.filter(col("live"))
+        .select(col("cw_id")).collect().map(_.getLong(0)).sorted))
     }
   }
 
@@ -330,10 +330,12 @@ object Codebook {
     // MOVES the slice values, so an id digest would alias two trainings
     def digest(spark: SparkSession, dir: String): String = {
       val t = frozenTrainedCodebook(spark, dir, this)
-      memoizedDigest(t)(pqValueDigestOf(
+      memoizedDigest(t)(longsDigest(
         t.select(col("off"), col("cw_id"), col("cs")).collect()
           .map(r => (r.getLong(0), r.getLong(1),
-            r.getSeq[Double](2).map(_.toLong))).toSeq))
+            r.getSeq[Double](2).map(_.toLong)))
+          .sortBy(r => (r._1, r._2))
+          .flatMap { case (off, cw, cs) => off +: cw +: cs }))
     }
 
     // a residual codebook's codes carry BOTH digests: re-founding either

@@ -670,16 +670,21 @@ object SimilarityQueries {
   private val digestMemo = java.util.Collections.synchronizedMap(
     new java.util.WeakHashMap[DataFrame, String]())
 
-  /** The ONE id-set digest (md5 over sorted longs, 8 hex chars) shared
-    * by the frozen-family stage keys and the streaming semantic gate's
-    * state-key prefix (`StateSchemas.semGateCellPrefix`) — one
+  /** The ONE frozen-index digest: md5 over `longs` in the given order,
+    * 8 hex chars. Callers feed it a canonical order: the sorted live id
+    * set of a rule index, or the (cid, components) / (off, cw_id,
+    * components) rows of a trained one, sorted by key and flattened (a
+    * re-training keeps the seed ids but MOVES the values, so an id-set
+    * digest would alias two trainings). It is shared by the frozen
+    * family's stage keys and the streaming gates' state-key prefixes
+    * (`StateSchemas.semGateCellPrefix`, the coded gate's cbDigest) — one
     * definition, so the stream's keyspace moves in lockstep with the
-    * staged family on a re-founding. */
-  private[graft] def idSetDigest(ids: Seq[Long]): String = {
+    * staged family on a re-founding or a re-training. */
+  private[graft] def longsDigest(longs: Iterable[Long]): String = {
     val md = java.security.MessageDigest.getInstance("MD5")
     val buf = java.nio.ByteBuffer.allocate(8)
-    ids.sorted.foreach { id =>
-      buf.clear(); buf.putLong(id); md.update(buf.array())
+    longs.foreach { l =>
+      buf.clear(); buf.putLong(l); md.update(buf.array())
     }
     md.digest().map("%02x".format(_)).mkString.take(8)
   }
@@ -753,14 +758,12 @@ object SimilarityQueries {
       rankTopK(q.join(c, col("query_id") =!= col("neighbor_id"))
         .withColumn("cos", expr(cosExpr)), "cos", 10)
     },
-    Some("""
+    Some(s"""
       SELECT query_id, neighbor_id, rank FROM (
         SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
                row_number() OVER (
                  PARTITION BY q.vec_id
-                 ORDER BY list_cosine_similarity(
-                   CAST(q.embedding AS DOUBLE[]),
-                   CAST(c.embedding AS DOUBLE[])) DESC,
+                 ORDER BY ${cosSim("q", "c")} DESC,
                  c.vec_id ASC) AS rank
         FROM embeddings q JOIN embeddings c ON q.vec_id <> c.vec_id
         WHERE q.vec_id < 10)
@@ -855,18 +858,7 @@ object SimilarityQueries {
                JOIN sig c ON q.tbl = c.tbl AND q.bucket = c.bucket
                          AND q.vec_id <> c.vec_id
                WHERE q.vec_id < 10)
-      SELECT query_id, neighbor_id, rank FROM (
-        SELECT query_id, neighbor_id,
-               row_number() OVER (
-                 PARTITION BY query_id
-                 ORDER BY list_cosine_similarity(
-                   CAST(qe.embedding AS DOUBLE[]),
-                   CAST(ce.embedding AS DOUBLE[])) DESC,
-                 neighbor_id ASC) AS rank
-        FROM cand
-        JOIN embeddings qe ON qe.vec_id = query_id
-        JOIN embeddings ce ON ce.vec_id = neighbor_id)
-      WHERE rank <= 5
+      ${candRank(cosSim("qe", "ce"), "embeddings", "qe", "ce")}
     """))
 
   /** IVF-style ANN (§2.3 scale path #2): a deterministic coarse quantizer
@@ -914,36 +906,7 @@ object SimilarityQueries {
   val ivfTopK = QueryDef(
     "ann_topk_ivf",
     (spark, dir) => ivfTopKWith(spark, dir, IvfConfig.Default),
-    Some("""
-      WITH cents AS (
-        SELECT vec_id AS cid, embedding AS cemb FROM embeddings
-        WHERE vec_id % 100 = 7),
-      ranked AS (
-        SELECT vec_id, cid, rn FROM (
-          SELECT e.vec_id, c.cid,
-                 row_number() OVER (PARTITION BY e.vec_id ORDER BY
-                   list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-                                          CAST(c.cemb AS DOUBLE[])) DESC,
-                   c.cid ASC) AS rn
-          FROM embeddings e, cents c)
-        WHERE rn <= 2),
-      cand AS (SELECT DISTINCT qa.vec_id AS query_id, ca.vec_id AS neighbor_id
-               FROM ranked qa
-               JOIN ranked ca ON qa.cid = ca.cid AND qa.vec_id <> ca.vec_id
-               WHERE qa.vec_id < 10 AND ca.rn = 1)
-      SELECT query_id, neighbor_id, rank FROM (
-        SELECT query_id, neighbor_id,
-               row_number() OVER (
-                 PARTITION BY query_id
-                 ORDER BY list_cosine_similarity(
-                   CAST(q.embedding AS DOUBLE[]),
-                   CAST(c.embedding AS DOUBLE[])) DESC,
-                 neighbor_id ASC) AS rank
-        FROM cand
-        JOIN embeddings q ON q.vec_id = query_id
-        JOIN embeddings c ON c.vec_id = neighbor_id)
-      WHERE rank <= 5
-    """))
+    Some(ivfOracle(None)))
 
   /** `ann_topk_ivf_capped` (r16 verdict ask #1): [[ivfTopK]] under a
     * HARD centroid-cardinality cap — `IvfConfig(maxCentroids = 3)`, the
@@ -961,36 +924,7 @@ object SimilarityQueries {
     "ann_topk_ivf_capped",
     (spark, dir) =>
       ivfTopKWith(spark, dir, IvfConfig(maxCentroids = Some(3L))),
-    Some("""
-      WITH cents AS (
-        SELECT vec_id AS cid, embedding AS cemb FROM embeddings
-        WHERE vec_id % 100 = 7 ORDER BY vec_id LIMIT 3),
-      ranked AS (
-        SELECT vec_id, cid, rn FROM (
-          SELECT e.vec_id, c.cid,
-                 row_number() OVER (PARTITION BY e.vec_id ORDER BY
-                   list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-                                          CAST(c.cemb AS DOUBLE[])) DESC,
-                   c.cid ASC) AS rn
-          FROM embeddings e, cents c)
-        WHERE rn <= 2),
-      cand AS (SELECT DISTINCT qa.vec_id AS query_id, ca.vec_id AS neighbor_id
-               FROM ranked qa
-               JOIN ranked ca ON qa.cid = ca.cid AND qa.vec_id <> ca.vec_id
-               WHERE qa.vec_id < 10 AND ca.rn = 1)
-      SELECT query_id, neighbor_id, rank FROM (
-        SELECT query_id, neighbor_id,
-               row_number() OVER (
-                 PARTITION BY query_id
-                 ORDER BY list_cosine_similarity(
-                   CAST(q.embedding AS DOUBLE[]),
-                   CAST(c.embedding AS DOUBLE[])) DESC,
-                 neighbor_id ASC) AS rank
-        FROM cand
-        JOIN embeddings q ON q.vec_id = query_id
-        JOIN embeddings c ON c.vec_id = neighbor_id)
-      WHERE rank <= 5
-    """))
+    Some(ivfOracle(Some(3L))))
 
   /** IVF with the nprobe knob CLOSED INTO A RULE (r9 verdict ask #5):
     * nprobe = max(2, ceil(nlist / 4)) instead of the fixed nprobe=2 of
@@ -1063,45 +997,17 @@ object SimilarityQueries {
   val ivfTunedTopK = QueryDef(
     "ann_topk_ivf_tuned",
     (spark, dir) => ivfTunedTopKWith(spark, dir, IvfConfig.Default),
-    Some("""
-      WITH cents AS (
-        SELECT vec_id AS cid, embedding AS cemb FROM embeddings
-        WHERE vec_id % 100 = 7),
+    Some(s"""
+      WITH ${ruleCents()},
       np AS (SELECT greatest(2, CAST(ceil(count(*) / 4.0) AS INT)) AS nprobe
              FROM cents),
-      qranked AS (
-        SELECT vec_id, cid FROM (
-          SELECT e.vec_id, c.cid,
-                 row_number() OVER (PARTITION BY e.vec_id ORDER BY
-                   list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-                                          CAST(c.cemb AS DOUBLE[])) DESC,
-                   c.cid ASC) AS rn
-          FROM embeddings e, cents c WHERE e.vec_id < 10)
-        WHERE rn <= (SELECT nprobe FROM np)),
-      home AS (
-        SELECT vec_id, cid FROM (
-          SELECT e.vec_id, c.cid,
-                 row_number() OVER (PARTITION BY e.vec_id ORDER BY
-                   list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-                                          CAST(c.cemb AS DOUBLE[])) DESC,
-                   c.cid ASC) AS rn
-          FROM embeddings e, cents c)
-        WHERE rn = 1),
+      ${cosRanked("qranked", "vec_id, cid", "rn <= (SELECT nprobe FROM np)",
+        queriesOnly = true)},
+      $ruleHome,
       cand AS (SELECT DISTINCT q.vec_id AS query_id, h.vec_id AS neighbor_id
                FROM qranked q
                JOIN home h ON q.cid = h.cid AND q.vec_id <> h.vec_id)
-      SELECT query_id, neighbor_id, rank FROM (
-        SELECT query_id, neighbor_id,
-               row_number() OVER (
-                 PARTITION BY query_id
-                 ORDER BY list_cosine_similarity(
-                   CAST(qe.embedding AS DOUBLE[]),
-                   CAST(ce.embedding AS DOUBLE[])) DESC,
-                 neighbor_id ASC) AS rank
-        FROM cand
-        JOIN embeddings qe ON qe.vec_id = query_id
-        JOIN embeddings ce ON ce.vec_id = neighbor_id)
-      WHERE rank <= 5
+      ${candRank(cosSim("qe", "ce"), "embeddings", "qe", "ce")}
     """))
 
   /** IVF × int8, composed (r7 verdict ask #8): the two ANN levers joined —
@@ -1133,38 +1039,12 @@ object SimilarityQueries {
   val ivfInt8TopK = QueryDef(
     "ann_topk_ivf_int8",
     (spark, dir) => ivfInt8TopKWith(spark, dir, Quantizer.Rule()),
-    Some("""
-      WITH cents AS (
-        SELECT vec_id AS cid, embedding AS cemb FROM embeddings
-        WHERE vec_id % 100 = 7),
-      ranked AS (
-        SELECT vec_id, cid, rn FROM (
-          SELECT e.vec_id, c.cid,
-                 row_number() OVER (PARTITION BY e.vec_id ORDER BY
-                   list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-                                          CAST(c.cemb AS DOUBLE[])) DESC,
-                   c.cid ASC) AS rn
-          FROM embeddings e, cents c)
-        WHERE rn <= 2),
-      q8 AS (
-        SELECT vec_id,
-               list_transform(CAST(embedding AS DOUBLE[]),
-                 v -> greatest(least(floor(v * 64), 127), -127)) AS qv
-        FROM embeddings),
-      cand AS (SELECT DISTINCT qa.vec_id AS query_id, ca.vec_id AS neighbor_id
-               FROM ranked qa
-               JOIN ranked ca ON qa.cid = ca.cid AND qa.vec_id <> ca.vec_id
-               WHERE qa.vec_id < 10 AND ca.rn = 1)
-      SELECT query_id, neighbor_id, rank FROM (
-        SELECT query_id, neighbor_id,
-               row_number() OVER (
-                 PARTITION BY query_id
-                 ORDER BY list_dot_product(q.qv, c.qv) DESC,
-                 neighbor_id ASC) AS rank
-        FROM cand
-        JOIN q8 q ON q.vec_id = query_id
-        JOIN q8 c ON c.vec_id = neighbor_id)
-      WHERE rank <= 5
+    Some(s"""
+      WITH ${ruleCents()},
+      $ruleRanked,
+      $q8Cte,
+      $rankedCand
+      ${candRank("list_dot_product(q.qv, c.qv)", "q8", "q", "c")}
     """))
 
   // ─────────────── Lloyd-refined coarse quantizer (r18) ───────────────
@@ -1375,39 +1255,195 @@ object SimilarityQueries {
     }
   }
 
-  /** The ONE (cid, components) value digest — shared by the trained
-    * family's stage keys and the streaming gate's trained-cell state-key
-    * prefix (the idSetDigest precedent), so a re-training moves the
-    * staged tables AND the stream keyspace in lockstep. */
-  private[graft] def valueDigestOf(rows: Seq[(Long, Seq[Long])]): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val buf = java.nio.ByteBuffer.allocate(8)
-    def put(l: Long): Unit = {
-      buf.clear(); buf.putLong(l); md.update(buf.array())
-    }
-    rows.sortBy(_._1).foreach { case (cid, c8) => put(cid); c8.foreach(put) }
-    md.digest().map("%02x".format(_)).mkString.take(8)
-  }
+  // ─────────── DuckDB oracle fragments: each SQL shape written once ───────────
+  //
+  // Every oracle of this family is assembled from the fragments below, so
+  // a shape (the int8 quantization, a cell ranking, a tail) has one text.
+  // OraclePinSpec pins each assembled oracle's text: a fragment edit shows
+  // there, query by query.
+
+  /** The int8 quantization ([[quantTransform]]) as a SELECT (vec_id, qv). */
+  private def q8Sel: String = """SELECT vec_id,
+               list_transform(CAST(embedding AS DOUBLE[]),
+                 v -> greatest(least(floor(v * 64), 127), -127)) AS qv
+        FROM embeddings"""
+
+  /** The `q8` CTE over [[q8Sel]]. */
+  private def q8Cte: String = s"""q8 AS (
+        $q8Sel)"""
+
+  /** The SQL of a rule set capped to its `cap` smallest ids. */
+  private def capClause(cap: Option[Long]): String =
+    cap.fold("")(n => s" ORDER BY vec_id LIMIT $n")
+
+  /** The rule centroid set `cents` (cid, cemb), capped to the `cap`
+    * smallest rule ids when given ([[IvfConfig.maxCentroids]]). */
+  private def ruleCents(cap: Option[Long] = None): String = s"""cents AS (
+        SELECT vec_id AS cid, embedding AS cemb FROM embeddings
+        WHERE vec_id % 100 = 7${capClause(cap)})"""
+
+  /** CTE `name`: each vector's cells ranked by cosine to `cents` (ties to
+    * the smaller cid), projected to `cols` and kept where `keep` holds on
+    * the rank `rn`; `queriesOnly` ranks only the query vectors. */
+  private def cosRanked(name: String, cols: String, keep: String,
+      queriesOnly: Boolean = false): String = s"""$name AS (
+        SELECT $cols FROM (
+          SELECT e.vec_id, c.cid,
+                 row_number() OVER (PARTITION BY e.vec_id ORDER BY
+                   list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
+                                          CAST(c.cemb AS DOUBLE[])) DESC,
+                   c.cid ASC) AS rn
+          FROM embeddings e, cents c${
+            if (queriesOnly) " WHERE e.vec_id < 10" else ""})
+        WHERE $keep)"""
+
+  /** CTE `name`: each q8 vector's cells ranked by squared L2 to the
+    * centroid CTE `cents` (cid, cv) — ‖c‖² − 2q·c, ties to the smaller cid
+    * — projected to `cols` and kept where `keep` holds on the rank `rn`. */
+  private def l2Ranked(name: String, cols: String, cents: String,
+      keep: String): String = s"""$name AS (SELECT $cols FROM (
+          SELECT q.vec_id, c.cid, row_number() OVER (PARTITION BY q.vec_id
+            ORDER BY list_dot_product(c.cv, c.cv)
+                     - 2 * list_dot_product(q.qv, c.cv) ASC, c.cid ASC) AS rn
+          FROM q8 q, $cents c) WHERE $keep)"""
+
+  /** Rule cells: `ranked` (nprobe = 2 cells per vector) and `home`. */
+  private def ruleRanked: String =
+    cosRanked("ranked", "vec_id, cid, rn", "rn <= 2")
+  private def ruleHome: String = cosRanked("home", "vec_id, cid", "rn = 1")
+  private def ruleHomeQ8: String = s"""${ruleCents()},
+      $ruleHome,
+      $q8Cte"""
+
+  /** Trained cells, over the last Lloyd sweep's centroids. */
+  private def trainedRanked: String =
+    l2Ranked("ranked", "vec_id, cid, rn", s"c$LloydIters", "rn <= 2")
+  private def trainedHome: String =
+    l2Ranked("home", "vec_id, cid", s"c$LloydIters", "rn = 1")
+
+  /** The `cand` join over `ranked`: each query's probed cells against
+    * the cells' home members. */
+  private def rankedCand: String =
+    """cand AS (SELECT DISTINCT qa.vec_id AS query_id, ca.vec_id AS neighbor_id
+               FROM ranked qa
+               JOIN ranked ca ON qa.cid = ca.cid AND qa.vec_id <> ca.vec_id
+               WHERE qa.vec_id < 10 AND ca.rn = 1)"""
+
+  /** Cosine of `q`'s and `c`'s embeddings. */
+  private def cosSim(q: String, c: String): String =
+    s"""list_cosine_similarity(
+                   CAST($q.embedding AS DOUBLE[]),
+                   CAST($c.embedding AS DOUBLE[]))"""
+
+  /** Top-5 of `cand` per query by `score` (ties to the smaller
+    * neighbor_id), the query and neighbor rows of `tbl` joined as `q`
+    * and `c`. */
+  private def candRank(score: String, tbl: String, q: String,
+      c: String): String = s"""
+      SELECT query_id, neighbor_id, rank FROM (
+        SELECT query_id, neighbor_id,
+               row_number() OVER (
+                 PARTITION BY query_id
+                 ORDER BY $score DESC,
+                 neighbor_id ASC) AS rank
+        FROM cand
+        JOIN $tbl $q ON $q.vec_id = query_id
+        JOIN $tbl $c ON $c.vec_id = neighbor_id)
+      WHERE rank <= 5"""
+
+  /** The exact int8 rerank: top-5 of candidate CTE `src` (aliased `a`)
+    * per query by the q8 dot, ties to the smaller neighbor_id. */
+  private def int8Rerank(src: String, a: String): String = s"""
+      SELECT query_id, neighbor_id, rank FROM (
+        SELECT $a.query_id, $a.neighbor_id,
+               row_number() OVER (PARTITION BY $a.query_id
+                 ORDER BY list_dot_product(q.qv, n.qv) DESC,
+                          $a.neighbor_id ASC) AS rank
+        FROM $src $a
+        JOIN q8 q ON q.vec_id = $a.query_id
+        JOIN q8 n ON n.vec_id = $a.neighbor_id)
+      WHERE rank <= 5"""
+
+  /** `ann_topk_ivf`'s oracle, the rule centroids capped at `cap`. */
+  private def ivfOracle(cap: Option[Long]): String = s"""
+      WITH ${ruleCents(cap)},
+      $ruleRanked,
+      $rankedCand
+      ${candRank(cosSim("q", "c"), "embeddings", "q", "c")}
+    """
+
+  /** The SemDeDup pairs: cell-mates `a`, `b` (b the smaller id) whose
+    * int8 dot reaches the default floor. */
+  private def semanticPairs: String = s"""FROM home a
+        JOIN home b ON a.cid = b.cid AND b.vec_id < a.vec_id
+        JOIN q8 qa ON qa.vec_id = a.vec_id
+        JOIN q8 qb ON qb.vec_id = b.vec_id
+        WHERE list_dot_product(qa.qv, qb.qv) >=
+          ${SemDedupConfig.Default.dotFloor}"""
+
+  /** `dedup_semantic`'s oracle after `cells`, which defines `home` and
+    * `q8`. */
+  private def semanticDedupOracle(cells: String): String = s"""$cells
+      SELECT a.vec_id, a.cid, min(b.vec_id) AS dup_of
+      $semanticPairs
+      GROUP BY a.vec_id, a.cid
+    """
+
+  /** `ivf_cell_bounds`' oracle after `cells` (defining `home` and `q8`):
+    * each home cell's max squared radius, the centroid joined by `cents`
+    * with its int8 vector in column `cv`. */
+  private def cellBoundsOracle(cells: String, cv: String,
+      cents: String): String = s"""$cells
+      SELECT h.cid,
+             CAST(max(list_dot_product(v.qv, v.qv)
+                      + list_dot_product(c.$cv, c.$cv)
+                      - 2 * list_dot_product(v.qv, c.$cv)) AS BIGINT) AS rr
+      FROM home h
+      JOIN q8 v ON v.vec_id = h.vec_id
+      JOIN $cents
+      GROUP BY h.cid
+    """
+
+  /** `label_cohesion`'s oracle: the per-label `agg` SELECT over `perdim`
+    * and the output terms `out` differ by width. */
+  private def cohesionOracle(agg: String, out: String): String = s"""
+      WITH q8 AS (
+        SELECT vec_id, label,
+               list_transform(CAST(embedding AS DOUBLE[]),
+                 v -> CAST(greatest(least(floor(v * 64), 127), -127)
+                        AS BIGINT)) AS qv
+        FROM embeddings),
+      ex AS (SELECT label, i, qv[i] AS v
+             FROM q8, (SELECT unnest(generate_series(1, 64)) AS i)),
+      perdim AS (SELECT label, i, sum(v) AS s, sum(v * v) AS ss
+                 FROM ex GROUP BY 1, 2),
+      agg AS ($agg
+              FROM perdim GROUP BY 1),
+      n AS (SELECT label, count(*) AS n_vecs FROM embeddings GROUP BY 1)
+      SELECT a.label, CAST(n.n_vecs AS BIGINT) AS n_vecs, $out
+      FROM agg a JOIN n USING (label)
+    """
+
+  /** The brute range oracle: every (query, neighbor) int8 dot at or above
+    * the SQL floor expression `floor`. */
+  private def rangeOracle(floor: String): String = s"""
+      WITH $q8Cte
+      SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
+             CAST(list_dot_product(q.qv, n.qv) AS BIGINT) AS dot
+      FROM q8 q JOIN q8 n ON n.vec_id <> q.vec_id
+      WHERE q.vec_id < 10
+        AND list_dot_product(q.qv, n.qv) >= $floor
+    """
 
   /** Shared oracle CTE: int8 quantization, rule seeds, [[LloydIters]] Lloyd
     * sweeps — mirrors [[lloydRefinedRaw]] stage for stage (same floored
     * means, same (d2, cid) tie-break, same keep-on-empty rule). */
-  private def lloydCte: String = {
-    val sb = new StringBuilder(
-      """
-      WITH q8 AS (SELECT vec_id,
-             list_transform(CAST(embedding AS DOUBLE[]),
-               v -> greatest(least(floor(v * 64), 127), -127)) AS qv
-           FROM embeddings),
-      c0 AS (SELECT vec_id AS cid, qv AS cv FROM q8 WHERE vec_id % 100 = 7),""")
-    for (i <- 1 to LloydIters) {
-      val p = i - 1
-      sb.append(s"""
-      a$i AS (SELECT vec_id, cid FROM (
-          SELECT q.vec_id, c.cid, row_number() OVER (PARTITION BY q.vec_id
-            ORDER BY list_dot_product(c.cv, c.cv)
-                     - 2 * list_dot_product(q.qv, c.cv) ASC, c.cid ASC) AS rn
-          FROM q8 q, c$p c) WHERE rn = 1),
+  private def lloydCte: String =
+    (Seq(s"WITH q8 AS ($q8Sel)", """c0 AS (SELECT vec_id AS cid, qv AS cv
+             FROM q8 WHERE vec_id % 100 = 7)""") ++
+      (1 to LloydIters).map { i =>
+        val p = i - 1
+        s"""${l2Ranked(s"a$i", "vec_id, cid", s"c$p", "rn = 1")},
       m$i AS (SELECT cid, dim, floor(CAST(sum(v) AS DOUBLE) / count(*)) AS m
               FROM (SELECT a.cid, d.dim, q.qv[d.dim + 1] AS v
                     FROM a$i a JOIN q8 q USING (vec_id),
@@ -1415,10 +1451,8 @@ object SimilarityQueries {
               GROUP BY 1, 2),
       g$i AS (SELECT cid, list(m ORDER BY dim) AS mv FROM m$i GROUP BY 1),
       c$i AS (SELECT p.cid, coalesce(g.mv, p.cv) AS cv
-              FROM c$p p LEFT JOIN g$i g USING (cid)),""")
-    }
-    sb.toString.stripSuffix(",")
-  }
+              FROM c$p p LEFT JOIN g$i g USING (cid))"""
+      }).mkString(",\n      ")
 
   /** The trained quantizer itself, long format (cid, dim, c8) — the
     * auditable training artifact: what k-means moved each seed to.
@@ -1430,7 +1464,7 @@ object SimilarityQueries {
       Quantizer.Trained().centroids(spark, dir)
         .select(col("cid"), posexplode(col("c8")).as(Seq("dim", "v")))
         .select(col("cid"), col("dim"), col("v").cast("long").as("c8")),
-    Some(s"""${lloydCte}
+    Some(s"""$lloydCte
       SELECT cid, d.dim AS dim, CAST(cv[d.dim + 1] AS BIGINT) AS c8
       FROM c$LloydIters, (SELECT unnest(generate_series(0, 63)) AS dim) d
     """))
@@ -1442,16 +1476,9 @@ object SimilarityQueries {
   val ivfRefinedTopK = QueryDef(
     "ann_topk_ivf_refined",
     (spark, dir) => ivfInt8TopKWith(spark, dir, Quantizer.Trained()),
-    Some(s"""${lloydCte},
-      ranked AS (SELECT vec_id, cid, rn FROM (
-          SELECT q.vec_id, c.cid, row_number() OVER (PARTITION BY q.vec_id
-            ORDER BY list_dot_product(c.cv, c.cv)
-                     - 2 * list_dot_product(q.qv, c.cv) ASC, c.cid ASC) AS rn
-          FROM q8 q, c$LloydIters c) WHERE rn <= 2),
-      cand AS (SELECT DISTINCT qa.vec_id AS query_id, ca.vec_id AS neighbor_id
-               FROM ranked qa JOIN ranked ca
-                 ON qa.cid = ca.cid AND qa.vec_id <> ca.vec_id
-               WHERE qa.vec_id < 10 AND ca.rn = 1)
+    Some(s"""$lloydCte,
+      $trainedRanked,
+      $rankedCand
       SELECT query_id, neighbor_id, rank FROM (
         SELECT query_id, neighbor_id, row_number() OVER (PARTITION BY query_id
           ORDER BY list_dot_product(q.qv, c.qv) DESC, neighbor_id ASC) AS rank
@@ -1659,32 +1686,7 @@ object SimilarityQueries {
   val semanticDedup = QueryDef(
     "dedup_semantic",
     (spark, dir) => semanticDedupWith(spark, dir, SemDedupConfig.Default),
-    Some(s"""
-      WITH cents AS (
-        SELECT vec_id AS cid, embedding AS cemb FROM embeddings
-        WHERE vec_id % 100 = 7),
-      home AS (
-        SELECT vec_id, cid FROM (
-          SELECT e.vec_id, c.cid,
-                 row_number() OVER (PARTITION BY e.vec_id ORDER BY
-                   list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-                                          CAST(c.cemb AS DOUBLE[])) DESC,
-                   c.cid ASC) AS rn
-          FROM embeddings e, cents c)
-        WHERE rn = 1),
-      q8 AS (
-        SELECT vec_id,
-               list_transform(CAST(embedding AS DOUBLE[]),
-                 v -> greatest(least(floor(v * 64), 127), -127)) AS qv
-        FROM embeddings)
-      SELECT a.vec_id, a.cid, min(b.vec_id) AS dup_of
-      FROM home a
-      JOIN home b ON a.cid = b.cid AND b.vec_id < a.vec_id
-      JOIN q8 qa ON qa.vec_id = a.vec_id
-      JOIN q8 qb ON qb.vec_id = b.vec_id
-      WHERE list_dot_product(qa.qv, qb.qv) >= ${SemDedupConfig.Default.dotFloor}
-      GROUP BY a.vec_id, a.cid
-    """))
+    Some(semanticDedupOracle(s"WITH $ruleHomeQ8")))
 
   /** SemDeDup over the TRAINED quantizer's cells (r18) — the same
     * drop-to-smallest-keeper decision, trained-cell geometry. The
@@ -1700,20 +1702,7 @@ object SimilarityQueries {
     (spark, dir) =>
       semanticDedupWith(spark, dir, SemDedupConfig.Default,
         Quantizer.Trained()),
-    Some(s"""${lloydCte},
-      home AS (SELECT vec_id, cid FROM (
-          SELECT q.vec_id, c.cid, row_number() OVER (PARTITION BY q.vec_id
-            ORDER BY list_dot_product(c.cv, c.cv)
-                     - 2 * list_dot_product(q.qv, c.cv) ASC, c.cid ASC) AS rn
-          FROM q8 q, c$LloydIters c) WHERE rn = 1)
-      SELECT a.vec_id, a.cid, min(b.vec_id) AS dup_of
-      FROM home a
-      JOIN home b ON a.cid = b.cid AND b.vec_id < a.vec_id
-      JOIN q8 qa ON qa.vec_id = a.vec_id
-      JOIN q8 qb ON qb.vec_id = b.vec_id
-      WHERE list_dot_product(qa.qv, qb.qv) >= ${SemDedupConfig.Default.dotFloor}
-      GROUP BY a.vec_id, a.cid
-    """))
+    Some(semanticDedupOracle(s"$lloydCte,\n      $trainedHome")))
 
   /** Per-label embedding cohesion — "how tight is each label's cluster" —
     * in O(N) instead of O(N²) by the sum-vector identity:
@@ -1783,25 +1772,10 @@ object SimilarityQueries {
   val labelCohesion = QueryDef(
     "label_cohesion",
     (spark, dir) => labelCohesionWith(spark, dir, CohesionConfig.Default),
-    Some("""
-      WITH q8 AS (
-        SELECT vec_id, label,
-               list_transform(CAST(embedding AS DOUBLE[]),
-                 v -> CAST(greatest(least(floor(v * 64), 127), -127)
-                        AS BIGINT)) AS qv
-        FROM embeddings),
-      ex AS (SELECT label, i, qv[i] AS v
-             FROM q8, (SELECT unnest(generate_series(1, 64)) AS i)),
-      perdim AS (SELECT label, i, sum(v) AS s, sum(v * v) AS ss
-                 FROM ex GROUP BY 1, 2),
-      agg AS (SELECT label, CAST(sum(s * s) AS BIGINT) AS sum_sq_total,
-                     CAST(sum(ss) AS BIGINT) AS self_sq
-              FROM perdim GROUP BY 1),
-      n AS (SELECT label, count(*) AS n_vecs FROM embeddings GROUP BY 1)
-      SELECT a.label, CAST(n.n_vecs AS BIGINT) AS n_vecs, a.sum_sq_total,
-             a.self_sq, a.sum_sq_total - a.self_sq AS cross_sum
-      FROM agg a JOIN n USING (label)
-    """))
+    Some(cohesionOracle(
+      """SELECT label, CAST(sum(s * s) AS BIGINT) AS sum_sq_total,
+                     CAST(sum(ss) AS BIGINT) AS self_sq""",
+      "a.sum_sq_total, a.self_sq, a.sum_sq_total - a.self_sq AS cross_sum")))
 
   /** The WIDE branch of the cohesion gate, oracle-checked end to end
     * (r15 verdict ask #2's "force the decimal branch with a threshold-0
@@ -1821,26 +1795,10 @@ object SimilarityQueries {
           col("sum_sq_total").cast("string").as("sum_sq_total"),
           col("self_sq").cast("string").as("self_sq"),
           col("cross_sum").cast("string").as("cross_sum")),
-    Some("""
-      WITH q8 AS (
-        SELECT vec_id, label,
-               list_transform(CAST(embedding AS DOUBLE[]),
-                 v -> CAST(greatest(least(floor(v * 64), 127), -127)
-                        AS BIGINT)) AS qv
-        FROM embeddings),
-      ex AS (SELECT label, i, qv[i] AS v
-             FROM q8, (SELECT unnest(generate_series(1, 64)) AS i)),
-      perdim AS (SELECT label, i, sum(v) AS s, sum(v * v) AS ss
-                 FROM ex GROUP BY 1, 2),
-      agg AS (SELECT label, sum(s * s) AS sst, sum(ss) AS ssq
-              FROM perdim GROUP BY 1),
-      n AS (SELECT label, count(*) AS n_vecs FROM embeddings GROUP BY 1)
-      SELECT a.label, CAST(n.n_vecs AS BIGINT) AS n_vecs,
-             CAST(a.sst AS VARCHAR) AS sum_sq_total,
+    Some(cohesionOracle("SELECT label, sum(s * s) AS sst, sum(ss) AS ssq",
+      """CAST(a.sst AS VARCHAR) AS sum_sq_total,
              CAST(a.ssq AS VARCHAR) AS self_sq,
-             CAST(a.sst - a.ssq AS VARCHAR) AS cross_sum
-      FROM agg a JOIN n USING (label)
-    """))
+             CAST(a.sst - a.ssq AS VARCHAR) AS cross_sum""")))
 
   /** IVF index-health audit (r16): the 20 most-occupied home cells of
     * the staged cell table — the skew report a deployment reads after
@@ -1856,19 +1814,9 @@ object SimilarityQueries {
         .groupBy(col("cid")).agg(count(lit(1)).as("n_members"))
         .orderBy(col("n_members").desc, col("cid").asc)
         .limit(20),
-    Some("""
-      WITH cents AS (
-        SELECT vec_id AS cid, embedding AS cemb FROM embeddings
-        WHERE vec_id % 100 = 7),
-      home AS (
-        SELECT vec_id, cid FROM (
-          SELECT e.vec_id, c.cid,
-                 row_number() OVER (PARTITION BY e.vec_id ORDER BY
-                   list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-                                          CAST(c.cemb AS DOUBLE[])) DESC,
-                   c.cid ASC) AS rn
-          FROM embeddings e, cents c)
-        WHERE rn = 1)
+    Some(s"""
+      WITH ${ruleCents()},
+      $ruleHome
       SELECT cid, count(*) AS n_members
       FROM home GROUP BY cid
       ORDER BY n_members DESC, cid ASC
@@ -1893,31 +1841,10 @@ object SimilarityQueries {
           sum(coalesce(col("isdup"), lit(0L))).as("n_dups"))
     },
     Some(s"""
-      WITH cents AS (
-        SELECT vec_id AS cid, embedding AS cemb FROM embeddings
-        WHERE vec_id % 100 = 7),
-      home AS (
-        SELECT vec_id, cid FROM (
-          SELECT e.vec_id, c.cid,
-                 row_number() OVER (PARTITION BY e.vec_id ORDER BY
-                   list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-                                          CAST(c.cemb AS DOUBLE[])) DESC,
-                   c.cid ASC) AS rn
-          FROM embeddings e, cents c)
-        WHERE rn = 1),
-      q8 AS (
-        SELECT vec_id,
-               list_transform(CAST(embedding AS DOUBLE[]),
-                 v -> greatest(least(floor(v * 64), 127), -127)) AS qv
-        FROM embeddings),
+      WITH $ruleHomeQ8,
       drops AS (
         SELECT DISTINCT a.vec_id
-        FROM home a
-        JOIN home b ON a.cid = b.cid AND b.vec_id < a.vec_id
-        JOIN q8 qa ON qa.vec_id = a.vec_id
-        JOIN q8 qb ON qb.vec_id = b.vec_id
-        WHERE list_dot_product(qa.qv, qb.qv) >=
-          ${SemDedupConfig.Default.dotFloor})
+        $semanticPairs)
       SELECT e.label, count(*) AS n_vecs, count(d.vec_id) AS n_dups
       FROM embeddings e
       LEFT JOIN drops d ON d.vec_id = e.vec_id
@@ -1969,31 +1896,10 @@ object SimilarityQueries {
       labels
     },
     Some(s"""
-      WITH RECURSIVE cents AS (
-        SELECT vec_id AS cid, embedding AS cemb FROM embeddings
-        WHERE vec_id % 100 = 7),
-      home AS (
-        SELECT vec_id, cid FROM (
-          SELECT e.vec_id, c.cid,
-                 row_number() OVER (PARTITION BY e.vec_id ORDER BY
-                   list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-                                          CAST(c.cemb AS DOUBLE[])) DESC,
-                   c.cid ASC) AS rn
-          FROM embeddings e, cents c)
-        WHERE rn = 1),
-      q8 AS (
-        SELECT vec_id,
-               list_transform(CAST(embedding AS DOUBLE[]),
-                 v -> greatest(least(floor(v * 64), 127), -127)) AS qv
-        FROM embeddings),
+      WITH RECURSIVE $ruleHomeQ8,
       drops AS (
         SELECT a.vec_id, min(b.vec_id) AS dup_of
-        FROM home a
-        JOIN home b ON a.cid = b.cid AND b.vec_id < a.vec_id
-        JOIN q8 qa ON qa.vec_id = a.vec_id
-        JOIN q8 qb ON qb.vec_id = b.vec_id
-        WHERE list_dot_product(qa.qv, qb.qv) >=
-          ${SemDedupConfig.Default.dotFloor}
+        $semanticPairs
         GROUP BY a.vec_id),
       resolve AS (
         SELECT vec_id, dup_of AS keeper FROM drops
@@ -2236,45 +2142,7 @@ object SimilarityQueries {
   val pqTopK = QueryDef(
     "ann_topk_pq",
     (spark, dir) => pqTopKWith(spark, dir, 5, Codebook.Rule()),
-    Some("""
-      WITH q8 AS (
-        SELECT vec_id,
-               list_transform(CAST(embedding AS DOUBLE[]),
-                 v -> greatest(least(floor(v * 64), 127), -127)) AS qv
-        FROM embeddings),
-      cw AS (SELECT vec_id AS cw_id, qv AS cv FROM q8
-             WHERE vec_id % 50 = 11),
-      offs AS (SELECT unnest(range(8)) * 8 + 1 AS off),
-      enc AS (
-        SELECT vec_id, off, cw_id AS code FROM (
-          SELECT v.vec_id, o.off, c.cw_id,
-                 row_number() OVER (PARTITION BY v.vec_id, o.off ORDER BY
-                   (list_dot_product(v.qv[o.off:o.off+7],
-                                     v.qv[o.off:o.off+7]) +
-                    list_dot_product(c.cv[o.off:o.off+7],
-                                     c.cv[o.off:o.off+7]) -
-                    2 * list_dot_product(v.qv[o.off:o.off+7],
-                                         c.cv[o.off:o.off+7])) ASC,
-                   c.cw_id ASC) AS rn
-          FROM q8 v, cw c, offs o)
-        WHERE rn = 1),
-      qtab AS (
-        SELECT q.vec_id AS query_id, o.off, c.cw_id AS code,
-               list_dot_product(q.qv[o.off:o.off+7],
-                                c.cv[o.off:o.off+7]) AS d
-        FROM q8 q, cw c, offs o WHERE q.vec_id < 10)
-      SELECT query_id, neighbor_id, rank FROM (
-        SELECT query_id, neighbor_id,
-               row_number() OVER (PARTITION BY query_id
-                 ORDER BY score DESC, neighbor_id ASC) AS rank
-        FROM (
-          SELECT t.query_id, e.vec_id AS neighbor_id, sum(t.d) AS score
-          FROM enc e
-          JOIN qtab t ON t.off = e.off AND t.code = e.code
-          WHERE e.vec_id <> t.query_id
-          GROUP BY t.query_id, e.vec_id))
-      WHERE rank <= 5
-    """))
+    Some(pqOracle(None)))
 
   /** `ann_topk_pq_capped` (r16 verdict ask #1): [[pqTopK]] under a HARD
     * codebook-cardinality cap — `PqConfig(maxCodewords = 6)`, the
@@ -2289,45 +2157,7 @@ object SimilarityQueries {
     (spark, dir) =>
       pqTopKWith(spark, dir, 5,
         Codebook.Rule(PqConfig(maxCodewords = Some(6L)))),
-    Some("""
-      WITH q8 AS (
-        SELECT vec_id,
-               list_transform(CAST(embedding AS DOUBLE[]),
-                 v -> greatest(least(floor(v * 64), 127), -127)) AS qv
-        FROM embeddings),
-      cw AS (SELECT vec_id AS cw_id, qv AS cv FROM q8
-             WHERE vec_id % 50 = 11 ORDER BY vec_id LIMIT 6),
-      offs AS (SELECT unnest(range(8)) * 8 + 1 AS off),
-      enc AS (
-        SELECT vec_id, off, cw_id AS code FROM (
-          SELECT v.vec_id, o.off, c.cw_id,
-                 row_number() OVER (PARTITION BY v.vec_id, o.off ORDER BY
-                   (list_dot_product(v.qv[o.off:o.off+7],
-                                     v.qv[o.off:o.off+7]) +
-                    list_dot_product(c.cv[o.off:o.off+7],
-                                     c.cv[o.off:o.off+7]) -
-                    2 * list_dot_product(v.qv[o.off:o.off+7],
-                                         c.cv[o.off:o.off+7])) ASC,
-                   c.cw_id ASC) AS rn
-          FROM q8 v, cw c, offs o)
-        WHERE rn = 1),
-      qtab AS (
-        SELECT q.vec_id AS query_id, o.off, c.cw_id AS code,
-               list_dot_product(q.qv[o.off:o.off+7],
-                                c.cv[o.off:o.off+7]) AS d
-        FROM q8 q, cw c, offs o WHERE q.vec_id < 10)
-      SELECT query_id, neighbor_id, rank FROM (
-        SELECT query_id, neighbor_id,
-               row_number() OVER (PARTITION BY query_id
-                 ORDER BY score DESC, neighbor_id ASC) AS rank
-        FROM (
-          SELECT t.query_id, e.vec_id AS neighbor_id, sum(t.d) AS score
-          FROM enc e
-          JOIN qtab t ON t.off = e.off AND t.code = e.code
-          WHERE e.vec_id <> t.query_id
-          GROUP BY t.query_id, e.vec_id))
-      WHERE rank <= 5
-    """))
+    Some(pqOracle(Some(6L))))
 
   // ───────────── residual PQ: the true IVFADC encode (r18) ─────────────
 
@@ -2445,24 +2275,10 @@ object SimilarityQueries {
   val ivfAdcTopK = QueryDef(
     "ann_topk_ivfadc",
     (spark, dir) => ivfAdcTopKWith(spark, dir, 5, Quantizer.Rule()),
-    Some("""
-      WITH q8 AS (
-        SELECT vec_id,
-               list_transform(CAST(embedding AS DOUBLE[]),
-                 v -> greatest(least(floor(v * 64), 127), -127)) AS qv
-        FROM embeddings),
-      cents AS (
-        SELECT vec_id AS cid, embedding AS cemb FROM embeddings
-        WHERE vec_id % 100 = 7),
-      ranked AS (
-        SELECT vec_id, cid, rn FROM (
-          SELECT e.vec_id, c.cid,
-                 row_number() OVER (PARTITION BY e.vec_id ORDER BY
-                   list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-                                          CAST(c.cemb AS DOUBLE[])) DESC,
-                   c.cid ASC) AS rn
-          FROM embeddings e, cents c)
-        WHERE rn <= 2),
+    Some(s"""
+      WITH $q8Cte,
+      ${ruleCents()},
+      $ruleRanked,
       home AS (SELECT vec_id, cid FROM ranked WHERE rn = 1),
       res AS (
         SELECT v.vec_id,
@@ -2470,51 +2286,16 @@ object SimilarityQueries {
                  AS rv
         FROM q8 v JOIN home h USING (vec_id)
         JOIN q8 cq ON cq.vec_id = h.cid),
-      rcw AS (SELECT vec_id AS cw_id, rv AS cv FROM res
-              WHERE vec_id % 50 = 11),
-      offs AS (SELECT unnest(range(8)) * 8 + 1 AS off),
-      enc AS (
-        SELECT vec_id, off, cw_id AS code FROM (
-          SELECT v.vec_id, o.off, c.cw_id,
-                 row_number() OVER (PARTITION BY v.vec_id, o.off ORDER BY
-                   (list_dot_product(v.rv[o.off:o.off+7],
-                                     v.rv[o.off:o.off+7]) +
-                    list_dot_product(c.cv[o.off:o.off+7],
-                                     c.cv[o.off:o.off+7]) -
-                    2 * list_dot_product(v.rv[o.off:o.off+7],
-                                         c.cv[o.off:o.off+7])) ASC,
-                   c.cw_id ASC) AS rn
-          FROM res v, rcw c, offs o)
-        WHERE rn = 1),
-      qtab AS (
-        SELECT q.vec_id AS query_id, o.off, c.cw_id AS code,
-               list_dot_product(q.qv[o.off:o.off+7],
-                                c.cv[o.off:o.off+7]) AS d
-        FROM q8 q, rcw c, offs o WHERE q.vec_id < 10),
+      ${rulePq("rcw", "res", "rv")},
       qcent AS (
         SELECT q.vec_id AS query_id, c.cid,
                list_dot_product(q.qv, cq.qv) AS dc
         FROM q8 q, cents c JOIN q8 cq ON cq.vec_id = c.cid
         WHERE q.vec_id < 10),
-      cand AS (SELECT DISTINCT qa.vec_id AS query_id, h.vec_id AS neighbor_id
-               FROM ranked qa JOIN home h ON qa.cid = h.cid
-                 AND qa.vec_id <> h.vec_id
-               WHERE qa.vec_id < 10),
+      $homeCand,
       sumd AS (
-        SELECT cand.query_id, e.vec_id AS neighbor_id, sum(t.d) AS sd
-        FROM cand
-        JOIN enc e ON e.vec_id = cand.neighbor_id
-        JOIN qtab t ON t.query_id = cand.query_id
-          AND t.off = e.off AND t.code = e.code
-        GROUP BY 1, 2)
-      SELECT query_id, neighbor_id, rank FROM (
-        SELECT s.query_id, s.neighbor_id,
-               row_number() OVER (PARTITION BY s.query_id
-                 ORDER BY qc.dc + s.sd DESC, s.neighbor_id ASC) AS rank
-        FROM sumd s
-        JOIN home h ON h.vec_id = s.neighbor_id
-        JOIN qcent qc ON qc.query_id = s.query_id AND qc.cid = h.cid)
-      WHERE rank <= 5
+        ${candAdcSum("sd")})
+      $ivfAdcRank
     """))
 
   // ───── trained PQ codebooks (r19): per-subspace integer Lloyd ─────
@@ -2730,45 +2511,27 @@ object SimilarityQueries {
     }
   }
 
-  /** The ONE (off, cw_id, components) value digest for the trained PQ
-    * family — [[valueDigestOf]]'s rationale per subspace (a re-training
-    * keeps the seed cw_ids but MOVES the slice values, so an id digest
-    * would alias two trainings). Shared with the coded streaming gate's
-    * trained cbDigest, so a re-training moves the staged codes AND the
-    * stream keyspace in lockstep. */
-  private[graft] def pqValueDigestOf(
-      rows: Seq[(Long, Long, Seq[Long])]): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val buf = java.nio.ByteBuffer.allocate(8)
-    def put(l: Long): Unit = {
-      buf.clear(); buf.putLong(l); md.update(buf.array())
-    }
-    rows.sortBy(r => (r._1, r._2)).foreach { case (off, cw, cs) =>
-      put(off); put(cw); cs.foreach(put)
-    }
-    md.digest().map("%02x".format(_)).mkString.take(8)
-  }
-
-  /** Shared oracle fragment: the per-subspace Lloyd chain
-    * `{p}0 .. {p}{PqLloydIters}` over slice CTE `src` (vec_id, off, s) —
-    * mirrors [[pqLloydRaw]] stage for stage (same rel-distance
-    * ordering, same (dist, cw_id) tie-break, same floored means, same
-    * keep-on-empty rule). Caller supplies the WITH head and trailing
-    * SELECT; the fragment ends with a comma. */
-  private def pqLloydChain(src: String, seedRule: String,
-      p: String): String = {
-    val sb = new StringBuilder(s"""
-      ${p}0 AS (SELECT off, vec_id AS cw_id, s AS cs FROM $src
-                WHERE $seedRule),""")
-    for (i <- 1 to PqLloydIters) {
-      val q = i - 1
-      sb.append(s"""
-      ${p}a$i AS (SELECT vec_id, off, cw_id FROM (
+  /** Per-subspace nearest codeword: each slice of `src` (vec_id, off, s)
+    * against the codebook CTE `book` (off, cw_id, cs) by ‖c‖² − 2v·c,
+    * ties to the smaller cw_id — the FROM of an assignment. */
+  private def pqNearest(src: String, book: String): String = s"""FROM (
           SELECT v.vec_id, v.off, c.cw_id, row_number() OVER (
             PARTITION BY v.vec_id, v.off
             ORDER BY list_dot_product(c.cs, c.cs)
                      - 2 * list_dot_product(v.s, c.cs) ASC, c.cw_id ASC) AS rn
-          FROM $src v JOIN $p$q c ON c.off = v.off) WHERE rn = 1),
+          FROM $src v JOIN $book c ON c.off = v.off) WHERE rn = 1"""
+
+  /** Shared oracle fragment: the per-subspace Lloyd chain
+    * `{p}0 .. {p}{PqLloydIters}` over slice CTE `src` (vec_id, off, s),
+    * seeded by the rule codewords — mirrors [[pqLloydRaw]] stage for
+    * stage (same rel-distance ordering, same (dist, cw_id) tie-break,
+    * same floored means, same keep-on-empty rule). */
+  private def pqLloydChain(src: String, p: String): String =
+    (s"""${p}0 AS (SELECT off, vec_id AS cw_id, s AS cs FROM $src
+                WHERE vec_id % 50 = 11)""" +:
+      (1 to PqLloydIters).map { i =>
+        val q = i - 1
+        s"""${p}a$i AS (SELECT vec_id, off, cw_id ${pqNearest(src, s"$p$q")}),
       ${p}m$i AS (SELECT a.off, a.cw_id, d.dim,
                     floor(CAST(sum(v.s[d.dim + 1]) AS DOUBLE) / count(*)) AS m
                   FROM ${p}a$i a
@@ -2779,19 +2542,134 @@ object SimilarityQueries {
                   FROM ${p}m$i GROUP BY 1, 2),
       $p$i AS (SELECT b.off, b.cw_id, coalesce(g.mv, b.cs) AS cs
                FROM $p$q b LEFT JOIN ${p}g$i g
-                 ON g.off = b.off AND g.cw_id = b.cw_id),""")
-    }
-    sb.toString
-  }
+                 ON g.off = b.off AND g.cw_id = b.cw_id)"""
+      }).mkString(",\n      ")
+
+  /** The subspace offsets and the q8 slice table `vs`. */
+  private def offsCte: String =
+    "offs AS (SELECT unnest(range(8)) * 8 + 1 AS off)"
+  private def vsCte: String =
+    "vs AS (SELECT vec_id, off, qv[off:off+7] AS s FROM q8, offs)"
 
   /** Shared oracle head: int8 quantization + the slice table `vs`. */
-  private val pqVsHead: String = """
-      WITH q8 AS (SELECT vec_id,
-             list_transform(CAST(embedding AS DOUBLE[]),
-               v -> greatest(least(floor(v * 64), 127), -127)) AS qv
-           FROM embeddings),
-      offs AS (SELECT unnest(range(8)) * 8 + 1 AS off),
-      vs AS (SELECT vec_id, off, qv[off:off+7] AS s FROM q8, offs),"""
+  private def pqVsHead: String = s"""
+      WITH q8 AS ($q8Sel),
+      $offsCte,
+      $vsCte"""
+
+  /** Rule PQ over column `col` of `src`: the codebook CTE `book` (the
+    * rule's codewords, capped at `cap` when given), `offs`, `enc` (each
+    * vector's nearest codeword per subspace) and `qtab` (the queries' ADC
+    * table). */
+  private def rulePq(book: String, src: String, col: String,
+      cap: Option[Long] = None): String =
+    s"""$book AS (SELECT vec_id AS cw_id, $col AS cv FROM $src
+             WHERE vec_id % 50 = 11${capClause(cap)}),
+      $offsCte,
+      enc AS (
+        SELECT vec_id, off, cw_id AS code FROM (
+          SELECT v.vec_id, o.off, c.cw_id,
+                 row_number() OVER (PARTITION BY v.vec_id, o.off ORDER BY
+                   (list_dot_product(v.$col[o.off:o.off+7],
+                                     v.$col[o.off:o.off+7]) +
+                    list_dot_product(c.cv[o.off:o.off+7],
+                                     c.cv[o.off:o.off+7]) -
+                    2 * list_dot_product(v.$col[o.off:o.off+7],
+                                         c.cv[o.off:o.off+7])) ASC,
+                   c.cw_id ASC) AS rn
+          FROM $src v, $book c, offs o)
+        WHERE rn = 1),
+      qtab AS (
+        SELECT q.vec_id AS query_id, o.off, c.cw_id AS code,
+               list_dot_product(q.qv[o.off:o.off+7],
+                                c.cv[o.off:o.off+7]) AS d
+        FROM q8 q, $book c, offs o WHERE q.vec_id < 10)"""
+
+  /** Trained PQ over slice CTE `src`: the Lloyd chain `p`, `enc` against
+    * its last sweep and the queries' ADC table `qtab` over `vs`. */
+  private def trainedPq(src: String, p: String): String = s"""
+      ${pqLloydChain(src, p)},
+      enc AS (SELECT vec_id, off, cw_id AS code
+              ${pqNearest(src, s"$p$PqLloydIters")}),
+      qtab AS (SELECT q.vec_id AS query_id, c.off, c.cw_id AS code,
+                 list_dot_product(q.s, c.cs) AS d
+               FROM vs q JOIN $p$PqLloydIters c ON c.off = q.off
+               WHERE q.vec_id < 10)"""
+
+  /** Trained residuals `res` (q8 − home centroid) and their slices `rs`. */
+  private def trainedResid: String = s"""res AS (SELECT v.vec_id,
+                 list_transform(range(64), i -> v.qv[i + 1] - c.cv[i + 1])
+                   AS rv
+              FROM q8 v JOIN home h USING (vec_id)
+              JOIN c$LloydIters c ON c.cid = h.cid),
+      rs AS (SELECT vec_id, off, rv[off:off+7] AS s FROM res, offs)"""
+
+  /** A trained codebook's audit rows (off, cw_id, dim, c8): the Lloyd
+    * chain `p` over slice CTE `src`, after `head`. */
+  private def pqBookOracle(head: String, src: String, p: String): String =
+    s"""$head,
+      ${pqLloydChain(src, p)}
+      SELECT off, cw_id, d.dim AS dim, CAST(cs[d.dim + 1] AS BIGINT) AS c8
+      FROM $p$PqLloydIters, (SELECT unnest(generate_series(0, 7)) AS dim) d
+    """
+
+  /** The ADC score of every coded vector against every query. */
+  private def adcSum: String =
+    """SELECT t.query_id, e.vec_id AS neighbor_id, sum(t.d) AS score
+            FROM enc e
+            JOIN qtab t ON t.off = e.off AND t.code = e.code
+            WHERE e.vec_id <> t.query_id
+            GROUP BY t.query_id, e.vec_id"""
+
+  /** The ADC sum over the `cand` pairs only, as column `as`. */
+  private def candAdcSum(as: String): String =
+    s"""SELECT cand.query_id, e.vec_id AS neighbor_id, sum(t.d) AS $as
+            FROM cand
+            JOIN enc e ON e.vec_id = cand.neighbor_id
+            JOIN qtab t ON t.query_id = cand.query_id
+              AND t.off = e.off AND t.code = e.code
+            GROUP BY 1, 2"""
+
+  /** The ADC prefilter of the rerank rungs: per query the top 100 (the
+    * registered `pre`) of `scored` (query_id, neighbor_id, score), ties
+    * to the smaller neighbor_id. */
+  private def adcTop(scored: String): String = s"""
+        SELECT query_id, neighbor_id FROM (
+          SELECT query_id, neighbor_id,
+                 row_number() OVER (PARTITION BY query_id
+                   ORDER BY score DESC, neighbor_id ASC) AS adc_rank
+          FROM (
+            $scored))
+        WHERE adc_rank <= 100"""
+
+  /** `ann_topk_pq`'s oracle, the rule codebook capped at `cap`. */
+  private def pqOracle(cap: Option[Long]): String = s"""
+      WITH $q8Cte,
+      ${rulePq("cw", "q8", "qv", cap)}
+      SELECT query_id, neighbor_id, rank FROM (
+        SELECT query_id, neighbor_id,
+               row_number() OVER (PARTITION BY query_id
+                 ORDER BY score DESC, neighbor_id ASC) AS rank
+        FROM (
+          $adcSum))
+      WHERE rank <= 5
+    """
+
+  /** IVFADC's `cand` (the probed cells' home members) and its final rank
+    * by the centroid dot plus the residual ADC sum `sd`. */
+  private def homeCand: String =
+    """cand AS (SELECT DISTINCT qa.vec_id AS query_id, h.vec_id AS neighbor_id
+               FROM ranked qa JOIN home h ON qa.cid = h.cid
+                 AND qa.vec_id <> h.vec_id
+               WHERE qa.vec_id < 10)"""
+  private def ivfAdcRank: String = """SELECT query_id, neighbor_id, rank FROM (
+        SELECT s.query_id, s.neighbor_id,
+               row_number() OVER (PARTITION BY s.query_id
+                 ORDER BY qc.dc + s.sd DESC, s.neighbor_id ASC) AS rank
+        FROM sumd s
+        JOIN home h ON h.vec_id = s.neighbor_id
+        JOIN qcent qc ON qc.query_id = s.query_id AND qc.cid = h.cid)
+      WHERE rank <= 5"""
 
   /** The trained PQ codebook itself, long format (off, cw_id, dim, c8)
     * — the auditable training artifact (the `ivf_refine` discipline per
@@ -2805,11 +2683,7 @@ object SimilarityQueries {
           posexplode(col("cs")).as(Seq("dim", "v")))
         .select(col("off"), col("cw_id"), col("dim"),
           col("v").cast("long").as("c8")),
-    Some(s"""${pqVsHead}${pqLloydChain("vs",
-        "vec_id % 50 = 11", "pc").stripSuffix(",")}
-      SELECT off, cw_id, d.dim AS dim, CAST(cs[d.dim + 1] AS BIGINT) AS c8
-      FROM pc$PqLloydIters, (SELECT unnest(generate_series(0, 7)) AS dim) d
-    """))
+    Some(pqBookOracle(pqVsHead, "vs", "pc")))
 
   /** `ann_topk_pq_refined` — the 8-byte ADC rung over the TRAINED
     * codebook: [[pqTopK]]'s exact plan shape (staged codes scan,
@@ -2820,18 +2694,8 @@ object SimilarityQueries {
   val pqRefinedTopK = QueryDef(
     "ann_topk_pq_refined",
     (spark, dir) => pqTopKWith(spark, dir, 5, Codebook.Trained()),
-    Some(s"""${pqVsHead}${pqLloydChain("vs",
-        "vec_id % 50 = 11", "pc")}
-      enc AS (SELECT vec_id, off, cw_id AS code FROM (
-          SELECT v.vec_id, v.off, c.cw_id, row_number() OVER (
-            PARTITION BY v.vec_id, v.off
-            ORDER BY list_dot_product(c.cs, c.cs)
-                     - 2 * list_dot_product(v.s, c.cs) ASC, c.cw_id ASC) AS rn
-          FROM vs v JOIN pc$PqLloydIters c ON c.off = v.off) WHERE rn = 1),
-      qtab AS (SELECT q.vec_id AS query_id, c.off, c.cw_id AS code,
-                 list_dot_product(q.s, c.cs) AS d
-               FROM vs q JOIN pc$PqLloydIters c ON c.off = q.off
-               WHERE q.vec_id < 10)
+    Some(s"""$pqVsHead,
+      ${trainedPq("vs", "pc")}
       SELECT query_id, neighbor_id, rank FROM (
         SELECT query_id, neighbor_id,
                row_number() OVER (PARTITION BY query_id
@@ -2867,24 +2731,9 @@ object SimilarityQueries {
           posexplode(col("cs")).as(Seq("dim", "v")))
         .select(col("off"), col("cw_id"), col("dim"),
           col("v").cast("long").as("c8")),
-    Some(s"""${lloydCte},
-      offs AS (SELECT unnest(range(8)) * 8 + 1 AS off),
-      home AS (SELECT vec_id, cid FROM (
-          SELECT q.vec_id, c.cid, row_number() OVER (PARTITION BY q.vec_id
-            ORDER BY list_dot_product(c.cv, c.cv)
-                     - 2 * list_dot_product(q.qv, c.cv) ASC, c.cid ASC) AS rn
-          FROM q8 q, c$LloydIters c) WHERE rn = 1),
-      res AS (SELECT v.vec_id,
-                 list_transform(range(64), i -> v.qv[i + 1] - c.cv[i + 1])
-                   AS rv
-              FROM q8 v JOIN home h USING (vec_id)
-              JOIN c$LloydIters c ON c.cid = h.cid),
-      rs AS (SELECT vec_id, off, rv[off:off+7] AS s FROM res, offs),
-      ${pqLloydChain("rs", "vec_id % 50 = 11", "rc")
-        .stripPrefix("\n").stripSuffix(",")}
-      SELECT off, cw_id, d.dim AS dim, CAST(cs[d.dim + 1] AS BIGINT) AS c8
-      FROM rc$PqLloydIters, (SELECT unnest(generate_series(0, 7)) AS dim) d
-    """))
+    Some(pqBookOracle(
+      s"$lloydCte,\n      $offsCte,\n      $trainedHome,\n      $trainedResid",
+      "rs", "rc")))
 
   /** `ann_topk_ivfadc_refined` — IVFADC with BOTH halves trained
     * (r18 verdict ask #2): trained coarse cells prune candidates,
@@ -2893,54 +2742,19 @@ object SimilarityQueries {
   val ivfAdcRefinedTopK = QueryDef(
     "ann_topk_ivfadc_refined",
     (spark, dir) => ivfAdcTopKWith(spark, dir, 5, Quantizer.Trained()),
-    Some(s"""${lloydCte},
-      offs AS (SELECT unnest(range(8)) * 8 + 1 AS off),
-      vs AS (SELECT vec_id, off, qv[off:off+7] AS s FROM q8, offs),
-      ranked AS (SELECT vec_id, cid, rn FROM (
-          SELECT q.vec_id, c.cid, row_number() OVER (PARTITION BY q.vec_id
-            ORDER BY list_dot_product(c.cv, c.cv)
-                     - 2 * list_dot_product(q.qv, c.cv) ASC, c.cid ASC) AS rn
-          FROM q8 q, c$LloydIters c) WHERE rn <= 2),
+    Some(s"""$lloydCte,
+      $offsCte,
+      $vsCte,
+      $trainedRanked,
       home AS (SELECT vec_id, cid FROM ranked WHERE rn = 1),
-      res AS (SELECT v.vec_id,
-                 list_transform(range(64), i -> v.qv[i + 1] - c.cv[i + 1])
-                   AS rv
-              FROM q8 v JOIN home h USING (vec_id)
-              JOIN c$LloydIters c ON c.cid = h.cid),
-      rs AS (SELECT vec_id, off, rv[off:off+7] AS s FROM res, offs),
-      ${pqLloydChain("rs", "vec_id % 50 = 11", "rc")
-        .stripPrefix("\n")}
-      enc AS (SELECT vec_id, off, cw_id AS code FROM (
-          SELECT v.vec_id, v.off, c.cw_id, row_number() OVER (
-            PARTITION BY v.vec_id, v.off
-            ORDER BY list_dot_product(c.cs, c.cs)
-                     - 2 * list_dot_product(v.s, c.cs) ASC, c.cw_id ASC) AS rn
-          FROM rs v JOIN rc$PqLloydIters c ON c.off = v.off) WHERE rn = 1),
-      qtab AS (SELECT q.vec_id AS query_id, c.off, c.cw_id AS code,
-                 list_dot_product(q.s, c.cs) AS d
-               FROM vs q JOIN rc$PqLloydIters c ON c.off = q.off
-               WHERE q.vec_id < 10),
+      $trainedResid,
+      ${trainedPq("rs", "rc")},
       qcent AS (SELECT q.vec_id AS query_id, c.cid,
                  list_dot_product(q.qv, c.cv) AS dc
                FROM q8 q, c$LloydIters c WHERE q.vec_id < 10),
-      cand AS (SELECT DISTINCT qa.vec_id AS query_id, h.vec_id AS neighbor_id
-               FROM ranked qa JOIN home h ON qa.cid = h.cid
-                 AND qa.vec_id <> h.vec_id
-               WHERE qa.vec_id < 10),
-      sumd AS (SELECT cand.query_id, e.vec_id AS neighbor_id, sum(t.d) AS sd
-               FROM cand
-               JOIN enc e ON e.vec_id = cand.neighbor_id
-               JOIN qtab t ON t.query_id = cand.query_id
-                 AND t.off = e.off AND t.code = e.code
-               GROUP BY 1, 2)
-      SELECT query_id, neighbor_id, rank FROM (
-        SELECT s.query_id, s.neighbor_id,
-               row_number() OVER (PARTITION BY s.query_id
-                 ORDER BY qc.dc + s.sd DESC, s.neighbor_id ASC) AS rank
-        FROM sumd s
-        JOIN home h ON h.vec_id = s.neighbor_id
-        JOIN qcent qc ON qc.query_id = s.query_id AND qc.cid = h.cid)
-      WHERE rank <= 5
+      $homeCand,
+      sumd AS (${candAdcSum("sd")})
+      $ivfAdcRank
     """))
 
   /** The PQ DEPLOYMENT retrieval shape (r16 verdict ask #2): ADC top-`pre`
@@ -2981,54 +2795,11 @@ object SimilarityQueries {
   val pqRerankTopK = QueryDef(
     "ann_topk_pq_rerank",
     (spark, dir) => pqRerankTopKWith(spark, dir, 5, 100, Codebook.Rule()),
-    Some("""
-      WITH q8 AS (
-        SELECT vec_id,
-               list_transform(CAST(embedding AS DOUBLE[]),
-                 v -> greatest(least(floor(v * 64), 127), -127)) AS qv
-        FROM embeddings),
-      cw AS (SELECT vec_id AS cw_id, qv AS cv FROM q8
-             WHERE vec_id % 50 = 11),
-      offs AS (SELECT unnest(range(8)) * 8 + 1 AS off),
-      enc AS (
-        SELECT vec_id, off, cw_id AS code FROM (
-          SELECT v.vec_id, o.off, c.cw_id,
-                 row_number() OVER (PARTITION BY v.vec_id, o.off ORDER BY
-                   (list_dot_product(v.qv[o.off:o.off+7],
-                                     v.qv[o.off:o.off+7]) +
-                    list_dot_product(c.cv[o.off:o.off+7],
-                                     c.cv[o.off:o.off+7]) -
-                    2 * list_dot_product(v.qv[o.off:o.off+7],
-                                         c.cv[o.off:o.off+7])) ASC,
-                   c.cw_id ASC) AS rn
-          FROM q8 v, cw c, offs o)
-        WHERE rn = 1),
-      qtab AS (
-        SELECT q.vec_id AS query_id, o.off, c.cw_id AS code,
-               list_dot_product(q.qv[o.off:o.off+7],
-                                c.cv[o.off:o.off+7]) AS d
-        FROM q8 q, cw c, offs o WHERE q.vec_id < 10),
-      cand AS (
-        SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id,
-                 row_number() OVER (PARTITION BY query_id
-                   ORDER BY score DESC, neighbor_id ASC) AS adc_rank
-          FROM (
-            SELECT t.query_id, e.vec_id AS neighbor_id, sum(t.d) AS score
-            FROM enc e
-            JOIN qtab t ON t.off = e.off AND t.code = e.code
-            WHERE e.vec_id <> t.query_id
-            GROUP BY t.query_id, e.vec_id))
-        WHERE adc_rank <= 100)
-      SELECT query_id, neighbor_id, rank FROM (
-        SELECT c.query_id, c.neighbor_id,
-               row_number() OVER (PARTITION BY c.query_id
-                 ORDER BY list_dot_product(q.qv, n.qv) DESC,
-                          c.neighbor_id ASC) AS rank
-        FROM cand c
-        JOIN q8 q ON q.vec_id = c.query_id
-        JOIN q8 n ON n.vec_id = c.neighbor_id)
-      WHERE rank <= 5
+    Some(s"""
+      WITH $q8Cte,
+      ${rulePq("cw", "q8", "qv")},
+      cand AS (${adcTop(adcSum)})
+      ${int8Rerank("cand", "c")}
     """))
 
   /** The FULL composed deployment retrieval shape — IVF × PQ × rerank
@@ -3078,58 +2849,16 @@ object SimilarityQueries {
     (spark, dir) =>
       ivfPqRerankTopKWith(spark, dir, 5, 100, Quantizer.Rule(),
         Codebook.Rule()),
-    Some("""
-      WITH cents AS (
-        SELECT vec_id AS cid, embedding AS cemb FROM embeddings
-        WHERE vec_id % 100 = 7),
-      q8 AS (
-        SELECT vec_id,
-               list_transform(CAST(embedding AS DOUBLE[]),
-                 v -> greatest(least(floor(v * 64), 127), -127)) AS qv
-        FROM embeddings),
-      qranked AS (
-        SELECT vec_id, cid FROM (
-          SELECT e.vec_id, c.cid,
-                 row_number() OVER (PARTITION BY e.vec_id ORDER BY
-                   list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-                                          CAST(c.cemb AS DOUBLE[])) DESC,
-                   c.cid ASC) AS rn
-          FROM embeddings e, cents c WHERE e.vec_id < 10)
-        WHERE rn <= 2),
-      home AS (
-        SELECT vec_id, cid FROM (
-          SELECT e.vec_id, c.cid,
-                 row_number() OVER (PARTITION BY e.vec_id ORDER BY
-                   list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-                                          CAST(c.cemb AS DOUBLE[])) DESC,
-                   c.cid ASC) AS rn
-          FROM embeddings e, cents c)
-        WHERE rn = 1),
+    Some(s"""
+      WITH ${ruleCents()},
+      $q8Cte,
+      ${cosRanked("qranked", "vec_id, cid", "rn <= 2", queriesOnly = true)},
+      $ruleHome,
       cand AS (
         SELECT DISTINCT q.vec_id AS query_id, h.vec_id AS neighbor_id
         FROM qranked q
         JOIN home h ON q.cid = h.cid AND q.vec_id <> h.vec_id),
-      cw AS (SELECT vec_id AS cw_id, qv AS cv FROM q8
-             WHERE vec_id % 50 = 11),
-      offs AS (SELECT unnest(range(8)) * 8 + 1 AS off),
-      enc AS (
-        SELECT vec_id, off, cw_id AS code FROM (
-          SELECT v.vec_id, o.off, c.cw_id,
-                 row_number() OVER (PARTITION BY v.vec_id, o.off ORDER BY
-                   (list_dot_product(v.qv[o.off:o.off+7],
-                                     v.qv[o.off:o.off+7]) +
-                    list_dot_product(c.cv[o.off:o.off+7],
-                                     c.cv[o.off:o.off+7]) -
-                    2 * list_dot_product(v.qv[o.off:o.off+7],
-                                         c.cv[o.off:o.off+7])) ASC,
-                   c.cw_id ASC) AS rn
-          FROM q8 v, cw c, offs o)
-        WHERE rn = 1),
-      qtab AS (
-        SELECT q.vec_id AS query_id, o.off, c.cw_id AS code,
-               list_dot_product(q.qv[o.off:o.off+7],
-                                c.cv[o.off:o.off+7]) AS d
-        FROM q8 q, cw c, offs o WHERE q.vec_id < 10),
+      ${rulePq("cw", "q8", "qv")},
       adc AS (
         SELECT query_id, neighbor_id FROM (
           SELECT query_id, neighbor_id,
@@ -3143,15 +2872,7 @@ object SimilarityQueries {
                        AND t.off = e.off AND t.code = e.code
             GROUP BY c.query_id, c.neighbor_id))
         WHERE adc_rank <= 100)
-      SELECT query_id, neighbor_id, rank FROM (
-        SELECT a.query_id, a.neighbor_id,
-               row_number() OVER (PARTITION BY a.query_id
-                 ORDER BY list_dot_product(q.qv, n.qv) DESC,
-                          a.neighbor_id ASC) AS rank
-        FROM adc a
-        JOIN q8 q ON q.vec_id = a.query_id
-        JOIN q8 n ON n.vec_id = a.neighbor_id)
-      WHERE rank <= 5
+      ${int8Rerank("adc", "a")}
     """))
 
   /** The range query's similarity floor — exact integer int8 dot, so
@@ -3191,18 +2912,7 @@ object SimilarityQueries {
   val rangeCosine = QueryDef(
     "ann_range_cosine",
     (spark, dir) => rangeCosineWith(spark, dir),
-    Some(s"""
-      WITH q8 AS (
-        SELECT vec_id,
-               list_transform(CAST(embedding AS DOUBLE[]),
-                 v -> greatest(least(floor(v * 64), 127), -127)) AS qv
-        FROM embeddings)
-      SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
-             CAST(list_dot_product(q.qv, n.qv) AS BIGINT) AS dot
-      FROM q8 q JOIN q8 n ON n.vec_id <> q.vec_id
-      WHERE q.vec_id < 10
-        AND list_dot_product(q.qv, n.qv) >= $RangeDotFloor
-    """))
+    Some(rangeOracle(RangeDotFloor.toString)))
 
   /** Per-cell PRUNING GEOMETRY for exact range search: (cid, rr) where
     * rr = max over the cell's rn=1 members v of |v_q8 − c_q8|² — the
@@ -3271,33 +2981,8 @@ object SimilarityQueries {
   val ivfCellBoundsAudit = QueryDef(
     "ivf_cell_bounds",
     (spark, dir) => ivfCellBounds(spark, dir, Quantizer.Rule()),
-    Some("""
-      WITH cents AS (
-        SELECT vec_id AS cid, embedding AS cemb FROM embeddings
-        WHERE vec_id % 100 = 7),
-      home AS (
-        SELECT vec_id, cid FROM (
-          SELECT e.vec_id, c.cid,
-                 row_number() OVER (PARTITION BY e.vec_id ORDER BY
-                   list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-                                          CAST(c.cemb AS DOUBLE[])) DESC,
-                   c.cid ASC) AS rn
-          FROM embeddings e, cents c)
-        WHERE rn = 1),
-      q8 AS (
-        SELECT vec_id,
-               list_transform(CAST(embedding AS DOUBLE[]),
-                 v -> greatest(least(floor(v * 64), 127), -127)) AS qv
-        FROM embeddings)
-      SELECT h.cid,
-             CAST(max(list_dot_product(v.qv, v.qv)
-                      + list_dot_product(c.qv, c.qv)
-                      - 2 * list_dot_product(v.qv, c.qv)) AS BIGINT) AS rr
-      FROM home h
-      JOIN q8 v ON v.vec_id = h.vec_id
-      JOIN q8 c ON c.vec_id = h.cid
-      GROUP BY h.cid
-    """))
+    Some(cellBoundsOracle(s"WITH $ruleHomeQ8", "qv",
+      "q8 c ON c.vec_id = h.cid")))
 
   /** The surviving (query_id, cid) pairs of the range query's cell
     * prune under `cfg` — exposed so specs and benches can count what
@@ -3464,21 +3149,8 @@ object SimilarityQueries {
   val refinedCellBoundsAudit = QueryDef(
     "ivf_cell_bounds_refined",
     (spark, dir) => ivfCellBounds(spark, dir, Quantizer.Trained()),
-    Some(s"""${lloydCte},
-      home AS (SELECT vec_id, cid FROM (
-          SELECT q.vec_id, c.cid, row_number() OVER (PARTITION BY q.vec_id
-            ORDER BY list_dot_product(c.cv, c.cv)
-                     - 2 * list_dot_product(q.qv, c.cv) ASC, c.cid ASC) AS rn
-          FROM q8 q, c$LloydIters c) WHERE rn = 1)
-      SELECT h.cid,
-             CAST(max(list_dot_product(v.qv, v.qv)
-                      + list_dot_product(c.cv, c.cv)
-                      - 2 * list_dot_product(v.qv, c.cv)) AS BIGINT) AS rr
-      FROM home h
-      JOIN q8 v ON v.vec_id = h.vec_id
-      JOIN c$LloydIters c ON c.cid = h.cid
-      GROUP BY h.cid
-    """))
+    Some(cellBoundsOracle(s"$lloydCte,\n      $trainedHome", "cv",
+      s"c$LloydIters c ON c.cid = h.cid")))
 
   /** `ann_range_cosine_cells_refined` — the exact range query over the
     * TRAINED quantizer's geometry: [[rangeCosineCellsWith]]'s plan with
@@ -3507,8 +3179,8 @@ object SimilarityQueries {
   val pqRefinedResidAudit = QueryDef(
     "pq_resid_refined",
     (spark, dir) => pqResiduals(spark, dir, Codebook.Trained()),
-    Some(s"""${pqVsHead}${pqLloydChain("vs",
-        "vec_id % 50 = 11", "pc").stripSuffix(",")}
+    Some(s"""$pqVsHead,
+      ${pqLloydChain("vs", "pc")}
       SELECT vec_id, CAST(sum(b) AS BIGINT) AS rrv FROM (
         SELECT v.vec_id, v.off,
                min(list_dot_product(v.s, v.s) + list_dot_product(c.cs, c.cs)
@@ -3551,52 +3223,14 @@ object SimilarityQueries {
     "ann_topk_ivfpq_rerank_refined",
     (spark, dir) => ivfPqRerankTopKWith(spark, dir, 5, 100,
       Quantizer.Trained(), Codebook.Trained()),
-    Some(s"""${lloydCte},
-      offs AS (SELECT unnest(range(8)) * 8 + 1 AS off),
-      vs AS (SELECT vec_id, off, qv[off:off+7] AS s FROM q8, offs),
-      ranked AS (SELECT vec_id, cid, rn FROM (
-          SELECT q.vec_id, c.cid, row_number() OVER (PARTITION BY q.vec_id
-            ORDER BY list_dot_product(c.cv, c.cv)
-                     - 2 * list_dot_product(q.qv, c.cv) ASC, c.cid ASC) AS rn
-          FROM q8 q, c$LloydIters c) WHERE rn <= 2),
-      cand AS (SELECT DISTINCT qa.vec_id AS query_id, ca.vec_id AS neighbor_id
-               FROM ranked qa JOIN ranked ca
-                 ON qa.cid = ca.cid AND qa.vec_id <> ca.vec_id
-               WHERE qa.vec_id < 10 AND ca.rn = 1),
-      ${pqLloydChain("vs", "vec_id % 50 = 11", "pc")
-        .stripPrefix("\n")}
-      enc AS (SELECT vec_id, off, cw_id AS code FROM (
-          SELECT v.vec_id, v.off, c.cw_id, row_number() OVER (
-            PARTITION BY v.vec_id, v.off
-            ORDER BY list_dot_product(c.cs, c.cs)
-                     - 2 * list_dot_product(v.s, c.cs) ASC, c.cw_id ASC) AS rn
-          FROM vs v JOIN pc$PqLloydIters c ON c.off = v.off) WHERE rn = 1),
-      qtab AS (SELECT q.vec_id AS query_id, c.off, c.cw_id AS code,
-                 list_dot_product(q.s, c.cs) AS d
-               FROM vs q JOIN pc$PqLloydIters c ON c.off = q.off
-               WHERE q.vec_id < 10),
-      adctop AS (
-        SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id,
-                 row_number() OVER (PARTITION BY query_id
-                   ORDER BY score DESC, neighbor_id ASC) AS adc_rank
-          FROM (
-            SELECT cand.query_id, e.vec_id AS neighbor_id, sum(t.d) AS score
-            FROM cand
-            JOIN enc e ON e.vec_id = cand.neighbor_id
-            JOIN qtab t ON t.query_id = cand.query_id
-              AND t.off = e.off AND t.code = e.code
-            GROUP BY 1, 2))
-        WHERE adc_rank <= 100)
-      SELECT query_id, neighbor_id, rank FROM (
-        SELECT a.query_id, a.neighbor_id,
-               row_number() OVER (PARTITION BY a.query_id
-                 ORDER BY list_dot_product(q.qv, n.qv) DESC,
-                          a.neighbor_id ASC) AS rank
-        FROM adctop a
-        JOIN q8 q ON q.vec_id = a.query_id
-        JOIN q8 n ON n.vec_id = a.neighbor_id)
-      WHERE rank <= 5
+    Some(s"""$lloydCte,
+      $offsCte,
+      $vsCte,
+      $trainedRanked,
+      $rankedCand,
+      ${trainedPq("vs", "pc")},
+      adctop AS (${adcTop(candAdcSum("score"))})
+      ${int8Rerank("adctop", "a")}
     """))
 
   /** `ann_range_cosine_pq` — the BYTES rung of exact range search:
@@ -3754,18 +3388,7 @@ object SimilarityQueries {
     "ann_range_cosine_perq",
     (spark, dir) => rangeCosineCellsWith(spark, dir, Quantizer.Rule(),
       perQueryFloor),
-    Some("""
-      WITH q8 AS (
-        SELECT vec_id,
-               list_transform(CAST(embedding AS DOUBLE[]),
-                 v -> greatest(least(floor(v * 64), 127), -127)) AS qv
-        FROM embeddings)
-      SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
-             CAST(list_dot_product(q.qv, n.qv) AS BIGINT) AS dot
-      FROM q8 q JOIN q8 n ON n.vec_id <> q.vec_id
-      WHERE q.vec_id < 10
-        AND list_dot_product(q.qv, n.qv) >= 400 + 40 * q.vec_id
-    """))
+    Some(rangeOracle("400 + 40 * q.vec_id")))
 
   /** `ann_range_cosine_pq_perq` (r18 verdict ask #6) — the BYTES rung
     * under the per-query radius: [[rangeCosinePqWith]] with `floorOf` =

@@ -148,24 +148,6 @@ object Staged {
     math.max(spark.sparkContext.defaultParallelism,
       spark.sessionState.conf.numShufflePartitions)
 
-  /** Width-floor for a scan- or checkpoint-rooted frame feeding
-    * per-row-heavy map work (gram/shingle explodes, vector math, typed
-    * extractors): the driver testdata is one single-row-group parquet
-    * file per table — an unsplittable one-task scan — and in-session
-    * stage checkpoints materialize at whatever width AQE coalesced, so
-    * CPU-dense map chains rooted at either run on 1 core of the
-    * machine. Both root kinds expose their partition count without
-    * executing anything (no AQE shuffle stage upstream — do NOT call
-    * this on a post-join/post-agg frame, where `.rdd` would force
-    * execution), so the guard is free, and at scale (many files / wide
-    * checkpoints) the whole thing is a strict no-op. Targeted at
-    * measured CPU-bound roots only — the r21 A/B rejected blanket
-    * width (see [[cpuWidth]]). */
-  private[graft] def fanOut(df: DataFrame): DataFrame = {
-    val w = cpuWidth(df.sparkSession)
-    if (df.rdd.getNumPartitions >= w) df else df.repartition(w)
-  }
-
   /** Config-keyed stage name (r14 verdict ask #6, extending the
     * `IvfConfig.stageKey` precedent `ivf_cells@50:3:3`): the DEFAULT
     * configuration keeps the historical bare name — nothing shifts on

@@ -714,8 +714,8 @@ class SemDedupGateSpec extends AnyFunSuite {
           .as[CurationStream.VecVerdictCoded].collect().head
         assert(v4.cbDigest !== digests.head,
           "a re-founded codebook must stamp a distinct digest")
-        assert(v4.cbDigest === SimilarityQueries.idSetDigest(
-          cwIds(cws2)), "the digest is the live id-set digest")
+        assert(v4.cbDigest === SimilarityQueries.longsDigest(
+          cwIds(cws2).sorted), "the digest is the live id-set digest")
       } finally q4.stop()
     }
   }
@@ -808,9 +808,10 @@ class SemDedupGateSpec extends AnyFunSuite {
         === plain,
         "the trained coded gate must decide exactly like the plain " +
           "trained one")
-      // cbDigest: the VALUE digest (pqValueDigestOf) — pinned against
-      // the persisted trained-codes stage NAME, so a re-TRAINING (which
-      // moves values under stable cw_ids) provably moves both
+      // cbDigest: the VALUE digest (longsDigest over the codebook rows)
+      // — pinned against the persisted trained-codes stage NAME, so a
+      // re-TRAINING (which moves values under stable cw_ids) provably
+      // moves both
       val digests = coded.map(_.cbDigest).toSet
       assert(digests === Set(cbDig), s"one codebook, one digest: $digests")
       val root = java.nio.file.Files.createTempDirectory("sg_tcbd").toString
